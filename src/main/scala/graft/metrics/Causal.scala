@@ -437,32 +437,45 @@ object Causal {
     val b0 = ranked.select(col("series").as("sb"), col("day"),
       col("r").as("rb"))
     val b = if (broadcastB) broadcast(b0) else b0
-    // LONG accumulation in the fact-scale aggregate (the hot path of every
-    // pc* consumer): ranks are ≤ n per series, so Σr_a r_b ≤ n³ — and the
-    // OUTPUT contract already requires C = n·Σab − Σa·Σb to fit the long it
-    // is cast to, i.e. n⁴ ≲ 2⁶³ ⇒ n ≤ ~55k observations per co-observed
-    // pair, which implies n³ fits a long sum with 5 decimal orders of
-    // headroom. A DECIMAL(38,0) buffer here therefore bought no extra range
-    // (the final cast bound binds first) while costing a non-compact
-    // Decimal allocation per row in the hottest aggregation the engine
-    // runs; only the final n·Σab − Σa·Σb combine needs 128-bit width, and
-    // that runs once per OUTPUT pair, not once per joined row. Values are
-    // bitwise identical inside the documented budget (MomentSumSpec pins
-    // long-vs-decimal equality at the n = 55k boundary).
-    a.join(b, Seq("day"))
-      .groupBy("sa", "sb")
-      .agg(count(lit(1)).as("n"),
-        sum(col("ra")).as("sra"),
-        sum(col("rb")).as("srb"),
-        // widen the INT ranks before the product: row_number is
-        // IntegerType, and an int·int product overflows (ANSI error) past
-        // n = 46,341 — one notch inside the n ≤ 55k contract above
-        sum(col("ra").cast("long") * col("rb")).as("srab"))
-      .select(col("sa"), col("sb"), col("n"),
-        expr("""cast(cast(n as decimal(38,0)) * srab
-               |  - cast(sra as decimal(38,0)) * srb as long)""".stripMargin)
-          .as("c"))
+    centeredCrossMoments(a.join(b, Seq("day")), "sa", "sb", "ra", "rb")
   }
+
+  /** The fact-scale moment aggregate every cross-moment op ends in: per
+    * (k1, k2) group of an already-joined frame, n = count(*) and
+    * c = n·Σab − Σa·Σb (output columns k1, k2, n, c).
+    *
+    * The sums accumulate in LONG, not DECIMAL(38,0): this is the hottest
+    * aggregation the engine runs (every pc* and estimation/inference
+    * consumer; the dense p=256 rung pushes 650M joined rows through it),
+    * and a decimal buffer costs a non-compact Decimal allocation per row
+    * while buying no range the output contract allows. Budgets:
+    *  - ranks ([[rankCrossMoments]]): r ≤ n, so Σr_a r_b ≤ n³; C must fit
+    *    the long it is cast to, i.e. n⁴ ≲ 2⁶³ ⇒ n ≤ ~55k per co-observed
+    *    pair, where n³ fits a long sum with 5 decimal orders to spare.
+    *  - values ([[virtualCrossMoments]], [[virtualCrossMomentsSparse]]):
+    *    Σ|v_a·v_b| < 2⁶³ per pair, i.e. n·max|v|² ≤ 9.2e18 — at the
+    *    documented n ≤ 5·10⁴ milli-quantization window that allows
+    *    |v| ≤ 1.3e7 (|X| ≤ 13,000 pre-milli), two orders above the ±1e3
+    *    clamp every caller applies.
+    * `a` is widened to long before the product: row_number ranks are
+    * IntegerType, and an int·int product overflows (ANSI error) past
+    * n = 46,341, one notch inside the rank budget; on LONG values the
+    * cast is a no-op. Only the n·Σab − Σa·Σb combine needs 128-bit
+    * width, and it runs once per OUTPUT pair on decimal casts. Values are
+    * bitwise identical to DECIMAL(38,0) buffers inside the budget
+    * (MomentSumSpec pins both boundaries); outside it ANSI fails loudly.
+    */
+  private def centeredCrossMoments(joined: DataFrame, k1: String,
+      k2: String, a: String, b: String): DataFrame =
+    joined.groupBy(k1, k2)
+      .agg(count(lit(1)).as("n"),
+        sum(col(a)).as("s_a"),
+        sum(col(b)).as("s_b"),
+        sum(col(a).cast("long") * col(b)).as("s_ab"))
+      .select(col(k1), col(k2), col("n"),
+        expr("""cast(cast(n as decimal(38,0)) * s_ab
+               |  - cast(s_a as decimal(38,0)) * s_b as long)""".stripMargin)
+          .as("c"))
 
   /** PC-algorithm skeleton to conditioning order 1 over the Spearman rank
     * panel. Order 0 drops {a,b} when 10000·C_ab² ≤ tauSqBp·C_aa·C_bb
@@ -1991,27 +2004,9 @@ object Causal {
     val a = v.select(col("vs").as("na"), col("t"), col("v").as("va"))
     val b0 = v.select(col("vs").as("nb"), col("t"), col("v").as("vb"))
     val b = if (broadcastB) broadcast(b0) else b0
-    // LONG accumulation in the per-t fan-out aggregate — the single
-    // fact-scale stage of every estimation/inference consumer (the dense
-    // p=256 rung pushes 650M joined rows through this agg). Budget:
-    // Σ|v_a·v_b| < 2⁶³ per pair, i.e. n·max|v|² ≤ 9.2e18 — at the
-    // documented n ≤ 5·10⁴ milli-quantization window that allows
-    // |v| ≤ 1.3e7 (|X| ≤ 13,000 pre-milli), two orders above the ±1e3
-    // clamp every caller applies; the 128-bit-needing combine
-    // n·Σab − Σa·Σb runs per OUTPUT pair on the decimal casts below.
-    // Bitwise identical to the old DECIMAL(38,0) buffers inside that
-    // budget (MomentSumSpec) and C must fit the long it is cast to
-    // exactly as before.
-    a.join(b, Seq("t")).where(col("na") <= col("nb"))
-      .groupBy("na", "nb")
-      .agg(count(lit(1)).as("n"),
-        sum(col("va")).as("sa"),
-        sum(col("vb")).as("sb"),
-        sum(col("va") * col("vb")).as("sab"))
-      .select(col("na"), col("nb"), col("n"),
-        expr("""cast(cast(n as decimal(38,0)) * sab
-               |  - cast(sa as decimal(38,0)) * sb as long)""".stripMargin)
-          .as("c"))
+    centeredCrossMoments(
+      a.join(b, Seq("t")).where(col("na") <= col("nb")),
+      "na", "nb", "va", "vb")
   }
 
   /** Per-link OLS coefficients by Cramer's rule (k ≤ 2 regressors) over a
@@ -2042,10 +2037,10 @@ object Causal {
     // asymmetry — see plans/r15/*_executed.txt). The frame is BOUNDED at
     // one row per requested pair (≤ ~115k at the 85k-hypothesis rung) —
     // never corpus-scale — so the pin is safe at any input size, the same
-    // pinTiny discipline the pc path uses. Measured r15 (MomentsProbe,
-    // interleaved): bhfdr_catalog 22.3 → 16.0 s, weightwide_p256_dense
-    // 6.7 → 5.1 s; outputs bitwise identical (checkpoint is
-    // value-neutral).
+    // pinTiny discipline the pc path uses. Measured when it landed (commit
+    // f65c545, interleaved A/B): bhfdr_catalog 22.3 → 16.0 s,
+    // weightwide_p256_dense 6.7 → 5.1 s; outputs bitwise identical
+    // (checkpoint is value-neutral).
     val m = pinTiny(moments.select("na", "nb", "n", "c"))
     def look(df: DataFrame, k1: String, k2: String, out: String,
         withN: Boolean = false): DataFrame = {
@@ -2158,9 +2153,6 @@ object Causal {
     val v = virt.where(windowPred)
     val a = v.select(col("vs").as("na"), col("t"), col("v").as("va"))
     val b = v.select(col("vs").as("nb"), col("t"), col("v").as("vb"))
-    // LONG accumulation under the same budget as [[virtualCrossMoments]]
-    // (Σ|v_a·v_b| < 2⁶³ per pair); the 128-bit combine rides the decimal
-    // casts per output pair. Bitwise identical inside the budget.
     // The (nb, t) join builds a hash table of the virtual frame instead of
     // sort-merging: the probe side is the a ⋈ wanted fan-out (|wanted|
     // rows per co-observed t — 23M rows at the 85k-hypothesis rung), and
@@ -2168,17 +2160,10 @@ object Causal {
     // build (guide §3.1; r15 interleaved medians 19.2 → 16.6 s). Build
     // size is bounded per partition by AQE partition sizing, not by
     // corpus scale — the panel is hash-split across the shuffle.
-    a.join(broadcast(wanted.select("na", "nb")), Seq("na"))
-      .join(b.hint("shuffle_hash"), Seq("nb", "t"))
-      .groupBy("na", "nb")
-      .agg(count(lit(1)).as("n"),
-        sum(col("va")).as("sa"),
-        sum(col("vb")).as("sb"),
-        sum(col("va") * col("vb")).as("sab"))
-      .select(col("na"), col("nb"), col("n"),
-        expr("""cast(cast(n as decimal(38,0)) * sab
-               |  - cast(sa as decimal(38,0)) * sb as long)""".stripMargin)
-          .as("c"))
+    centeredCrossMoments(
+      a.join(broadcast(wanted.select("na", "nb")), Seq("na"))
+        .join(b.hint("shuffle_hash"), Seq("nb", "t")),
+      "na", "nb", "va", "vb")
   }
 
   /** [[virtualCrossMomentsSparse]] as ANSI SQL over `\$virt(vs, t, v)`

@@ -21,24 +21,20 @@ import org.apache.spark.sql.functions._
   * split contract: a cross-batch match needs click_time > purchase_ts −
   * window > median − window, while batch 1's watermark is median − 30 min,
   * and window (10 min) < 30 min.
+  *
+  * The join runs four state stores per shuffle partition per micro-batch
+  * (left/right × keyToNumValues/keyWithIndexToValue); both sides read
+  * through [[StreamSupport.streamSession]], so that count is
+  * [[StreamSupport.streamShufflePartitions]], and the caller's session
+  * conf is left alone.
   */
 object StreamJoin {
 
   def clickPurchaseAttribution(spark: SparkSession, sfDir: String,
       splitDir: String, windowSec: Long = 600L,
-      queryName: String = "graft_stream_join"): DataFrame = {
-    // a stream-stream join runs FOUR state stores per shuffle partition per
-    // micro-batch (left/right × keyToNumValues/keyWithIndexToValue); state
-    // partition count is fixed at query start from shuffle.partitions, so
-    // drop it for the join's lifetime — per-batch state-checkpoint file I/O
-    // dominates this query's wall time, not compute. 8 partitions is still
-    // 8-way state parallelism; a production deployment sizes this to
-    // state-volume / executor, not to the CPU count.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try clickPurchaseAttributionInner(spark, sfDir, splitDir, windowSec, queryName)
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+      queryName: String = "graft_stream_join"): DataFrame =
+    clickPurchaseAttributionImpl(spark, sfDir, splitDir, windowSec,
+      queryName, "inner")
 
   /** LEFT-OUTER variant: the same interval join, but clicks that never
     * match a purchase ALSO emit (purchase columns null) — once the global
@@ -54,19 +50,9 @@ object StreamJoin {
     */
   def clickPurchaseAttributionOuter(spark: SparkSession, sfDir: String,
       splitDir: String, windowSec: Long = 600L,
-      queryName: String = "graft_stream_join_outer"): DataFrame = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try clickPurchaseAttributionImpl(spark, sfDir, splitDir, windowSec,
-      queryName, "leftOuter")
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
-
-  private def clickPurchaseAttributionInner(spark: SparkSession, sfDir: String,
-      splitDir: String, windowSec: Long,
-      queryName: String): DataFrame =
+      queryName: String = "graft_stream_join_outer"): DataFrame =
     clickPurchaseAttributionImpl(spark, sfDir, splitDir, windowSec,
-      queryName, "inner")
+      queryName, "leftOuter")
 
   private def clickPurchaseAttributionImpl(spark: SparkSession, sfDir: String,
       splitDir: String, windowSec: Long,

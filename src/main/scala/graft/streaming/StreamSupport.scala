@@ -16,24 +16,21 @@ private[streaming] object StreamSupport {
   def tsToLongNs(df: DataFrame): DataFrame =
     graft.sources.Events.tsToLongNs(df)
 
-  /** State-partition count for the streaming queries (default 8,
-    * `SPARK_GRAFT_STREAM_SHUFFLE` overrides). Streaming state cost is per
-    * (partition × micro-batch): every micro-batch opens, snapshots and
-    * commits one state store per shuffle partition, so partitions should
-    * track STATE VOLUME, not core count — these queries carry KB-scale
-    * aggregation state per batch, and inheriting the session's
-    * core-derived spark.sql.shuffle.partitions (32 on the bench host)
-    * made every micro-batch pay 32 store lifecycles for ~KB of state
-    * (guide §5; r15 StreamProbe interleaved medians: q137 15.9→3.4 s,
-    * q183 11.8→2.3 s, q165 17.0→7.3 s, q18 7.0→2.6 s at 32→8; flat
-    * below 8). Results are partition-count-invariant (keyed state,
-    * aggregations, joins); a production deployment with GB-scale state
-    * raises the env knob. The count is pinned into each query's
-    * checkpoint by Spark, so it stays consistent across restarts.
+  /** State-partition count for the streaming queries. Streaming state
+    * cost is per (partition × micro-batch): every micro-batch opens,
+    * snapshots and commits one state store per shuffle partition, so
+    * partitions should track STATE VOLUME, not core count — these queries
+    * carry KB-scale aggregation state per batch, and inheriting the
+    * session's core-derived spark.sql.shuffle.partitions (32 on the bench
+    * host) made every micro-batch pay 32 store lifecycles for ~KB of state
+    * (interleaved medians when it landed in commit f65c545:
+    * q137 15.9→3.4 s, q183 11.8→2.3 s, q165 17.0→7.3 s, q18 7.0→2.6 s at
+    * 32→8; flat below 8). Results are partition-count-invariant (keyed
+    * state, aggregations, joins). Spark pins the count into each query's
+    * checkpoint at its first run, so a restart keeps the count it started
+    * with.
     */
-  private[streaming] def streamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.trim.toInt)
-      .filter(_ > 0).getOrElse(8)
+  private[streaming] val streamShufflePartitions: Int = 8
 
   /** The session streaming queries run on: a per-(thread, parent) child
     * session whose conf is a copy of the parent's at first use plus the

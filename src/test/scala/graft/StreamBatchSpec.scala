@@ -165,4 +165,34 @@ class StreamBatchSpec extends AnyFunSuite {
     assert(keyed(out.where(col("n") === 399)) === keyed(batch),
       "final streaming state must reproduce the batch decisions exactly")
   }
+
+  test("stream-stream interval join: 2 batches, sink equals the batch " +
+      "interval join, caller's shuffle partitions untouched") {
+    import org.apache.spark.sql.functions._
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(before != StreamSupport.streamShufflePartitions.toString,
+      "the caller's count must differ from the stream session's")
+    val out = StreamJoin.clickPurchaseAttribution(spark, d, tmp("join"),
+      queryName = s"t_join_${System.nanoTime()}")
+    assert(StreamSupport.lastDataBatches === 2,
+      "the time split must arrive as two micro-batches")
+    val ev = graft.sources.Events.tsToLongNs(
+        spark.read.parquet(s"$d/events.parquet"))
+      .select(col("event_type"), col("user_id"), col("event_id"),
+        expr("ts div 1000").as("ts_us"))
+    val c = ev.where(col("event_type") === "click")
+    val p = ev.where(col("event_type") === "purchase")
+    val batch = c.as("c").join(p.as("p"),
+        col("c.user_id") === col("p.user_id") &&
+          col("p.ts_us") >= col("c.ts_us") &&
+          col("p.ts_us") <= col("c.ts_us") + 600000000L)
+      .select(col("c.user_id"), col("c.event_id"), col("p.event_id"),
+        col("c.ts_us"), col("p.ts_us"), col("p.ts_us") - col("c.ts_us"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val got = rows(out)
+    assert(got.nonEmpty && got === rows(batch),
+      "drained sink must equal the batch interval join")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+  }
 }
