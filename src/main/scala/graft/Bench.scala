@@ -89,22 +89,6 @@ object Bench {
     // until reconstructed from the run lists — record it first-class
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // r13 verdict #1: the always-on median-of-3 defense executed ~3x the
-    // published total and blew the driver's timeout. Default is now ONE
-    // timed run per entry, re-measuring (median-of-3) only entries that
-    // deviate >1.5x from the committed previous-round median — bounded by
-    // BenchPolicy.RemeasureCap — or whose section anchor dipped. The full
-    // ladder survives behind SPARK_GRAFT_BENCH_FULL=1 (builder's closing
-    // record on a quiet host).
-    val fullDefense =
-      sys.env.get("SPARK_GRAFT_BENCH_FULL").exists(_.trim.nonEmpty)
-    val prevMedians = BenchPolicy.loadPrevMedians()
-    // two-tranche budget (r14 verdict #1): heavy entries (committed median
-    // > 5 s) draw from a reserved pool cheap deviants cannot drain, so the
-    // expensive tail can never again publish an un-defended contended
-    // single sample (r14: q365 published 211.6 s vs its 12.5 s committed
-    // median after sub-second deviants exhausted the shared budget)
-    val remeasureBudget = new BenchPolicy.RemeasureBudget()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -123,40 +107,10 @@ object Bench {
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
-    // Disk-throughput anchor: this container's shared-host IO swings
-    // wall-clock 5-20x with identical binaries, so every report carries a
-    // synced-write measurement taken at the start and end of the run. A
-    // round-over-round delta that tracks the anchor is host noise; one that
-    // doesn't is attributable to the code.
-    def diskAnchorMbps(): Double = {
-      val f = java.io.File.createTempFile("bench_anchor", ".bin",
-        new java.io.File("target"))
-      try {
-        val mb = 128
-        val buf = java.nio.ByteBuffer.allocate(1 << 20)
-        val t0 = System.nanoTime()
-        val ch = java.nio.channels.FileChannel.open(f.toPath,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          var i = 0
-          while (i < mb) { buf.clear(); ch.write(buf); i += 1 }
-          ch.force(false) // fdatasync: flush data to the device
-        } finally ch.close()
-        mb / ((System.nanoTime() - t0) / 1e9)
-      } finally f.delete()
-    }
-    val anchorStart = diskAnchorMbps()
-
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // both measurements of any re-measured query, so the published min is
-    // auditable (min-only reporting would hide how often contention hits)
-    val runs = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-    // a failing query must not masquerade as a fast success — record it
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // one rule for every entry (BenchPolicy): one timed run, wall and
+    // process CPU seconds recorded, a throwing entry listed in `failed`
+    val rec = new BenchPolicy.Record
+    import rec.measure
     // optional comma-separated substring filter for targeted profiling runs
     // (e.g. SPARK_GRAFT_BENCH_ONLY=q27,q52); full runs leave it unset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -165,96 +119,11 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.contains)) }
 
-    // ---- self-defending sections (r11 verdict #1) ----------------------
-    // Two rounds running, the committed BENCH record published contention
-    // artifacts as medians (r11: 39 s for a 10 s pcsweep workload; r9:
-    // 133.7 s for a 6.8 s one) because nothing ACTED on the disk anchors.
-    // Now every section is bracketed by its own anchor pair, and a section
-    // whose post-anchor fell >30% below max(its own pre-anchor, run start)
-    // re-measures each of its non-trivial entries ONCE — appended to the
-    // entry's runs list, median recomputed — BEFORE the section's cleanup
-    // runs (so cached/checkpointed inputs are still alive; a re-run after
-    // an unpersisted localCheckpoint would crash on truncated lineage).
-    val sectionAnchors =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val contendedSections =
-      scala.collection.mutable.LinkedHashSet.empty[String]
-    val defensiveReruns =
-      scala.collection.mutable.LinkedHashSet.empty[String]
-    // entries the CURRENT section may defensively re-measure: (name, thunk
-    // returning one fresh wall-clock measurement)
-    var curSectionEntries =
-      scala.collection.mutable.ListBuffer.empty[(String, () => Double)]
-    def section[T](name: String)(body: => T)(cleanup: => Unit = ()): T = {
-      val pre = diskAnchorMbps()
-      curSectionEntries = scala.collection.mutable.ListBuffer.empty
-      val out = body
-      val post = diskAnchorMbps()
-      sectionAnchors(name) = (pre, post)
-      if (post < 0.7 * math.max(pre, anchorStart)) {
-        contendedSections += name
-        curSectionEntries.foreach { case (n, thunk) =>
-          // sub-0.5 s entries sit below the noise floor; >120 s entries
-          // are the multi-minute stalls the adjacent anchors already
-          // condemn (tripling them would burn the round's bench budget).
-          // Fast mode draws anchor-triggered re-runs from the same bounded
-          // budget as deviation-triggered ones (wall-clock discipline).
-          if (!failed.contains(n) && results.get(n).exists(m =>
-              m > 0.5 && m < 120.0)
-              && (fullDefense
-                || remeasureBudget.draw(results(n), prevMedians.get(n)))) {
-            val t = thunk()
-            val all = runs.getOrElse(n, Seq(results(n))) :+ t
-            runs(n) = all
-            results(n) = all.sorted.apply(all.size / 2)
-            defensiveReruns += n
-          }
-        }
-      }
-      cleanup
-      out
-    }
-
-    // the 300+-entry query loop runs in blocks of 60 so a mid-loop stall
-    // is localized to one block's anchor pair instead of condemning (and
-    // re-running) the whole loop
-    selected.grouped(60).zipWithIndex.foreach { case (chunk, ci) =>
-      section(s"queries_${ci + 1}") {
-    chunk.foreach { case (name, fn) =>
-      def once(): Double = time {
+    selected.foreach { case (name, fn) =>
+      measure(name) {
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable =>
-          try { fn(spark, sfDir).count(); () }
-          catch { case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          }
-        }
+        catch { case _: Throwable => fn(spark, sfDir).count() }
       }
-      val t1 = once()
-      // Full mode: median-of-3 for anything non-trivial (a single contended
-      // measurement — r2: q51 13.3 s vs 0.9 s steady-state — otherwise
-      // reads as a plan defect), with the r10 adaptive widening to 5 when
-      // the triple itself spreads >3x (its median is a coin flip; the 120 s
-      // cap leaves only multi-minute stalls un-tripled, condemned by their
-      // adjacent disk anchors instead). Sub-0.5 s entries stay single-shot
-      // — below the host's noise floor.
-      // Fast mode (default): single run, escalating to a median-of-3 only
-      // on >1.5x deviation from the committed previous median (or for
-      // entries with no committed median — new this round), within the
-      // shared re-measure budget.
-      val all: Seq[Double] =
-        if (failed.contains(name) || t1 <= 0.5) Seq(t1)
-        else if (fullDefense) {
-          val base = Seq(t1, once(), once())
-          if (BenchPolicy.widen(base)) base ++ Seq(once(), once()) else base
-        } else if (BenchPolicy.needsRemeasure(t1, prevMedians.get(name))
-            && remeasureBudget.draw(t1, prevMedians.get(name))) {
-          Seq(t1, once(), once())
-        } else Seq(t1)
-      if (all.size > 1) runs(name) = all
-      results(name) = all.sorted.apply(all.size / 2)
-      curSectionEntries += name -> (() => once())
       // queries are independent: release this query's cached plans,
       // localCheckpoint blocks and broadcasts before the next measurement —
       // ~100 queries of accumulated executor state in one 8g JVM otherwise
@@ -263,27 +132,6 @@ object Bench {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-    }
-      }()
-    }
-
-    // rung-entry measurement under the same fast/full policy as the query
-    // loop (full: median-of-3 with adaptive widening — a contended triple
-    // like gen_full_sweep_fast r7's 0.33-4.87 s gets two more runs; fast:
-    // one run, deviation-triggered median-of-3 within the shared budget)
-    def measureEntry(name: String)(f: => Unit): Unit = {
-      val t1 = time(f)
-      val ts: Seq[Double] =
-        if (fullDefense) {
-          val base = Seq(t1, time(f), time(f))
-          if (BenchPolicy.widen(base)) base ++ Seq(time(f), time(f)) else base
-        } else if (BenchPolicy.needsRemeasure(t1, prevMedians.get(name))
-            && remeasureBudget.draw(t1, prevMedians.get(name))) {
-          Seq(t1, time(f), time(f))
-        } else Seq(t1)
-      if (ts.size > 1) runs(name) = ts
-      results(name) = ts.sorted.apply(ts.size / 2)
-      curSectionEntries += name -> (() => time(f))
     }
 
     // Adversarial-skew dedup guard measurement: the q13 prefix-filtered
@@ -307,10 +155,9 @@ object Bench {
         graft.text.Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 3,
             minJaccard = 0.8, maxDocFreq = 1000L)
           .write.mode("overwrite").format("noop").save()
-      section("dedup_skew") {
-        measureEntry("dedup_skew_uniform") { jac(docs) }
-        measureEntry("dedup_skew_planted_99pct") { jac(planted) }
-      } { docs.unpersist(); planted.unpersist() }
+      measure("dedup_skew_uniform") { jac(docs) }
+      measure("dedup_skew_planted_99pct") { jac(planted) }
+      docs.unpersist(); planted.unpersist()
     }
 
     // Panel-scale graph scoring at the ARCHITECTURE-claimed magnitude:
@@ -323,14 +170,12 @@ object Bench {
     if (runShd) {
       val edges = graft.core.Parser.truthLinks("A1", 4, 2).zipWithIndex
         .map { case (l, i) => (i, l.source, l.lag, l.target) }
-      section("shd") {
-        measureEntry("shd_panel_1m_graphs") {
-          val (truth, pred) = graft.metrics.Metrics.perturbedGraphs(
-            spark, 1000000L, edges)
-          graft.metrics.Metrics.scoreAll(truth, pred)
-            .write.mode("overwrite").format("noop").save()
-        }
-      }()
+      measure("shd_panel_1m_graphs") {
+        val (truth, pred) = graft.metrics.Metrics.perturbedGraphs(
+          spark, 1000000L, edges)
+        graft.metrics.Metrics.scoreAll(truth, pred)
+          .write.mode("overwrite").format("noop").save()
+      }
     }
 
     // Constraint-based discovery at CATALOG scale: q340's multi-graph
@@ -369,8 +214,7 @@ object Bench {
       // measured into every repetition); the timed runs then pass
       // requirePairRows = false
       graft.metrics.Causal.assertPairRows(graft.metrics.Causal.pcSkeleton(pan))
-      section("pcsweep_fold") {
-      measureEntry("pcsweep_catalog_fold") {
+      measure("pcsweep_catalog_fold") {
         graft.metrics.Causal.pcOrient(
             graft.metrics.Causal.pcSkeleton(pan), 3,
             requirePairRows = false)
@@ -385,13 +229,13 @@ object Bench {
       // folded 864-config ranked panel is megarows — the partitioned
       // shuffle path is the cluster-shaped plan, same rationale as the
       // 2592 rung below
-      measureEntry("pcsweep_catalog_tau6") {
+      measure("pcsweep_catalog_tau6") {
         graft.metrics.Causal.pcSkeletonTauSweep(pan,
             graft.metrics.Causal.TauSweepBps, broadcastRankJoin = false)
           .groupBy("tau_sq_bp").agg(sum("edge"))
           .write.mode("overwrite").format("noop").save()
       }
-      } { wide.unpersist() }
+      wide.unpersist()
       // the ENTIRE catalog — all 2,592 configs, 4/6/8-var mixed —
       // skeleton + orientation in one plan. At this width the folded
       // panel is megarows, so the rank self-join takes the partitioned
@@ -407,16 +251,15 @@ object Bench {
       // precondition once outside the timed region, as above
       graft.metrics.Causal.assertPairRows(
         graft.metrics.Causal.pcSkeleton(panAll, broadcastRankJoin = false))
-      section("pcsweep_2592") {
-        measureEntry("pcsweep_catalog_2592_shuffle") {
-          graft.metrics.Causal.pcOrient(
-              graft.metrics.Causal.pcSkeleton(panAll,
-                broadcastRankJoin = false), 3,
-              requirePairRows = false)
-            .groupBy("dir").count()
-            .write.mode("overwrite").format("noop").save()
-        }
-      } { wideAll.unpersist() }
+      measure("pcsweep_catalog_2592_shuffle") {
+        graft.metrics.Causal.pcOrient(
+            graft.metrics.Causal.pcSkeleton(panAll,
+              broadcastRankJoin = false), 3,
+            requirePairRows = false)
+          .groupBy("dir").count()
+          .write.mode("overwrite").format("noop").save()
+      }
+      wideAll.unpersist()
     }
 
     // Wide-panel PC rung (r11 verdict #4a): every corpus graph is ≤ 8
@@ -457,19 +300,18 @@ object Bench {
             requirePairRows = false)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
-      section("pcwide") {
-        measureEntry("pcwide_p32_stable_oriented") { wideStableOnce(pan32) }
-        measureEntry("pcwide_p64_stable_oriented") { wideStableOnce(pan64) }
-        // p=128 STABLE-only rung (r12 verdict #4: the third point of the
-        // width scaling law, fitted in ARCHITECTURE.md): 8128 pairs, but
-        // conditioning stays adjacency-restricted — an unrestricted
-        // order-2 pass here would enumerate 8128·C(126,2)≈64M quadruples
-        // for no additional information — the stable ladder carries the
-        // width story (with pcblocks at p=320 above it)
-        val pan128 = widePanel(spark, 128, 200).localCheckpoint(true)
-        measureEntry("pcwide_p128_stable_oriented") { wideStableOnce(pan128) }
-        pan128.unpersist()
-      } { pan32.unpersist(); pan64.unpersist() }
+      measure("pcwide_p32_stable_oriented") { wideStableOnce(pan32) }
+      measure("pcwide_p64_stable_oriented") { wideStableOnce(pan64) }
+      // p=128 STABLE-only rung (r12 verdict #4: the third point of the
+      // width scaling law, fitted in ARCHITECTURE.md): 8128 pairs, but
+      // conditioning stays adjacency-restricted — an unrestricted
+      // order-2 pass here would enumerate 8128·C(126,2)≈64M quadruples
+      // for no additional information — the stable ladder carries the
+      // width story (with pcblocks at p=320 above it)
+      val pan128 = widePanel(spark, 128, 200).localCheckpoint(true)
+      measure("pcwide_p128_stable_oriented") { wideStableOnce(pan128) }
+      pan128.unpersist()
+      pan32.unpersist(); pan64.unpersist()
     }
 
     // Order-3 block-panel rungs (q348's dataset shape at bench widths):
@@ -492,21 +334,20 @@ object Bench {
             requirePairRows = false)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
-      section("pcblocks") {
-        measureEntry("pcblocks_p80_stable3_oriented") { blocksOnce(blk16) }
-        measureEntry("pcblocks_p320_stable3_oriented") { blocksOnce(blk64) }
-        // the unrestricted twin at 80 series: same panel, q346's
-        // order-2 pipeline — the number that shows what the adjacency
-        // restriction buys at EQUAL width (its order-2 stage tests
-        // every co-observed pair, the stable one only neighborhoods)
-        measureEntry("pcblocks_p80_order2_unrestricted") {
-          graft.metrics.Causal.pcOrient2(
-              graft.metrics.Causal.pcSkeleton2(blk16, 100L), 3,
-              requirePairRows = false)
-            .groupBy("dir").count()
-            .write.mode("overwrite").format("noop").save()
-        }
-      } { blk16.unpersist(); blk64.unpersist() }
+      measure("pcblocks_p80_stable3_oriented") { blocksOnce(blk16) }
+      measure("pcblocks_p320_stable3_oriented") { blocksOnce(blk64) }
+      // the unrestricted twin at 80 series: same panel, q346's
+      // order-2 pipeline — the number that shows what the adjacency
+      // restriction buys at EQUAL width (its order-2 stage tests
+      // every co-observed pair, the stable one only neighborhoods)
+      measure("pcblocks_p80_order2_unrestricted") {
+        graft.metrics.Causal.pcOrient2(
+            graft.metrics.Causal.pcSkeleton2(blk16, 100L), 3,
+            requirePairRows = false)
+          .groupBy("dir").count()
+          .write.mode("overwrite").format("noop").save()
+      }
+      blk16.unpersist(); blk64.unpersist()
     }
 
     // Structural weight-recovery rung (q352's corpus fold at 10× the
@@ -535,19 +376,18 @@ object Bench {
         .reduce(_ unionByName _)
       val links = cfgs.flatMap(c => SparkEntry.weightLinks(
         c.configId.toString, c.family, c.nVars, c.maxLag))
-      section("weightrec") {
-        measureEntry("weightrec_fold18_n50k") {
-          graft.metrics.Causal.structuralBetas(
-              graft.metrics.Causal.laggedCrossMoments(pan,
-                SparkEntry.weightSpecs(links),
-                expr("t % 65536 BETWEEN 4 AND 49999"),
-                broadcastB = false),
-              SparkEntry.weightLinksDf(spark, links))
-            .groupBy("family")
-            .agg(sum(abs(col("beta_ppm") - col("effective_ppm"))))
-            .write.mode("overwrite").format("noop").save()
-        }
-      } { wide.unpersist() }
+      measure("weightrec_fold18_n50k") {
+        graft.metrics.Causal.structuralBetas(
+            graft.metrics.Causal.laggedCrossMoments(pan,
+              SparkEntry.weightSpecs(links),
+              expr("t % 65536 BETWEEN 4 AND 49999"),
+              broadcastB = false),
+            SparkEntry.weightLinksDf(spark, links))
+          .groupBy("family")
+          .agg(sum(abs(col("beta_ppm") - col("effective_ppm"))))
+          .write.mode("overwrite").format("noop").save()
+      }
+      wide.unpersist()
     }
 
     // Deployment-width weight recovery: dense vs PAIR-RESTRICTED moments
@@ -578,16 +418,15 @@ object Bench {
         graft.metrics.Causal.structuralBetas(mom, linksDf)
           .agg(sum(abs(col("beta_ppm"))))
           .write.mode("overwrite").format("noop").save()
-      section("weightwide") {
-        measureEntry("weightwide_p256_sparse") {
-          betaSum(graft.metrics.Causal.virtualCrossMomentsSparse(
-            virt, wanted, col("t").between(0, 9999)))
-        }
-        measureEntry("weightwide_p256_dense") {
-          betaSum(graft.metrics.Causal.virtualCrossMoments(
-            virt, col("t").between(0, 9999), broadcastB = false))
-        }
-      } { virt.unpersist() }
+      measure("weightwide_p256_sparse") {
+        betaSum(graft.metrics.Causal.virtualCrossMomentsSparse(
+          virt, wanted, col("t").between(0, 9999)))
+      }
+      measure("weightwide_p256_dense") {
+        betaSum(graft.metrics.Causal.virtualCrossMoments(
+          virt, col("t").between(0, 9999), broadcastB = false))
+      }
+      virt.unpersist()
     }
 
     // Multiple-testing at deployment width (q370's BH-FDR procedure at
@@ -617,24 +456,23 @@ object Bench {
       val lutDf = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
         .zipWithIndex.map { case (q, i) => (i + 1, q) }
         .toDF("rk", "q_milli")
-      section("bhfdr") {
-        measureEntry("bhfdr_p512_5k_hypotheses") {
-          graft.metrics.Causal.waldK1(
-              graft.metrics.Causal.structuralBetas(
-                graft.metrics.Causal.virtualCrossMomentsSparse(virt,
-                  wanted, col("t").between(0, 9999)), linksDf))
-            .withColumn("rk", expr(
-              """row_number() over (
-                |  order by coalesce(t2_milli, -1) desc, pair)"""
-                .stripMargin))
-            .join(broadcast(lutDf), Seq("rk"))
-            .withColumn("k_star", expr(
-              "max(case when t2_milli >= q_milli then rk end) over ()"))
-            .where(col("rk") <= coalesce(col("k_star"), lit(0L)))
-            .groupBy("dist").count()
-            .write.mode("overwrite").format("noop").save()
-        }
-      } { pan.unpersist() }
+      measure("bhfdr_p512_5k_hypotheses") {
+        graft.metrics.Causal.waldK1(
+            graft.metrics.Causal.structuralBetas(
+              graft.metrics.Causal.virtualCrossMomentsSparse(virt,
+                wanted, col("t").between(0, 9999)), linksDf))
+          .withColumn("rk", expr(
+            """row_number() over (
+              |  order by coalesce(t2_milli, -1) desc, pair)"""
+              .stripMargin))
+          .join(broadcast(lutDf), Seq("rk"))
+          .withColumn("k_star", expr(
+            "max(case when t2_milli >= q_milli then rk end) over ()"))
+          .where(col("rk") <= coalesce(col("k_star"), lit(0L)))
+          .groupBy("dist").count()
+          .write.mode("overwrite").format("noop").save()
+      }
+      pan.unpersist()
 
       // catalog-grain multiplicity (r12 verdict #6): ONE BH pass over
       // the whole catalog's lag-1 cross-predictive Wald census — every
@@ -680,24 +518,23 @@ object Bench {
       val lutC = graft.metrics.Causal.chi2InvMilliLadder(hypsC.size)
         .zipWithIndex.map { case (q, i) => (i + 1, q) }
         .toDF("rk", "q_milli")
-      section("bhfdr_catalog") {
-        measureEntry("bhfdr_catalog_85k_hypotheses") {
-          graft.metrics.Causal.waldK1(
-              graft.metrics.Causal.structuralBetas(
-                graft.metrics.Causal.virtualCrossMomentsSparse(virtC,
-                  wantedC, (col("t") % 65536).between(1, 199)), linksC))
-            .withColumn("rk", expr(
-              """row_number() over (
-                |  order by coalesce(t2_milli, -1) desc, pair)"""
-                .stripMargin))
-            .join(broadcast(lutC), Seq("rk"))
-            .withColumn("k_star", expr(
-              "max(case when t2_milli >= q_milli then rk end) over ()"))
-            .where(col("rk") <= coalesce(col("k_star"), lit(0L)))
-            .groupBy("family").count()
-            .write.mode("overwrite").format("noop").save()
-        }
-      } { virtC.unpersist() }
+      measure("bhfdr_catalog_85k_hypotheses") {
+        graft.metrics.Causal.waldK1(
+            graft.metrics.Causal.structuralBetas(
+              graft.metrics.Causal.virtualCrossMomentsSparse(virtC,
+                wantedC, (col("t") % 65536).between(1, 199)), linksC))
+          .withColumn("rk", expr(
+            """row_number() over (
+              |  order by coalesce(t2_milli, -1) desc, pair)"""
+              .stripMargin))
+          .join(broadcast(lutC), Seq("rk"))
+          .withColumn("k_star", expr(
+            "max(case when t2_milli >= q_milli then rk end) over ()"))
+          .where(col("rk") <= coalesce(col("k_star"), lit(0L)))
+          .groupBy("family").count()
+          .write.mode("overwrite").format("noop").save()
+      }
+      virtC.unpersist()
     }
 
     // the gen section also participates in the ONLY filter (e.g. ONLY=gen_
@@ -712,15 +549,14 @@ object Bench {
     // replication, then measure the q01-shaped scan+filter+aggregate and
     // a broadcast-join+aggregate at 1× and 100×. The 100×/1× wall-clock
     // ratio ≪ 100 (the 1× run is overhead-bound) and ~linear rows/s at
-    // 100× is the evidence; both entries carry median-of-3.
+    // 100× is the evidence.
     val runQscale = only.forall(_.exists(_.startsWith("qscale")))
     if (runQscale) {
       System.gc()
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val maxOk = li.agg(max("l_orderkey")).collect()(0).getLong(0) + 1L
       val dir100 = "target/bench_lineitem_100x"
-      section("qscale") {
-      results("qscale_lineitem_100x_build") = time {
+      measure("qscale_lineitem_100x_build") {
         li.withColumn("rep", explode(expr("sequence(0L, 99L)")))
           .withColumn("l_orderkey", col("l_orderkey") + col("rep") * maxOk)
           .drop("rep")
@@ -743,12 +579,11 @@ object Bench {
           .groupBy("o_orderpriority")
           .agg(sum(expr("cast(floor(l_extendedprice * 100) as bigint)")))
           .write.mode("overwrite").format("noop").save()
-      measureEntry("qscale_agg_1x") { priceAgg(li) }
-      measureEntry("qscale_agg_100x") { priceAgg(li100) }
-      measureEntry("qscale_join_1x") { revJoin(li) }
-      measureEntry("qscale_join_100x") { revJoin(li100) }
-      } { scala.reflect.io.Directory(
-            new java.io.File(dir100)).deleteRecursively() }
+      measure("qscale_agg_1x") { priceAgg(li) }
+      measure("qscale_agg_100x") { priceAgg(li100) }
+      measure("qscale_join_1x") { revJoin(li) }
+      measure("qscale_join_100x") { revJoin(li100) }
+      scala.reflect.io.Directory(new java.io.File(dir100)).deleteRecursively()
     }
 
     // Text-pipeline scale ladder: qscale proves the RELATIONAL operators
@@ -788,8 +623,7 @@ object Bench {
           .agg(concat_ws(" ", collect_list(col("tok"))).as("text"))
       val z1 = zipfDocs(5000L).localCheckpoint(true)
       val z10 = zipfDocs(50000L).localCheckpoint(true)
-      section("dscale") {
-      results("dscale_documents_100x_build") = time {
+      measure("dscale_documents_100x_build") {
         docs.withColumn("rep", explode(expr("sequence(0L, 99L)")))
           .withColumn("doc_id", col("doc_id") + col("rep") * maxDoc)
           .drop("rep")
@@ -806,17 +640,17 @@ object Bench {
       def bm25(df: org.apache.spark.sql.DataFrame): Unit =
         graft.text.Index.bm25TopK(df, "doc_id", "text", probe, k = 5)
           .write.mode("overwrite").format("noop").save()
-      measureEntry("dscale_exact_dedup_1x") { dedup(docs) }
-      measureEntry("dscale_exact_dedup_100x") { dedup(d100) }
-      measureEntry("dscale_quality_1x") { qual(docs) }
-      measureEntry("dscale_quality_100x") { qual(d100) }
+      measure("dscale_exact_dedup_1x") { dedup(docs) }
+      measure("dscale_exact_dedup_100x") { dedup(d100) }
+      measure("dscale_quality_1x") { qual(docs) }
+      measure("dscale_quality_100x") { qual(d100) }
       // BM25's probe join is O(corpus × probes) on this 31-token head-heavy
       // vocabulary (every posting row meets ~all 100 probes sharing its
       // token): the 100× rung is an honest ~2.5 B-row join but costs
-      // ~100 s × median3 — the 10× rung (≈250 M joined rows) carries the
-      // same linearity evidence at a round-budget-compatible cost
-      measureEntry("dscale_bm25_1x") { bm25(docs) }
-      measureEntry("dscale_bm25_10x") {
+      // ~100 s — the 10× rung (≈250 M joined rows) carries the same
+      // linearity evidence at a round-budget-compatible cost
+      measure("dscale_bm25_1x") { bm25(docs) }
+      measure("dscale_bm25_10x") {
         bm25(d100.where(col("doc_id") < maxDoc * 10L)) }
       // the realistic-vocabulary twins: same probe density (1 per 50 docs
       // of the 1x corpus), fresh text per doc so the 10x rung grows real
@@ -825,31 +659,29 @@ object Bench {
       def bm25z(df: org.apache.spark.sql.DataFrame): Unit =
         graft.text.Index.bm25TopK(df, "doc_id", "text", zprobe, k = 5)
           .write.mode("overwrite").format("noop").save()
-      measureEntry("dscale_bm25_zipf_1x") { bm25z(z1) }
-      measureEntry("dscale_bm25_zipf_10x") { bm25z(z10) }
-      } { z1.unpersist(); z10.unpersist()
-          scala.reflect.io.Directory(
-            new java.io.File(dDir)).deleteRecursively() }
+      measure("dscale_bm25_zipf_1x") { bm25z(z1) }
+      measure("dscale_bm25_zipf_10x") { bm25z(z10) }
+      z1.unpersist(); z10.unpersist()
+      scala.reflect.io.Directory(new java.io.File(dDir)).deleteRecursively()
     }
 
     val runGen = only.forall(_.exists(_.startsWith("gen")))
-    val (genStage, taskSkew, genStage10x, taskSkew10x, anchor10x) =
-      if (!runGen) (Array.empty[Long], 0.0, Array.empty[Long], 0.0, (0.0, 0.0))
+    val (genStage, taskSkew, genStage10x, taskSkew10x) =
+      if (!runGen) (Array.empty[Long], 0.0, Array.empty[Long], 0.0)
       else {
     val corpusDir = "target/bench_corpus_full"
-    section("gen") {
     // give the 25M-row generation stages a settled heap: the measurement
     // should see kernel + write cost, not the query suite's garbage
     System.gc()
     // full-sweep generation: every config of all 18 families (BASELINE headline)
-    measureEntry("gen_full_sweep") {
+    measure("gen_full_sweep") {
       Generate.series(spark, Grid.all()).toDF()
         .agg(count(lit(1)), sum("x1")).collect()
     }
 
     // same sweep through the InternalRow fast path (no typed-Encoder layer;
     // bitwise-identical output per GenerateSpec)
-    measureEntry("gen_full_sweep_fast") {
+    measure("gen_full_sweep_fast") {
       Generate.wideFast(spark, Grid.all())
         .agg(count(lit(1)), sum("X1")).collect()
     }
@@ -857,25 +689,18 @@ object Bench {
     // the reference's actual deliverable, wholesale: all 4,320 corpus CSVs
     // (2,592 configs, dual missing/complete for D families) written into the
     // shipped Datasets/ directory grammar in one run — the r5 verdict's top
-    // gap. Median-of-3 since r10: the entry takes ~7 s quiet, and its r9
-    // single-shot caught a host stall and published 133.7 s as if it were
-    // a regression (CorpusSpec separately proves the output diffs clean
-    // against the shipped tree; re-runs overwrite via the atomic renames)
-    measureEntry("gen_corpus_4320_csv_write") {
+    // gap (CorpusSpec separately proves the output diffs clean against the
+    // shipped tree)
+    measure("gen_corpus_4320_csv_write") {
       graft.generate.Sinks.writeFullCorpus(spark, corpusDir)
     }
-    } { scala.reflect.io.Directory(
-          new java.io.File(corpusDir)).deleteRecursively() }
+    scala.reflect.io.Directory(new java.io.File(corpusDir)).deleteRecursively()
 
     // 100×-scale generation: 512 configs × 50k points = 25.6M rows through the
     // same zero-shuffle kernel fan-out, written as family/nVars/maxLag-
     // partitioned parquet; a listener captures per-task durations of the
     // generation+write stage to prove even load (round-robin config spread).
-    // Its own section: the disk-destroying writes run LAST in the suite and
-    // get their own anchor pair (the scale entries are deliberately NOT
-    // re-run candidates — the 256M write is single-shot by size and both
-    // rungs carry adjacent anchors that condemn a contended run post hoc)
-    section("gen_scale") {
+    // The disk-heavy writes run LAST in the suite.
     val byStage = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
     // only count tasks LAUNCHED after this point — the async listener bus can
     // still deliver queued task-ends from earlier bench queries
@@ -892,25 +717,9 @@ object Bench {
     val scaleCfgs = (0 until 512).map(i =>
       grid(i % grid.size).copy(configId = 1000000L + i, nPoints = 50000))
     spark.sparkContext.addSparkListener(listener)
-    def scaleOnce(): Double = time {
+    measure("gen_scale_25m_partitioned_write") {
       Generate.writeParquet(Generate.wideFast(spark, scaleCfgs), scaleDir)
     }
-    // same fast/full policy as the suite, with one extra bail: if the host
-    // is badly contended (a single write has been observed at 45↔270 s
-    // with identical binaries) keep the measured run — tripling a 4-minute
-    // stall would burn the round's bench budget for no signal
-    val w1 = scaleOnce()
-    val wRuns =
-      if (w1 > 60.0) Seq(w1)
-      else if (fullDefense) Seq(w1, scaleOnce(), scaleOnce())
-      else if (BenchPolicy.needsRemeasure(w1,
-          prevMedians.get("gen_scale_25m_partitioned_write"))
-          && remeasureBudget.draw(w1,
-            prevMedians.get("gen_scale_25m_partitioned_write"))) {
-        Seq(w1, scaleOnce(), scaleOnce())
-      } else Seq(w1)
-    runs("gen_scale_25m_partitioned_write") = wRuns
-    results("gen_scale_25m_partitioned_write") = wRuns.sorted.apply(wRuns.size / 2)
     Thread.sleep(1000) // listener bus is async — let it drain
     def stageSnap(): Array[Long] = byStage.synchronized {
       val s = if (byStage.isEmpty) Array.empty[Long]
@@ -928,82 +737,33 @@ object Bench {
     // kernel fan-out and partitioned write — the measured slope under the
     // 100-TB story (near-linear rows/s vs the 25.6M rung = the fan-out has
     // no super-linear term; task skew < 2 = the round-robin config spread
-    // still balances when per-task work grows 10×). Single-shot by size,
-    // but bracketed by its own disk anchors so a contended run is
-    // condemnable post hoc.
-    val a10Before = diskAnchorMbps()
+    // still balances when per-task work grows 10×)
     val scale10Cfgs = (0 until 512).map(i =>
       grid(i % grid.size).copy(configId = 2000000L + i, nPoints = 500000))
     val scale10Dir = "target/bench_gen_scale10x"
-    results("gen_scale_256m_partitioned_write") = time {
+    measure("gen_scale_256m_partitioned_write") {
       Generate.writeParquet(Generate.wideFast(spark, scale10Cfgs), scale10Dir)
     }
     Thread.sleep(1000)
     spark.sparkContext.removeSparkListener(listener)
     val genStage10x = stageSnap()
     val taskSkew10x = skewOf(genStage10x)
-    val a10After = diskAnchorMbps()
     scala.reflect.io.Directory(new java.io.File(scale10Dir)).deleteRecursively()
-    (genStage, taskSkew, genStage10x, taskSkew10x, (a10Before, a10After))
-    }()
+    (genStage, taskSkew, genStage10x, taskSkew10x)
     }
 
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val rr = runs.map { case (k, vs) =>
-      "\"" + k + "\":" + vs.mkString("[", ",", "]") }.mkString("{", ",", "}")
-    val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.values.sum
     def f3(x: Double) = String.format(java.util.Locale.ROOT, "%.3f",
       java.lang.Double.valueOf(x)) // locale-proof: JSON needs '.'
     // a run that SKIPPED the scale generation reports null — gate on the same
     // condition that ran it (a filtered ONLY=gen_ run DOES execute it and
     // must not report a fabricated null)
-    val anchorEnd = diskAnchorMbps()
-    def f1(x: Double) = String.format(java.util.Locale.ROOT, "%.1f",
-      java.lang.Double.valueOf(x))
-    val genScale = if (!runGen) "null"
-      else s"""{"rows":${512L * 50000L},"tasks":${genStage.length},""" +
-        s""""task_skew_max_over_median":${f3(taskSkew)}}"""
-    val genScale10x = if (!runGen) "null"
-      else s"""{"rows":${512L * 500000L},"tasks":${genStage10x.length},""" +
-        s""""task_skew_max_over_median":${f3(taskSkew10x)},""" +
-        s""""anchor_before_mbps":${f1(anchor10x._1)},""" +
-        s""""anchor_after_mbps":${f1(anchor10x._2)}}"""
-    val anchor = s"""{"start_mbps":${f1(anchorStart)},""" +
-      s""""end_mbps":${f1(anchorEnd)}}"""
-    // per-section anchor pairs + the contended verdict the runner ACTED on
-    val sectionsJson = sectionAnchors.map { case (n, (pre, post)) =>
-      s""""$n":{"pre_mbps":${f1(pre)},"post_mbps":${f1(post)},""" +
-        s""""contended":${contendedSections.contains(n)}}"""
-    }.mkString("{", ",", "}")
-    val rerunJson = defensiveReruns.map("\"" + _ + "\"")
-      .mkString("[", ",", "]")
-    // the honesty flag the r11 verdict demanded, tightened per r12: any
-    // entry whose OWN run list spreads >2x with a >5 s peak is published
-    // as contended — regardless of whether its section anchors held or
-    // its median stayed small (r12 missed pcwide_p32_stable_oriented at
-    // runs 11.0/5.3/3.4/3.2/3.2: median 3.4 s looked quiet, but a reader
-    // comparing maxima would re-derive contention by hand). Keying on the
-    // run-list max subsumes the old median>5 criterion.
-    val contendedSelfEntries = runs.collect {
-      case (n, vs) if BenchPolicy.contendedSelf(vs) => n
-    }.toSeq
-    // r13 verdict #6, the previous-round-aware twin: an entry whose median
-    // regressed >1.5x vs the committed record while its MIN run still hits
-    // the old time is contention, not code (dscale_bm25_10x r13:
-    // 15.4/8.4/14.2 vs committed 9.0 — published as a 1.6x regression)
-    val contendedPrevEntries = runs.collect {
-      case (n, vs) if prevMedians.get(n).exists(p =>
-        BenchPolicy.contendedVsPrev(results(n), vs.min, p)) => n
-    }.toSeq
-    val contendedJson =
-      (contendedSelfEntries ++ contendedPrevEntries).distinct
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val contendedPrevJson = contendedPrevEntries
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val wallS = (System.nanoTime() - wallT0) / 1e9
-    val mode = if (fullDefense) "full" else "fast"
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","wall_s":${f1(wallS)},"mode":"$mode","remeasure_budget_left":${remeasureBudget.left},"queries":$qs,"remeasured":$rr,"failed":$fl,"gen_scale":$genScale,"gen_scale_10x":$genScale10x,"disk_anchor":$anchor,"sections":$sectionsJson,"defensive_reruns":$rerunJson,"contended_entries":$contendedJson,"contended_vs_prev":$contendedPrevJson,"sf":"$sfDir"}"""
+    def genScaleJson(rows: Long, stage: Array[Long], skew: Double): String =
+      if (!runGen) "null"
+      else s"""{"rows":$rows,"tasks":${stage.length},""" +
+        s""""task_skew_max_over_median":${f3(skew)}}"""
+    val line = rec.render((System.nanoTime() - wallT0) / 1e9,
+      genScaleJson(512L * 50000L, genStage, taskSkew),
+      genScaleJson(512L * 500000L, genStage10x, taskSkew10x), sfDir)
     println(line)
     // the driver's BENCH_r{N}.json artifact has historically kept only the
     // log TAIL, truncating the per-query map and making regression-vs-noise

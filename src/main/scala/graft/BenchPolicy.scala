@@ -1,103 +1,76 @@
 package graft
 
-/** Measurement policy for Bench (and query ordering for Verify), kept pure
-  * so the decision rules are unit-testable (BenchPolicySpec) — the r13
-  * round lost its driver artifacts to wall-clock, so every rule here exists
-  * to bound bench wall while keeping published medians trustworthy.
+import java.lang.management.ManagementFactory
+
+import scala.collection.mutable
+
+/** Bench's one measurement rule, and the BENCHDETAIL.json reader Verify
+  * orders its dumps by. Kept apart from the bench rungs so the rule is
+  * unit-testable (BenchPolicySpec).
   *
-  * Fast mode (the default): ONE timed run per entry. Re-measurement (to a
-  * median-of-3) happens only when the single run deviates >1.5x from the
-  * committed previous-round median in BENCHDETAIL.json, and the total
-  * number of re-measured entries is capped — the r13 full-defense suite
-  * executed 964 runs (~1,760 s) to publish a 664 s total and blew the
-  * driver's timeout. The full median-of-3 ladder stays available behind
-  * SPARK_GRAFT_BENCH_FULL=1 for the builder's closing record.
+  * The rule: every entry runs ONCE. Its wall seconds and the process
+  * CPU-seconds delta over the same interval are both published, and
+  * nothing is re-run. On a shared host, load from other processes
+  * stretches wall time far more than the CPU seconds this JVM spends on
+  * its own work, so a wall jump with a flat `cpu_s` points at the host
+  * and a jump in both points at the code. (4 busy loops on a 4-core host
+  * doubled a filtered run's summed wall time; its summed `cpu_s` moved
+  * 1%, single entries up to ±30%.)
   */
 object BenchPolicy {
 
-  /** Entries re-measured per run in fast mode (deviation- or
-    * anchor-triggered), shared budget. ~20 entries x ~2 extra runs of the
-    * typical few-second deviant keeps the overhead bounded at ~2 min.
-    */
-  val RemeasureCap = 20
+  private val os = ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  /** Committed-median threshold above which an entry counts as HEAVY: a
-    * single contended sample of such an entry dominates the published
-    * total, so its defense must not depend on how many cheap deviants came
-    * before it. r14's miss: the shared 20-entry budget drained on
-    * sub-second deviants in the first contended sections, and
-    * q365_block_missing_recovery then published an un-defended 211.6 s
-    * single sample — ~17x its committed 12.5 s median — inflating
-    * bench_total by ~200 s (r14 verdict #1).
+  /** CPU seconds used so far by every thread of this JVM (driver and the
+    * local executors alike).
     */
-  val HeavyMedianSec = 5.0
+  private def processCpuSeconds(): Double = os.getProcessCpuTime / 1e9
 
-  /** Of RemeasureCap, this many draws are RESERVED for heavy entries.
-    * Cheap entries can only drain RemeasureCap − HeavyReserve; heavy
-    * entries draw the reserve first and fall back to the general pool.
+  /** One bench round's record: per-entry wall and CPU seconds, in
+    * measurement order, plus the entries whose body threw.
     */
-  val HeavyReserve = 10
+  final class Record {
+    val wall = mutable.LinkedHashMap.empty[String, Double]
+    val cpu = mutable.LinkedHashMap.empty[String, Double]
+    val failed = mutable.LinkedHashSet.empty[String]
 
-  /** Heavy = the committed previous median says so; for entries with no
-    * committed history, the measured first run is the only size signal.
-    */
-  def isHeavy(t1: Double, prev: Option[Double]): Boolean =
-    prev.getOrElse(t1) > HeavyMedianSec
-
-  /** The two-tranche re-measure budget (r14 verdict #1). Mutable by design
-    * — Bench threads one instance through the whole run — but the draw
-    * rule is pure enough to pin in BenchPolicySpec: heavy entries draw
-    * reserve-then-general, cheap entries general-only, so no sequence of
-    * cheap deviants can leave a heavy outlier un-defended.
-    */
-  final class RemeasureBudget(cap: Int = RemeasureCap,
-      reserve: Int = HeavyReserve) {
-    private var general = math.max(0, cap - reserve)
-    private var heavy = math.min(cap, reserve)
-    def draw(t1: Double, prev: Option[Double]): Boolean = synchronized {
-      if (isHeavy(t1, prev) && heavy > 0) { heavy -= 1; true }
-      else if (general > 0) { general -= 1; true }
-      else false
+    /** Runs `body` once and records it under `name`. A throwing body is
+      * listed in `failed` (its time up to the throw is still recorded) and
+      * the round carries on, so one broken entry cannot cost the round its
+      * whole record.
+      */
+    def measure(name: String)(body: => Unit): Unit = {
+      val c0 = processCpuSeconds()
+      val t0 = System.nanoTime()
+      try body
+      catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      }
+      wall(name) = (System.nanoTime() - t0) / 1e9
+      cpu(name) = math.max(0.0, processCpuSeconds() - c0)
     }
-    def left: Int = synchronized(general + heavy)
+
+    /** The one-line JSON record; `value` is the sum of every entry's wall
+      * seconds. `genScale`/`genScale10x` are pre-rendered JSON values
+      * (`null` when the gen section did not run).
+      */
+    def render(wallS: Double, genScale: String, genScale10x: String,
+        sfDir: String): String = {
+      def obj(m: mutable.LinkedHashMap[String, Double]) =
+        m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val w = String.format(java.util.Locale.ROOT, "%.1f",
+        java.lang.Double.valueOf(wallS)) // locale-proof: JSON needs '.'
+      s"""{"metric":"total","value":${wall.values.sum},"unit":"sec",""" +
+        s""""wall_s":$w,"queries":${obj(wall)},"cpu_s":${obj(cpu)},""" +
+        s""""failed":$fl,"gen_scale":$genScale,""" +
+        s""""gen_scale_10x":$genScale10x,"sf":"$sfDir"}"""
+    }
   }
 
-  /** Fast-mode deviation trigger: a single run this far above the committed
-    * previous median is either a regression or contention — either way it
-    * deserves a median-of-3 before publication. 1.5x (not 2x) so the
-    * previous-round-aware contended flag below always has a run list to
-    * judge: a single run in (1.5x, 2x] would otherwise be published
-    * unflagged (the r13 dscale_bm25_10x failure mode).
-    */
-  def needsRemeasure(t1: Double, prev: Option[Double]): Boolean =
-    t1 > 0.5 && prev.forall(p => t1 > 1.5 * p)
-
-  /** The r10 adaptive-widening rule, unchanged: a >3x spread inside a
-    * triple means at least one run was contended; take two more and report
-    * the median of 5. Entries >120 s are exempt (their adjacent disk
-    * anchors carry the contention verdict instead).
-    */
-  def widen(base: Seq[Double]): Boolean =
-    base.max > 3.0 * base.min && base.min < 120.0
-
-  /** Self-evident contention from the entry's own run list (r12 rule):
-    * any entry whose runs spread >2x with a >5 s peak.
-    */
-  def contendedSelf(runsList: Seq[Double]): Boolean =
-    runsList.max > 5.0 && runsList.max > 2.0 * runsList.min
-
-  /** Previous-round-aware contention (r13 verdict #6): the published median
-    * regressed >1.5x vs the committed previous median, but the run list's
-    * MIN still matches the previous median (within 30%) — the plan still
-    * achieves the old time when the host lets it, so the delta is
-    * contention, not code. Test case: dscale_bm25_10x r13 ran
-    * 15.4/8.4/14.2 s against a committed 9.0 s median — median 14.2 reads
-    * as a 1.6x regression, min 8.4 proves the plan unchanged.
-    */
-  def contendedVsPrev(median: Double, minRun: Double, prev: Double): Boolean =
-    median > 1.5 * prev && minRun <= 1.3 * prev
-
-  /** Extract the per-entry medians from a committed BENCHDETAIL.json line.
+  /** Extract the per-entry seconds from a BENCHDETAIL.json line.
     * The file is machine-written by Bench itself with a fixed flat shape
     * (`"queries":{"name":num,...}`), so a targeted scan beats dragging a
     * JSON dependency in: find the queries object, split its balanced
@@ -121,8 +94,7 @@ object BenchPolicy {
 
   /** Read the committed BENCHDETAIL.json from the repo root (nearest
     * ancestor of `cwd` holding build.sbt — same walk Bench uses when
-    * writing it). Empty map when absent/unreadable: every policy above
-    * degrades to its conservative branch (new entries → median-of-3).
+    * writing it). Empty map when absent/unreadable.
     */
   def loadPrevMedians(): Map[String, Double] =
     try {

@@ -509,9 +509,11 @@ object Sinks {
   /** The reference's actual deliverable, wholesale: every CSV of the full
     * 18-family sweep (2,592 configs → 4,320 files — D families write dual
     * missing/complete views) into the shipped `Datasets/` directory grammar
-    * under `outDir`. Two corpus passes share one deterministic kernel
-    * dataset, so the complete and missing views of a config agree cell for
-    * cell outside the mask.
+    * under `outDir`. The two corpus passes each call [[Generate.series]],
+    * so every D-family config (the dual-view ones) is generated twice
+    * (perfbench's `generate.rows_generated_per_row_written` reads 5/3).
+    * The complete and missing views still agree cell for cell outside the
+    * mask because the kernel is deterministic.
     */
   def writeFullCorpus(spark: org.apache.spark.sql.SparkSession, outDir: String,
       cfgs: Seq[GenConfig] = Grid.all()): Unit = {

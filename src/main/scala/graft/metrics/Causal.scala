@@ -692,14 +692,7 @@ object Causal {
   def pcSkeleton2(panel: DataFrame, tauSqBp: Long = 625L): DataFrame = {
     val cm = pcMoments(panel)
     val sk1 = pinTiny(pcSkeletonMoments(cm, tauSqBp))
-    val nc = cm.select(col("sa"), col("sb"),
-      expr("cast(c div (n * n) as decimal(38,0))").as("ch"))
-    def m(x: String, y: String, out: String): DataFrame =
-      broadcast(nc.select(col("sa").as(x), col("sb").as(y),
-        col("ch").as(out)))
-    def diag(x: String, out: String): DataFrame =
-      broadcast(nc.where(col("sa") === col("sb"))
-        .select(col("sa").as(x), col("ch").as(out)))
+    val nc = normalizedMoments(cm)
     // conditioning pairs {z,w} enumerated from a's co-observed series
     // (the (a,z)/(a,w) moment rows the joins below demand anyway), not
     // cross-joined against the global diagonal — identical candidate
@@ -712,6 +705,29 @@ object Causal {
       .join(broadcast(adjz.select(col("a"), col("z").as("w"))), Seq("a"))
       .where(col("z") < col("w") &&
         col("z") =!= col("b") && col("w") =!= col("b"))
+    order2Stage(nc, sk1, cand, tauSqBp)
+  }
+
+  /** ĉ = c div n², the normalized moments the order-2 and order-3
+    * cofactor stages test on (scale contract in [[pcSkeleton2]]).
+    */
+  private def normalizedMoments(cm: DataFrame): DataFrame =
+    cm.select(col("sa"), col("sb"),
+      expr("cast(c div (n * n) as decimal(38,0))").as("ch"))
+
+  /** The order-2 stage shared by [[pcSkeleton2]] and [[pcStable2Core]]:
+    * the cofactor test of every candidate (a, b, z, w) over the normalized
+    * moments `nc`, the pinned `sepset2` tie-break, and `sk1`'s columns
+    * plus (sepset2, edge2). Each caller enumerates its own candidates.
+    */
+  private def order2Stage(nc: DataFrame, sk1: DataFrame, cand: DataFrame,
+      tauSqBp: Long): DataFrame = {
+    def m(x: String, y: String, out: String): DataFrame =
+      broadcast(nc.select(col("sa").as(x), col("sb").as(y),
+        col("ch").as(out)))
+    def diag(x: String, out: String): DataFrame =
+      broadcast(nc.where(col("sa") === col("sb"))
+        .select(col("sa").as(x), col("ch").as(out)))
     val mm = cand
       .join(m("a", "b", "mab"), Seq("a", "b"))
       .join(m("a", "z", "maz"), Seq("a", "z"))
@@ -873,15 +889,6 @@ object Causal {
         col("sepset"),
         when(col("keep0") === 1 && col("sepset").isNull, 1).otherwise(0)
           .as("edge")))
-    // order 2 on the NORMALIZED moments, exactly pcSkeleton2's contract
-    val nc = cm.select(col("sa"), col("sb"),
-      expr("cast(c div (n * n) as decimal(38,0))").as("ch"))
-    def m(x: String, y: String, out: String): DataFrame =
-      broadcast(nc.select(col("sa").as(x), col("sb").as(y),
-        col("ch").as(out)))
-    def diag(x: String, out: String): DataFrame =
-      broadcast(nc.where(col("sa") === col("sb"))
-        .select(col("sa").as(x), col("ch").as(out)))
     val e1 = sk1.where(col("edge") === 1).select(col("a"), col("b"))
     val adj1 = e1.unionByName(
       e1.select(col("b").as("a"), col("a").as("b")))
@@ -897,36 +904,8 @@ object Causal {
         col("z") =!= col(other) && col("w") =!= col(other))
       .select(col("a"), col("b"), col("z"), col("w"))
     val cand2 = side("a", "b").unionByName(side("b", "a")).distinct()
-    val mm = cand2
-      .join(m("a", "b", "mab"), Seq("a", "b"))
-      .join(m("a", "z", "maz"), Seq("a", "z"))
-      .join(m("a", "w", "maw"), Seq("a", "w"))
-      .join(m("b", "z", "mbz"), Seq("b", "z"))
-      .join(m("b", "w", "mbw"), Seq("b", "w"))
-      .join(m("z", "w", "mzw"), Seq("z", "w"))
-      .join(diag("a", "maa"), Seq("a"))
-      .join(diag("b", "mbb"), Seq("b"))
-      .join(diag("z", "mzz"), Seq("z"))
-      .join(diag("w", "mww"), Seq("w"))
-    val cof = mm
-      .withColumn("dzw", expr("mzz*mww - mzw*mzw"))
-      .withColumn("t1", expr("maz*mww - mzw*maw"))
-      .withColumn("t2", expr("maz*mzw - mzz*maw"))
-      .withColumn("cofab", expr("mab*dzw - mbz*t1 + mbw*t2"))
-      .withColumn("cofbb", expr("maa*dzw - maz*t1 + maw*t2"))
-      .withColumn("cofaa",
-        expr("mbb*dzw - mbz*(mbz*mww - mzw*mbw) + mbw*(mbz*mzw - mzz*mbw)"))
-      .withColumn("sep", expr(
-        s"case when 10000*cofab*cofab <= $tauSqBp*cofaa*cofbb " +
-          "then 1 else 0 end"))
-    val seps = cof.groupBy("a", "b")
-      .agg(min(when(col("sep") === 1,
-        concat(col("z"), lit("~"), col("w")))).as("sepset2"))
-    sk1.join(broadcast(seps), Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"), col("n"), col("cab"), col("keep0"),
-        col("sepset"), col("edge"), col("sepset2"),
-        when(col("edge") === 1 && col("sepset2").isNull, 1).otherwise(0)
-          .as("edge2"))
+    // order 2 on the NORMALIZED moments, exactly pcSkeleton2's contract
+    order2Stage(normalizedMoments(cm), sk1, cand2, tauSqBp)
   }
 
   /** [[pcSkeleton2Stable]] as ANSI CTEs over `\$panel(series, day, v)`:
@@ -1115,8 +1094,7 @@ object Causal {
   def pcSkeleton3StableFromCm(cm: DataFrame, tauSqBp: Long = 625L)
       : DataFrame = {
     val sk2 = pinTiny(pcStable2Core(cm, tauSqBp))
-    val nc = cm.select(col("sa"), col("sb"),
-      expr("cast(c div (n * n) as decimal(38,0))").as("ch"))
+    val nc = normalizedMoments(cm)
     def m(x: String, y: String): DataFrame =
       broadcast(nc.select(col("sa").as(x), col("sb").as(y),
         col("ch").as(mn(x, y))))
@@ -2157,9 +2135,11 @@ object Causal {
     // sort-merging: the probe side is the a ⋈ wanted fan-out (|wanted|
     // rows per co-observed t — 23M rows at the 85k-hypothesis rung), and
     // sorting it by a (string, long) key cost more than the whole hash
-    // build (guide §3.1; r15 interleaved medians 19.2 → 16.6 s). Build
-    // size is bounded per partition by AQE partition sizing, not by
-    // corpus scale — the panel is hash-split across the shuffle.
+    // build (guide §3.1; r15 interleaved medians 19.2 → 16.6 s). The
+    // build side does NOT spill, and nothing bounds it: AQE splits only
+    // skewed partitions, so at a fixed shuffle-partition count each task's
+    // hash table grows with corpus size. ROADMAP direction 2 (one fused
+    // moment aggregate) removes this join and the hint with it.
     centeredCrossMoments(
       a.join(broadcast(wanted.select("na", "nb")), Seq("na"))
         .join(b.hint("shuffle_hash"), Seq("nb", "t")),

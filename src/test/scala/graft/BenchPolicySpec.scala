@@ -2,83 +2,33 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench measurement-policy rules (r13 verdict #1/#6): the
-  * fast-mode re-measure trigger, the previous-round-aware contention flag
-  * (with the real dscale_bm25_10x triple that r13's flag missed), and the
-  * BENCHDETAIL parser both Bench and Verify read committed medians from.
+/** Pins Bench's one measurement rule (one timed run per entry, wall and
+  * process CPU seconds, a throwing entry listed and skipped) and the
+  * BENCHDETAIL parser Verify orders its dumps by.
   */
 class BenchPolicySpec extends AnyFunSuite {
 
-  test("contendedVsPrev fires on the r13 dscale_bm25_10x triple") {
-    // runs 15.4/8.4/14.2 s against a committed 9.0 s median: median 14.2
-    // (>1.5x prev) looked like a 1.6x regression, but min 8.4 matches the
-    // committed time — the plan is unchanged, the host was busy
-    val runsList = Seq(15.4, 8.4, 14.2)
-    val median = runsList.sorted.apply(runsList.size / 2)
-    assert(median == 14.2)
-    assert(BenchPolicy.contendedVsPrev(median, runsList.min, prev = 9.0))
-    // the old self-rule (max>5 && max/min>2) indeed misses it — the gap
-    // this flag exists to close (max/min = 15.4/8.4 = 1.83 < 2)
-    assert(!BenchPolicy.contendedSelf(runsList))
-  }
-
-  test("contendedVsPrev stays quiet on genuine regressions and steady runs") {
-    // min ALSO regressed → code-caused, must not be excused as contention
-    assert(!BenchPolicy.contendedVsPrev(14.2, 13.8, prev = 9.0))
-    // median within 1.5x of prev → no flag however the min behaves
-    assert(!BenchPolicy.contendedVsPrev(12.0, 8.4, prev = 9.0))
-    // improvement → no flag
-    assert(!BenchPolicy.contendedVsPrev(5.0, 4.8, prev = 9.0))
-  }
-
-  test("contendedSelf keys on run-list max (r12 rule)") {
-    assert(BenchPolicy.contendedSelf(Seq(11.0, 5.3, 3.4, 3.2, 3.2)))
-    assert(!BenchPolicy.contendedSelf(Seq(4.0, 2.1, 1.9))) // max <= 5 s
-    assert(!BenchPolicy.contendedSelf(Seq(8.0, 7.1, 6.9))) // spread < 2x
-  }
-
-  test("needsRemeasure: >1.5x deviation vs committed median, noise floor, new entries") {
-    assert(BenchPolicy.needsRemeasure(3.1, Some(2.0)))   // 1.55x deviant
-    assert(!BenchPolicy.needsRemeasure(2.9, Some(2.0)))  // within 1.5x
-    assert(!BenchPolicy.needsRemeasure(0.4, Some(0.1)))  // below noise floor
-    assert(BenchPolicy.needsRemeasure(0.6, None))        // new entry
-    assert(!BenchPolicy.needsRemeasure(0.3, None))       // new but trivial
-  }
-
-  test("RemeasureBudget: the r14 q365 miss cannot recur (heavy reserve)") {
-    // r14: the 20-entry shared budget drained on sub-second deviants in the
-    // first contended sections (q01-q118 all drew triples), and
-    // q365_block_missing_recovery — measured 211.6 s against a committed
-    // 12.5 s median, a 17x outlier — got NO re-run and published the
-    // contended single sample. Reproduce the sequence: 25 cheap deviants
-    // draw first, then q365 asks.
-    val b = new BenchPolicy.RemeasureBudget()
-    val cheapGranted = (1 to 25).count(_ => b.draw(1.2, Some(0.45)))
-    assert(cheapGranted == BenchPolicy.RemeasureCap - BenchPolicy.HeavyReserve,
-      "cheap deviants must only drain the general tranche")
-    // the heavy tail still gets defended: q365 (committed 12.5 s) and the
-    // other r14 heavy outliers (q370 3.9, q373 4.1 are sub-5s committed →
-    // cheap; bhfdr_catalog 17.3, weightwide 10.8, dscale_quality 10-14,
-    // dscale_bm25 13 → heavy) all draw from the reserve
-    assert(b.draw(211.6, Some(12.5)), "q365 must draw from the heavy reserve")
-    assert(b.draw(99.4, Some(17.3)))  // bhfdr_catalog_85k
-    assert(b.draw(44.1, Some(10.8)))  // weightwide_p256_dense
-    assert(b.left == BenchPolicy.HeavyReserve - 3)
-    // a NEW heavy entry (no committed median) classifies by its own t1
-    assert(BenchPolicy.isHeavy(30.0, None))
-    assert(!BenchPolicy.isHeavy(1.0, None))
-    // heavy entries fall back to the general pool once the reserve is gone
-    val b2 = new BenchPolicy.RemeasureBudget(cap = 3, reserve = 1)
-    assert(b2.draw(20.0, Some(10.0))) // reserve
-    assert(b2.draw(20.0, Some(10.0))) // falls back to general
-    assert(b2.draw(20.0, Some(10.0))) // general
-    assert(!b2.draw(20.0, Some(10.0)) && b2.left == 0)
-  }
-
-  test("widen: >3x spread inside a triple, 120 s stall cap") {
-    assert(BenchPolicy.widen(Seq(0.33, 1.0, 4.87)))
-    assert(!BenchPolicy.widen(Seq(2.0, 2.5, 3.0)))
-    assert(!BenchPolicy.widen(Seq(130.0, 400.0, 500.0))) // anchors condemn it
+  test("measure: a throwing entry is listed in failed and the next is still timed") {
+    val rec = new BenchPolicy.Record
+    rec.measure("throws") { throw new IllegalStateException("boom") }
+    var ran = false
+    rec.measure("works") {
+      var i = 0L; var acc = 0L
+      while (i < 1000000L) { acc += i * i; i += 1 }
+      ran = acc > 0
+    }
+    assert(rec.failed.toSeq == Seq("throws"))
+    assert(ran)
+    assert(rec.wall.keySet == Set("throws", "works"))
+    assert(rec.wall("works") > 0.0)
+    assert(rec.cpu.keySet == Set("throws", "works"))
+    assert(rec.cpu.values.forall(_ >= 0.0))
+    val line = rec.render(1.0, "null", "null", "sf0.01")
+    assert(line.contains("\"failed\":[\"throws\"]"))
+    assert(line.contains("\"cpu_s\":{"))
+    val m = BenchPolicy.parsePrevMedians(line)
+    assert(m.keySet == Set("throws", "works"))
+    assert(m("works") == rec.wall("works"))
   }
 
   test("parsePrevMedians reads a BENCHDETAIL-shaped line") {
