@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.{Catalog, Grid}
-import graft.generate.Generate
+import graft.generate.{Generate, Panels}
 
 /** Per-round benchmark: one JSON line with per-query seconds plus the
   * full-sweep generation metric (the reference's actual workload — BASELINE
@@ -11,77 +11,6 @@ import graft.generate.Generate
   * the JVM kernel fan-out runs the complete grid here).
   */
 object Bench {
-
-  /** Deterministic p-wide single-graph panel for the wide-PC rung and its
-    * plan guard: v_s(d) = n_s(d) + 8·n_{s-1}(d) + 4·n_{s-2}(d) +
-    * 2·n_{s-3}(d) over integer hash noise n ∈ [0, 1000) — a 4-ancestor
-    * moving average along the series chain, so adjacent pairs correlate
-    * strongly (ρ ≈ 0.56), 2-hop pairs weakly (ρ ≈ 0.24), and the
-    * order-1/2 conditioning stages get real work at every width. Pure
-    * column arithmetic (no RNG, no self-join): benches and specs
-    * regenerate it bit-identically.
-    */
-  def widePanel(spark: SparkSession, p: Int, nObs: Int)
-      : org.apache.spark.sql.DataFrame = {
-    def noise(s: org.apache.spark.sql.Column,
-        d: org.apache.spark.sql.Column) =
-      pmod(xxhash64(lit("pcwide"), s, d), lit(1000L))
-    // lpad TRUNCATES strings longer than the pad width (SQL semantics),
-    // so a fixed width-2 pad silently COLLIDED series 100..999 onto
-    // 10..99 at p > 100 — the p=256 weightwide rung measured a
-    // 100-series panel with duplicate rows until this width went
-    // dynamic. p ≤ 100 callers keep their byte-identical X00..X99
-    // names (their oracles hash those bytes).
-    val w = if (p > 100) 3 else 2
-    spark.range(0, p).select(col("id").as("s"))
-      .crossJoin(spark.range(0, nObs).select(col("id").as("d")))
-      .select(
-        concat(lit("X"), lpad(col("s").cast("string"), w, "0")).as("series"),
-        col("d").as("day"),
-        (noise(col("s"), col("d"))
-          + when(col("s") >= 1, noise(col("s") - 1, col("d")) * 8)
-            .otherwise(0L)
-          + when(col("s") >= 2, noise(col("s") - 2, col("d")) * 4)
-            .otherwise(0L)
-          + when(col("s") >= 3, noise(col("s") - 3, col("d")) * 2)
-            .otherwise(0L)
-        ).cast("long").as("v"))
-  }
-
-  /** Deterministic BLOCK panel for the order-3 rungs: `blocks`
-    * independent 5-series cells, each three iid hash-noise sources
-    * (roles 0-2) plus two aggregates A = S0+S1+S2+eA and
-    * B = S0+S1+S2+eB (roles 3-4, own full-per-source-scale noise).
-    * Within a cell the A-B pair is dependent given any ≤2 sources and
-    * independent given all three — the smallest structure whose PC
-    * separation NEEDS conditioning order 3; across cells every pair is
-    * independent (distinct hash salts) and dies at order 0. Degree
-    * stays ≤ 4 however many blocks, so the adjacency-restricted
-    * candidate volume is linear in `blocks` while panel width is
-    * 5·blocks — the shape that separates O(E·d³) from O(p⁵).
-    */
-  def widePanel3(spark: org.apache.spark.sql.SparkSession, blocks: Int,
-      nObs: Int): org.apache.spark.sql.DataFrame = {
-    require(blocks <= 99, s"widePanel3 block names pad to width 2")
-    def noise(tag: String, role: org.apache.spark.sql.Column,
-        k: org.apache.spark.sql.Column, d: org.apache.spark.sql.Column) =
-      pmod(xxhash64(lit(tag), k, role, d), lit(1000L))
-    spark.range(0, blocks.toLong * 5).select(
-        (col("id") / 5).cast("long").as("k"),
-        (col("id") % 5).cast("int").as("role"))
-      .crossJoin(spark.range(0, nObs).select(col("id").as("d")))
-      .select(
-        concat(lit("G"), lpad(col("k").cast("string"), 2, "0"),
-          lit("X"), col("role")).as("series"),
-        col("d").as("day"),
-        (when(col("role") < 3, noise("pc3src", col("role"), col("k"), col("d")))
-          .otherwise(
-            noise("pc3src", lit(0), col("k"), col("d")) +
-            noise("pc3src", lit(1), col("k"), col("d")) +
-            noise("pc3src", lit(2), col("k"), col("d")) +
-            noise("pc3own", col("role"), col("k"), col("d"))))
-          .cast("long").as("v"))
-  }
 
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime() // published as wall_s: the r13 bench's
@@ -121,8 +50,7 @@ object Bench {
 
     selected.foreach { case (name, fn) =>
       measure(name) {
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => fn(spark, sfDir).count() }
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       }
       // queries are independent: release this query's cached plans,
       // localCheckpoint blocks and broadcasts before the next measurement —
@@ -196,13 +124,8 @@ object Bench {
       // width 3 in lockstep with the 200-row cut
       def foldPanel(wide: org.apache.spark.sql.DataFrame,
           nVars: Int): org.apache.spark.sql.DataFrame =
-        (1 to nVars).map(i =>
-          wide.where(col(s"X$i").isNotNull)
-            .select(concat(col("configId"), lit(s"|X$i")).as("series"),
-              concat(col("configId"), lit("|"),
-                lpad(col("t").cast("string"), 3, "0")).as("day"),
-              floor(col(s"X$i") * 1000).cast("long").as("v")))
-          .reduce(_ unionByName _)
+        Panels.folded(wide, nVars, col("configId"), concat(col("configId"),
+          lit("|"), lpad(col("t").cast("string"), 3, "0")))
       val cfgs = graft.core.Grid.all().filter(_.nVars == 4)
       val wide = Generate.wideFast(spark, cfgs).where(col("t") < 200)
         .select(col("configId"), col("t"),
@@ -274,12 +197,12 @@ object Bench {
     // equi-joins at this width (no cartesian, no nested-loop).
     val runPcwide = only.forall(_.exists(_.startsWith("pcwide")))
     if (runPcwide) {
-      val pan32 = widePanel(spark, 32, 200).localCheckpoint(true)
+      val pan32 = Panels.widePanel(spark, 32, 200).localCheckpoint(true)
       // complete panel: the pair-row precondition holds by construction —
       // verified once outside the timed region (as in the pcsweep rungs)
       graft.metrics.Causal.assertPairRows(
         graft.metrics.Causal.pcSkeleton(pan32, 100L))
-      val pan64 = widePanel(spark, 64, 200).localCheckpoint(true)
+      val pan64 = Panels.widePanel(spark, 64, 200).localCheckpoint(true)
       graft.metrics.Causal.assertPairRows(
         graft.metrics.Causal.pcSkeleton(pan64, 100L))
       // PC-STABLE ladder (q347): conditioning candidates from the
@@ -308,7 +231,7 @@ object Bench {
       // order-2 pass here would enumerate 8128·C(126,2)≈64M quadruples
       // for no additional information — the stable ladder carries the
       // width story (with pcblocks at p=320 above it)
-      val pan128 = widePanel(spark, 128, 200).localCheckpoint(true)
+      val pan128 = Panels.widePanel(spark, 128, 200).localCheckpoint(true)
       measure("pcwide_p128_stable_oriented") { wideStableOnce(pan128) }
       pan128.unpersist()
       pan32.unpersist(); pan64.unpersist()
@@ -324,10 +247,10 @@ object Bench {
     // already pays C(78,2) ≈ 3k quadruples per surviving edge
     val runPcblocks = only.forall(_.exists(_.startsWith("pcblocks")))
     if (runPcblocks) {
-      val blk16 = widePanel3(spark, 16, 200).localCheckpoint(true)
+      val blk16 = Panels.widePanel3(spark, 16, 200).localCheckpoint(true)
       graft.metrics.Causal.assertPairRows(
         graft.metrics.Causal.pcSkeleton(blk16, 100L))
-      val blk64 = widePanel3(spark, 64, 200).localCheckpoint(true)
+      val blk64 = Panels.widePanel3(spark, 64, 200).localCheckpoint(true)
       def blocksOnce(pan: org.apache.spark.sql.DataFrame): Unit =
         graft.metrics.Causal.pcOrient3(
             graft.metrics.Causal.pcSkeleton3Stable(pan, 100L), 4,
@@ -368,12 +291,8 @@ object Bench {
         .select(Seq(col("configId"), col("t")) ++
           (1 to 8).map(i => col(s"X$i")): _*)
         .localCheckpoint(true)
-      val pan = (1 to 8).map(i =>
-        wide.where(col(s"X$i").isNotNull)
-          .select(concat(col("configId"), lit(s"|X$i")).as("series"),
-            (col("configId") * 65536L + col("t")).as("day"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val pan = Panels.folded(wide, 8, col("configId"),
+        col("configId") * 65536L + col("t"))
       val links = cfgs.flatMap(c => SparkEntry.weightLinks(
         c.configId.toString, c.family, c.nVars, c.maxLag))
       measure("weightrec_fold18_n50k") {
@@ -400,7 +319,7 @@ object Bench {
     // virtualCrossMomentsSparse scaladoc.
     val runWeightwide = only.forall(_.exists(_.startsWith("weightwide")))
     if (runWeightwide) {
-      val pan = widePanel(spark, 256, 10000)
+      val pan = Panels.widePanel(spark, 256, 10000)
       val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
         col("day").as("t"), col("v")).localCheckpoint(true)
       import spark.implicits._
@@ -410,10 +329,8 @@ object Bench {
         s"${nm(i)}@0", s"${nm(i - 1)}@0", None: Option[String]))
       val linksDf = links
         .toDF("target", "source", "lag", "y", "x", "sib")
-      val wanted = links.flatMap { l =>
-        val (a, b) = if (l._5 <= l._4) (l._5, l._4) else (l._4, l._5)
-        Seq((l._4, l._4), (l._5, l._5), (a, b))
-      }.distinct.toDF("na", "nb")
+      val wanted = graft.metrics.Causal.wantedPairs(spark,
+        links.map(l => (l._4, l._5)))
       def betaSum(mom: org.apache.spark.sql.DataFrame): Unit =
         graft.metrics.Causal.structuralBetas(mom, linksDf)
           .agg(sum(abs(col("beta_ppm"))))
@@ -440,7 +357,7 @@ object Bench {
     // 100 TB" a one-shuffle statement.
     val runBhfdr = only.forall(_.exists(_.startsWith("bhfdr")))
     if (runBhfdr) {
-      val pan = widePanel(spark, 512, 10000).localCheckpoint(true)
+      val pan = Panels.widePanel(spark, 512, 10000).localCheckpoint(true)
       import spark.implicits._
       def bnm(i: Int) = f"X$i%03d"
       val cands = for { dd <- 1 to 10; i <- 0 until 512 - dd }
@@ -448,27 +365,19 @@ object Bench {
       val linksDf = cands.map { case (a, b, dist) =>
         (s"$a<$b", dist, s"$b@0", s"$a@0", None: Option[String]) }
         .toDF("pair", "dist", "y", "x", "sib")
-      val wanted = cands.flatMap { case (a, b, _) =>
-        Seq((s"$a@0", s"$a@0"), (s"$b@0", s"$b@0"), (s"$a@0", s"$b@0")) }
-        .distinct.toDF("na", "nb")
+      val wanted = graft.metrics.Causal.wantedPairs(spark,
+        cands.map { case (a, b, _) => (s"$b@0", s"$a@0") })
       val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
         col("day").as("t"), col("v"))
-      val lutDf = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-        .zipWithIndex.map { case (q, i) => (i + 1, q) }
-        .toDF("rk", "q_milli")
+      val lad = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
       measure("bhfdr_p512_5k_hypotheses") {
-        graft.metrics.Causal.waldK1(
-            graft.metrics.Causal.structuralBetas(
-              graft.metrics.Causal.virtualCrossMomentsSparse(virt,
-                wanted, col("t").between(0, 9999)), linksDf))
-          .withColumn("rk", expr(
-            """row_number() over (
-              |  order by coalesce(t2_milli, -1) desc, pair)"""
-              .stripMargin))
-          .join(broadcast(lutDf), Seq("rk"))
-          .withColumn("k_star", expr(
-            "max(case when t2_milli >= q_milli then rk end) over ()"))
-          .where(col("rk") <= coalesce(col("k_star"), lit(0L)))
+        graft.metrics.Causal.stepUp(
+            graft.metrics.Causal.waldK1(
+              graft.metrics.Causal.structuralBetas(
+                graft.metrics.Causal.virtualCrossMomentsSparse(virt,
+                  wanted, col("t").between(0, 9999)), linksDf)),
+            "pair", "bh" -> lad)
+          .where(col("disc_bh") === 1)
           .groupBy("dist").count()
           .write.mode("overwrite").format("noop").save()
       }
@@ -493,16 +402,7 @@ object Bench {
       // to keep every Cramer product inside DECIMAL(38,0).
       val cfgsAll = graft.core.Grid.all()
       val wideC = Generate.wideFast(spark, cfgsAll).where(col("t") < 200)
-      val virtC = (1 to 8).map { i =>
-        val m = floor(greatest(least(col(s"X$i"), lit(1e3)), lit(-1e3))
-          * 1000).cast("long").as("v")
-        val base = wideC.where(col(s"X$i").isNotNull)
-        base.select(concat(col("configId"), lit(s"|X$i@0")).as("vs"),
-            (col("configId") * 65536 + col("t")).as("t"), m)
-          .unionByName(base.select(
-            concat(col("configId"), lit(s"|X$i@1")).as("vs"),
-            (col("configId") * 65536 + col("t") + 1).as("t"), m))
-      }.reduce(_ unionByName _).localCheckpoint(true)
+      val virtC = Panels.clampedLag1(wideC, 8).localCheckpoint(true)
       val hypsC = cfgsAll.flatMap { c =>
         for { i <- 1 to c.nVars; j <- 1 to c.nVars if i != j } yield {
           val g = c.configId
@@ -511,26 +411,17 @@ object Bench {
         }
       }
       val linksC = hypsC.toDF("pair", "family", "y", "x", "sib")
-      def cnp(a: String, b: String) = if (a <= b) (a, b) else (b, a)
-      val wantedC = hypsC.flatMap { case (_, _, y, x, _) =>
-        Seq((y, y), (x, x), cnp(x, y))
-      }.distinct.toDF("na", "nb")
-      val lutC = graft.metrics.Causal.chi2InvMilliLadder(hypsC.size)
-        .zipWithIndex.map { case (q, i) => (i + 1, q) }
-        .toDF("rk", "q_milli")
+      val wantedC = graft.metrics.Causal.wantedPairs(spark,
+        hypsC.map(h => (h._3, h._4)))
+      val ladC = graft.metrics.Causal.chi2InvMilliLadder(hypsC.size)
       measure("bhfdr_catalog_85k_hypotheses") {
-        graft.metrics.Causal.waldK1(
-            graft.metrics.Causal.structuralBetas(
-              graft.metrics.Causal.virtualCrossMomentsSparse(virtC,
-                wantedC, (col("t") % 65536).between(1, 199)), linksC))
-          .withColumn("rk", expr(
-            """row_number() over (
-              |  order by coalesce(t2_milli, -1) desc, pair)"""
-              .stripMargin))
-          .join(broadcast(lutC), Seq("rk"))
-          .withColumn("k_star", expr(
-            "max(case when t2_milli >= q_milli then rk end) over ()"))
-          .where(col("rk") <= coalesce(col("k_star"), lit(0L)))
+        graft.metrics.Causal.stepUp(
+            graft.metrics.Causal.waldK1(
+              graft.metrics.Causal.structuralBetas(
+                graft.metrics.Causal.virtualCrossMomentsSparse(virtC,
+                  wantedC, (col("t") % 65536).between(1, 199)), linksC)),
+            "pair", "bh" -> ladC)
+          .where(col("disc_bh") === 1)
           .groupBy("family").count()
           .write.mode("overwrite").format("noop").save()
       }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.generate.Generate
+import graft.generate.{Generate, Panels}
 import graft.ops.{AsOf, ExactStats, Lagged}
 import graft.text.{Dedup, TextOps}
 import graft.sim.Similarity
@@ -516,6 +516,13 @@ object SparkEntry
     pcDirectedTruthFor(4)
   private[graft] lazy val PcDirectedTruth6: Seq[(String, String)] =
     pcDirectedTruthFor(6)
+  /** A truth that may be missing (the shipped q339 one): absent, the
+    * relation raises [[ShippedD3Missing]] instead of scoring no edges.
+    */
+  private[graft] def pcTruthValuesSql(truth: Option[Seq[(String, String)]])
+      : String =
+    truth.fold(s"(SELECT $ShippedD3Missing::VARCHAR, NULL::VARCHAR) " +
+      "t(source, target)")(pcTruthValuesSql)
   private[graft] def pcTruthValuesSql(truth: Seq[(String, String)]): String =
     if (truth.isEmpty)
       // zero-row relation, not "(VALUES )" (a parse error): the scoring
@@ -641,16 +648,33 @@ object SparkEntry
   private[graft] val ShippedD3Base: String =
     "/root/reference/Datasets/D3/lag 2/" +
       "nonlinear_ts_n1000_vars4_lag2_noise30_mcar10_block10"
-  private[graft] lazy val ShippedD3TruthCase: String = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$ShippedD3Base" + "_structure.txt"))
-    val edges = graft.generate.Sinks.parseStructureLinks(txt)
-      .filter(_._2 == 1).map(l => (l._1, l._3)).distinct
-    if (edges.isEmpty) "0"
-    else "CASE " + edges.map { case (a, b) =>
-      s"WHEN cause = '$a' AND effect = '$b' THEN 1"
-    }.mkString(" ") + " ELSE 0 END"
+  private[graft] lazy val ShippedD3TruthCase: String =
+    shippedD3Links.fold(ShippedD3Missing) { links =>
+      val edges = links.filter(_._2 == 1).map(l => (l._1, l._3)).distinct
+      if (edges.isEmpty) "0"
+      else "CASE " + edges.map { case (a, b) =>
+        s"WHEN cause = '$a' AND effect = '$b' THEN 1"
+      }.mkString(" ") + " ELSE 0 END"
+    }
+
+  /** The shipped structure txt's parsed links, or None on a host without
+    * the shipped corpus. The q325/q338/q339 truths render from
+    * it; without it each of those entries fails on its own (the oracle
+    * raises [[ShippedD3Missing]], the Spark side on the missing CSV) and
+    * every other entry still builds.
+    */
+  private lazy val shippedD3Links
+      : Option[Vector[(String, Int, String, String, Double)]] = {
+    val p = java.nio.file.Paths.get(s"$ShippedD3Base" + "_structure.txt")
+    if (!java.nio.file.Files.exists(p)) None
+    else Some(graft.generate.Sinks.parseStructureLinks(
+      java.nio.file.Files.readString(p)))
   }
+  /** A DuckDB expression that fails the oracle naming the missing file —
+    * never an empty truth that would score as "no edges".
+    */
+  private val ShippedD3Missing: String =
+    s"error('missing shipped structure file: ${ShippedD3Base}_structure.txt')"
 
   /** q336/q337's shared panel: the A1 6-var lag-2 gaussian cell cut at
     * 200 observations, dumped ONCE under `q336_gen` (both queries — and
@@ -658,16 +682,11 @@ object SparkEntry
     * byte-identically whichever entry runs first).
     */
   private[graft] def pcOrder2Panel(s: SparkSession): DataFrame = {
-    val cfg = Grid.forFamily("A1").find(c =>
-      c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2
-        && c.noiseType == "gaussian").get
+    val cfg = Grid.cell("A1", 500, 6, 2)
     val gen = dumpGen(s, "q336_gen",
       Generate.wideFast(s, Seq(cfg)).where(col("t") < 200)
         .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-    (1 to 6).map(i =>
-      gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-        floor(col(s"X$i") * 1000).cast("long").as("v")))
-      .reduce(_ unionByName _)
+    Panels.single(gen, 6)
   }
 
   /** The Spark twin of [[pcScoringSqlTail]], shared by q332/q337/q339:
@@ -714,7 +733,7 @@ object SparkEntry
     (1 to 4).map(i =>
       idxed.where(col(s"X$i").isNotNull)
         .select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
+          Panels.milli(col(s"X$i")).as("v")))
       .reduce(_ unionByName _)
   }
 
@@ -722,27 +741,24 @@ object SparkEntry
     * edges (distinct ordered pairs, self-loops excluded — the q332
     * contract applied to shipped bytes).
     */
-  private[graft] lazy val ShippedD3DirectedTruth: Seq[(String, String)] = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$ShippedD3Base" + "_structure.txt"))
-    graft.generate.Sinks.parseStructureLinks(txt)
-      .filter(l => l._1 != l._3).map(l => (l._1, l._3)).distinct
-  }
+  private[graft] lazy val ShippedD3DirectedTruth
+      : Option[Seq[(String, String)]] =
+    shippedD3Links.map(
+      _.filter(l => l._1 != l._3).map(l => (l._1, l._3)).distinct)
 
   /** q338's truth: the same shipped structure txt as ANY-lag unordered
     * X-X adjacency (PC is lag-free), a CASE over (a, b) with a < b.
     */
-  private[graft] lazy val ShippedD3AdjCase: String = {
-    val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$ShippedD3Base" + "_structure.txt"))
-    val pairs = graft.generate.Sinks.parseStructureLinks(txt)
-      .map(l => if (l._1 < l._3) (l._1, l._3) else (l._3, l._1))
-      .filter(p => p._1 != p._2).distinct
-    if (pairs.isEmpty) "0"
-    else "CASE " + pairs.map { case (x, y) =>
-      s"WHEN a = '$x' AND b = '$y' THEN 1"
-    }.mkString(" ") + " ELSE 0 END"
-  }
+  private[graft] lazy val ShippedD3AdjCase: String =
+    shippedD3Links.fold(ShippedD3Missing) { links =>
+      val pairs = links
+        .map(l => if (l._1 < l._3) (l._1, l._3) else (l._3, l._1))
+        .filter(p => p._1 != p._2).distinct
+      if (pairs.isEmpty) "0"
+      else "CASE " + pairs.map { case (x, y) =>
+        s"WHEN a = '$x' AND b = '$y' THEN 1"
+      }.mkString(" ") + " ELSE 0 END"
+    }
 
   /** q333's whole-tree shipped cell: every D3 (vars=4, lag=2) *_missing.csv
     * (48 files — 12 noise/mcar/block combos × 4 sizes), read by ONE glob in
@@ -852,13 +868,9 @@ object SparkEntry
     * pcSkeleton/pcOrient call carries all 48 disjoint graphs.
     */
   private[graft] def shippedD3TreeFoldedPanel(idxed: DataFrame): DataFrame =
-    (1 to 4).map(i =>
-      idxed.where(col(s"X$i").isNotNull && col("t") < 200)
-        .select(concat(col("cfg"), lit(s"|X$i")).as("series"),
-          concat(col("cfg"), lit("|"),
-            lpad(col("t").cast("string"), 3, "0")).as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-      .reduce(_ unionByName _).localCheckpoint(false)
+    Panels.folded(idxed.where(col("t") < 200), 4, col("cfg"),
+      concat(col("cfg"), lit("|"), lpad(col("t").cast("string"), 3, "0")))
+      .localCheckpoint(false)
 
   /** The shipped-cell glob scan as a CTE (q333/q340/q341 oracles): 48
     * CSVs in one read_csv, config identity from the file name,

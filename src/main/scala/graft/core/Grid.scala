@@ -43,6 +43,15 @@ object Grid {
     out.zipWithIndex.map { case (c, i) => c.copy(configId = idOffset + i) }
   }
 
+  /** The family's gaussian cell at (nPoints, nVars, maxLag), with its
+    * family-local configId — the one generated graph a single-config
+    * query reads.
+    */
+  def cell(family: String, nPoints: Int, nVars: Int, maxLag: Int): GenConfig =
+    forFamily(family).find(c =>
+      c.nPoints == nPoints && c.nVars == nVars && c.maxLag == maxLag
+        && c.noiseType == "gaussian").get
+
   /** The complete 18-family sweep with globally unique configIds. */
   def all(seed: Long = DefaultSeed): Vector[GenConfig] = {
     var offset = 0L

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core._
-import graft.generate.Generate
+import graft.generate.{Generate, Panels}
 import graft.ops.{AsOf, ExactStats, Lagged}
 import graft.text.{Dedup, TextOps}
 import graft.sim.Similarity
@@ -12,6 +12,43 @@ import graft.sim.Similarity
 /** Causal slice of [[SparkEntry.queries]] — mechanical split of the
   * single registry map; entry bodies are verbatim. */
 private[graft] trait QueriesCausal { this: SparkEntry.type =>
+
+  /** The q371/q377/q378/q382 block design over `Panels.widePanel3(32, ·)`:
+    * every pair at chain distance 1..9 of its 160 series as
+    * (pair "a<b", tier, y = b, x = a) — 1,395 hypotheses. Tier `ab`: the
+    * two aggregates of one block; `as`: an aggregate and a source of one
+    * block; `null`: everything else (sources are mutually independent,
+    * blocks are independent of each other).
+    */
+  private lazy val BlockDesign: IndexedSeq[(String, String, String, String)] = {
+    def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
+    for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
+      val tier =
+        if (i / 5 != (i + dd) / 5) "null"
+        else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
+        else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
+        else "null"
+      (s"${snm(i)}<${snm(i + dd)}", tier, snm(i + dd), snm(i))
+    }
+  }
+
+  /** The [[BlockDesign]] hypotheses' k=1 Wald frame (pair, tier, …,
+    * t2_milli) on a 60-observation block panel dumped under `dump`: one
+    * pair-restricted sparse moment pass, then `Causal.waldK1`.
+    */
+  private def blockDesignWald(s: SparkSession, dump: String): DataFrame = {
+    import s.implicits._
+    val pan = dumpGen(s, dump, Panels.widePanel3(s, 32, 60))
+    val cands = BlockDesign.map { case (p, tier, y, x) =>
+      (p, tier, s"$y@0", s"$x@0", None: Option[String]) }
+    val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
+      col("day").as("t"), col("v"))
+    val mom = graft.metrics.Causal.virtualCrossMomentsSparse(virt,
+      graft.metrics.Causal.wantedPairs(s, cands.map(c => (c._3, c._4))),
+      col("t").between(0, 59))
+    graft.metrics.Causal.waldK1(graft.metrics.Causal.structuralBetas(mom,
+      cands.toDF("pair", "tier", "y", "x", "sib")))
+  }
 
   private[graft] def queriesCausal: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -692,16 +729,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // produces its benchmark data AND runs the discovery step the
     // benchmark exists to evaluate
     "q294_granger_on_generated" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 4, 2)
       val gen = dumpGen(s, "q294_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t"), col("X1"), col("X2"), col("X3"), col("X4")))
-      val panel = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4)
       graft.metrics.Causal.grangerLag1(panel)
         .withColumn("truth_lag1", expr(GrangerGenTruthCase))
     }),
@@ -872,16 +904,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // run the q270 skeleton, flag each unordered pair against the
     // catalog's any-lag adjacency
     "q300_pc_on_generated" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 500 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 500, 4, 2)
       val gen = dumpGen(s, "q300_gen",
         Generate.wideFast(s, Seq(cfg)).where(col("t") < 200)
           .select(col("t"), col("X1"), col("X2"), col("X3"), col("X4")))
-      val panel = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4)
       graft.metrics.Causal.pcSkeleton(panel)
         .withColumn("truth_adj", expr(PcGenTruthCase))
     }),
@@ -1227,19 +1254,14 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // U rows surface exactly the confounder-induced flags the benchmark
     // family exists to create
     "q313_granger_confounded" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1C").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1C", 5000, 4, 2)
       val gen = dumpGen(s, "q313_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t"), col("X1"), col("X2"), col("X3"), col("X4"),
             col("U")))
-      val panel = ((1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        :+ gen.select(lit("U").as("series"), col("t").as("day"),
-          floor(col("U") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4).unionByName(
+        gen.select(lit("U").as("series"), col("t").as("day"),
+          Panels.milli(col("U")).as("v")))
       graft.metrics.Causal.grangerLag1(panel)
         .withColumn("truth_lag1", expr(grangerTruthCase("A1C")))
     }),
@@ -1253,9 +1275,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // index (the generator's semantics); the Granger sums/decision tail
     // is shared verbatim with q294/q269
     "q314_granger_irregular" -> ((s, d) => {
-      val cfg = Grid.forFamily("A2").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A2", 5000, 4, 2)
       val gen = dumpGen(s, "q314_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t"), col("time"), col("X1"), col("X2"), col("X3"),
@@ -1265,10 +1285,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val lx = graft.ops.Lagged.nearestLagIndexView(
         gen.select(col("t"), col("time")), "t", "time")
         .localCheckpoint(false)
-      val pan = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _).localCheckpoint(false)
+      val pan = Panels.single(gen, 4).withColumnRenamed("day", "t")
+        .localCheckpoint(false)
       val e = pan.select(col("series").as("effect"), col("t"),
         col("v").as("yv"))
       val ep = pan.select(col("series").as("effect"),
@@ -1650,7 +1668,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val pan = (1 to 4).map(i =>
         idxed.where(col(s"X$i").isNotNull)
           .select(lit(s"X$i").as("series"), col("t"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
+            Panels.milli(col(s"X$i")).as("v")))
         .reduce(_ unionByName _).localCheckpoint(false)
       val e = pan.select(col("series").as("effect"), col("t"),
         col("v").as("yv"))
@@ -1700,7 +1718,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         graft.metrics.Causal.pcOrient(
           graft.metrics.Causal.pcSkeleton(shippedD3Panel(s)),
           PcMeekRounds, requirePairRows = false),
-        ShippedD3DirectedTruth)),
+        ShippedD3DirectedTruth.getOrElse(throw new
+          java.io.FileNotFoundException(s"$ShippedD3Base" + "_structure.txt")))),
 
     // corpus-grain constraint-based discovery capstone: the COMPLETE PC
     // consumer (q338's pairwise-complete Spearman skeleton → q332's
@@ -1780,13 +1799,9 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .withColumn("blk", expr("t div 200"))
         // one CSV read + one global sort for all four series branches
         .localCheckpoint(false)
-      val pan = (1 to 4).map(i =>
-        idxed.where(col(s"X$i").isNotNull)
-          .select(concat(col("blk"), lit(s"|X$i")).as("series"),
-            concat(col("blk"), lit("|"),
-              lpad((col("t") % 200).cast("string"), 3, "0")).as("day"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val pan = Panels.folded(idxed, 4, col("blk"),
+        concat(col("blk"), lit("|"),
+          lpad((col("t") % 200).cast("string"), 3, "0")))
       graft.metrics.Causal.pcSkeleton(pan)
         .groupBy(substring_index(col("a"), "|", -1).as("a"),
           substring_index(col("b"), "|", -1).as("b"))
@@ -1880,16 +1895,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // inside the pair key), reusing the shared Granger decide CTEs
     // verbatim
     "q344_stream_granger" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 500 && c.nVars == 4 && c.maxLag == 2 &&
-          c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 500, 4, 2)
       val gen = dumpGen(s, "q344_gen",
         Generate.wideFast(s, Seq(cfg)).where(col("t") < 400)
           .select(col("t") +: (1 to 4).map(i => col(s"X$i")): _*))
-      val panel = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4)
       // the EXACT batch alignment, shared: grangerSums = this + sums
       val tuples = graft.metrics.Causal.grangerLagged(panel)
         .where(col("pv").isNotNull)
@@ -1993,12 +2003,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // the SQL twin's series-enumeration stage would actually surface,
     // and where the Meek fixpoint early-exit must still agree with the
     // oracle's fully-unrolled round chain. The deterministic chain-MA
-    // panel (Bench.widePanel — pure hash arithmetic, no RNG) is dumped
+    // panel (Panels.widePanel — pure hash arithmetic, no RNG) is dumped
     // once; both engines run the complete order-2 skeleton + cofactor +
     // v-structure + Meek pipeline on it and the full 496-pair dir
     // census hashes bitwise.
     "q346_pc_wide_oriented" -> ((s, d) => {
-      val pan = dumpGen(s, "q346_panel", Bench.widePanel(s, 32, 200))
+      val pan = dumpGen(s, "q346_panel", Panels.widePanel(s, 32, 200))
       graft.metrics.Causal.pcOrient2(
           graft.metrics.Causal.pcSkeleton2(pan, PcOrientTauSqBp),
           PcMeekRounds)
@@ -2018,7 +2028,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // 496-pair dir census hashed bitwise against the SQL twin's
     // adjacency-CTE chain
     "q347_pc_stable_wide" -> ((s, d) => {
-      val pan = dumpGen(s, "q347_panel", Bench.widePanel(s, 32, 200))
+      val pan = dumpGen(s, "q347_panel", Panels.widePanel(s, 32, 200))
       graft.metrics.Causal.pcOrient2(
           graft.metrics.Causal.pcSkeleton2Stable(pan, PcOrientTauSqBp),
           PcStableMeekRounds)
@@ -2035,13 +2045,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // (unrestricted would be O(p⁵) per graph); the integer budget
     // tightens to n ≤ ~300 obs (Causal.pcSkeleton3Stable scaladoc),
     // which the 200-obs contract respects. Dataset: the BLOCK panel
-    // (Bench.widePanel3 — q346/q347's chain panel has NO order-3
+    // (Panels.widePanel3 — q346/q347's chain panel has NO order-3
     // separations at any τ, probe-verified, so it cannot gate this
     // stage): 8 independent 5-series cells whose A-B pair separates
     // exactly on its source triple — 8 real order-3 removals, 8
     // three-element sepsets flowing into orientation, 40-series width
     "q348_pc_stable_order3_wide" -> ((s, d) => {
-      val pan = dumpGen(s, "q348_panel", Bench.widePanel3(s, 8, 200))
+      val pan = dumpGen(s, "q348_panel", Panels.widePanel3(s, 8, 200))
       graft.metrics.Causal.pcOrient3(
           graft.metrics.Causal.pcSkeleton3Stable(pan, PcOrientTauSqBp),
           PcStableMeekRounds)
@@ -2059,7 +2069,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // magnitude — the census row IS the scale argument, hash-checked
     // bitwise in both engines
     "q349_pc_stage_census" -> ((s, d) => {
-      val pan = dumpGen(s, "q349_panel", Bench.widePanel3(s, 8, 200))
+      val pan = dumpGen(s, "q349_panel", Panels.widePanel3(s, 8, 200))
       val sk = graft.metrics.Causal.pcSkeleton3Stable(pan, PcOrientTauSqBp)
         .select(col("a"), col("b"), col("keep0"), col("edge"),
           col("edge2"), col("edge3"))
@@ -2126,7 +2136,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // adaptive τ≈0.33 collapses it AND prunes the true edges whose
     // partials sit near 0.2-0.3 (the documented power price at n=200)
     "q350_pc_width_adaptive" -> ((s, d) => {
-      val pan = dumpGen(s, "q350_panel", Bench.widePanel3(s, 32, 200))
+      val pan = dumpGen(s, "q350_panel", Panels.widePanel3(s, 32, 200))
       // the rank/moment head is τ-free: compute it ONCE and hang both
       // census tails off it (r14 optimization; the oracle already shares
       // its pc_cm CTE the same way) — halves the query's fact-scale work
@@ -2164,16 +2174,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // link at ≈0 — quirk detection from generated bytes alone.
     // Fact-scale cost: one lagged self-join + one moment aggregation.
     "q351_struct_betas" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val gen = dumpGen(s, "q351_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = (1 to 6).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 6)
       val links = weightLinks("", "A1", 6, 2)
       val mom = graft.metrics.Causal.laggedCrossMoments(
         panel, weightSpecs(links), col("t").between(2, 4999))
@@ -2211,12 +2216,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         Generate.wideFast(s, cfgs)
           .select(Seq(col("configId"), col("t")) ++
             (1 to 8).map(i => col(s"X$i")): _*))
-      val panel = (1 to 8).map(i =>
-        gen.where(col(s"X$i").isNotNull)
-          .select(concat(col("configId"), lit(s"|X$i")).as("series"),
-            (col("configId") * 8192 + col("t")).as("day"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.folded(gen, 8, col("configId"),
+        col("configId") * 8192 + col("t"))
       val links = cfgs.flatMap(c =>
         weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
       val mom = graft.metrics.Causal.laggedCrossMoments(
@@ -2243,18 +2244,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // pinned as data. All other links agree across kernels (X6 feeds
     // nothing downstream in this cell, so only its own row moves).
     "q353_strict_recovery_contrast" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val links = weightLinks("", "A1", 6, 2)
       def betasFrom(dump: String, strict: Boolean): DataFrame = {
         val gen = dumpGen(s, dump,
           Generate.wideFast(s, Seq(cfg), strict = strict)
             .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-        val panel = (1 to 6).map(i =>
-          gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
-          .reduce(_ unionByName _)
+        val panel = Panels.single(gen, 6)
         graft.metrics.Causal.structuralBetas(
           graft.metrics.Causal.laggedCrossMoments(
             panel, weightSpecs(links), col("t").between(2, 4999)),
@@ -2283,16 +2279,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // 0.85 parent contributes nothing, so r2≈0 while σ̂² still lands
     // on 10⁴ (the dead link leaves pure noise, not excess variance).
     "q354_noise_recovery" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val gen = dumpGen(s, "q354_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = (1 to 6).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 6)
       val links = weightLinks("", "A1", 6, 2)
       val mom = graft.metrics.Causal.laggedCrossMoments(
         panel, weightSpecs(links), col("t").between(2, 4999))
@@ -2341,13 +2332,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             .select(col("t") +: (1 to 4).map(i => col(s"X$i")): _*))
         val panel = (1 to 4).flatMap(i => Seq(
             gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-              floor(col(s"X$i") * 1000).cast("long").as("v")),
+              Panels.milli(col(s"X$i")).as("v")),
             gen.select(lit(s"X${i}p2").as("series"), col("t").as("day"),
-              floor(col(s"X$i") * col(s"X$i") * 1000).cast("long")
-                .as("v")),
+              Panels.milli(col(s"X$i") * col(s"X$i")).as("v")),
             gen.select(lit(s"X${i}p3").as("series"), col("t").as("day"),
-              floor(col(s"X$i") * col(s"X$i") * col(s"X$i") * 1000)
-                .cast("long").as("v"))))
+              Panels.milli(col(s"X$i") * col(s"X$i") * col(s"X$i"))
+                .as("v"))))
           .reduce(_ unionByName _)
         graft.metrics.Causal.structuralBetas(
           graft.metrics.Causal.laggedCrossMoments(panel, b1PowerSpecs(),
@@ -2390,7 +2380,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         gen.where(col("maskBits").bitwiseAND(lit(1 << (i - 1))) === 0)
           .select(concat(col("configId"), lit(s"|X$i")).as("series"),
             (col("configId") * 8192 + col("t")).as("day"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
+            Panels.milli(col(s"X$i")).as("v")))
         .reduce(_ unionByName _)
       val wlinks = cfgs.flatMap(c =>
         weightLinks(c.configId.toString, "D1", 4, 2))
@@ -2437,7 +2427,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // structuralInference is deliberately NOT used — its per-target
     // window would pool unrelated hypotheses sharing a series.
     "q370_bh_fdr" -> ((s, d) => {
-      val pan = dumpGen(s, "q370_panel", Bench.widePanel(s, 64, 20000))
+      val pan = dumpGen(s, "q370_panel", Panels.widePanel(s, 64, 20000))
       import s.implicits._
       def nm(i: Int) = f"X$i%02d"
       val cands = for { dd <- 1 to 10; i <- 0 until 64 - dd }
@@ -2445,31 +2435,20 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val linksDf = cands.map { case (a, b, dist) =>
         (s"$a<$b", dist, s"$b@0", s"$a@0", None: Option[String]) }
         .toDF("pair", "dist", "y", "x", "sib")
-      val wanted = cands.flatMap { case (a, b, _) =>
-        Seq((s"$a@0", s"$a@0"), (s"$b@0", s"$b@0"), (s"$a@0", s"$b@0")) }
-        .distinct.toDF("na", "nb")
+      val wanted = graft.metrics.Causal.wantedPairs(s,
+        cands.map { case (a, b, _) => (s"$b@0", s"$a@0") })
       val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
         col("day").as("t"), col("v"))
       val mom = graft.metrics.Causal.virtualCrossMomentsSparse(virt,
         wanted, col("t").between(0, 19999))
       val inf = graft.metrics.Causal.waldK1(
         graft.metrics.Causal.structuralBetas(mom, linksDf))
-      val lutDf = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-        .zipWithIndex.map { case (q, i) => (i + 1, q) }
-        .toDF("rk", "q_milli")
-      val ranked = inf
-        .withColumn("rk", expr(
-          "row_number() over (order by coalesce(t2_milli, -1) desc, pair)"))
-        .join(broadcast(lutDf), Seq("rk"))
-        .withColumn("k_star", expr(
-          """max(case when t2_milli >= q_milli then rk end)
-            |  over ()""".stripMargin))
-        .withColumn("disc",
-          (col("rk") <= coalesce(col("k_star"), lit(0L))).cast("int"))
+      val ranked = graft.metrics.Causal.stepUp(inf, "pair",
+        "bh" -> graft.metrics.Causal.chi2InvMilliLadder(cands.size))
       val summary = ranked.agg(
-        max(col("k_star")).cast("long").as("k_star"),
-        sum(col("disc")).as("n_disc_total"),
-        sum(when(col("disc") === 1 && col("dist") >= 4, 1L)
+        max(col("k_star_bh")).cast("long").as("k_star"),
+        sum(col("disc_bh")).as("n_disc_total"),
+        sum(when(col("disc_bh") === 1 && col("dist") >= 4, 1L)
           .otherwise(0L)).as("n_false_disc"))
         .withColumn("fdr_permille", expr(
           """case when n_disc_total = 0 then 0
@@ -2477,7 +2456,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             .stripMargin))
       ranked.groupBy("dist")
         .agg(count(lit(1)).as("n_pairs"),
-          sum(col("disc")).as("n_disc"),
+          sum(col("disc_bh")).as("n_disc"),
           min(col("t2_milli")).as("min_t2_milli"),
           max(col("t2_milli")).as("max_t2_milli"))
         .crossJoin(broadcast(summary))
@@ -2517,12 +2496,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             cos(lit(4.0 * math.Pi) * col("t") / lit(12.0)).as("c2")): _*))
       val targets = (1 to 6).map(i =>
         gen.select(lit(s"X$i@0").as("vs"), col("t"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
+          Panels.milli(col(s"X$i")).as("v")))
       val tChan = gen.select(lit("tt@0").as("vs"), col("t"),
         col("t").cast("long").as("v"))
       val basis = Seq("s1", "c1", "s2", "c2").map(b =>
         gen.select(lit(s"$b@0").as("vs"), col("t"),
-          floor(col(b) * 1000).cast("long").as("v")))
+          Panels.milli(col(b)).as("v")))
       val virt = (targets ++ Seq(tChan) ++ basis).reduce(_ unionByName _)
       val mom = graft.metrics.Causal.virtualCrossMoments(virt,
         col("t").between(0, 491))
@@ -2584,12 +2563,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       // ---- stage 1: q372's component estimation on THIS dump ----
       val targets1 = (1 to 6).map(i =>
         gen.select(lit(s"X$i@0").as("vs"), col("t"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
+          Panels.milli(col(s"X$i")).as("v")))
       val tChan = gen.select(lit("tt@0").as("vs"), col("t"),
         col("t").cast("long").as("v"))
       val basis = Seq("s1", "c1", "s2", "c2").map(b =>
         gen.select(lit(s"$b@0").as("vs"), col("t"),
-          floor(col(b) * 1000).cast("long").as("v")))
+          Panels.milli(col(b)).as("v")))
       val mom1 = graft.metrics.Causal.virtualCrossMoments(
         (targets1 ++ Seq(tChan) ++ basis).reduce(_ unionByName _),
         col("t").between(0, 491))
@@ -2611,7 +2590,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             .as("bc2"))
         .localCheckpoint()
       // ---- stage 2: blind + known target channels, func regressors ----
-      def m(c: String): Column = floor(col(c) * 1000).cast("long")
+      def m(c: String): Column = Panels.milli(col(c))
       val blind = (1 to 6).map { i =>
         gen.crossJoin(broadcast(comps.where(col("series") === s"X$i")
             .drop("series")))
@@ -2679,9 +2658,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // (X3 quadratic) ppm — q373's disposition, reproduced under the
     // irregular clock
     "q375_blind_harmonic_irregular" -> ((s, d) => {
-      val cfg = Grid.forFamily("C2").find(c =>
-        c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2 &&
-          c.noiseType == "gaussian").get
+      val cfg = Grid.cell("C2", 500, 6, 2)
       val links = c1Links("C2")
       def trendC(i: Int): Column = lit(0.01 * (i + 1) * 0.5) * col("t")
       def seasonC(i: Int): Column = {
@@ -2712,12 +2689,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       // ---- stage 1: blind component estimation, continuous-τ basis ----
       val targets1 = (1 to 6).map(i =>
         gen.select(lit(s"X$i@0").as("vs"), col("t"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
+          Panels.milli(col(s"X$i")).as("v")))
       val tChan = gen.select(lit("tt@0").as("vs"), col("t"),
         col("t").cast("long").as("v"))
       val basis = Seq("s1", "c1", "s2", "c2").map(b =>
         gen.select(lit(s"$b@0").as("vs"), col("t"),
-          floor(col(b) * 1000).cast("long").as("v")))
+          Panels.milli(col(b)).as("v")))
       val mom1 = graft.metrics.Causal.virtualCrossMoments(
         (targets1 ++ Seq(tChan) ++ basis).reduce(_ unionByName _),
         col("t").between(0, 499))
@@ -2739,7 +2716,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             .as("bc2"))
         .localCheckpoint()
       // ---- stage 2: blind + known channels, NEAREST-LAG regressors ----
-      def m(c: String): Column = floor(col(c) * 1000).cast("long")
+      def m(c: String): Column = Panels.milli(col(c))
       val blind = (1 to 6).map { i =>
         gen.crossJoin(broadcast(comps.where(col("series") === s"X$i")
             .drop("series")))
@@ -2814,44 +2791,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // run slightly looser than nominal — the measured n_false=0 is a
     // property of this design's separation, not proof of FWER control.
     "q371_fdr_vs_fwer" -> ((s, d) => {
-      val pan = dumpGen(s, "q371_panel", Bench.widePanel3(s, 32, 60))
-      import s.implicits._
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, s"$b@0", s"$a@0", None: Option[String])
-      }
-      val linksDf = cands.toDF("pair", "tier", "y", "x", "sib")
-      val wanted = cands.flatMap { case (_, _, y, x, _) =>
-        val (a, b) = if (x <= y) (x, y) else (y, x)
-        Seq((x, x), (y, y), (a, b))
-      }.distinct.toDF("na", "nb")
-      val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
-        col("day").as("t"), col("v"))
-      val mom = graft.metrics.Causal.virtualCrossMomentsSparse(virt,
-        wanted, col("t").between(0, 59))
-      val lutDf = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-        .zipWithIndex.map { case (q, i) => (i + 1, q) }
-        .toDF("rk", "q_milli")
-      val bonfMilli = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-        .head
-      val scored = graft.metrics.Causal.waldK1(
-          graft.metrics.Causal.structuralBetas(mom, linksDf))
-        .withColumn("rk", expr(
-          """row_number() over (
-            |  order by coalesce(t2_milli, -1) desc, pair)""".stripMargin))
-        .join(broadcast(lutDf), Seq("rk"))
-        .withColumn("k_star", expr(
-          "max(case when t2_milli >= q_milli then rk end) over ()"))
-        .withColumn("disc_bh",
-          (col("rk") <= coalesce(col("k_star"), lit(0L))).cast("int"))
+      val wald = blockDesignWald(s, "q371_panel")
+      val lad = graft.metrics.Causal.chi2InvMilliLadder(BlockDesign.size)
+      val scored = graft.metrics.Causal.stepUp(wald, "pair", "bh" -> lad)
         .withColumn("disc_bonf",
-          (col("t2_milli") >= lit(bonfMilli)).cast("int"))
+          (col("t2_milli") >= lit(lad.head)).cast("int"))
         .localCheckpoint()
       def ruleAgg(rule: String, disc: Column): DataFrame = scored.agg(
         lit(rule).as("rule"),
@@ -3005,46 +2949,10 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // the H_m factor prices out exactly the tail where the false
     // discoveries lived, at a 15% boundary-power cost
     "q382_bh_vs_by" -> ((s, d) => {
-      val pan = dumpGen(s, "q382_panel", Bench.widePanel3(s, 32, 60))
-      import s.implicits._
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, s"$b@0", s"$a@0", None: Option[String])
-      }
-      val linksDf = cands.toDF("pair", "tier", "y", "x", "sib")
-      val wanted = cands.flatMap { case (_, _, y, x, _) =>
-        val (a, b) = if (x <= y) (x, y) else (y, x)
-        Seq((x, x), (y, y), (a, b))
-      }.distinct.toDF("na", "nb")
-      val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
-        col("day").as("t"), col("v"))
-      val mom = graft.metrics.Causal.virtualCrossMomentsSparse(virt,
-        wanted, col("t").between(0, 59))
-      val bhLad = graft.metrics.Causal.fInvMilliLadder(cands.size, 58)
-      val byLad = graft.metrics.Causal.byInvMilliLadder(cands.size, 58)
-      val lutDf = bhLad.zip(byLad).zipWithIndex.map {
-        case ((qb, qy), i) => (i + 1, qb, qy) }
-        .toDF("rk", "q_bh_milli", "q_by_milli")
-      val scored = graft.metrics.Causal.waldK1(
-          graft.metrics.Causal.structuralBetas(mom, linksDf))
-        .withColumn("rk", expr(
-          """row_number() over (
-            |  order by coalesce(t2_milli, -1) desc, pair)""".stripMargin))
-        .join(broadcast(lutDf), Seq("rk"))
-        .withColumn("k_star_bh", expr(
-          "max(case when t2_milli >= q_bh_milli then rk end) over ()"))
-        .withColumn("k_star_by", expr(
-          "max(case when t2_milli >= q_by_milli then rk end) over ()"))
-        .withColumn("disc_bh",
-          (col("rk") <= coalesce(col("k_star_bh"), lit(0L))).cast("int"))
-        .withColumn("disc_by",
-          (col("rk") <= coalesce(col("k_star_by"), lit(0L))).cast("int"))
+      val wald = blockDesignWald(s, "q382_panel")
+      val scored = graft.metrics.Causal.stepUp(wald, "pair",
+          "bh" -> graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, 58),
+          "by" -> graft.metrics.Causal.byInvMilliLadder(BlockDesign.size, 58))
         .localCheckpoint()
       def ruleAgg(rule: String, disc: Column): DataFrame = scored.agg(
         lit(rule).as("rule"),
@@ -3171,9 +3079,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // error-model-free interval certifies the model-based one and
     // prices its extra caution
     "q380_block_bootstrap_ci" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 500 && c.nVars == 4 && c.maxLag == 2 &&
-          c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 500, 4, 2)
       val gen = dumpGen(s, "q380_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 4).map(i => col(s"X$i")): _*))
@@ -3188,8 +3094,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           col("t2") === col("t") - 2)
         .where(col("t").between(2, 481))
       def q(series: String, lag: Int): Column =
-        floor((if (lag == 0) col(series) else col(s"L$lag$series"))
-          * 1000).cast("long")
+        Panels.milli(
+          if (lag == 0) col(series) else col(s"L$lag$series"))
       val tuples = links.map { l =>
         gl.select(lit(lk(l)).as("link"), col("t").as("day"),
           q(l.target, 0).as("yv"), q(l.source, l.lag).as("xv"))
@@ -3277,7 +3183,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // this design
     "q379_permutation_null" -> ((s, d) => {
       val K = 199
-      val pan = Bench.widePanel3(s, 8, 60) // 40 series, 8 cells
+      val pan = Panels.widePanel3(s, 8, 60) // 40 series, 8 cells
       import s.implicits._
       def bnm(k: Int, r: Int) = s"G${"%02d".format(k)}X$r"
       // pairs: every within-block (A,B) aggregate pair ('ab'), one
@@ -3315,10 +3221,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           None: Option[String]))
       }
       val linksDf = links.toDF("hyp", "pair", "tier", "k", "y", "x", "sib")
-      def cnp(a: String, b: String) = if (a <= b) (a, b) else (b, a)
-      val wanted = links.flatMap { case (_, _, _, _, y, x, _) =>
-        Seq((y, y), (x, x), cnp(x, y))
-      }.distinct.toDF("na", "nb")
+      val wanted = graft.metrics.Causal.wantedPairs(s,
+        links.map(l => (l._5, l._6)))
       val scored = graft.metrics.Causal.waldK1(
           graft.metrics.Causal.structuralBetas(
             graft.metrics.Causal.virtualCrossMomentsSparse(virt, wanted,
@@ -3371,19 +3275,9 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // through the shared from-sums + ladder CTEs (stream ≡ batch, the
     // q344/q368 contract).
     "q378_stream_bh_monitor" -> ((s, d) => {
-      val pan = dumpGen(s, "q378_panel", Bench.widePanel3(s, 32, 60))
+      val pan = dumpGen(s, "q378_panel", Panels.widePanel3(s, 32, 60))
       import s.implicits._
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, b, a) // y = later series, x = earlier (q371)
-      }
-      val candsDf = cands.toDF("link", "tier", "ys", "xs")
+      val candsDf = BlockDesign.toDF("link", "tier", "ys", "xs")
       val pv = pan.select(col("series"), col("day"), col("v"))
       // tuple build is join-shaped, not a 1,395-way union: links ⋈ the
       // 9,600-row panel twice on (series, day)
@@ -3402,13 +3296,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val log = graft.streaming.StatefulOps.weightSums2Tws(s, tuples,
         "day", Seq(20L, 40L), s"$genDir/q378_bh_split",
         s"q378:$dumpSig", s"graft_stream_bh_${System.nanoTime()}")
-      val linkMeta = cands.map { case (p, tier, _, _) => (p, tier, 0) }
+      val linkMeta = BlockDesign.map { case (p, tier, _, _) => (p, tier, 0) }
         .toDF("link", "tier", "has_sib")
       // per-prefix EXACT ladders: the monitor's n is 20/40/60, so the
       // F(1, n−2) rung set differs per batch — driver-computed once,
       // keyed by the prefix length the emission row carries
       val lutDf = Seq(20, 40, 60).flatMap { n =>
-        graft.metrics.Causal.fInvMilliLadder(cands.size, n - 2)
+        graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, n - 2)
           .zipWithIndex.map { case (q, i) => (n.toLong, i + 1, q) }
       }.toDF("n", "rk", "q_milli")
       val scored = graft.metrics.Causal.structuralInferenceFromSums(
@@ -3446,47 +3340,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // anticonservativity never materialized as a false positive —
     // exactly the distinction the r12 ADVICE drew)
     "q377_fdr_exact_f_ladder" -> ((s, d) => {
-      val pan = dumpGen(s, "q377_panel", Bench.widePanel3(s, 32, 60))
-      import s.implicits._
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, s"$b@0", s"$a@0", None: Option[String])
-      }
-      val linksDf = cands.toDF("pair", "tier", "y", "x", "sib")
-      val wanted = cands.flatMap { case (_, _, y, x, _) =>
-        val (a, b) = if (x <= y) (x, y) else (y, x)
-        Seq((x, x), (y, y), (a, b))
-      }.distinct.toDF("na", "nb")
-      val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
-        col("day").as("t"), col("v"))
-      val mom = graft.metrics.Causal.virtualCrossMomentsSparse(virt,
-        wanted, col("t").between(0, 59))
+      val wald = blockDesignWald(s, "q377_panel")
       // n=60 rows, k=1 → the exact null is F(1, 58)
-      val chiLad = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-      val fLad = graft.metrics.Causal.fInvMilliLadder(cands.size, 58)
-      val lutDf = chiLad.zip(fLad).zipWithIndex.map {
-        case ((qc, qf), i) => (i + 1, qc, qf) }
-        .toDF("rk", "q_chi_milli", "q_f_milli")
-      val scored = graft.metrics.Causal.waldK1(
-          graft.metrics.Causal.structuralBetas(mom, linksDf))
-        .withColumn("rk", expr(
-          """row_number() over (
-            |  order by coalesce(t2_milli, -1) desc, pair)""".stripMargin))
-        .join(broadcast(lutDf), Seq("rk"))
-        .withColumn("k_star_chi", expr(
-          "max(case when t2_milli >= q_chi_milli then rk end) over ()"))
-        .withColumn("k_star_f", expr(
-          "max(case when t2_milli >= q_f_milli then rk end) over ()"))
-        .withColumn("disc_bh_chi",
-          (col("rk") <= coalesce(col("k_star_chi"), lit(0L))).cast("int"))
-        .withColumn("disc_bh_f",
-          (col("rk") <= coalesce(col("k_star_f"), lit(0L))).cast("int"))
+      val chiLad = graft.metrics.Causal.chi2InvMilliLadder(BlockDesign.size)
+      val fLad = graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, 58)
+      val scored = graft.metrics.Causal.stepUp(wald, "pair",
+          "chi" -> chiLad, "f" -> fLad)
         .withColumn("disc_bonf_chi",
           (col("t2_milli") >= lit(chiLad.head)).cast("int"))
         .withColumn("disc_bonf_f",
@@ -3502,8 +3361,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           .as("n_disc_as"),
         sum(when(disc === 1 && col("tier") === "null", 1L).otherwise(0L))
           .as("n_false"))
-      ruleAgg("bh_chi2", col("disc_bh_chi"))
-        .unionByName(ruleAgg("bh_f58", col("disc_bh_f")))
+      ruleAgg("bh_chi2", col("disc_chi"))
+        .unionByName(ruleAgg("bh_f58", col("disc_f")))
         .unionByName(ruleAgg("bonf_chi2", col("disc_bonf_chi")))
         .unionByName(ruleAgg("bonf_f58", col("disc_bonf_f")))
     }),
@@ -3531,17 +3390,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         Generate.wideFast(s, cfgs).where(col("t") < 200)
           .select(col("configId"), col("t"),
             col("X1"), col("X2"), col("X3"), col("X4")))
-      def mcl(i: Int) = floor(greatest(least(col(s"X$i"), lit(1e3)),
-        lit(-1e3)) * 1000).cast("long")
-      val virt = (1 to 4).map { i =>
-        gen.select(concat(col("configId"), lit(s"|X$i@0")).as("vs"),
-            (col("configId") * 65536 + col("t")).as("t"),
-            mcl(i).as("v"))
-          .unionByName(gen.select(
-            concat(col("configId"), lit(s"|X$i@1")).as("vs"),
-            (col("configId") * 65536 + col("t") + 1).as("t"),
-            mcl(i).as("v")))
-      }.reduce(_ unionByName _)
+      val virt = Panels.clampedLag1(gen, 4)
       val hyps = cfgs.flatMap { c =>
         val direct = graft.core.Parser.truthLinks("A1", 4, c.maxLag)
           .map(l => (l.source, l.target)).toSet
@@ -3554,31 +3403,20 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       }
       import s.implicits._
       val linksDf = hyps.toDF("pair", "tier", "y", "x", "sib")
-      def cnp(a: String, b: String) = if (a <= b) (a, b) else (b, a)
-      val wanted = hyps.flatMap { case (_, _, y, x, _) =>
-        Seq((y, y), (x, x), cnp(x, y))
-      }.distinct.toDF("na", "nb")
-      val lutDf = graft.metrics.Causal.chi2InvMilliLadder(hyps.size)
-        .zipWithIndex.map { case (q, i) => (i + 1, q) }
-        .toDF("rk", "q_milli")
-      val ranked = graft.metrics.Causal.waldK1(
+      val wanted = graft.metrics.Causal.wantedPairs(s,
+        hyps.map(h => (h._3, h._4)))
+      val ranked = graft.metrics.Causal.stepUp(
+        graft.metrics.Causal.waldK1(
           graft.metrics.Causal.structuralBetas(
             graft.metrics.Causal.virtualCrossMomentsSparse(virt, wanted,
-              (col("t") % 65536).between(1, 199)), linksDf))
-        .withColumn("rk", expr(
-          """row_number() over (
-            |  order by coalesce(t2_milli, -1) desc, pair)""".stripMargin))
-        .join(broadcast(lutDf), Seq("rk"))
-        .withColumn("k_star", expr(
-          "max(case when t2_milli >= q_milli then rk end) over ()"))
-        .withColumn("disc",
-          (col("rk") <= coalesce(col("k_star"), lit(0L))).cast("int"))
+              (col("t") % 65536).between(1, 199)), linksDf)),
+        "pair", "bh" -> graft.metrics.Causal.chi2InvMilliLadder(hyps.size))
       val summary = ranked.agg(
-        max(col("k_star")).cast("long").as("k_star"),
-        sum(col("disc")).as("n_disc_total"))
+        max(col("k_star_bh")).cast("long").as("k_star"),
+        sum(col("disc_bh")).as("n_disc_total"))
       ranked.groupBy("tier")
         .agg(count(lit(1)).as("n_hyp"),
-          sum(col("disc")).as("n_disc"),
+          sum(col("disc_bh")).as("n_disc"),
           max(col("t2_milli")).as("max_t2_milli"),
           sum(when(col("t2_milli").isNull, 1L).otherwise(0L))
             .as("n_t2_null"))
@@ -3647,14 +3485,14 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           base.select(
             concat(col("configId"), lit(s"|$vsName@0")).as("vs"),
             (col("configId") * 8192 + col("t")).as("t"),
-            floor(col(valueCol) * 1000).cast("long").as("v"))
+            Panels.milli(col(valueCol)).as("v"))
         else lx.where(col("lag_mult") === lag).drop("lag_mult")
           .join(base.select(col("configId"), col("t").as("lag_idx"),
             col(valueCol)), Seq("configId", "lag_idx"))
           .select(
             concat(col("configId"), lit(s"|$vsName@$lag")).as("vs"),
             (col("configId") * 8192 + col("t")).as("t"),
-            floor(col(valueCol) * 1000).cast("long").as("v"))
+            Panels.milli(col(valueCol)).as("v"))
       }
       val virtAll = ((1 to 4).map(i =>
           chan(s"X$i~", s"X${i}t", i, 0, null)) ++ Seq(
@@ -3748,7 +3586,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         gen.where(col("maskBits").bitwiseAND(lit(1 << (i - 1))) === 0)
           .select(col("configId"),
             lit(s"X$i" + (if (sq) "p2" else "")).as("series"), col("t"),
-            floor(v * 1000).cast("long").as("v"))
+            Panels.milli(v).as("v"))
       }.reduce(_ unionByName _)
       val panLin = pan(sq = false)
       val panSq = pan(sq = true).localCheckpoint(false)
@@ -3838,9 +3676,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // arithmetic (Causal.structuralInferenceFromSums, the streaming
     // twin of q363's operator; stream ≡ batch pinned by spec).
     "q368_stream_inference" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2 &&
-          c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 500, 6, 2)
       val gen = dumpGen(s, "q368_gen",
         Generate.wideFast(s, Seq(cfg)).where(col("t") < 400)
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
@@ -3853,8 +3689,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           col("t2") === col("t") - 2)
         .where(col("t").between(2, 399))
       def q(series: String, lag: Int): Column =
-        floor((if (lag == 0) col(series) else col(s"L$lag$series"))
-          * 1000).cast("long")
+        Panels.milli(
+          if (lag == 0) col(series) else col(s"L$lag$series"))
       val tuples = streamWeightLinks().map { case (k, tgt, src, lag, hs,
           sibSeries, sibLag, _) =>
         gl.select(lit(k).as("link"), q(tgt, 0).as("yv"),
@@ -3901,16 +3737,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // this is row-level interval calibration with a train-frozen
     // intercept — genuinely out of sample.
     "q367_forecast_calibration" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val gen = dumpGen(s, "q367_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = (1 to 6).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 6)
       val links = weightLinks("", "A1", 6, 2)
       val specs = weightSpecs(links)
       val virt = specs.map { case (series, k) =>
@@ -3973,16 +3804,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // landing on the smallest candidate), so "no identifiable lag" is
     // itself a data read, the deadness surfaced a FIFTH way.
     "q366_lag_identification" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val gen = dumpGen(s, "q366_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = (1 to 6).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 6)
       val links = weightLinks("", "A1", 6, 2)
       val cands = 0 to 4
       val specs = (links.map(l => (l.target, 0)) ++
@@ -4036,16 +3862,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // (t² > 3.841) — the quirk surfaced a fourth way: as a hypothesis-
     // test decision, not just a small beta.
     "q363_beta_ttest" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val gen = dumpGen(s, "q363_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = (1 to 6).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 6)
       val links = weightLinks("", "A1", 6, 2)
       val mom = graft.metrics.Causal.laggedCrossMoments(
         panel, weightSpecs(links), col("t").between(2, 4999))
@@ -4080,12 +3901,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         Generate.wideFast(s, cfgs)
           .select(Seq(col("configId"), col("t")) ++
             (1 to 8).map(i => col(s"X$i")): _*))
-      val panel = (1 to 8).map(i =>
-        gen.where(col(s"X$i").isNotNull)
-          .select(concat(col("configId"), lit(s"|X$i")).as("series"),
-            (col("configId") * 8192 + col("t")).as("day"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.folded(gen, 8, col("configId"),
+        col("configId") * 8192 + col("t"))
       val links = cfgs.flatMap(c =>
         weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
       val mom = graft.metrics.Causal.laggedCrossMoments(
@@ -4159,7 +3976,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       // regressors at their link lags — one moment pass for both variants
       def ch(colName: String, vs: String, lag: Int): DataFrame =
         gen.select(lit(vs).as("vs"), (col("t") + lag).as("t"),
-          floor(col(colName) * 1000).cast("long").as("v"))
+          Panels.milli(col(colName)).as("v"))
       val targets = (1 to 6).flatMap(i => Seq(
         ch(s"X${i}t", s"X$i~@0", 0), ch(s"X$i", s"X$i@0", 0)))
       val regs = links.map(l => (l._5.split("@")(0), l._5, l._3))
@@ -4210,7 +4027,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val pan = (1 to 8).map(i =>
         gen.where(col(s"X$i").isNotNull)
           .select(col("configId"), lit(s"X$i").as("series"), col("t"),
-            floor(col(s"X$i") * 1000).cast("long").as("v")))
+            Panels.milli(col(s"X$i")).as("v")))
         .reduce(_ unionByName _).localCheckpoint(false)
       val spine = gen.select(col("configId"), col("t"), col("time"))
       val links = cfgs.flatMap(c =>
@@ -4257,7 +4074,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // bitwise against the oracle's identical sparse CTE chain; the
     // spec pins sparse ≡ dense-restricted on shared inputs.
     "q359_weight_recovery_wide" -> ((s, d) => {
-      val pan = dumpGen(s, "q359_panel", Bench.widePanel(s, 64, 10000))
+      val pan = dumpGen(s, "q359_panel", Panels.widePanel(s, 64, 10000))
       import s.implicits._
       def nm(i: Int) = f"X$i%02d"
       val links = (1 until 64).map(i => (nm(i), nm(i - 1), 0,
@@ -4266,10 +4083,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .toDF("target", "source", "lag", "y", "x", "sib")
       val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
         col("day").as("t"), col("v"))
-      val wanted = links.flatMap { l =>
-        val (a, b) = if (l._5 <= l._4) (l._5, l._4) else (l._4, l._5)
-        Seq((l._4, l._4), (l._5, l._5), (a, b))
-      }.distinct.toDF("na", "nb")
+      val wanted = graft.metrics.Causal.wantedPairs(s,
+        links.map(l => (l._4, l._5)))
       graft.metrics.Causal.structuralBetas(
           graft.metrics.Causal.virtualCrossMomentsSparse(virt, wanted,
             col("t").between(0, 9999)),
@@ -4292,9 +4107,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // beta CTE; spec pins stream ≡ batch against laggedCrossMoments +
     // structuralBetas on the full window.
     "q358_stream_weight_recovery" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2 &&
-          c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 500, 6, 2)
       val gen = dumpGen(s, "q358_gen",
         Generate.wideFast(s, Seq(cfg)).where(col("t") < 400)
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
@@ -4307,8 +4120,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           col("t2") === col("t") - 2)
         .where(col("t").between(2, 399))
       def q(series: String, lag: Int): Column =
-        floor((if (lag == 0) col(series) else col(s"L$lag$series"))
-          * 1000).cast("long")
+        Panels.milli(
+          if (lag == 0) col(series) else col(s"L$lag$series"))
       val tuples = streamWeightLinks().map { case (k, tgt, src, lag, hs,
           sibSeries, sibLag, _) =>
         gl.select(lit(k).as("link"), q(tgt, 0).as("yv"),
@@ -4349,16 +4162,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // on the generator's exact 10⁴ noise floor — the estimator
     // GENERALIZES, it does not memorize its window.
     "q357_weight_recovery_holdout" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 6 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 6, 2)
       val gen = dumpGen(s, "q357_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = (1 to 6).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 6)
       val links = weightLinks("", "A1", 6, 2)
       val momTr = graft.metrics.Causal.laggedCrossMoments(
         panel, weightSpecs(links), col("t").between(2, 2499))
@@ -4422,17 +4230,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // contemporaneous ones need no alignment at all and pin that the
     // lag-0 path is untouched by the irregular clock.
     "q356_weight_recovery_irregular" -> ((s, d) => {
-      val cfg = Grid.forFamily("A2").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A2", 5000, 4, 2)
       val gen = dumpGen(s, "q356_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t") +: col("time") +:
             (1 to 4).map(i => col(s"X$i")): _*))
-      val pan = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _).localCheckpoint(false)
+      val pan = Panels.single(gen, 4).withColumnRenamed("day", "t")
+        .localCheckpoint(false)
       val spine = gen.select(col("t"), col("time"))
       val virtTargets = pan.select(
         concat(col("series"), lit("@0")).as("vs"), col("t"), col("v"))
@@ -4522,16 +4326,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // rows built from the catalog's X-X adjacencies alone. Same 200-obs
     // window (the rank-moment n⁴ cap) and shared PC CTEs as q300
     "q329_pc_confounded" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1C").find(c =>
-        c.nPoints == 500 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1C", 500, 4, 2)
       val gen = dumpGen(s, "q329_gen",
         Generate.wideFast(s, Seq(cfg)).where(col("t") < 200)
           .select(col("t"), col("X1"), col("X2"), col("X3"), col("X4")))
-      val panel = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4)
       graft.metrics.Causal.pcSkeleton(panel)
         .withColumn("truth_adj", expr(pcTruthCase("A1C")))
     }),
@@ -4545,16 +4344,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // cross-multiplied. truth_any flags pairs with a declared X-edge at
     // ANY lag 1..4 — the cells a lag-1-only test structurally misses
     "q330_granger_multilag" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 4
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 4, 4)
       val gen = dumpGen(s, "q330_gen",
         Generate.wideFast(s, Seq(cfg))
           .select(col("t"), col("X1"), col("X2"), col("X3"), col("X4")))
-      val panel = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4)
       graft.metrics.Causal.grangerMulti(panel, 4)
         .withColumn("truth_any",
           expr(grangerTruthCaseAnyLag("A1", 4, 4)))
@@ -4626,9 +4420,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // through the SAME Metrics.scoreAll one-pass join the 1M-graph panel
     // path uses — fact-scale work is only the skeleton's rank moments
     "q332_pc_orientation_scored" -> ((s, d) => {
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 500 && c.nVars == 4 && c.maxLag == 2
-          && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 500, 4, 2)
       // same 200-point cut as q300 (the rank-moment n⁴ cap: the order-1
       // CI test squares products of ~n⁴ C-statistics, so n = 500 would
       // pass the 10³⁸ budget in BOTH engines) but τ = 0.1 instead of
@@ -4637,10 +4429,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val gen = dumpGen(s, "q332_gen",
         Generate.wideFast(s, Seq(cfg)).where(col("t") < 200)
           .select(col("t"), col("X1"), col("X2"), col("X3"), col("X4")))
-      val panel = (1 to 4).map(i =>
-        gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-          floor(col(s"X$i") * 1000).cast("long").as("v")))
-        .reduce(_ unionByName _)
+      val panel = Panels.single(gen, 4)
       pcScoreOriented(s,
         graft.metrics.Causal.pcOrient(
           graft.metrics.Causal.pcSkeleton(panel, PcOrientTauSqBp),

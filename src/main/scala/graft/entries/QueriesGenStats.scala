@@ -19,8 +19,7 @@ private[graft] trait QueriesGenStats { this: SparkEntry.type =>
       // OLS recovery of A1's declared lag coefficients via the lagged view +
       // regr_slope; the lagged projection is dumped so DuckDB regresses the
       // identical row set
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 2 && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 4, 2)
       val wide = Generate.wideFast(s, Seq(cfg))
       val lagged = dumpGen(s, "q29_lagged",
         Lagged.laggedView(wide.select(col("configId"), col("t"),
@@ -40,8 +39,7 @@ private[graft] trait QueriesGenStats { this: SparkEntry.type =>
     // mergeable OLS Aggregator == regr_slope over the same dumped rows
     "q53_typed_ols" -> ((s, d) => {
       import s.implicits._
-      val cfg = Grid.forFamily("A1").find(c =>
-        c.nPoints == 5000 && c.nVars == 4 && c.maxLag == 2 && c.noiseType == "gaussian").get
+      val cfg = Grid.cell("A1", 5000, 4, 2)
       val wide = Generate.wideFast(s, Seq(cfg))
       // maxLag=0: the contemporaneous regression needs no lag columns, and
       // lag-1 columns would be dumped but never read by either engine

@@ -1,7 +1,8 @@
 package graft.metrics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 
 /** Causal-discovery ANALYSIS operators over aligned multivariate panels —
@@ -2112,6 +2113,51 @@ object Causal {
       """case when se2_ppm2 is null or se2_ppm2 <= 0 then null
         |else (1000 * cast(beta_ppm as decimal(38,0)) * beta_ppm)
         |  div se2_ppm2 end""".stripMargin).cast("long"))
+
+  /** The step-up multiple-testing rule on the t² scale over ONE global
+    * window (q370/q371/q376/q377/q382, the bhfdr rungs): `rk` =
+    * row_number over (coalesce(t2_milli, -1) desc, `tieBreak`), so a NULL
+    * t² ranks last; the ladders (rank-1 rung first, one rung per
+    * hypothesis) join on `rk` as `q_<name>_milli`; per ladder,
+    * `k_star_<name>` = the largest rank whose t² clears its rung (NULL
+    * when none does) and `disc_<name>` = 1 for every rank ≤ k*, 0
+    * otherwise. Step-UP: a rank that fails its own rung below k* is
+    * still a discovery.
+    */
+  def stepUp(hyps: DataFrame, tieBreak: String,
+      ladders: (String, Seq[Long])*): DataFrame = {
+    val m = ladders.head._2.size
+    require(ladders.forall(_._2.size == m), "ladders differ in length")
+    val names = ladders.map(_._1)
+    val lut = hyps.sparkSession.createDataFrame(
+      java.util.Arrays.asList((1 to m).map(rk =>
+        Row.fromSeq(rk +: ladders.map(_._2(rk - 1)))): _*),
+      StructType(StructField("rk", IntegerType, nullable = false) +:
+        names.map(n => StructField(s"q_${n}_milli", LongType,
+          nullable = false))))
+    val ranked = hyps
+      .withColumn("rk", expr("row_number() over (" +
+        s"order by coalesce(t2_milli, -1) desc, $tieBreak)"))
+      .join(broadcast(lut), Seq("rk"))
+    val withK = names.foldLeft(ranked)((df, n) =>
+      df.withColumn(s"k_star_$n", expr(
+        s"max(case when t2_milli >= q_${n}_milli then rk end) over ()")))
+    names.foldLeft(withK)((df, n) =>
+      df.withColumn(s"disc_$n",
+        (col("rk") <= coalesce(col(s"k_star_$n"), lit(0L))).cast("int")))
+  }
+
+  /** The wanted-pair frame (na, nb) [[virtualCrossMomentsSparse]] needs
+    * for k=1 hypotheses regressing `y` on `x`: both diagonals and the
+    * canonical na ≤ nb cross pair, each once.
+    */
+  def wantedPairs(spark: SparkSession, yx: Seq[(String, String)])
+      : DataFrame = {
+    import spark.implicits._
+    yx.flatMap { case (y, x) =>
+      Seq((y, y), (x, x), if (x <= y) (x, y) else (y, x))
+    }.distinct.toDF("na", "nb")
+  }
 
   /** PAIR-RESTRICTED cross-moments for WIDE panels (q359): the dense
     * [[virtualCrossMoments]] computes the full |specs|² Gram — right for

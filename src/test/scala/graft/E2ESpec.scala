@@ -275,4 +275,9 @@ class E2ESpec extends AnyFunSuite {
       }
     }
   }
+
+  test("every driver query has an oracle, and the oracle map builds " +
+      "without the shipped corpus") {
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.generate.Panels
 import graft.metrics.Causal
 
 /** PC-STABLE order-≤2 skeleton (Causal.pcSkeleton2Stable): the
@@ -254,7 +255,7 @@ class PcStableSpec extends AnyFunSuite {
   test("q348's block panel: every planted A-B pair separates at order 3 " +
       "on exactly its own source triple, and the pinned 4 Meek rounds " +
       "reach the fixpoint (round 5 is a no-op)") {
-    val pan = Bench.widePanel3(spark, 8, 200).localCheckpoint(true)
+    val pan = Panels.widePanel3(spark, 8, 200).localCheckpoint(true)
     try {
       val sk3 = Causal.pcSkeleton3Stable(pan, 100L).localCheckpoint(true)
       val rows = sk3.select(col("a"), col("b"), col("edge2"),
@@ -299,7 +300,7 @@ class PcStableSpec extends AnyFunSuite {
   test("restricting candidates to the adjacency can only KEEP edges: " +
       "stable edge and edge2 sets are supersets of the unrestricted " +
       "variant's on fully co-observed panels") {
-    val pan = Bench.widePanel(spark, 12, 120).localCheckpoint(true)
+    val pan = Panels.widePanel(spark, 12, 120).localCheckpoint(true)
     try {
       def sets(df: DataFrame): (Set[(String, String)], Set[(String, String)]) = {
         val rows = df.select("a", "b", "edge", "edge2").collect()
@@ -328,8 +329,8 @@ class PcStableSpec extends AnyFunSuite {
     // 12-series chain panel — if any candidate stage leaked across
     // graphs (a crossJoin against the global diagonal would), the
     // folded decisions would diverge from the per-panel ones
-    val pA = Bench.widePanel3(spark, 3, 120).localCheckpoint(true)
-    val pB = Bench.widePanel(spark, 12, 120).localCheckpoint(true)
+    val pA = Panels.widePanel3(spark, 3, 120).localCheckpoint(true)
+    val pB = Panels.widePanel(spark, 12, 120).localCheckpoint(true)
     try {
       def fold(tag: String, shift: Long)(p: DataFrame): DataFrame =
         p.select(concat(lit(tag), col("series")).as("series"),
@@ -359,7 +360,7 @@ class PcStableSpec extends AnyFunSuite {
   test("q347's pinned 4 Meek rounds reach the fixpoint on its actual " +
       "32-wide stable graph (round 5 is a no-op) and every pair row is " +
       "present for the orientation precondition") {
-    val pan = Bench.widePanel(spark, 32, 200).localCheckpoint(true)
+    val pan = Panels.widePanel(spark, 32, 200).localCheckpoint(true)
     try {
       val sk = Causal.pcSkeleton2Stable(pan, 100L).localCheckpoint(true)
       // complete panel ⇒ the every-pair-row precondition must hold

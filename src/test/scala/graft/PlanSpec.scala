@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.expr
 import org.scalatest.funsuite.AnyFunSuite
+import graft.generate.Panels
 
 /** Physical-plan regression guards: the round-1 scale regressions (all-pairs
   * crossJoin benched for q19, shuffle-joined dimensions in q27) must not come
@@ -743,7 +744,7 @@ class PlanSpec extends AnyFunSuite {
     // 496 × C(31,2) quadruples (order 2) of NESTED-LOOP work — the shape
     // this guard forbids; enumeration from co-observed moment rows keeps
     // every stage an equi-join
-    val pan32 = Bench.widePanel(spark, 32, 200).localCheckpoint(true)
+    val pan32 = Panels.widePanel(spark, 32, 200).localCheckpoint(true)
     try {
       val p = graft.metrics.Causal.pcSkeleton2(pan32, 100L)
         .queryExecution.executedPlan.toString
@@ -782,7 +783,7 @@ class PlanSpec extends AnyFunSuite {
     // pairs an unrestricted order-2 pass would enumerate ~64M quadruples;
     // the adjacency restriction only means anything if the plan still
     // contains zero cartesian/nested-loop nodes at this width
-    val pan128 = Bench.widePanel(spark, 128, 200).localCheckpoint(true)
+    val pan128 = Panels.widePanel(spark, 128, 200).localCheckpoint(true)
     try {
       val ps = graft.metrics.Causal.pcSkeleton2Stable(pan128, 100L)
         .queryExecution.executedPlan.toString

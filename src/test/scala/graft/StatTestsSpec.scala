@@ -919,4 +919,38 @@ class StatTestsSpec extends AnyFunSuite {
     assert(e.getAs[Long]("n_disc") * n.getAs[Long]("n_hyp") >
       n.getAs[Long]("n_disc") * e.getAs[Long]("n_hyp") * 5)
   }
+
+  test("stepUp: NULL t² ranks last, the tie-break column orders ties, " +
+      "every rank up to k* is a discovery, no pass gives k* NULL") {
+    import spark.implicits._
+    val hyps = Seq(("a", Some(9000L), 0), ("b", Some(5000L), 2),
+        ("c", Some(5000L), 1), ("d", Some(1000L), 3),
+        ("e", Some(4000L), 4), ("f", None: Option[Long], 5))
+      .toDF("pair", "t2_milli", "ord")
+    val out = Causal.stepUp(hyps, "ord",
+        "lo" -> Seq(8000L, 6000L, 5500L, 3000L, 2000L, 1500L),
+        "hi" -> Seq.fill(6)(10000L))
+      .collect().map(r => r.getAs[String]("pair") -> r).toMap
+    def field(c: String) = out.map { case (p, r) =>
+      p -> (if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Int](c)))
+    }
+    // b and c tie at 5000: ord puts c first; f's NULL ranks below d's 1000
+    assert(field("rk") == Map("a" -> Some(1), "c" -> Some(2),
+      "b" -> Some(3), "e" -> Some(4), "d" -> Some(5), "f" -> Some(6)))
+    // ranks 2 and 3 fail their own rungs, rank 4 passes: step-UP keeps
+    // all four (a step-down rule would stop at rank 1)
+    assert(field("k_star_lo").values.toSet == Set(Some(4)))
+    assert(field("disc_lo") == Map("a" -> Some(1), "c" -> Some(1),
+      "b" -> Some(1), "e" -> Some(1), "d" -> Some(0), "f" -> Some(0)))
+    assert(field("k_star_hi").values.toSet == Set(None))
+    assert(field("disc_hi").values.toSet == Set(Some(0)))
+  }
+
+  test("wantedPairs: both diagonals and the na <= nb cross pair, once") {
+    val w = Causal.wantedPairs(spark, Seq(("X2@0", "X1@0"),
+        ("X1@0", "X3@0"), ("X2@0", "X1@0")))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(w.sorted == Seq(("X1@0", "X1@0"), ("X1@0", "X2@0"),
+      ("X1@0", "X3@0"), ("X2@0", "X2@0"), ("X3@0", "X3@0")))
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.generate.Generate
+import graft.generate.{Generate, Panels}
 import graft.metrics.Causal
 
 /** Structural edge-weight recovery (Causal.laggedCrossMoments +
@@ -525,7 +525,7 @@ class StructuralBetasSpec extends AnyFunSuite {
   test("sparse pair-restricted moments equal the dense Gram restricted " +
       "to the wanted pairs (q359's path, shared widePanel input)") {
     import spark.implicits._
-    val virt = Bench.widePanel(spark, 8, 150)
+    val virt = Panels.widePanel(spark, 8, 150)
       .select(concat(col("series"), lit("@0")).as("vs"),
         col("day").as("t"), col("v"))
     def nm(i: Int) = f"X$i%02d"
