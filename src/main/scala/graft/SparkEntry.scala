@@ -171,14 +171,6 @@ object SparkEntry
   private[graft] val ObfBoundBp: IndexedSeq[Long] =
     (1 to 3).map(k => Math.round(2.004 * 2.004 * 3.0 / k * 1e4))
 
-  /** The catalog's A1 4-var lag-2 ANY-lag unordered adjacency as a CASE
-    * flag over (a, b) with a < b — shared by q300 and its oracle.
-    */
-  /** Declared X-X adjacencies of a (family, nVars, lag-2) cell as a CASE
-    * flag over unordered pairs — U-incident links are excluded because
-    * the PC capstones observe only the X panel (q329's point: the hidden
-    * confounder's footprint shows in `edge` against truth_adj = 0 rows).
-    */
   /** One X-parent link row for the structural-OLS queries (q351-q353):
     * `g` is the fold prefix ("" single-graph, configId for q352's
     * corpus fold), `y`/`x`/`sib` the virtual lagged-series names
@@ -440,6 +432,11 @@ object SparkEntry
     "(VALUES " + weightSpecs(links).map { case (series, lag) =>
       s"('$series',$lag)" }.mkString(",\n    ") + ") AS s(series, lag)"
 
+  /** Declared X-X adjacencies of a (family, nVars, lag-2) cell as a CASE
+    * flag over unordered pairs — U-incident links are excluded because
+    * the PC capstones observe only the X panel (q329's point: the hidden
+    * confounder's footprint shows in `edge` against truth_adj = 0 rows).
+    */
   private[graft] def pcTruthCase(family: String, nVars: Int = 4): String = {
     val pairs = graft.core.Parser.truthLinks(family, nVars, 2)
       .filter(l => l.source != "U" && l.target != "U")
@@ -451,6 +448,10 @@ object SparkEntry
       s"WHEN a = '$x' AND b = '$y' THEN 1"
     }.mkString(" ") + " ELSE 0 END"
   }
+
+  /** The catalog's A1 4-var lag-2 ANY-lag unordered adjacency as a CASE
+    * flag over (a, b) with a < b — shared by q300 and its oracle.
+    */
   private[graft] val PcGenTruthCase: String = pcTruthCase("A1")
 
   /** q336's truth: the A1 6-var lag-2 adjacency (the 6_2 cell carries the
@@ -796,11 +797,17 @@ object SparkEntry
     ShippedD3TreeLinks.filter(l => l._2 != l._4)
       .map(l => (l._1, l._2, l._4)).distinct
   private[graft] def shippedD3TreeTruthValuesSql: String =
-    ShippedD3TreeTruth.map { case (g, s0, t0) => s"('$g', '$s0', '$t0')" }
-      .mkString("(VALUES ", ", ", ") t(graphId, source, target)")
+    shippedD3TreeValuesSql(ShippedD3TreeTruth)
   private[graft] def shippedD3TreeDirectedTruthValuesSql: String =
-    ShippedD3TreeDirectedTruth
-      .map { case (g, s0, t0) => s"('$g', '$s0', '$t0')" }
+    shippedD3TreeValuesSql(ShippedD3TreeDirectedTruth)
+  /** Without the shipped tree, a relation that fails the oracle by name
+    * (an empty `(VALUES )` would be a DuckDB parse error).
+    */
+  private def shippedD3TreeValuesSql(truth: Seq[(String, String, String)]): String =
+    if (!new java.io.File(ShippedD3TreeDir).isDirectory)
+      s"(SELECT error('missing shipped D3 tree: $ShippedD3TreeDir')::VARCHAR, " +
+        "NULL::VARCHAR, NULL::VARCHAR) t(graphId, source, target)"
+    else truth.map { case (g, s0, t0) => s"('$g', '$s0', '$t0')" }
       .mkString("(VALUES ", ", ", ") t(graphId, source, target)")
 
   /** The shipped-cell glob scan shared by q333/q340: 48 CSVs in one
@@ -1014,9 +1021,13 @@ object SparkEntry
     */
   private[graft] val PcaIters = 6
 
-  /** q317/q318 shared pipeline: the converged ppm component `w(dim, w)` —
-    * exact-integer centered covariance + `PcaIters` unrolled power
-    * iterations (see the q317 comment for the magnitude budget).
+  /** The quantized embedding slots both PCA stages aggregate over. */
+  private[graft] def pcaQuant: Column =
+    transform(col("embedding"), v => floor(v * lit(1e6)))
+
+  /** The sufficient statistics of the q317/q318 pipeline's exact-integer
+    * centered covariance, which the `PcaIters` power iterations run on
+    * (see the q317 comment for the magnitude budget).
     *
     * The covariance comes from [[graft.ops.CovVec.suffStats]] over the 64
     * quantized array slots: ONE `TypedImperativeAggregate`-backed pass over
@@ -1031,10 +1042,6 @@ object SparkEntry
     * unchanged and the iteration arithmetic stays bit-identical to the
     * oracle's HUGEINT formulation.
     */
-  /** The quantized embedding slots both PCA stages aggregate over. */
-  private[graft] def pcaQuant: Column =
-    transform(col("embedding"), v => floor(v * lit(1e6)))
-
   private[graft] def pcaSuffStats(s: SparkSession, d: String): DataFrame =
     graft.ops.CovVec.suffStats(embeddings(s, d), pcaQuant, 64)
 
@@ -1215,13 +1222,6 @@ object SparkEntry
   private[graft] val NdcgDiscCaseSql: String = NdcgDiscCase.replace("L ", " ")
   private[graft] val NdcgIdealCaseSql: String = NdcgIdealCase.replace("L ", " ")
 
-  /** The q195/q197 dirty-name registry: every customer record plus
-    * deterministic mutations — a transposed-prefix duplicate (custkey%3),
-    * a dropped-letter duplicate (custkey%5), and a different-entity decoy
-    * (custkey%7) — in disjoint id spaces. The mutations only touch the
-    * alphabetic prefix, so the digit payload `right(name, 9)` is the
-    * blocking key that survives every corruption.
-    */
   /** The contracted nation→nation trade graph shared by q86 (PageRank),
     * q254 (HITS), q258 (closeness), q260 (modularity): supplier-nation →
     * customer-nation weighted by lineitem count. The ONLY fact-scale stage
@@ -1247,6 +1247,13 @@ object SparkEntry
       .select(col("src"), col("dst"), col("w"))
   }
 
+  /** The q195/q197 dirty-name registry: every customer record plus
+    * deterministic mutations — a transposed-prefix duplicate (custkey%3),
+    * a dropped-letter duplicate (custkey%5), and a different-entity decoy
+    * (custkey%7) — in disjoint id spaces. The mutations only touch the
+    * alphabetic prefix, so the digit payload `right(name, 9)` is the
+    * blocking key that survives every corruption.
+    */
   private[graft] def erRegistry(s: SparkSession, d: String): DataFrame = {
     val base = customer(s, d).select(col("c_custkey").as("id"),
       col("c_name").as("name"))

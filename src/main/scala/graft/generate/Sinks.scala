@@ -17,8 +17,8 @@ import graft.core._
   *    d3c.py:512-522 "src --(func, lag=k)--> tgt: coef" format)
   *  - .npy tensor sink (a1.py:268-270) via a minimal NPY v1 writer
   *
-  * Scale note: CSV corpus write is one partitionBy(configId) job (no driver
-  * loop over data); only the final file renames run on the driver.
+  * Scale note: the CSV corpus is one Spark job whose tasks write the final
+  * files; only the small txt corpus is written outside Spark tasks.
   */
 object Sinks {
 
@@ -89,13 +89,15 @@ object Sinks {
     }
   }
 
-  /** `_missing`/`_complete` suffix for the dual-output D families, empty
-    * otherwise (d1.py:267-271, d3c.py:418-420).
+  /** Whether a family's corpus has a complete AND a masked view per config:
+    * the D families, whose kernel masks cells (d1.py:267-271).
     */
+  def dualView(family: String): Boolean =
+    Kernel.specs(family).mcar || Kernel.specs(family).block
+
+  /** `_missing`/`_complete` for the dual-view families, else empty. */
   def fileSuffix(c: GenConfig, missing: Boolean): String =
-    if (Kernel.specs(c.family).mcar || Kernel.specs(c.family).block)
-      (if (missing) "_missing" else "_complete")
-    else ""
+    if (!dualView(c.family)) "" else if (missing) "_missing" else "_complete"
 
   /** Full relative path of one corpus CSV inside the `Datasets/` tree. */
   def relPath(c: GenConfig, missing: Boolean): String =
@@ -107,9 +109,8 @@ object Sinks {
     */
   def corpusManifest(cfgs: Seq[GenConfig]): Seq[String] =
     cfgs.flatMap { c =>
-      val dual = Kernel.specs(c.family).mcar || Kernel.specs(c.family).block
-      if (dual) Seq(relPath(c, missing = false), relPath(c, missing = true))
-      else Seq(relPath(c, missing = false))
+      (if (dualView(c.family)) Seq(false, true) else Seq(false))
+        .map(relPath(c, _))
     }
 
   // ---------------------------------------------------------------------------
@@ -383,60 +384,71 @@ object Sinks {
     (vals, graph, p)
   }
 
-  /** CSV corpus write (S2): ONE job for the whole pass — repartition on
-    * configId, sort (configId, t) within partitions, and let each task
-    * stream its configs straight into the FINAL grammar-named files
-    * (header + rows rendered in-task). No partitionBy temp tree, no
-    * commit-protocol rename of 4,320 part files, no per-config driver
-    * loop — the r8 profile showed the old 6-job partitionBy writer spent
-    * its ~26 s almost entirely in write/commit/rename machinery, not
-    * generation. Formatting is byte-compatible with the previous Spark
-    * CSV output: doubles via `Double.toString` (what UnivocityGenerator
-    * emits), nulls as empty cells, regular families' time as the integer
-    * string, one `\n` after every line. CorpusSpec re-verifies layout,
-    * headers, row counts and the empty-cell encoding wholesale.
-    * `missing=true` writes the masked view (D families' *_missing.csv).
+  /** CSV corpus write (S2): ONE job — repartition on configId, sort
+    * (configId, view, t) within partitions, and each task streams its
+    * files straight into their FINAL grammar-named paths (no partitionBy
+    * temp tree or rename of 4,320 part files: the r8 profile put a
+    * partitionBy writer's ~26 s there, not in generation). Cells render
+    * as Spark's CSV writer does: `Double.toString`, nulls empty, regular
+    * families' time as an integer, `\n` after every line (CorpusSpec
+    * checks layout, headers, row counts and empty cells wholesale).
+    * `missing=true` writes the masked view (D families' *_missing.csv):
+    * X cells with their `maskBits` bit set are empty, as pandas writes NaN.
     */
   def writeCsvCorpus(rows: Dataset[SeriesRow], cfgs: Seq[GenConfig], outDir: String,
-      missing: Boolean): Unit = {
-    val wide0 = Generate.wide(rows)
-    val view = if (missing) Generate.missingView(wide0) else wide0
-    Files.createDirectories(Paths.get(outDir))
-    // (relPath, nVars, hasU, regular-time) per config, broadcast to tasks
-    val meta: Map[Long, (String, Int, Boolean, Boolean)] = cfgs.map { c =>
-      val spec = Kernel.specs(c.family)
-      // the row loop below reads X values positionally from the fixed
-      // X1..X8,U,time select — widen that select before admitting a
-      // config with more variables, else U/time would silently
-      // serialize as X columns
-      require(c.nVars <= 8,
-        s"writeCsvCorpus supports nVars <= 8, got ${c.nVars}")
-      c.configId -> (relPath(c, missing), c.nVars, spec.hasU, !spec.irregular)
-    }.toMap
+      missing: Boolean): Unit =
+    writeCsv(rows, cfgs, outDir, Seq(missing))
+
+  /** Fans a dual-view config's rows out to each of `dualViews` (true =
+    * masked) before the shuffle, any other config's to `dualViews.head`.
+    */
+  private def writeCsv(rows: Dataset[SeriesRow], cfgs: Seq[GenConfig],
+      outDir: String, dualViews: Seq[Boolean]): Unit = {
+    // (relPath, header, nVars, hasU, regular-time) per (config, view)
+    val meta: Map[(Long, Boolean), (String, String, Int, Boolean, Boolean)] =
+      cfgs.flatMap { c =>
+        val spec = Kernel.specs(c.family)
+        // the row loop reads X values positionally from the fixed
+        // X1..X8,U,time select — widen it before admitting more variables,
+        // else U/time would silently serialize as X columns
+        require(c.nVars <= 8,
+          s"writeCsvCorpus supports nVars <= 8, got ${c.nVars}")
+        val header = ((1 to c.nVars).map(i => s"X$i") ++
+          (if (spec.hasU) Seq("U") else Nil) :+ "time").mkString("", ",", "\n")
+        (if (dualView(c.family)) dualViews else dualViews.take(1)).map(m =>
+          (c.configId, m) ->
+            (relPath(c, m), header, c.nVars, spec.hasU, !spec.irregular))
+      }.toMap
     // pre-create every target directory driver-side so tasks never race
     meta.values.map(m => Paths.get(s"$outDir/${m._1}").getParent)
       .toSet.foreach((p: java.nio.file.Path) => Files.createDirectories(p))
-    val spark = view.sparkSession
-    val metaB = spark.sparkContext.broadcast(meta)
+    val metaB = rows.sparkSession.sparkContext.broadcast(meta)
     val root = new java.io.File(outDir).getAbsolutePath
-    val cols = Seq(col("configId"), col("t")) ++
-      (1 to 8).map(i => col(s"X$i")) ++ Seq(col("U"), col("time"))
-    view.select(cols: _*)
+    val dual = col("family").isin(Kernel.specs.keys.filter(dualView).toSeq: _*)
+    val view = explode(when(dual, typedLit(dualViews)).otherwise(typedLit(dualViews.take(1))))
+    val cols = Seq(col("configId"), view.as("masked"), col("t")) ++
+      (1 to 8).map(i => col(s"X$i")) ++
+      Seq(col("U"), col("time"), col("maskBits"))
+    // Catalyst rows, not external Rows: boxing every cell of perfbench's
+    // ~540k corpus rows raised corpus_discovery's peak RSS by ~13 %
+    Generate.wide(rows).select(cols: _*)
       .repartition(col("configId"))
-      .sortWithinPartitions("configId", "t")
-      .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      .sortWithinPartitions("configId", "masked", "t")
+      .queryExecution.toRdd
+      .foreachPartition { (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
         val m = metaB.value
         // write to a task-attempt-unique temp name and rename into
         // place on close: a speculative or retried attempt can then
         // never interleave with (or truncate under) a concurrent
         // attempt's writer — last atomic rename wins. The rename runs
-        // ONLY on the success paths (config switch after its last row, or
+        // ONLY on the success paths (file switch after its last row, or
         // clean end of partition): a task that throws or is killed
-        // mid-config aborts — the in-progress temp is closed and deleted,
+        // mid-file aborts — the in-progress temp is closed and deleted,
         // never renamed — so a torn file can never shadow a complete one
         val tc = org.apache.spark.TaskContext.get()
         val sfx = s".tmp-${tc.stageId}-${tc.taskAttemptId}"
         var curId = Long.MinValue
+        var curMasked = false
         var w: java.io.Writer = null
         var curFinal: java.nio.file.Path = null
         // the temp path tracked SEPARATELY from the writer: if close()'s
@@ -469,34 +481,32 @@ object Sinks {
           val sb = new java.lang.StringBuilder(256)
           it.foreach { r =>
             val id = r.getLong(0)
-            if (id != curId) {
+            val masked = r.getBoolean(1)
+            if (id != curId || masked != curMasked) {
               close()
-              curId = id
-              val (rel, v, u, reg) = m(id)
+              curId = id; curMasked = masked
+              val (rel, header, v, u, reg) = m((id, masked))
               nVars = v; hasU = u; regular = reg
               curFinal = Paths.get(s"$root/$rel")
               curTmp = Paths.get(s"$root/$rel$sfx")
               w = new java.io.BufferedWriter(new java.io.FileWriter(
                 curTmp.toFile), 1 << 16)
-              sb.setLength(0)
-              var i = 1
-              while (i <= nVars) { sb.append('X').append(i).append(','); i += 1 }
-              if (hasU) sb.append("U,")
-              sb.append("time\n")
-              w.write(sb.toString)
+              w.write(header)
             }
             sb.setLength(0)
+            val blank = if (masked) r.getInt(13) else 0
             var i = 0
             while (i < nVars) {
-              if (!r.isNullAt(2 + i)) sb.append(r.getDouble(2 + i))
+              if (!r.isNullAt(3 + i) && (blank >> i & 1) == 0)
+                sb.append(r.getDouble(3 + i))
               sb.append(',')
               i += 1
             }
             if (hasU) {
-              if (!r.isNullAt(10)) sb.append(r.getDouble(10))
+              if (!r.isNullAt(11)) sb.append(r.getDouble(11))
               sb.append(',')
             }
-            val time = r.getDouble(11)
+            val time = r.getDouble(12)
             if (regular) sb.append(time.toLong) else sb.append(time)
             sb.append('\n')
             w.write(sb.toString)
@@ -506,25 +516,14 @@ object Sinks {
       }
   }
 
-  /** The reference's actual deliverable, wholesale: every CSV of the full
-    * 18-family sweep (2,592 configs → 4,320 files — D families write dual
-    * missing/complete views) into the shipped `Datasets/` directory grammar
-    * under `outDir`. The two corpus passes each call [[Generate.series]],
-    * so every D-family config (the dual-view ones) is generated twice
-    * (perfbench's `generate.rows_generated_per_row_written` reads 5/3).
-    * The complete and missing views still agree cell for cell outside the
-    * mask because the kernel is deterministic.
+  /** The reference's deliverable, wholesale: every CSV of the 18-family
+    * sweep (2,592 configs → 4,320 files) in the shipped `Datasets/` grammar
+    * under `outDir`, plus the txt corpus. Each config is generated ONCE: a
+    * D-family config's `_complete` and `_missing` files share its rows.
     */
   def writeFullCorpus(spark: org.apache.spark.sql.SparkSession, outDir: String,
       cfgs: Seq[GenConfig] = Grid.all()): Unit = {
-    val rows = Generate.series(spark, cfgs)
-    writeCsvCorpus(rows, cfgs, outDir, missing = false)
-    val dual = cfgs.filter(c =>
-      Kernel.specs(c.family).mcar || Kernel.specs(c.family).block)
-    if (dual.nonEmpty) {
-      val dRows = Generate.series(spark, dual)
-      writeCsvCorpus(dRows, dual, outDir, missing = true)
-    }
+    writeCsv(Generate.series(spark, cfgs), cfgs, outDir, Seq(false, true))
     writeTxtCorpus(cfgs, outDir)
   }
 }

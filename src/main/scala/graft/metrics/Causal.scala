@@ -478,15 +478,6 @@ object Causal {
                |  - cast(s_a as decimal(38,0)) * s_b as long)""".stripMargin)
           .as("c"))
 
-  /** PC-algorithm skeleton to conditioning order 1 over the Spearman rank
-    * panel. Order 0 drops {a,b} when 10000·C_ab² ≤ tauSqBp·C_aa·C_bb
-    * (|ρ| ≤ τ with τ² in basis points); order 1 drops a surviving pair
-    * when some z ∉ {a,b} has
-    * 10000·(C_ab C_zz − C_az C_bz)² ≤
-    *   tauSqBp·(C_aa C_zz − C_az²)(C_bb C_zz − C_bz²)
-    * — the partial correlation ρ_ab·z squared, fully rational, cross-
-    * multiplied. sepset = lexicographically-least separating z.
-    */
   /** Materialize a panel-grain frame AND reset its statistics. Spark 4's
     * `localCheckpoint` copies the pre-checkpoint plan's ESTIMATED
     * `sizeInBytes` into the resulting `LogicalRDD`; in an iterated-join
@@ -503,6 +494,15 @@ object Causal {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
+  /** PC-algorithm skeleton to conditioning order 1 over the Spearman rank
+    * panel. Order 0 drops {a,b} when 10000·C_ab² ≤ tauSqBp·C_aa·C_bb
+    * (|ρ| ≤ τ with τ² in basis points); order 1 drops a surviving pair
+    * when some z ∉ {a,b} has
+    * 10000·(C_ab C_zz − C_az C_bz)² ≤
+    *   tauSqBp·(C_aa C_zz − C_az²)(C_bb C_zz − C_bz²)
+    * — the partial correlation ρ_ab·z squared, fully rational, cross-
+    * multiplied. sepset = lexicographically-least separating z.
+    */
   def pcSkeleton(panel: DataFrame, tauSqBp: Long = 625L,
       broadcastRankJoin: Boolean = true): DataFrame =
     pcSkeletonMoments(pcMoments(panel, broadcastRankJoin), tauSqBp)
@@ -536,10 +536,6 @@ object Causal {
       .reduce(_ unionByName _)
   }
 
-  /** The moments→skeleton stage of [[pcSkeleton]], split out so
-    * [[pcSkeleton2]] can reuse one fact-scale cross-moment pass for both
-    * the order-≤1 decisions and the order-2 cofactor tests.
-    */
   /** Shared order-0 stage: every co-observed pair (a < b) with its
     * cross/diagonal moments and the keep0 decision — the frame both the
     * unrestricted and the PC-stable skeletons build on.
@@ -573,6 +569,10 @@ object Causal {
        |    (cast(cbb as decimal(38,0))*czz - cast(cbz as decimal(38,0))*cbz)
        |then 1 else 0 end""".stripMargin)
 
+  /** The moments→skeleton stage of [[pcSkeleton]], split out so
+    * [[pcSkeleton2]] can reuse one fact-scale cross-moment pass for both
+    * the order-≤1 decisions and the order-2 cofactor tests.
+    */
   private[metrics] def pcSkeletonMoments(cm: DataFrame,
       tauSqBp: Long): DataFrame = {
     def cAs(na: String, nb: String, out: String): DataFrame =
@@ -1450,6 +1450,41 @@ object Causal {
     }
   }
 
+  /** [[pcOrient]]'s every-pair-row precondition as a standalone check:
+    * every unshielded-triple candidate the skeleton's adjacency can form
+    * must find its (x,y) skeleton row (edge=0 rows included). Callers
+    * that time repeated pcOrient runs over ONE skeleton (Bench's
+    * median-of-N loops) verify here once, outside the timed region, then
+    * pass `requirePairRows = false` — the check is an eager count job
+    * and would otherwise be measured into every repetition.
+    */
+  def assertPairRows(skeleton: DataFrame): Unit = {
+    val sk = pinTiny(
+      skeleton.select(col("a"), col("b"), col("edge")))
+    val und = sk.where(col("edge") === 1).select(col("a"), col("b"))
+    val adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
+    val cand = adj.select(col("a").as("x"), col("b").as("z"))
+      .join(broadcast(adj.select(col("a").as("z"), col("b").as("y"))),
+        Seq("z"))
+      .where(col("x") < col("y"))
+    assertPairRowsFrom(sk, cand)
+  }
+
+  private def assertPairRowsFrom(sk: DataFrame, cand: DataFrame): Unit = {
+    val miss = cand
+      .join(broadcast(sk.select(col("a").as("x"), col("b").as("y"),
+        lit(1).as("hit"))), Seq("x", "y"), "left_outer")
+      .where(col("hit").isNull).count()
+    require(miss == 0L,
+      s"pcOrient requires a skeleton row for every unordered pair its " +
+        s"unshielded triples touch (edge=0 rows included): $miss " +
+        s"triple candidate(s) found no (x,y) row — either the caller " +
+        s"passed only surviving-edge rows (the bug this catches), or " +
+        s"a pair never co-observes a day in a pairwise-complete " +
+        s"panel (legitimate: pass requirePairRows = false to pin the " +
+        s"conservative skip)")
+  }
+
   /** PC orientation phase over a [[pcSkeleton]] output: collider
     * (v-structure) detection from the skeleton's own order-≤1 separation
     * decisions, then `meekRounds` unrolled rounds of the FULL Meek
@@ -1517,41 +1552,6 @@ object Causal {
     * under-specifies what [[Metrics.scoreAll]] scores; this supplies the
     * CPDAG the PC family is defined to return.
     */
-  /** [[pcOrient]]'s every-pair-row precondition as a standalone check:
-    * every unshielded-triple candidate the skeleton's adjacency can form
-    * must find its (x,y) skeleton row (edge=0 rows included). Callers
-    * that time repeated pcOrient runs over ONE skeleton (Bench's
-    * median-of-N loops) verify here once, outside the timed region, then
-    * pass `requirePairRows = false` — the check is an eager count job
-    * and would otherwise be measured into every repetition.
-    */
-  def assertPairRows(skeleton: DataFrame): Unit = {
-    val sk = pinTiny(
-      skeleton.select(col("a"), col("b"), col("edge")))
-    val und = sk.where(col("edge") === 1).select(col("a"), col("b"))
-    val adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
-    val cand = adj.select(col("a").as("x"), col("b").as("z"))
-      .join(broadcast(adj.select(col("a").as("z"), col("b").as("y"))),
-        Seq("z"))
-      .where(col("x") < col("y"))
-    assertPairRowsFrom(sk, cand)
-  }
-
-  private def assertPairRowsFrom(sk: DataFrame, cand: DataFrame): Unit = {
-    val miss = cand
-      .join(broadcast(sk.select(col("a").as("x"), col("b").as("y"),
-        lit(1).as("hit"))), Seq("x", "y"), "left_outer")
-      .where(col("hit").isNull).count()
-    require(miss == 0L,
-      s"pcOrient requires a skeleton row for every unordered pair its " +
-        s"unshielded triples touch (edge=0 rows included): $miss " +
-        s"triple candidate(s) found no (x,y) row — either the caller " +
-        s"passed only surviving-edge rows (the bug this catches), or " +
-        s"a pair never co-observes a day in a pairwise-complete " +
-        s"panel (legitimate: pass requirePairRows = false to pin the " +
-        s"conservative skip)")
-  }
-
   def pcOrient(skeleton: DataFrame, meekRounds: Int = 3,
       requirePairRows: Boolean = true): DataFrame = {
     val sk = pinTiny(

@@ -94,11 +94,6 @@ object Sketch {
   val CmsParams: Seq[(Long, Long)] =
     Seq((1103515245L, 12345L), (1299709L, 7919L), (900000011L, 577L))
 
-  /** The sketch itself: per (row, bucket) occurrence counts of the hashed
-    * values — ≤ depth·width rows out of ONE map-side-combined groupBy, no
-    * matter the input size. bucket_i = ((a_i·h + b_i) mod 2^31−1) mod width;
-    * a·h < 2^62 keeps the product in LONG for 31-bit hashes.
-    */
   /** The (row, bucket) struct array for a hash — ONE definition shared by
     * build and probe, so the two sides cannot drift onto different cells.
     */
@@ -108,6 +103,11 @@ object Sketch {
         ((h.cast("long") * a + b) % 2147483647L % CmsWidth).as("bucket"))
     }: _*)
 
+  /** The sketch itself: per (row, bucket) occurrence counts of the hashed
+    * values — ≤ depth·width rows out of ONE map-side-combined groupBy, no
+    * matter the input size. bucket_i = ((a_i·h + b_i) mod 2^31−1) mod width;
+    * a·h < 2^62 keeps the product in LONG for 31-bit hashes.
+    */
   def cmsCells(df: DataFrame, hashCol: String): DataFrame =
     df.select(explode(cmsBuckets(col(hashCol))).as("rb"))
       .groupBy(col("rb.i").as("i"), col("rb.bucket").as("bucket"))

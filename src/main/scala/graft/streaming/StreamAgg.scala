@@ -99,15 +99,6 @@ object StreamAgg {
       windowedAgg(StreamSupport.eventsSplitStream(spark, sfDir, splitDir), windowSec),
       queryName, outputMode = "complete")
 
-  /** HLL distinct-user registers maintained BY THE STREAM: the same
-    * integer register contract as the batch build ([[graft.ops.Sketch]])
-    * run as a streaming aggregation over a 2-micro-batch split source —
-    * per-(event_type, bucket) max-rank state merges across batches by the
-    * very `max` the sketch's mergeability guarantees, so running distinct
-    * counts on an unbounded stream cost groups·m state rows, ever.
-    * Complete mode ⇒ the final registers equal the batch build, and one
-    * relational oracle covers both.
-    */
   /** Per-day value-histogram stream for the q289 drift monitor: tumbling
     * 1-day event-time windows × coarse value bins (vm div binMicro),
     * complete mode — the same watermark-bounded shape as the windowed
@@ -153,6 +144,15 @@ object StreamAgg {
       queryName, outputMode = "complete")
   }
 
+  /** HLL distinct-user registers maintained BY THE STREAM: the same
+    * integer register contract as the batch build ([[graft.ops.Sketch]])
+    * run as a streaming aggregation over a 2-micro-batch split source —
+    * per-(event_type, bucket) max-rank state merges across batches by the
+    * very `max` the sketch's mergeability guarantees, so running distinct
+    * counts on an unbounded stream cost groups·m state rows, ever.
+    * Complete mode ⇒ the final registers equal the batch build, and one
+    * relational oracle covers both.
+    */
   def eventsHllRegisters(spark: SparkSession, sfDir: String, splitDir: String,
       queryName: String): DataFrame = {
     val src = StreamSupport.eventsSplitStream(spark, sfDir, splitDir)

@@ -58,8 +58,8 @@ object StreamDedup {
     */
   def dedupEnrichEvents(spark: SparkSession, sfDir: String, splitDir: String,
       queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val static = spark.read.parquet(s"$sfDir/events.parquet")
+    val static = StreamSupport.streamSession(spark)
+      .read.parquet(s"$sfDir/events.parquet")
       .groupBy("user_id")
       .agg(sum((col("event_type") === "purchase").cast("long")).as("n_purchases"))
       .withColumn("is_buyer", (col("n_purchases") > 0).cast("int"))

@@ -17,8 +17,8 @@ object StreamEnrich {
     */
   def enrichEvents(spark: SparkSession, sfDir: String,
       queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val static = spark.read.parquet(s"$sfDir/events.parquet")
+    val static = StreamSupport.streamSession(spark)
+      .read.parquet(s"$sfDir/events.parquet")
       .groupBy("user_id")
       .agg(sum((col("event_type") === "purchase").cast("long")).as("n_purchases"))
       .withColumn("is_buyer", col("n_purchases") > 0)
@@ -39,10 +39,9 @@ object StreamEnrich {
     */
   def enrichPurchasesScd2(spark: SparkSession, sfDir: String,
       splitDir: String, queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.expressions.Window
-    val ev = StreamSupport.tsToLongNs(
-        spark.read.parquet(s"$sfDir/events.parquet"))
+    val ev = StreamSupport.tsToLongNs(StreamSupport.streamSession(spark)
+        .read.parquet(s"$sfDir/events.parquet"))
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000").as("ts_us"))
     val w = Window.partitionBy("user_id").orderBy(col("ts_us"), col("event_id"))

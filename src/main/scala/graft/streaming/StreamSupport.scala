@@ -69,10 +69,9 @@ private[streaming] object StreamSupport {
     * glob-filtered to the events file; schema from a batch read).
     */
   def eventsFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.streaming.schemaInference", "false")
-    val schema: StructType = spark.read.parquet(s"$sfDir/events.parquet").schema
-    tsToLongNs(streamSession(spark).readStream
+    val ss = streamSession(spark)
+    val schema: StructType = ss.read.parquet(s"$sfDir/events.parquet").schema
+    tsToLongNs(ss.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(sfDir))
@@ -90,19 +89,10 @@ private[streaming] object StreamSupport {
     * process-wide lock below), and `splitDir` assumes a SINGLE WRITER across
     * processes — two JVMs splitting into the same directory concurrently
     * could interleave file moves and marker writes. Give each concurrent
-    * query its own splitDir. Note this helper also sets the session-wide
-    * `nanosAsLong` SQLConf (the events table stores nanos), a deliberate
-    * read-path side effect shared with `eventsFileStream`.
+    * query its own splitDir.
     */
   private val splitLock = new Object
 
-  /** Shared split-build core: materialize N filtered copies of the events
-    * table as split_a, split_b, … in `splitDir` with pinned modification
-    * times (ascending — split_a streams first), cache-keyed on source
-    * identity, and return the 1-file-per-trigger stream. `parts` receives
-    * the (cached) events frame and produces the per-batch predicated views
-    * in stream order.
-    */
   /** The source-agnostic core of the split builders: materialize `parts` as
     * split_a, split_b, … in `splitDir` with pinned ascending modification
     * times (split_a streams first), cache-keyed on `cacheKey`, and return
@@ -157,9 +147,11 @@ private[streaming] object StreamSupport {
       .parquet(splitDir)
   }
 
+  /** [[splitFilesStream]] over the events table, keyed on its file
+    * identity: `parts` maps the cached events frame to the per-batch views.
+    */
   private def splitStream(spark: SparkSession, sfDir: String, splitDir: String)
       (parts: DataFrame => Seq[DataFrame]): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // cache keyed on the SOURCE file identity — a bare existence check would
     // silently stream stale splits after an sfDir change into the same dir
     val src = new java.io.File(s"$sfDir/events.parquet")
@@ -170,7 +162,8 @@ private[streaming] object StreamSupport {
     // splitFilesStream returns), freed here right after
     var cached: Option[DataFrame] = None
     try splitFilesStream(spark, splitDir, key) {
-      val ev = tsToLongNs(spark.read.parquet(s"$sfDir/events.parquet"))
+      val ev = tsToLongNs(
+        streamSession(spark).read.parquet(s"$sfDir/events.parquet"))
       ev.persist()
       cached = Some(ev)
       parts(ev)

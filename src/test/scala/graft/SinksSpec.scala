@@ -137,6 +137,48 @@ class SinksSpec extends AnyFunSuite {
     }
   }
 
+  test("writeFullCorpus: one config per D family plus A1 — the manifest's " +
+      "files, and each _missing file is its _complete twin with exactly " +
+      "the kernel's masked cells emptied") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    // from Grid.all(): config ids are unique across families only there
+    val cfgs = Seq("A1", "D1", "D1C", "D2", "D2C", "D3", "D3C")
+      .map(f => Grid.all().find(c => c.family == f && c.nPoints == 500).get)
+    val dir = Files.createTempDirectory("full_corpus")
+    Sinks.writeFullCorpus(spark, dir.toString, cfgs)
+    val written = {
+      val s = Files.walk(dir)
+      try s.iterator.asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString).toSet
+      finally s.close()
+    }
+    assert(written == (Sinks.corpusManifest(cfgs) ++ Sinks.txtManifest(cfgs)).toSet)
+    def lines(rel: String) = Files.readAllLines(dir.resolve(rel)).asScala.toVector
+    val dual = cfgs.filter(c => Sinks.dualView(c.family))
+    assert(dual.map(_.family) == Seq("D1", "D1C", "D2", "D2C", "D3", "D3C"))
+    dual.foreach { c =>
+      val complete = lines(Sinks.relPath(c, missing = false))
+      val missing = lines(Sinks.relPath(c, missing = true))
+      assert(complete.head == missing.head, s"${c.family} header")
+      assert(complete.size == c.nPoints + 1 && missing.size == complete.size)
+      val mask = Kernel.generate(c).mask
+      var nMasked = 0
+      complete.tail.zip(missing.tail).zipWithIndex.foreach { case ((a, b), t) =>
+        val ca = a.split(",", -1); val cb = b.split(",", -1)
+        assert(ca.last == cb.last, s"${c.family} time at t=$t")
+        assert(ca.length == cb.length && ca.forall(_.nonEmpty))
+        (0 until c.nVars).foreach { j =>
+          if ((mask(t) >> j & 1) == 1) { assert(cb(j).isEmpty); nMasked += 1 }
+          else assert(cb(j) == ca(j), s"${c.family} X${j + 1} at t=$t")
+        }
+        // U (when present) and time are never masked
+        assert(ca.drop(c.nVars).sameElements(cb.drop(c.nVars)))
+      }
+      assert(nMasked > 0, s"${c.family}: no masked cell to check")
+    }
+  }
+
   test("file-name grammar matches shipped corpus layout") {
     def cfg(family: String, n: Int, v: Int, l: Int, noise: String = "gaussian",
         ratio: Double = 0.5, mcar: Double = 0.0, block: Double = 0.0) =

@@ -195,4 +195,30 @@ class StreamBatchSpec extends AnyFunSuite {
       "drained sink must equal the batch interval join")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
   }
+
+  test("stream-static enrichment: sink equals the batch join, caller's " +
+      "session conf untouched") {
+    import org.apache.spark.sql.functions._
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.streaming.schemaInference", "true")
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.streaming.schemaInference")
+    val before = keys.map(caller.conf.getOption)
+    val out = StreamEnrich.enrichEvents(caller, d,
+      queryName = s"t_enrich_${System.nanoTime()}")
+    assert(keys.map(caller.conf.getOption) === before,
+      "a stream must not set conf on the caller's session")
+    val ev = spark.read.parquet(s"$d/events.parquet")
+    val static = ev.groupBy("user_id")
+      .agg(sum((col("event_type") === "purchase").cast("long"))
+        .as("n_purchases"))
+      .withColumn("is_buyer", col("n_purchases") > 0)
+    val batch = ev.select("event_id", "user_id", "event_type")
+      .join(static, Seq("user_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val got = rows(out)
+    assert(got.nonEmpty && got === rows(batch),
+      "drained sink must equal the batch enrichment join")
+  }
 }
