@@ -384,29 +384,40 @@ object Sinks {
     (vals, graph, p)
   }
 
-  /** CSV corpus write (S2): ONE job — repartition on configId, sort
-    * (configId, view, t) within partitions, and each task streams its
-    * files straight into their FINAL grammar-named paths (no partitionBy
-    * temp tree or rename of 4,320 part files: the r8 profile put a
-    * partitionBy writer's ~26 s there, not in generation). Cells render
-    * as Spark's CSV writer does: `Double.toString`, nulls empty, regular
-    * families' time as an integer, `\n` after every line (CorpusSpec
-    * checks layout, headers, row counts and empty cells wholesale).
-    * `missing=true` writes the masked view (D families' *_missing.csv):
-    * X cells with their `maskBits` bit set are empty, as pandas writes NaN.
+  /** CSV corpus write (S2): ONE narrow job with no shuffle. Each task
+    * streams the configs of its partition straight into their FINAL
+    * grammar-named paths (no partitionBy temp tree or rename of 4,320 part
+    * files: the r8 profile put a partitionBy writer's ~26 s there, not in
+    * generation). It relies on the layout [[Generate.series]] emits: each
+    * config's rows in one partition, contiguous, as t = 0…nPoints−1; a
+    * task that sees anything else throws and publishes nothing of that
+    * config. Cells render as Spark's CSV writer does: `Double.toString`,
+    * nulls empty, regular families' time as an integer, `\n` after every
+    * line (CorpusSpec checks layout, headers, row counts and empty cells
+    * wholesale). `missing=true` writes the masked view (D families'
+    * *_missing.csv): X cells with their `maskBits` bit set are empty, as
+    * pandas writes NaN. configIds must be distinct across `cfgs`.
     */
   def writeCsvCorpus(rows: Dataset[SeriesRow], cfgs: Seq[GenConfig], outDir: String,
       missing: Boolean): Unit =
     writeCsv(rows, cfgs, outDir, Seq(missing))
 
-  /** Fans a dual-view config's rows out to each of `dualViews` (true =
-    * masked) before the shuffle, any other config's to `dualViews.head`.
+  /** Writes each dual-view config's rows to one file per view in
+    * `dualViews` (true = masked), any other config's to `dualViews.head`;
+    * a task keeps the current config's files open and writes every row to
+    * each of them.
     */
   private def writeCsv(rows: Dataset[SeriesRow], cfgs: Seq[GenConfig],
       outDir: String, dualViews: Seq[Boolean]): Unit = {
-    // (relPath, header, nVars, hasU, regular-time) per (config, view)
-    val meta: Map[(Long, Boolean), (String, String, Int, Boolean, Boolean)] =
-      cfgs.flatMap { c =>
+    // Grid.forFamily numbers configIds from 0 in every family: two such
+    // configs would share one metadata entry and interleave their rows
+    val dup = cfgs.groupBy(_.configId).collect { case (id, cs) if cs.size > 1 => id }
+    require(dup.isEmpty, s"writeCsvCorpus needs distinct configIds, got " +
+      s"duplicates ${dup.toSeq.sorted.take(5).mkString(", ")}")
+    // per config: (relPath, masked) per view, header, nVars, hasU,
+    // regular-time, nPoints
+    val meta: Map[Long, (Seq[(String, Boolean)], String, Int, Boolean, Boolean, Int)] =
+      cfgs.map { c =>
         val spec = Kernel.specs(c.family)
         // the row loop reads X values positionally from the fixed
         // X1..X8,U,time select — widen it before admitting more variables,
@@ -415,25 +426,21 @@ object Sinks {
           s"writeCsvCorpus supports nVars <= 8, got ${c.nVars}")
         val header = ((1 to c.nVars).map(i => s"X$i") ++
           (if (spec.hasU) Seq("U") else Nil) :+ "time").mkString("", ",", "\n")
-        (if (dualView(c.family)) dualViews else dualViews.take(1)).map(m =>
-          (c.configId, m) ->
-            (relPath(c, m), header, c.nVars, spec.hasU, !spec.irregular))
+        val views = if (dualView(c.family)) dualViews else dualViews.take(1)
+        c.configId -> (views.map(m => (relPath(c, m), m)), header, c.nVars,
+          spec.hasU, !spec.irregular, c.nPoints)
       }.toMap
     // pre-create every target directory driver-side so tasks never race
-    meta.values.map(m => Paths.get(s"$outDir/${m._1}").getParent)
+    meta.values.flatMap(_._1).map(v => Paths.get(s"$outDir/${v._1}").getParent)
       .toSet.foreach((p: java.nio.file.Path) => Files.createDirectories(p))
     val metaB = rows.sparkSession.sparkContext.broadcast(meta)
     val root = new java.io.File(outDir).getAbsolutePath
-    val dual = col("family").isin(Kernel.specs.keys.filter(dualView).toSeq: _*)
-    val view = explode(when(dual, typedLit(dualViews)).otherwise(typedLit(dualViews.take(1))))
-    val cols = Seq(col("configId"), view.as("masked"), col("t")) ++
+    val cols = Seq(col("configId"), col("t")) ++
       (1 to 8).map(i => col(s"X$i")) ++
       Seq(col("U"), col("time"), col("maskBits"))
     // Catalyst rows, not external Rows: boxing every cell of perfbench's
     // ~540k corpus rows raised corpus_discovery's peak RSS by ~13 %
     Generate.wide(rows).select(cols: _*)
-      .repartition(col("configId"))
-      .sortWithinPartitions("configId", "masked", "t")
       .queryExecution.toRdd
       .foreachPartition { (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
         val m = metaB.value
@@ -441,78 +448,112 @@ object Sinks {
         // place on close: a speculative or retried attempt can then
         // never interleave with (or truncate under) a concurrent
         // attempt's writer — last atomic rename wins. The rename runs
-        // ONLY on the success paths (file switch after its last row, or
+        // ONLY on the success paths (config switch after its last row, or
         // clean end of partition): a task that throws or is killed
-        // mid-file aborts — the in-progress temp is closed and deleted,
-        // never renamed — so a torn file can never shadow a complete one
+        // mid-config aborts — the in-progress temps are closed and
+        // deleted, never renamed — so a torn file can never shadow a
+        // complete one
         val tc = org.apache.spark.TaskContext.get()
         val sfx = s".tmp-${tc.stageId}-${tc.taskAttemptId}"
+        val done = scala.collection.mutable.HashSet.empty[Long]
         var curId = Long.MinValue
-        var curMasked = false
-        var w: java.io.Writer = null
-        var curFinal: java.nio.file.Path = null
-        // the temp path tracked SEPARATELY from the writer: if close()'s
-        // rename itself fails (ENOSPC, FS error) after nulling w, abort()
-        // can still delete the stranded temp by path
-        var curTmp: java.nio.file.Path = null
+        var nextT = 0L
+        var nPoints = 0
+        // one writer per view of the current config; the temp paths are
+        // tracked SEPARATELY from the writers: if close()'s rename itself
+        // fails (ENOSPC, FS error) after nulling the writers, abort() can
+        // still delete the stranded temps by path
+        var ws: Array[java.io.Writer] = Array.empty
+        var masks: Array[Boolean] = Array.empty
+        var finals: Array[java.nio.file.Path] = Array.empty
+        var tmps: Array[java.nio.file.Path] = Array.empty
         var nVars = 0; var hasU = false; var regular = false
-        def close(): Unit = if (w != null) {
-          w.close(); w = null
-          Files.move(curTmp, curFinal,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          curTmp = null
+        def fail(msg: String): Nothing = throw new IllegalStateException(
+          s"writeCsvCorpus: config $curId (${m.get(curId).fold("no metadata")(
+            _._1.head._1)}): $msg")
+        def close(): Unit = if (ws.nonEmpty) {
+          if (nextT != nPoints)
+            fail(s"closes after $nextT of $nPoints rows")
+          ws.foreach(_.close()); ws = Array.empty
+          tmps.indices.foreach { i =>
+            Files.move(tmps(i), finals(i),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            tmps(i) = null
+          }
         }
         def abort(): Unit = {
           // never let cleanup failures shadow the task's root exception
-          if (w != null) {
+          ws.foreach { w =>
             try w.close()
             catch { case scala.util.control.NonFatal(_) => () }
-            w = null
           }
-          if (curTmp != null) {
-            try Files.deleteIfExists(curTmp)
-            catch { case scala.util.control.NonFatal(_) => () }
-            curTmp = null
+          ws = Array.empty
+          tmps.foreach { p =>
+            if (p != null) {
+              try Files.deleteIfExists(p)
+              catch { case scala.util.control.NonFatal(_) => () }
+            }
           }
+          tmps = Array.empty
         }
         var ok = false
         try {
           val sb = new java.lang.StringBuilder(256)
-          it.foreach { r =>
-            val id = r.getLong(0)
-            val masked = r.getBoolean(1)
-            if (id != curId || masked != curMasked) {
-              close()
-              curId = id; curMasked = masked
-              val (rel, header, v, u, reg) = m((id, masked))
-              nVars = v; hasU = u; regular = reg
-              curFinal = Paths.get(s"$root/$rel")
-              curTmp = Paths.get(s"$root/$rel$sfx")
-              w = new java.io.BufferedWriter(new java.io.FileWriter(
-                curTmp.toFile), 1 << 16)
-              w.write(header)
-            }
+          def line(r: org.apache.spark.sql.catalyst.InternalRow, blank: Int): String = {
             sb.setLength(0)
-            val blank = if (masked) r.getInt(13) else 0
             var i = 0
             while (i < nVars) {
-              if (!r.isNullAt(3 + i) && (blank >> i & 1) == 0)
-                sb.append(r.getDouble(3 + i))
+              if (!r.isNullAt(2 + i) && (blank >> i & 1) == 0)
+                sb.append(r.getDouble(2 + i))
               sb.append(',')
               i += 1
             }
             if (hasU) {
-              if (!r.isNullAt(11)) sb.append(r.getDouble(11))
+              if (!r.isNullAt(10)) sb.append(r.getDouble(10))
               sb.append(',')
             }
-            val time = r.getDouble(12)
+            val time = r.getDouble(11)
             if (regular) sb.append(time.toLong) else sb.append(time)
             sb.append('\n')
-            w.write(sb.toString)
+            sb.toString
           }
+          it.foreach { r =>
+            val id = r.getLong(0)
+            if (id != curId) {
+              close()
+              curId = id; nextT = 0L
+              if (!done.add(id))
+                fail("its rows reappear after another config's; the writer " +
+                  "needs each config's rows contiguous in one partition")
+              val (views, header, v, u, reg, n) = m(id)
+              nVars = v; hasU = u; regular = reg; nPoints = n
+              masks = views.map(_._2).toArray
+              finals = views.map(x => Paths.get(s"$root/${x._1}")).toArray
+              tmps = views.map(x => Paths.get(s"$root/${x._1}$sfx")).toArray
+              ws = tmps.map { p =>
+                val w: java.io.Writer = new java.io.BufferedWriter(
+                  new java.io.FileWriter(p.toFile), 1 << 16)
+                w.write(header)
+                w
+              }
+            }
+            val t = r.getLong(1)
+            if (t != nextT || t >= nPoints)
+              fail(s"row t=$t where t=$nextT was next (nPoints $nPoints); " +
+                "the writer needs each config's rows in t order")
+            nextT += 1
+            val bits = r.getInt(12)
+            val complete = line(r, 0)
+            var i = 0
+            while (i < ws.length) {
+              ws(i).write(if (masks(i) && bits != 0) line(r, bits) else complete)
+              i += 1
+            }
+          }
+          close()
           ok = true
-        } finally { if (ok) close() else abort() }
+        } finally { if (!ok) abort() }
       }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Causal-discovery ANALYSIS operators over aligned multivariate panels —
   * the consumer-side counterpart of the generator families (the reference
@@ -505,7 +507,8 @@ object Causal {
     */
   def pcSkeleton(panel: DataFrame, tauSqBp: Long = 625L,
       broadcastRankJoin: Boolean = true): DataFrame =
-    pcSkeletonMoments(pcMoments(panel, broadcastRankJoin), tauSqBp)
+    pcSkeletonMoments(new PairMoments(pcMoments(panel, broadcastRankJoin)),
+      tauSqBp)
 
   /** The canonical τ² stability ladder in basis points: τ = 0.05, 0.10,
     * 0.15, 0.20, 0.25 ([[pcSkeleton]]'s default), 0.30 — ONE value
@@ -530,26 +533,55 @@ object Causal {
   def pcSkeletonTauSweep(panel: DataFrame, tauSqBps: Seq[Long],
       broadcastRankJoin: Boolean = true): DataFrame = {
     require(tauSqBps.nonEmpty, "tauSqBps must be non-empty")
-    val cm = pcMoments(panel, broadcastRankJoin)
+    val cm = new PairMoments(pcMoments(panel, broadcastRankJoin))
     tauSqBps.map(t =>
         pcSkeletonMoments(cm, t).withColumn("tau_sq_bp", lit(t)))
       .reduce(_ unionByName _)
   }
 
+  /** Spark's string order (UTF8String, binary UTF-8), for the decision
+    * tail's driver-side `<`, `least`/`greatest` and `min` over series names.
+    */
+  private val seriesOrder: Ordering[String] = Ordering.fromLessThan((a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+
+  /** A pair-grain moment frame (k1, k2, n, c) collected to the driver and
+    * keyed by (k1, k2): the decision tail's lookups read it in place of
+    * broadcast equi-joins. Rows with a NULL key are dropped, as a join
+    * drops them; a key with several rows returns each, as a join would.
+    * Only for frames of at most one row per co-observed pair.
+    */
+  private final class PairMoments(df: DataFrame, k1: String = "sa",
+      k2: String = "sb") {
+    private val sel = df.select(k1, k2, "n", "c")
+    val spark: SparkSession = df.sparkSession
+    /** The (k1, k2, n, c) fields. */
+    val fields: Array[StructField] = sel.schema.fields
+    val rows: Array[Row] = sel.collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    private val byPair = rows.groupBy(r => (r.getString(0), r.getString(1)))
+    private val byFirst = rows.groupBy(_.getString(0))
+    def apply(a: String, b: String): Array[Row] =
+      byPair.getOrElse((a, b), Array.empty[Row])
+    /** Every row whose first key is `a`. */
+    def from(a: String): Array[Row] = byFirst.getOrElse(a, Array.empty[Row])
+  }
+
   /** Shared order-0 stage: every co-observed pair (a < b) with its
     * cross/diagonal moments and the keep0 decision — the frame both the
-    * unrestricted and the PC-stable skeletons build on.
+    * unrestricted and the PC-stable skeletons build on. The pair rows are
+    * built from the collected moments; keep0 is evaluated by Spark over
+    * the local relation (on the driver, no job).
     */
-  private def pcPairs0(cm: DataFrame, tauSqBp: Long): DataFrame = {
-    def cAs(na: String, nb: String, out: String): DataFrame =
-      cm.select(col("sa").as(na), col("sb").as(nb), col("c").as(out))
-    cm.where(col("sa") < col("sb"))
-      .select(col("sa").as("a"), col("sb").as("b"), col("n"),
-        col("c").as("cab"))
-      .join(broadcast(cAs("a", "a2", "caa")).where(col("a") === col("a2"))
-        .drop("a2"), Seq("a"))
-      .join(broadcast(cAs("b", "b2", "cbb")).where(col("b") === col("b2"))
-        .drop("b2"), Seq("b"))
+  private def pcPairs0(cm: PairMoments, tauSqBp: Long): DataFrame = {
+    val rows = for {
+      r <- cm.rows
+      a = r.getString(0); b = r.getString(1) if seriesOrder.lt(a, b)
+      aa <- cm(a, a); bb <- cm(b, b)
+    } yield Row(a, b, r.get(2), r.get(3), aa.get(3), bb.get(3))
+    val Array(fa, fb, fn, fc) = cm.fields
+    val schema = StructType(Seq(fa.copy(name = "a"), fb.copy(name = "b"), fn,
+      fc.copy(name = "cab"), fc.copy(name = "caa"), fc.copy(name = "cbb")))
+    cm.spark.createDataFrame(rows.toSeq.asJava, schema)
       .withColumn("keep0", expr(
         s"""case when 10000 * cast(cab as decimal(38,0)) * cab >
            |  $tauSqBp * cast(caa as decimal(38,0)) * cbb
@@ -571,33 +603,46 @@ object Causal {
 
   /** The moments→skeleton stage of [[pcSkeleton]], split out so
     * [[pcSkeleton2]] can reuse one fact-scale cross-moment pass for both
-    * the order-≤1 decisions and the order-2 cofactor tests.
+    * the order-≤1 decisions and the order-2 cofactor tests. Every frame
+    * here is a local relation built from the collected moments: the
+    * decision expressions run on the driver with no job.
     */
-  private[metrics] def pcSkeletonMoments(cm: DataFrame,
+  private def pcSkeletonMoments(cm: PairMoments,
       tauSqBp: Long): DataFrame = {
-    def cAs(na: String, nb: String, out: String): DataFrame =
-      cm.select(col("sa").as(na), col("sb").as(nb), col("c").as(out))
-    val pairs = pcPairs0(cm, tauSqBp)
-    val zs = cm.where(col("sa") === col("sb"))
-      .select(col("sa").as("z"), col("c").as("czz"))
-    // conditioning candidates are ENUMERATED from the moment table, not
-    // cross-joined: a usable z must have (a,z) and (b,z) cross-moment
-    // rows anyway (the inner joins below demanded them), so starting
-    // from the (a,z) rows yields the identical triple set while keeping
-    // the fan-out per pair at the z's a actually co-observes. Under the
-    // multi-graph fold (q340: many disjoint graphs via key-prefixed
-    // series sharing no days) this is what keeps the stage linear in
-    // the graph count — a crossJoin against ALL graphs' diagonals would
-    // be quadratic across configs
-    val trip = pairs.where(col("keep0") === 1)
-      .join(broadcast(cAs("a", "z", "caz")), Seq("a"))
-      .where(col("z") =!= col("a") && col("z") =!= col("b"))
-      .join(broadcast(cAs("b", "z", "cbz")), Seq("b", "z"))
-      .join(broadcast(zs), Seq("z"))
-      .withColumn("sep", sep1Expr(tauSqBp))
-    val sepsets = trip.groupBy("a", "b")
-      .agg(min(when(col("sep") === 1, col("z"))).as("sepset"))
-    pairs.join(broadcast(sepsets), Seq("a", "b"), "left_outer")
+    val pf = pcPairs0(cm, tauSqBp)
+    val pairs = pf.collect()
+    // conditioning candidates are ENUMERATED from the moment rows, not
+    // crossed with every diagonal: a usable z has (a,z), (b,z) and (z,z)
+    // rows, so starting from a's rows keeps the fan-out per pair at the
+    // z's a actually co-observes. Under the multi-graph fold (q340: many
+    // disjoint graphs via key-prefixed series sharing no days) that keeps
+    // the stage linear in the graph count
+    val trip = for {
+      p <- pairs if p.getInt(6) == 1
+      a = p.getString(0); b = p.getString(1)
+      az <- cm.from(a)
+      z = az.getString(1) if z != a && z != b
+      bz <- cm(b, z); zz <- cm(z, z)
+    } yield Row(a, b, z, p.get(3), p.get(4), p.get(5), az.get(3), bz.get(3),
+      zz.get(3))
+    val Array(fa, fb, _, fc) = cm.fields
+    val tripSchema = StructType(Seq(fa.copy(name = "a"), fb.copy(name = "b"),
+      fb.copy(name = "z")) ++
+      Seq("cab", "caa", "cbb", "caz", "cbz", "czz").map(c => fc.copy(name = c)))
+    // the least separating z per pair, in Spark's string order
+    val sepsets = cm.spark.createDataFrame(trip.toSeq.asJava, tripSchema)
+      .select(col("a"), col("b"), col("z"), sep1Expr(tauSqBp).as("sep"))
+      .collect().filter(_.getInt(3) == 1)
+      .groupBy(r => (r.getString(0), r.getString(1)))
+      .map { case (k, rs) => k -> rs.map(_.getString(2)).min(seriesOrder) }
+    val out = pairs.map { p =>
+      Row(p.get(0), p.get(1), p.get(2), p.get(3), p.get(6),
+        sepsets.getOrElse((p.getString(0), p.getString(1)), null))
+    }
+    val pfs = pf.schema
+    val outSchema = StructType(Seq("a", "b", "n", "cab", "keep0").map(pfs(_)) :+
+      StructField("sepset", fb.dataType, nullable = true))
+    cm.spark.createDataFrame(out.toSeq.asJava, outSchema)
       .select(col("a"), col("b"), col("n"), col("cab"), col("keep0"),
         col("sepset"),
         when(col("keep0") === 1 && col("sepset").isNull, 1).otherwise(0)
@@ -692,7 +737,10 @@ object Causal {
     */
   def pcSkeleton2(panel: DataFrame, tauSqBp: Long = 625L): DataFrame = {
     val cm = pcMoments(panel)
-    val sk1 = pinTiny(pcSkeletonMoments(cm, tauSqBp))
+    // one partition, as the join chain the local relation replaced had:
+    // a local relation scans as one partition per core, and every later
+    // stage and Meek round would pay for the extra tasks
+    val sk1 = pinTiny(pcSkeletonMoments(new PairMoments(cm), tauSqBp).coalesce(1))
     val nc = normalizedMoments(cm)
     // conditioning pairs {z,w} enumerated from a's co-observed series
     // (the (a,z)/(a,w) moment rows the joins below demand anyway), not
@@ -836,8 +884,9 @@ object Causal {
     * on a sparse deployment-width graph (p = 32..64, d ≈ 4) that is a
     * 50-100× candidate-volume cut, and the restriction composes with
     * the multi-graph fold unchanged (adjacency rows carry the folded
-    * series names, so the fan-out stays per-graph). Every stage below
-    * is a broadcast equi-join over panel-grain frames; the single
+    * series names, so the fan-out stays per-graph). The order-0 pairs
+    * are a driver-side local relation ([[pcPairs0]]) and every later
+    * stage a broadcast equi-join over panel-grain frames; the single
     * fact-scale pass remains the rank cross-moment aggregation.
     *
     * Output: [[pcSkeleton2]]'s exact column contract (a, b, n, cab,
@@ -855,7 +904,8 @@ object Causal {
   private def pcStable2Core(cm: DataFrame, tauSqBp: Long): DataFrame = {
     def cAs(na: String, nb: String, out: String): DataFrame =
       cm.select(col("sa").as(na), col("sb").as(nb), col("c").as(out))
-    val pairs = pinTiny(pcPairs0(cm, tauSqBp))
+    // one partition, as in pcSkeleton2
+    val pairs = pinTiny(pcPairs0(new PairMoments(cm), tauSqBp).coalesce(1))
     val kept0 = pairs.where(col("keep0") === 1).select(col("a"), col("b"))
     val adj0 = kept0.unionByName(
       kept0.select(col("b").as("a"), col("a").as("b")))
@@ -1999,42 +2049,48 @@ object Causal {
     *   (k=2; the k=1 branch is 10⁶·C_jy div C_jj) — exact truncating
     *   division, identical on both engines for either sign.
     *
-    * The moments frame is post-aggregation tiny (|specs|² rows), so all
-    * six lookups broadcast. Integer budget: the k=2 numerator is
-    * 10⁶·C·C, so |C| ≤ ~5·10¹⁵ — n ≤ ~5·10⁴ observations per graph at
-    * milli quantization — keeps every product inside DECIMAL(38,0)/
-    * HUGEINT (the weightrec bench rung runs exactly at that boundary).
+    * The moments frame is post-aggregation tiny (one row per requested
+    * pair, ≤ ~115k at the 85k-hypothesis rung), so it is collected and
+    * the six lookups are driver-side map reads that keep Spark's
+    * `least`/`greatest` NULL-skipping: a k=1 link's x–sib and sib–y
+    * lookups read C_xx and C_yy. The link rows, moments appended, become
+    * a local relation that beta_ppm is evaluated over. Integer budget:
+    * the k=2 numerator is 10⁶·C·C, so |C| ≤ ~5·10¹⁵ — n ≤ ~5·10⁴
+    * observations per graph at milli quantization — keeps every product
+    * inside DECIMAL(38,0)/HUGEINT (the weightrec bench rung runs exactly
+    * at that boundary).
     * Mirrored by [[structuralBetasSqlCtes]].
     */
   def structuralBetas(moments: DataFrame, links: DataFrame): DataFrame = {
-    // Materialize the pair-grain moment frame ONCE before the six lookup
-    // broadcasts hang off it. Without this, each broadcast is its own AQE
-    // stage that re-runs the moment aggregation's reduce side (the map
-    // side dedupes through exchange reuse, the final agg + broadcast build
-    // do not — six stages re-read the partial-agg shuffle; unifying the
-    // six projections does NOT fix it, column pruning restores the
-    // asymmetry — see plans/r15/*_executed.txt). The frame is BOUNDED at
-    // one row per requested pair (≤ ~115k at the 85k-hypothesis rung) —
-    // never corpus-scale — so the pin is safe at any input size, the same
-    // pinTiny discipline the pc path uses. Measured when it landed (commit
-    // f65c545, interleaved A/B): bhfdr_catalog 22.3 → 16.0 s,
-    // weightwide_p256_dense 6.7 → 5.1 s; outputs bitwise identical
-    // (checkpoint is value-neutral).
-    val m = pinTiny(moments.select("na", "nb", "n", "c"))
-    def look(df: DataFrame, k1: String, k2: String, out: String,
-        withN: Boolean = false): DataFrame = {
-      val cols = (if (withN) Seq(col("n")) else Nil) :+ col("c").as(out)
-      df.join(broadcast(m.select(col("na") +: col("nb") +: cols: _*)),
-        least(col(k1), col(k2)) === col("na") &&
-          greatest(col(k1), col(k2)) === col("nb"), "left")
-        .drop("na", "nb")
+    val m = new PairMoments(moments, "na", "nb")
+    val noHit = Array[Row](null)
+    // the moment rows of the pair {k1, k2}, NULL keys skipped as
+    // least/greatest skip them; one NULL row when none matches (left join)
+    def look(k1: String, k2: String): Array[Row] = {
+      val ks = Seq(k1, k2).filter(_ != null)
+      val hits = if (ks.isEmpty) Array.empty[Row]
+        else m(ks.min(seriesOrder), ks.max(seriesOrder))
+      if (hits.isEmpty) noHit else hits
     }
-    // the y-diagonal lookup also carries the window size n (all pairs
-    // share it by the common-window contract) — the noise-variance
-    // consumer (q354) normalizes RSS by n² without a second moment read
-    val j = look(look(look(look(look(look(links,
-      "y", "y", "cyy", withN = true), "x", "x", "cjj"), "x", "y", "cjy"),
-      "sib", "sib", "css"), "x", "sib", "cjs"), "sib", "y", "csy")
+    def c(r: Row): Any = if (r == null) null else r.get(3)
+    val ls = links.schema
+    val Seq(iy, ix, is) = Seq("y", "x", "sib").map(ls.fieldIndex)
+    val rows = links.collect().flatMap { r =>
+      val Seq(y, x, sib) = Seq(iy, ix, is).map(i => r.get(i).asInstanceOf[String])
+      // the y-diagonal lookup also carries the window size n (all pairs
+      // share it by the common-window contract) — the noise-variance
+      // consumer (q354) normalizes RSS by n² without a second moment read
+      for {
+        yy <- look(y, y); jj <- look(x, x); jy <- look(x, y)
+        ss <- look(sib, sib); js <- look(x, sib); sy <- look(sib, y)
+      } yield Row.fromSeq(r.toSeq ++ Seq(if (yy == null) null else yy.get(2),
+        c(yy), c(jj), c(jy), c(ss), c(js), c(sy)))
+    }
+    val Array(_, _, fn, fc) = m.fields
+    val schema = StructType(ls.fields ++ (fn.copy(nullable = true) +:
+      Seq("cyy", "cjj", "cjy", "css", "cjs", "csy")
+        .map(n => fc.copy(name = n, nullable = true))))
+    val j = m.spark.createDataFrame(rows.toSeq.asJava, schema)
     j.withColumn("beta_ppm", expr(
       """case when sib is null then
         |  case when cjj = 0 then 0

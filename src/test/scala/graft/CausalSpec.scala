@@ -483,6 +483,82 @@ class CausalSpec extends AnyFunSuite {
     }
   }
 
+  test("pc skeleton over a 3-graph folded panel equals an independent " +
+      "BigInt evaluator, least separating z included") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(77)
+    val nDays = 60
+    // per graph: a driver X1, two noisy copies X2/X3 (common driver), a
+    // near-copy X4 of the driver (a second separator of X2–X3) and a
+    // noise X5; graph 3 has no X5, graph 2 drops a few cells
+    val rows = for {
+      g <- 1 to 3; t <- 0 until nDays
+    } yield {
+      val d = rnd.nextGaussian()
+      val xs = Seq(d, d + 0.5 * rnd.nextGaussian(), d + 0.5 * rnd.nextGaussian(),
+        d + 0.1 * rnd.nextGaussian(), rnd.nextGaussian())
+        .zipWithIndex.map { case (x, i) =>
+          if ((g == 3 && i == 4) || (g == 2 && (t + i) % 17 == 0)) None
+          else Some(x)
+        }
+      (g.toLong, t.toLong, xs(0), xs(1), xs(2), xs(3), xs(4))
+    }
+    val wide = rows.toDF("configId", "t", "X1", "X2", "X3", "X4", "X5")
+    val panel = graft.generate.Panels.folded(wide, 5, col("configId"),
+      concat(col("configId"), lit("|"), lpad(col("t").cast("string"), 3, "0")))
+
+    // independent evaluator: per series, ranks over its observed days by
+    // (v, day); per pair, moments over the days both observe; BigInt rule
+    val obs: Map[String, Map[String, Long]] = rows.flatMap { r =>
+      val (g, t) = (r._1, r._2)
+      Seq(r._3, r._4, r._5, r._6, r._7).zipWithIndex.collect {
+        case (Some(x), i) => (s"$g|X${i + 1}", f"$g|$t%03d",
+          math.floor(x * 1000).toLong)
+      }
+    }.groupBy(_._1).map { case (s, rs) =>
+      s -> rs.sortBy(r => (r._3, r._2)).zipWithIndex
+        .map { case (r, i) => r._2 -> (i + 1L) }.toMap
+    }
+    def mom(x: String, y: String): Option[(Long, BigInt)] = {
+      val days = obs(x).keySet.intersect(obs(y).keySet).toSeq
+      if (days.isEmpty) None
+      else {
+        val n = BigInt(days.size)
+        val (rx, ry) = (days.map(obs(x)(_)), days.map(obs(y)(_)))
+        Some((days.size.toLong, n * rx.zip(ry).map { case (u, v) => BigInt(u) * v }.sum -
+          rx.map(BigInt(_)).sum * ry.map(BigInt(_)).sum))
+      }
+    }
+    def c(x: String, y: String): BigInt = mom(x, y).get._2
+    def sq(x: BigInt) = x * x
+    val tau = BigInt(625)
+    val names = obs.keySet.toSeq.sorted
+    val seps = scala.collection.mutable.Map.empty[(String, String), Int]
+    val expected = (for {
+      a <- names; b <- names if a < b
+      (n, cab) <- mom(a, b)
+    } yield {
+      val keep0 = 10000 * sq(cab) > tau * c(a, a) * c(b, b)
+      val sep1 = names.filter(z => z != a && z != b &&
+          mom(a, z).isDefined && mom(b, z).isDefined)
+        .filter { z =>
+          10000 * sq(cab * c(z, z) - c(a, z) * c(b, z)) <=
+            tau * (c(a, a) * c(z, z) - sq(c(a, z))) *
+              (c(b, b) * c(z, z) - sq(c(b, z)))
+        }
+      if (keep0) seps((a, b)) = sep1.size
+      val sepset = sep1.headOption.filter(_ => keep0)
+      (a, b) -> (n, cab.toLong, if (keep0) 1 else 0, sepset,
+        if (keep0 && sepset.isEmpty) 1 else 0)
+    }).toMap
+    assert(expected.keys.map(_._1.takeWhile(_ != '|')).toSet.size == 3)
+    assert(seps.values.exists(_ >= 2), s"no pair has two separators: $seps")
+    val got = Causal.pcSkeleton(panel).collect().map(r =>
+      (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3),
+        r.getInt(4), Option(r.getString(5)), r.getInt(6))).toMap
+    assert(got == expected)
+  }
+
   test("pc orient 2: q337's pinned 4 rounds reach the Meek fixpoint on " +
       "its actual generated graph (round 5 is a no-op)") {
     import graft.core.Grid

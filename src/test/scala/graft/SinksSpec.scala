@@ -179,6 +179,56 @@ class SinksSpec extends AnyFunSuite {
     }
   }
 
+  private def walkFiles(f: java.io.File): Seq[java.io.File] =
+    if (f.isFile) Seq(f)
+    else Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walkFiles)
+
+  test("CSV corpus writer: configIds that collide across forFamily calls " +
+      "throw before any file or directory is written") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    // Grid.forFamily numbers every family's configs from 0
+    val cfgs = Seq("A1", "C1").map(f => Grid.forFamily(f).find(_.nPoints == 500).get)
+    assert(cfgs.map(_.configId).distinct.size == 1)
+    val dir = Files.createTempDirectory("sink_dup_ids")
+    val err = intercept[IllegalArgumentException] {
+      Sinks.writeCsvCorpus(graft.generate.Generate.series(spark, cfgs), cfgs,
+        dir.toString, missing = false)
+    }
+    assert(err.getMessage.contains("distinct configIds"))
+    val left = Files.list(dir)
+    try assert(left.count() == 0, "the writer created files before its check")
+    finally left.close()
+  }
+
+  test("CSV corpus writer: rows of a config split across partitions fail " +
+      "the job by config, leaving no temp and no short CSV") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
+    val cfgs = Grid.forFamily("A1").filter(c =>
+      c.nPoints == 500 && c.maxLag == 2 && c.noiseType == "gaussian").take(3)
+    assert(cfgs.size == 3)
+    val dir = Files.createTempDirectory("sink_split")
+    // a round-robin repartition deals each config's rows to every partition
+    val rows = graft.generate.Generate.series(spark, cfgs).repartition(3)
+    val err = intercept[org.apache.spark.SparkException] {
+      Sinks.writeCsvCorpus(rows, cfgs, dir.toString, missing = false)
+    }
+    assert(cfgs.exists(c => err.getMessage.contains(s"config ${c.configId} (")),
+      s"the failure names no config: ${err.getMessage}")
+    // the job fails on the first failing task: wait out any task still
+    // running its abort before looking at the directory
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (tracker.getExecutorInfos.map(_.numRunningTasks).sum > 0 &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    val files = walkFiles(dir.toFile)
+    assert(!files.exists(_.getName.contains(".tmp-")), s"temp left behind: $files")
+    files.filter(_.getName.endsWith(".csv")).foreach { f =>
+      assert(Files.readAllLines(f.toPath).size == 501, s"short CSV $f")
+    }
+  }
+
   test("file-name grammar matches shipped corpus layout") {
     def cfg(family: String, n: Int, v: Int, l: Int, noise: String = "gaussian",
         ratio: Double = 0.5, mcar: Double = 0.0, block: Double = 0.0) =

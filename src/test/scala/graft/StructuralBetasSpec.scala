@@ -94,6 +94,49 @@ class StructuralBetasSpec extends AnyFunSuite {
     assert(math.abs(got(("z", "x1@1")) / 1e6 - 0.7) < 0.05)
   }
 
+  test("structuralBetas lookups: a k=1 link reads C_xx and C_yy for its " +
+      "x–sib and sib–y moments, a link without moment rows gets NULLs, " +
+      "and extra link columns pass through in order") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(99)
+    val panel = (0 until 120).flatMap(t => Seq(
+        ("a", t.toLong, rnd.nextInt(1000).toLong),
+        ("b", t.toLong, rnd.nextInt(1000).toLong)))
+      .toDF("series", "day", "v")
+    val mom = Causal.laggedCrossMoments(panel, Seq(("a", 0), ("b", 1)),
+      col("t").between(1, 119))
+    val c = mom.collect().map(r =>
+      (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val linksDf = Seq(
+        ("p1", 7, "a@0", "b@1", None: Option[String], 1.5),
+        ("p2", 8, "a@0", "zz@1", None: Option[String], 2.5))
+      .toDF("pair", "tier", "y", "x", "sib", "w")
+    val out = Causal.structuralBetas(mom, linksDf)
+    assert(out.columns.toSeq == linksDf.columns.toSeq ++
+      Seq("n", "cyy", "cjj", "cjy", "css", "cjs", "csy", "beta_ppm"))
+    val got = out.collect().map(r => r.getString(0) -> r).toMap
+    assert(got.keySet == Set("p1", "p2"))
+    val k1 = got("p1")
+    assert(k1.getInt(1) == 7 && k1.getDouble(5) == 1.5)
+    val (n, cyy) = c(("a@0", "a@0"))
+    val cjj = c(("b@1", "b@1"))._2
+    val cjy = c(("a@0", "b@1"))._2
+    assert(k1.getAs[Long]("n") == n && k1.getAs[Long]("cyy") == cyy)
+    assert(k1.getAs[Long]("cjj") == cjj && k1.getAs[Long]("cjy") == cjy)
+    assert(k1.isNullAt(k1.fieldIndex("css")))
+    assert(k1.getAs[Long]("cjs") == cjj, "x–sib of a NULL sib reads C_xx")
+    assert(k1.getAs[Long]("csy") == cyy, "sib–y of a NULL sib reads C_yy")
+    assert(k1.getAs[Long]("beta_ppm") ==
+      (BigInt(1000000) * cjy / cjj).toLong)
+    // zz@1 is no virtual series: every lookup through x misses
+    val miss = got("p2")
+    assert(miss.getAs[Long]("cyy") == cyy)
+    Seq("cjj", "cjy", "css", "cjs", "beta_ppm").foreach { f =>
+      assert(miss.isNullAt(miss.fieldIndex(f)), s"$f of a missing pair")
+    }
+    assert(miss.getAs[Long]("csy") == cyy)
+  }
+
   test("laggedCrossMoments common window: every pair carries the same n") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
