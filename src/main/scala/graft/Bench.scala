@@ -36,17 +36,19 @@ object Bench {
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
 
-    // one rule for every entry (BenchPolicy): one timed run, wall and
-    // process CPU seconds recorded, a throwing entry listed in `failed`
-    val rec = new BenchPolicy.Record
-    import rec.measure
     // optional comma-separated substring filter for targeted profiling runs
     // (e.g. SPARK_GRAFT_BENCH_ONLY=q27,q52); full runs leave it unset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty) // empty/blank env var means unset, not "run nothing"
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(n.contains)) }
+    // one rule for every entry (BenchPolicy): a selected entry gets one
+    // timed run, wall and process CPU seconds recorded, a throwing entry
+    // listed in `failed`; a block below builds its inputs only when one of
+    // its entries is selected
+    val rec = new BenchPolicy.Record(only)
+    import rec.{measure, selects}
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => selects(n) }
 
     selected.foreach { case (name, fn) =>
       measure(name) {
@@ -70,8 +72,7 @@ object Bench {
     // hot shingle; with it the hot shingles never become join keys and the
     // planted run must stay within ~2x of the uniform one. This measures
     // the guard PlanSpec only asserts.
-    val runSkew = only.forall(_.exists(_.startsWith("dedup")))
-    if (runSkew) {
+    if (Seq("dedup_skew_uniform", "dedup_skew_planted_99pct").exists(selects)) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text").localCheckpoint(true)
       val plant = " the quick brown fox jumps over the lazy dog again and again"
@@ -94,8 +95,7 @@ object Bench {
     // (q315's exact contract at ~830x its oracle size — ~10M edge rows
     // per side). Measures the "a million graphs is one shuffle" claim
     // instead of asserting it.
-    val runShd = only.forall(_.exists(_.startsWith("shd")))
-    if (runShd) {
+    if (selects("shd_panel_1m_graphs")) {
       val edges = graft.core.Parser.truthLinks("A1", 4, 2).zipWithIndex
         .map { case (l, i) => (i, l.source, l.lag, l.target) }
       measure("shd_panel_1m_graphs") {
@@ -118,8 +118,8 @@ object Bench {
     // (linear in configs; the old diagonal crossJoin was quadratic).
     // Generation is checkpointed OUT of the measured loop (it has its
     // own gen_* entries).
-    val runPcsweep = only.forall(_.exists(_.startsWith("pcsweep")))
-    if (runPcsweep) {
+    if (Seq("pcsweep_catalog_fold", "pcsweep_catalog_tau6",
+        "pcsweep_catalog_2592_shuffle").exists(selects)) {
       // one fold-builder for both rungs: config into BOTH keys, lpad
       // width 3 in lockstep with the 200-row cut
       def foldPanel(wide: org.apache.spark.sql.DataFrame,
@@ -195,8 +195,8 @@ object Bench {
     // too, so the order-1/2 stages get real conditioning work).
     // PlanSpec pins that the candidate stages stay moment-enumerated
     // equi-joins at this width (no cartesian, no nested-loop).
-    val runPcwide = only.forall(_.exists(_.startsWith("pcwide")))
-    if (runPcwide) {
+    if (Seq("pcwide_p32_stable_oriented", "pcwide_p64_stable_oriented",
+        "pcwide_p128_stable_oriented").exists(selects)) {
       val pan32 = Panels.widePanel(spark, 32, 200).localCheckpoint(true)
       // complete panel: the pair-row precondition holds by construction —
       // verified once outside the timed region (as in the pcsweep rungs)
@@ -245,8 +245,8 @@ object Bench {
     // (80 series) vs 64 blocks (320 series) should scale near-linearly
     // in cells, while an unrestricted order-2 pass at just 80 series
     // already pays C(78,2) ≈ 3k quadruples per surviving edge
-    val runPcblocks = only.forall(_.exists(_.startsWith("pcblocks")))
-    if (runPcblocks) {
+    if (Seq("pcblocks_p80_stable3_oriented", "pcblocks_p320_stable3_oriented",
+        "pcblocks_p80_order2_unrestricted").exists(selects)) {
       val blk16 = Panels.widePanel3(spark, 16, 200).localCheckpoint(true)
       graft.metrics.Causal.assertPairRows(
         graft.metrics.Causal.pcSkeleton(blk16, 100L))
@@ -282,8 +282,7 @@ object Bench {
     // at milli quantization is the documented integer ceiling for the
     // k=2 determinant products (|C| ≤ ~5e15 → 10⁶·C² ≈ 2.5e37 < 10³⁸),
     // so this rung also pins the budget boundary the scaladoc claims.
-    val runWeightrec = only.forall(_.exists(_.startsWith("weightrec")))
-    if (runWeightrec) {
+    if (selects("weightrec_fold18_n50k")) {
       val cfgs = graft.core.Grid.all().filter(c =>
         (c.family == "A1" || c.family == "A1C") && c.nPoints == 5000
           && c.noiseType == "gaussian").map(_.copy(nPoints = 50000))
@@ -317,8 +316,7 @@ object Bench {
     // first and fans out |wanted| per t instead. The rung pair is the
     // measured evidence for the O(links)-vs-O(p²) claim in the
     // virtualCrossMomentsSparse scaladoc.
-    val runWeightwide = only.forall(_.exists(_.startsWith("weightwide")))
-    if (runWeightwide) {
+    if (Seq("weightwide_p256_sparse", "weightwide_p256_dense").exists(selects)) {
       val pan = Panels.widePanel(spark, 256, 10000)
       val virt = pan.select(concat(col("series"), lit("@0")).as("vs"),
         col("day").as("t"), col("v")).localCheckpoint(true)
@@ -355,8 +353,8 @@ object Bench {
     // hypothesis count moves the wanted-pair broadcast, never the
     // panel scan — the scale shape that makes "test 100k edges on
     // 100 TB" a one-shuffle statement.
-    val runBhfdr = only.forall(_.exists(_.startsWith("bhfdr")))
-    if (runBhfdr) {
+    if (Seq("bhfdr_p512_5k_hypotheses", "bhfdr_catalog_85k_hypotheses")
+        .exists(selects)) {
       val pan = Panels.widePanel(spark, 512, 10000).localCheckpoint(true)
       import spark.implicits._
       def bnm(i: Int) = f"X$i%03d"
@@ -428,12 +426,6 @@ object Bench {
       virtC.unpersist()
     }
 
-    // the gen section also participates in the ONLY filter (e.g. ONLY=gen_
-    // matches no query name but selects the generation stages alone — the
-    // fresh-JVM profiling shape). Only tokens that themselves start with
-    // "gen" select it: the reversed substring match used before meant any
-    // token that happened to be a substring of a stage name (ONLY=s) silently
-    // enabled the heavy generation stages alongside the selected queries.
     // Query-side scale ladder: the gen section proves GENERATION scales;
     // this proves the ANALYTICS operators do. Build a 100× lineitem
     // (60M rows at sf0.1 — the sf10-equivalent fact table) by key-shifted
@@ -441,8 +433,8 @@ object Bench {
     // a broadcast-join+aggregate at 1× and 100×. The 100×/1× wall-clock
     // ratio ≪ 100 (the 1× run is overhead-bound) and ~linear rows/s at
     // 100× is the evidence.
-    val runQscale = only.forall(_.exists(_.startsWith("qscale")))
-    if (runQscale) {
+    if (Seq("qscale_lineitem_100x_build", "qscale_agg_1x", "qscale_agg_100x",
+        "qscale_join_1x", "qscale_join_100x").exists(selects)) {
       System.gc()
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       val maxOk = li.agg(max("l_orderkey")).collect()(0).getLong(0) + 1L
@@ -487,8 +479,10 @@ object Bench {
     // shuffle rung (every df scales 100×, the salting path active) with
     // the PROBE set held fixed at the 1× queries so the measured growth
     // is the posting side alone, not probes × postings.
-    val runDscale = only.forall(_.exists(_.startsWith("dscale")))
-    if (runDscale) {
+    if (Seq("dscale_documents_100x_build", "dscale_exact_dedup_1x",
+        "dscale_exact_dedup_100x", "dscale_quality_1x", "dscale_quality_100x",
+        "dscale_bm25_1x", "dscale_bm25_10x", "dscale_bm25_zipf_1x",
+        "dscale_bm25_zipf_10x").exists(selects)) {
       System.gc()
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text")
@@ -556,9 +550,12 @@ object Bench {
       scala.reflect.io.Directory(new java.io.File(dDir)).deleteRecursively()
     }
 
-    val runGen = only.forall(_.exists(_.startsWith("gen")))
+    val genScale = "gen_scale_25m_partitioned_write"
+    val genScale10x = "gen_scale_256m_partitioned_write"
     val (genStage, taskSkew, genStage10x, taskSkew10x) =
-      if (!runGen) (Array.empty[Long], 0.0, Array.empty[Long], 0.0)
+      if (!Seq("gen_full_sweep", "gen_full_sweep_fast",
+          "gen_corpus_4320_csv_write", genScale, genScale10x).exists(selects))
+        (Array.empty[Long], 0.0, Array.empty[Long], 0.0)
       else {
     val corpusDir = "target/bench_corpus_full"
     // give the 25M-row generation stages a settled heap: the measurement
@@ -608,7 +605,7 @@ object Bench {
     val scaleCfgs = (0 until 512).map(i =>
       grid(i % grid.size).copy(configId = 1000000L + i, nPoints = 50000))
     spark.sparkContext.addSparkListener(listener)
-    measure("gen_scale_25m_partitioned_write") {
+    measure(genScale) {
       Generate.writeParquet(Generate.wideFast(spark, scaleCfgs), scaleDir)
     }
     Thread.sleep(1000) // listener bus is async — let it drain
@@ -632,7 +629,7 @@ object Bench {
     val scale10Cfgs = (0 until 512).map(i =>
       grid(i % grid.size).copy(configId = 2000000L + i, nPoints = 500000))
     val scale10Dir = "target/bench_gen_scale10x"
-    measure("gen_scale_256m_partitioned_write") {
+    measure(genScale10x) {
       Generate.writeParquet(Generate.wideFast(spark, scale10Cfgs), scale10Dir)
     }
     Thread.sleep(1000)
@@ -645,16 +642,16 @@ object Bench {
 
     def f3(x: Double) = String.format(java.util.Locale.ROOT, "%.3f",
       java.lang.Double.valueOf(x)) // locale-proof: JSON needs '.'
-    // a run that SKIPPED the scale generation reports null — gate on the same
-    // condition that ran it (a filtered ONLY=gen_ run DOES execute it and
-    // must not report a fabricated null)
-    def genScaleJson(rows: Long, stage: Array[Long], skew: Double): String =
-      if (!runGen) "null"
+    // a run that SKIPPED a scale rung reports null for it
+    def genScaleJson(name: String, rows: Long, stage: Array[Long],
+        skew: Double): String =
+      if (!selects(name)) "null"
       else s"""{"rows":$rows,"tasks":${stage.length},""" +
         s""""task_skew_max_over_median":${f3(skew)}}"""
     val line = rec.render((System.nanoTime() - wallT0) / 1e9,
-      genScaleJson(512L * 50000L, genStage, taskSkew),
-      genScaleJson(512L * 500000L, genStage10x, taskSkew10x), sfDir)
+      genScaleJson(genScale, 512L * 50000L, genStage, taskSkew),
+      genScaleJson(genScale10x, 512L * 500000L, genStage10x, taskSkew10x),
+      sfDir)
     println(line)
     // the driver's BENCH_r{N}.json artifact has historically kept only the
     // log TAIL, truncating the per-query map and making regression-vs-noise

@@ -28,19 +28,25 @@ object BenchPolicy {
   private def processCpuSeconds(): Double = os.getProcessCpuTime / 1e9
 
   /** One bench round's record: per-entry wall and CPU seconds, in
-    * measurement order, plus the entries whose body threw.
+    * measurement order, plus the entries whose body threw. `only` is the
+    * entry filter (`SPARK_GRAFT_BENCH_ONLY`'s tokens): an entry is
+    * selected when its name contains one of them; `None` selects every
+    * entry.
     */
-  final class Record {
+  final class Record(only: Option[Seq[String]] = None) {
     val wall = mutable.LinkedHashMap.empty[String, Double]
     val cpu = mutable.LinkedHashMap.empty[String, Double]
     val failed = mutable.LinkedHashSet.empty[String]
 
-    /** Runs `body` once and records it under `name`. A throwing body is
+    def selects(name: String): Boolean = only.forall(_.exists(name.contains))
+
+    /** Runs `body` once and records it under `name`; an entry the filter
+      * does not select is skipped and records nothing. A throwing body is
       * listed in `failed` (its time up to the throw is still recorded) and
       * the round carries on, so one broken entry cannot cost the round its
       * whole record.
       */
-    def measure(name: String)(body: => Unit): Unit = {
+    def measure(name: String)(body: => Unit): Unit = if (selects(name)) {
       val c0 = processCpuSeconds()
       val t0 = System.nanoTime()
       try body

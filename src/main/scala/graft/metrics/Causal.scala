@@ -665,13 +665,13 @@ object Causal {
        |  FROM pc_ranked a JOIN pc_ranked b USING (day) GROUP BY 1, 2)"""
       .stripMargin
 
-  /** The τ-DEPENDENT order-0/1 decision tail over `pc_cm`; every CTE
-    * name carries `sfx` so a sweep can instantiate one tail per τ
-    * against a single moment head. Yields
-    * `pc_out\$sfx(a, b, n, cab, keep0, sepset, edge)`.
+  /** The order-0 pair CTE over `pc_cm` under `head` (`name AS` or
+    * `name AS MATERIALIZED`): every co-observed pair a < b with its
+    * cab/caa/cbb and the keep0 decision — [[pcPairs0]]'s CTE twin, shared
+    * by the unrestricted and the PC-stable oracles.
     */
-  def pcDecisionSqlCtes(tauSqBp: Long, sfx: String = ""): String =
-    s"""pc_pairs$sfx AS (
+  private def pairs0SqlCte(head: String, tauSqBp: Long): String =
+    s"""$head (
        |  SELECT p.sa AS a, p.sb AS b, p.n, p.c AS cab,
        |    da.c AS caa, db.c AS cbb,
        |    CASE WHEN 10000 * p.c::HUGEINT * p.c
@@ -680,7 +680,15 @@ object Causal {
        |  FROM pc_cm p
        |  JOIN pc_cm da ON da.sa = p.sa AND da.sb = p.sa
        |  JOIN pc_cm db ON db.sa = p.sb AND db.sb = p.sb
-       |  WHERE p.sa < p.sb),
+       |  WHERE p.sa < p.sb)""".stripMargin
+
+  /** The τ-DEPENDENT order-0/1 decision tail over `pc_cm`; every CTE
+    * name carries `sfx` so a sweep can instantiate one tail per τ
+    * against a single moment head. Yields
+    * `pc_out\$sfx(a, b, n, cab, keep0, sepset, edge)`.
+    */
+  def pcDecisionSqlCtes(tauSqBp: Long, sfx: String = ""): String =
+    pairs0SqlCte(s"pc_pairs$sfx AS", tauSqBp) + s""",
        |pc_trip$sfx AS (
        |  SELECT pr.a, pr.b, z.sa AS z,
        |    CASE WHEN 10000
@@ -714,12 +722,13 @@ object Causal {
 
   /** PC-algorithm skeleton to conditioning order 2. Orders 0/1 are
     * exactly [[pcSkeleton]]; each surviving pair (a,b) is then tested
-    * against every unordered conditioning pair {z,w} ⊄ {a,b} via the
+    * against every unordered conditioning pair {z,w} ⊄ {a,b} of series
+    * a co-observes, by the ladder's one conditioning [[rung]]: the
     * cofactor identity ρ²_ab·{z,w} = cof_ab² / (cof_aa·cof_bb) over the
     * 4×4 moment matrix on (a,b,z,w) — separated when
     * 10000·cof_ab² ≤ τ²bp·cof_aa·cof_bb, fully rational.
     *
-    * The order-2 stage runs on NORMALIZED moments ĉ = c div n² (exact
+    * The order-2 test runs on NORMALIZED moments ĉ = c div n² (exact
     * truncating division, identical in both engines): raw rank moments
     * are O(n⁴) and a squared 3×3 cofactor of those is O(n²⁴) — past any
     * 128-bit budget at n > 26 — while ĉ = O(n²) keeps
@@ -732,8 +741,8 @@ object Causal {
     * string ordering, NOT tuple ordering when series names vary in
     * length). Output: [[pcSkeleton]]'s columns plus (sepset2,
     * edge2 = survived order ≤ 2). Fact-scale work is the single rank
-    * cross-moment pass; every order-2 structure is panel-grain
-    * (≤ p²·C(p,2) rows) on broadcast frames.
+    * cross-moment pass; the order-2 candidates (≤ p²·C(p,2) rows) look
+    * their moment cells up in broadcast equi-joins.
     */
   def pcSkeleton2(panel: DataFrame, tauSqBp: Long = 625L): DataFrame = {
     val cm = pcMoments(panel)
@@ -741,122 +750,237 @@ object Causal {
     // a local relation scans as one partition per core, and every later
     // stage and Meek round would pay for the extra tasks
     val sk1 = pinTiny(pcSkeletonMoments(new PairMoments(cm), tauSqBp).coalesce(1))
-    val nc = normalizedMoments(cm)
     // conditioning pairs {z,w} enumerated from a's co-observed series
-    // (the (a,z)/(a,w) moment rows the joins below demand anyway), not
+    // (the (a,z)/(a,w) moment rows the rung demands anyway), not
     // cross-joined against the global diagonal — identical candidate
     // set, and under the q340-style multi-graph fold the fan-out stays
     // per-graph instead of quadratic across graphs
-    val adjz = broadcast(nc.where(col("sa") =!= col("sb"))
+    val adjz = broadcast(cm.where(col("sa") =!= col("sb"))
       .select(col("sa").as("a"), col("sb").as("z")))
     val cand = sk1.where(col("edge") === 1).select(col("a"), col("b"))
       .join(adjz, Seq("a"))
       .join(broadcast(adjz.select(col("a"), col("z").as("w"))), Seq("a"))
       .where(col("z") < col("w") &&
         col("z") =!= col("b") && col("w") =!= col("b"))
-    order2Stage(nc, sk1, cand, tauSqBp)
-  }
-
-  /** ĉ = c div n², the normalized moments the order-2 and order-3
-    * cofactor stages test on (scale contract in [[pcSkeleton2]]).
-    */
-  private def normalizedMoments(cm: DataFrame): DataFrame =
-    cm.select(col("sa"), col("sb"),
-      expr("cast(c div (n * n) as decimal(38,0))").as("ch"))
-
-  /** The order-2 stage shared by [[pcSkeleton2]] and [[pcStable2Core]]:
-    * the cofactor test of every candidate (a, b, z, w) over the normalized
-    * moments `nc`, the pinned `sepset2` tie-break, and `sk1`'s columns
-    * plus (sepset2, edge2). Each caller enumerates its own candidates.
-    */
-  private def order2Stage(nc: DataFrame, sk1: DataFrame, cand: DataFrame,
-      tauSqBp: Long): DataFrame = {
-    def m(x: String, y: String, out: String): DataFrame =
-      broadcast(nc.select(col("sa").as(x), col("sb").as(y),
-        col("ch").as(out)))
-    def diag(x: String, out: String): DataFrame =
-      broadcast(nc.where(col("sa") === col("sb"))
-        .select(col("sa").as(x), col("ch").as(out)))
-    val mm = cand
-      .join(m("a", "b", "mab"), Seq("a", "b"))
-      .join(m("a", "z", "maz"), Seq("a", "z"))
-      .join(m("a", "w", "maw"), Seq("a", "w"))
-      .join(m("b", "z", "mbz"), Seq("b", "z"))
-      .join(m("b", "w", "mbw"), Seq("b", "w"))
-      .join(m("z", "w", "mzw"), Seq("z", "w"))
-      .join(diag("a", "maa"), Seq("a"))
-      .join(diag("b", "mbb"), Seq("b"))
-      .join(diag("z", "mzz"), Seq("z"))
-      .join(diag("w", "mww"), Seq("w"))
-    val cof = mm
-      .withColumn("dzw", expr("mzz*mww - mzw*mzw"))
-      .withColumn("t1", expr("maz*mww - mzw*maw"))
-      .withColumn("t2", expr("maz*mzw - mzz*maw"))
-      .withColumn("cofab", expr("mab*dzw - mbz*t1 + mbw*t2"))
-      .withColumn("cofbb", expr("maa*dzw - maz*t1 + maw*t2"))
-      .withColumn("cofaa",
-        expr("mbb*dzw - mbz*(mbz*mww - mzw*mbw) + mbw*(mbz*mzw - mzz*mbw)"))
-      .withColumn("sep", expr(
-        s"case when 10000*cofab*cofab <= $tauSqBp*cofaa*cofbb " +
-          "then 1 else 0 end"))
-    val seps = cof.groupBy("a", "b")
-      .agg(min(when(col("sep") === 1,
-        concat(col("z"), lit("~"), col("w")))).as("sepset2"))
-    sk1.join(broadcast(seps), Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"), col("n"), col("cab"), col("keep0"),
-        col("sepset"), col("edge"), col("sepset2"),
-        when(col("edge") === 1 && col("sepset2").isNull, 1).otherwise(0)
-          .as("edge2"))
+    rung(2, cm, sk1, cand, tauSqBp)
   }
 
   /** [[pcSkeleton2]] as ANSI CTEs: [[pcSkeletonSqlCtes]] plus the
-    * order-2 cofactor stage; yields
-    * `pc2_out(a, b, n, cab, keep0, sepset, edge, sepset2, edge2)`.
+    * order-2 candidates over every co-observed series and [[rungSqlCtes]];
+    * yields `pc2_out(a, b, n, cab, keep0, sepset, edge, sepset2, edge2)`.
     */
   def pcSkeleton2SqlCtes(panel: String, tauSqBp: Long = 625L): String =
-    pcSkeletonSqlCtes(panel, tauSqBp) + s""",
-       |pc_nc AS MATERIALIZED (
-       |  SELECT sa, sb, (c // (n * n))::HUGEINT AS ch FROM pc_cm),
-       |pc2_ser AS MATERIALIZED (SELECT sa AS s FROM pc_nc WHERE sa = sb),
+    pcSkeletonSqlCtes(panel, tauSqBp) + """,
+       |pc2_ser AS MATERIALIZED (SELECT sa AS s FROM pc_cm WHERE sa = sb),
        |pc2_cand AS MATERIALIZED (
        |  SELECT e.a, e.b, z.s AS z, w.s AS w
        |  FROM pc_out e, pc2_ser z, pc2_ser w
        |  WHERE e.edge = 1 AND z.s < w.s
        |    AND z.s <> e.a AND z.s <> e.b AND w.s <> e.a AND w.s <> e.b),
-       |pc2_cof AS MATERIALIZED (
-       |  SELECT c.a, c.b, c.z, c.w,
-       |    mab.ch*(mzz.ch*mww.ch - mzw.ch*mzw.ch)
-       |      - mbz.ch*(maz.ch*mww.ch - mzw.ch*maw.ch)
-       |      + mbw.ch*(maz.ch*mzw.ch - mzz.ch*maw.ch) AS cofab,
-       |    maa.ch*(mzz.ch*mww.ch - mzw.ch*mzw.ch)
-       |      - maz.ch*(maz.ch*mww.ch - mzw.ch*maw.ch)
-       |      + maw.ch*(maz.ch*mzw.ch - mzz.ch*maw.ch) AS cofbb,
-       |    mbb.ch*(mzz.ch*mww.ch - mzw.ch*mzw.ch)
-       |      - mbz.ch*(mbz.ch*mww.ch - mzw.ch*mbw.ch)
-       |      + mbw.ch*(mbz.ch*mzw.ch - mzz.ch*mbw.ch) AS cofaa
-       |  FROM pc2_cand c
-       |  JOIN pc_nc mab ON mab.sa = c.a AND mab.sb = c.b
-       |  JOIN pc_nc maz ON maz.sa = c.a AND maz.sb = c.z
-       |  JOIN pc_nc maw ON maw.sa = c.a AND maw.sb = c.w
-       |  JOIN pc_nc mbz ON mbz.sa = c.b AND mbz.sb = c.z
-       |  JOIN pc_nc mbw ON mbw.sa = c.b AND mbw.sb = c.w
-       |  JOIN pc_nc mzw ON mzw.sa = c.z AND mzw.sb = c.w
-       |  JOIN pc_nc maa ON maa.sa = c.a AND maa.sb = c.a
-       |  JOIN pc_nc mbb ON mbb.sa = c.b AND mbb.sb = c.b
-       |  JOIN pc_nc mzz ON mzz.sa = c.z AND mzz.sb = c.z
-       |  JOIN pc_nc mww ON mww.sa = c.w AND mww.sb = c.w),
-       |pc2_sep AS MATERIALIZED (
-       |  SELECT a, b, min(CASE WHEN 10000*cofab*cofab
-       |                     <= $tauSqBp*cofaa*cofbb
-       |                   THEN z || '~' || w END) AS sepset2
-       |  FROM pc2_cof GROUP BY 1, 2),
-       |pc2_out AS MATERIALIZED (
-       |  SELECT o.a, o.b, o.n, o.cab, o.keep0, o.sepset, o.edge,
-       |    s.sepset2,
-       |    (CASE WHEN o.edge = 1 AND s.sepset2 IS NULL
-       |     THEN 1 ELSE 0 END)::INT AS edge2
-       |  FROM pc_out o LEFT JOIN pc2_sep s ON s.a = o.a AND s.b = o.b)"""
-      .stripMargin
+       |""".stripMargin +
+      rungSqlCtes(2, "pc2", "pc_out", "pc2_cand", "pc2_out", tauSqBp)
+
+  /** The canonical 5-variable label order (a, b, then conditioning
+    * z < w < u) and the moment-column name for an unordered label pair —
+    * `mab`, `mzw`, `muu`, … — shared by the cofactor generator below so
+    * the Spark `expr` and the DuckDB CTE read the SAME identifiers.
+    */
+  private val PcVarOrder = Vector("a", "b", "z", "w", "u")
+  private def mn(x: String, y: String): String =
+    if (PcVarOrder.indexOf(x) <= PcVarOrder.indexOf(y)) s"m$x$y"
+    else s"m$y$x"
+
+  private def det2s(r: Seq[String], c: Seq[String]): String =
+    s"(${mn(r(0), c(0))}*${mn(r(1), c(1))} - " +
+      s"${mn(r(0), c(1))}*${mn(r(1), c(0))})"
+
+  private def detNs(r: Seq[String], c: Seq[String]): String =
+    if (r.size == 2) det2s(r, c)
+    else "(" + c.indices.map { j =>
+      val t = s"${mn(r.head, c(j))}*${detNs(r.tail, c.patch(j, Nil, 1))}"
+      if (j == 0) t else if (j % 2 == 0) s" + $t" else s" - $t"
+    }.mkString + ")"
+
+  /** The conditioning labels of order k (1 ≤ k ≤ 3): z, w, u. */
+  private def conds(k: Int): Seq[String] = Seq("z", "w", "u").take(k)
+
+  /** The moment cells order k's test reads: every unordered pair of
+    * (a, b, conds(k)), diagonal included.
+    */
+  private def cells(k: Int): Seq[(String, String)] = {
+    val ls = Seq("a", "b") ++ conds(k)
+    for (i <- ls.indices; j <- i until ls.size) yield (ls(i), ls(j))
+  }
+
+  /** Order k's cofactor test as arithmetic text over the [[cells]] columns,
+    * interpolated verbatim into both engines: ρ²_ab·Z = cof_ab²/(cof_aa·
+    * cof_bb) over the moment matrix on (a, b, Z) — cof_ab the minor
+    * deleting row a / column b, cof_aa/cof_bb the principal minors. At
+    * k = 1 it is the order-1 partial-correlation test term for term.
+    */
+  private def sepTest(k: Int, tauSqBp: Long): (Seq[(String, String)], String) = {
+    val zs = conds(k)
+    (Seq("cofab" -> detNs("b" +: zs, "a" +: zs),
+      "cofaa" -> detNs("b" +: zs, "b" +: zs),
+      "cofbb" -> detNs("a" +: zs, "a" +: zs)),
+      s"10000*cofab*cofab <= $tauSqBp*cofaa*cofbb")
+  }
+
+  /** The flag order k writes (`keep0` at order 0, `edge`, `edge2`, …) and
+    * its separating set (`sepset`, `sepset2`, …).
+    */
+  private def edgeCol(k: Int): String =
+    if (k == 0) "keep0" else if (k == 1) "edge" else s"edge$k"
+  private def sepCol(k: Int): String = if (k == 1) "sepset" else s"sepset$k"
+
+  /** The order-(k−1) columns order k's output keeps: (a, b, n, cab, keep0),
+    * then (sepset, edge), (sepset2, edge2), ….
+    */
+  private def ladderCols(k: Int): Seq[String] =
+    Seq("a", "b", "n", "cab", "keep0") ++
+      (1 until k).flatMap(j => Seq(sepCol(j), edgeCol(j)))
+
+  /** One conditioning rung of the PC ladder, order k: each candidate
+    * (a, b, conds(k)) of `cand` looks its [[cells]] up in the [[pcMoments]]
+    * frame `cm` — raw at order 1, ĉ = c div n² above (scale contract in
+    * [[pcSkeleton2]]) — by broadcast equi-joins on LONG cells, cast to
+    * DECIMAL(38,0) after the lookup; the least `z~w~u` passing [[sepTest]]
+    * becomes sepCol(k). Output: `prev`'s [[ladderCols]] plus (sepCol(k),
+    * edgeCol(k) = survived order k−1 and no separating set).
+    */
+  private def rung(k: Int, cm: DataFrame, prev: DataFrame, cand: DataFrame,
+      tauSqBp: Long): DataFrame = {
+    val zs = conds(k)
+    val m = cm.select(col("sa"), col("sb"),
+      (if (k == 1) col("c") else expr("c div (n * n)")).as("m"))
+    val looked = cells(k).foldLeft(cand) { case (df, (x, y)) =>
+      if (x == y) df.join(broadcast(m.where(col("sa") === col("sb"))
+        .select(col("sa").as(x), col("m").as(mn(x, x)))), Seq(x))
+      else df.join(broadcast(m.select(col("sa").as(x), col("sb").as(y),
+        col("m").as(mn(x, y)))), Seq(x, y))
+    }
+    val (cofs, test) = sepTest(k, tauSqBp)
+    val cof = cofs.foldLeft(looked.select((Seq("a", "b") ++ zs).map(col) ++
+        cells(k).map { case (x, y) =>
+          col(mn(x, y)).cast("decimal(38,0)").as(mn(x, y)) }: _*)) {
+      case (df, (name, text)) => df.withColumn(name, expr(text)) }
+    val seps = cof.groupBy("a", "b")
+      .agg(min(when(expr(test), zs.map(col).reduce(concat(_, lit("~"), _))))
+        .as(sepCol(k)))
+    prev.join(broadcast(seps), Seq("a", "b"), "left_outer")
+      .select(ladderCols(k).map(col) :+ col(sepCol(k)) :+
+        when(col(edgeCol(k - 1)) === 1 && col(sepCol(k)).isNull, 1)
+          .otherwise(0).as(edgeCol(k)): _*)
+  }
+
+  /** PC-stable's order-k candidates: each edge (a, b) of order k−1 with
+    * every k-subset z < w < u drawn wholly from adj(a)\{b} or wholly from
+    * adj(b)\{a}, adj the order-(k−1) adjacency. The UNION of the two
+    * sides deduplicates subsets drawn from both.
+    */
+  private def stableCand(prev: DataFrame, k: Int): DataFrame = {
+    val zs = conds(k)
+    val e = prev.where(col(edgeCol(k - 1)) === 1).select(col("a"), col("b"))
+    val adj = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
+    def side(key: String, other: String): DataFrame =
+      zs.foldLeft(e)((df, z) => df.join(
+          broadcast(adj.select(col("a").as(key), col("b").as(z))), Seq(key)))
+        .where((zs.map(z => col(z) =!= col(other)) ++
+          zs.zip(zs.tail).map { case (x, y) => col(x) < col(y) }).reduce(_ && _))
+        .select((Seq("a", "b") ++ zs).map(col): _*)
+    side("a", "b").unionByName(side("b", "a")).distinct()
+  }
+
+  /** The PC-stable ladder to order `top` off a [[pcMoments]] frame: order 0
+    * on the driver ([[pcPairs0]]), then one [[rung]] per order over
+    * [[stableCand]]; every order but the last is pinned.
+    */
+  private def pcStableLadder(cm: DataFrame, tauSqBp: Long,
+      top: Int): DataFrame = {
+    // one partition, as in pcSkeleton2
+    val pairs = pinTiny(pcPairs0(new PairMoments(cm), tauSqBp).coalesce(1))
+    (1 to top).foldLeft(pairs) { (prev, k) =>
+      val out = rung(k, cm, prev, stableCand(prev, k), tauSqBp)
+      if (k < top) pinTiny(out) else out
+    }
+  }
+
+  /** [[rung]]'s CTE twin over `pc_cm`: the same cells (c // n² above order
+    * 1, cast to HUGEINT after the lookup) and [[sepTest]] in CTEs
+    * `<p>_mm<k>` and `<p>_cof<k>`, and `out` = `prev`'s [[ladderCols]]
+    * plus (sepCol(k), edgeCol(k)).
+    */
+  private def rungSqlCtes(k: Int, p: String, prev: String, cand: String,
+      out: String, tauSqBp: Long): String = {
+    val abz = Seq("a", "b") ++ conds(k)
+    val (cofs, test) = sepTest(k, tauSqBp)
+    val js = cells(k).map { case (x, y) => (x, y, mn(x, y)) }
+    def cell(j: String) = if (k == 1) s"$j.c" else s"($j.c // ($j.n * $j.n))"
+    s"""${p}_mm$k AS MATERIALIZED (
+       |  SELECT ${abz.map("c." + _).mkString(", ")},
+       |    ${js.map { case (_, _, m) => s"${cell(m + "j")}::HUGEINT AS $m" }
+            .mkString(",\n    ")}
+       |  FROM $cand c
+       |  ${js.map { case (x, y, m) =>
+              s"JOIN pc_cm ${m}j ON ${m}j.sa = c.$x AND ${m}j.sb = c.$y" }
+            .mkString("\n  ")}),
+       |${p}_cof$k AS MATERIALIZED (
+       |  SELECT ${abz.mkString(", ")},
+       |    ${cofs.map { case (n, t) => s"$t AS $n" }.mkString(",\n    ")}
+       |  FROM ${p}_mm$k),
+       |$out AS MATERIALIZED (
+       |  SELECT ${ladderCols(k).map("o." + _).mkString(", ")},
+       |    s.${sepCol(k)},
+       |    (CASE WHEN o.${edgeCol(k - 1)} = 1 AND s.${sepCol(k)} IS NULL
+       |     THEN 1 ELSE 0 END)::INT AS ${edgeCol(k)}
+       |  FROM $prev o LEFT JOIN (
+       |    SELECT a, b, min(CASE WHEN $test
+       |      THEN ${conds(k).mkString(" || '~' || ")} END) AS ${sepCol(k)}
+       |    FROM ${p}_cof$k GROUP BY 1, 2) s
+       |    ON s.a = o.a AND s.b = o.b)""".stripMargin
+  }
+
+  /** [[stableCand]]'s CTE twin: `pcs_adj<k-1>` (the symmetrized order-(k−1)
+    * adjacency of `prev`) and `pcs_cand<k>`.
+    */
+  private def stableCandSqlCtes(k: Int, prev: String): String = {
+    val zs = conds(k)
+    val e = edgeCol(k - 1)
+    val adj = s"pcs_adj${k - 1}"
+    def side(key: String, other: String): String = {
+      val ns = zs.indices.map(i => s"n${i + 1}")
+      val conj = ns.map(n => s"$n.y <> e.$other") ++
+        ns.zip(ns.tail).map { case (x, y) => s"$x.y < $y.y" }
+      s"""  SELECT e.a, e.b, ${ns.zip(zs).map { case (n, z) => s"$n.y AS $z" }
+           .mkString(", ")}
+         |  FROM (SELECT a, b FROM $prev WHERE $e = 1) e
+         |  ${ns.map(n => s"JOIN $adj $n ON $n.x = e.$key").mkString("\n  ")}
+         |  WHERE ${conj.mkString(" AND ")}""".stripMargin
+    }
+    s"""$adj AS MATERIALIZED (
+       |  SELECT a AS x, b AS y FROM $prev WHERE $e = 1
+       |  UNION ALL SELECT b, a FROM $prev WHERE $e = 1),
+       |pcs_cand$k AS MATERIALIZED (
+       |${side("a", "b")}
+       |  UNION
+       |${side("b", "a")})""".stripMargin
+  }
+
+  /** [[pcStableLadder]]'s CTE twin over `\$panel(series, day, v)`:
+    * [[pcMomentSqlCtes]]'s head, `pcs_pairs` (order 0), then per order the
+    * stable candidates and [[rungSqlCtes]], yielding `pcs_out`,
+    * `pcs2_out`, … up to `top`.
+    */
+  private def pcStableSqlCtes(panel: String, tauSqBp: Long,
+      top: Int): String = {
+    val outs = "pcs_pairs" +: (1 to top).map(k =>
+      if (k == 1) "pcs_out" else s"pcs${k}_out")
+    pcMomentSqlCtes(panel) + ",\n" +
+      pairs0SqlCte("pcs_pairs AS MATERIALIZED", tauSqBp) +
+      (1 to top).map(k => stableCandSqlCtes(k, outs(k - 1)) + ",\n" +
+        rungSqlCtes(k, "pcs", outs(k - 1), s"pcs_cand$k", outs(k), tauSqBp))
+        .mkString(",\n", ",\n", "")
+  }
 
   /** PC-STABLE order-≤2 skeleton: the identical rational partial-
     * correlation tests as [[pcSkeleton2]], but conditioning candidates
@@ -885,9 +1009,10 @@ object Causal {
     * 50-100× candidate-volume cut, and the restriction composes with
     * the multi-graph fold unchanged (adjacency rows carry the folded
     * series names, so the fan-out stays per-graph). The order-0 pairs
-    * are a driver-side local relation ([[pcPairs0]]) and every later
-    * stage a broadcast equi-join over panel-grain frames; the single
-    * fact-scale pass remains the rank cross-moment aggregation.
+    * are a driver-side local relation ([[pcPairs0]]); orders 1 and 2 are
+    * the ladder's one [[rung]] over [[stableCand]] candidates (raw moments
+    * at order 1, normalized ones at order 2); the single fact-scale pass
+    * remains the rank cross-moment aggregation.
     *
     * Output: [[pcSkeleton2]]'s exact column contract (a, b, n, cab,
     * keep0, sepset, edge, sepset2, edge2) with every co-observed pair
@@ -895,170 +1020,14 @@ object Causal {
     */
   def pcSkeleton2Stable(panel: DataFrame, tauSqBp: Long = 625L)
       : DataFrame =
-    pcStable2Core(pcMoments(panel), tauSqBp)
+    pcStableLadder(pcMoments(panel), tauSqBp, 2)
 
-  /** [[pcSkeleton2Stable]] minus the fact-scale moment pass, so
-    * [[pcSkeleton3Stable]] can hang the order-3 tail off the SAME
-    * checkpointed cross-moment frame.
-    */
-  private def pcStable2Core(cm: DataFrame, tauSqBp: Long): DataFrame = {
-    def cAs(na: String, nb: String, out: String): DataFrame =
-      cm.select(col("sa").as(na), col("sb").as(nb), col("c").as(out))
-    // one partition, as in pcSkeleton2
-    val pairs = pinTiny(pcPairs0(new PairMoments(cm), tauSqBp).coalesce(1))
-    val kept0 = pairs.where(col("keep0") === 1).select(col("a"), col("b"))
-    val adj0 = kept0.unionByName(
-      kept0.select(col("b").as("a"), col("a").as("b")))
-      .select(col("a").as("x"), col("b").as("y"))
-    // order-1 candidates from the surviving adjacency, both endpoints'
-    // neighbor sets (distinct: z ∈ adj(a) ∩ adj(b) appears via both
-    // sides). Inner joins against the (a,z)/(b,z) moment rows below
-    // keep the conservative-skip semantic for never-co-observed pairs
-    val cand1 = kept0
-      .join(broadcast(adj0.select(col("x").as("a"), col("y").as("z"))),
-        Seq("a"))
-      .unionByName(kept0
-        .join(broadcast(adj0.select(col("x").as("b"), col("y").as("z"))),
-          Seq("b"))
-        .select(col("a"), col("b"), col("z")))
-      .where(col("z") =!= col("a") && col("z") =!= col("b"))
-      .distinct()
-    val zs = cm.where(col("sa") === col("sb"))
-      .select(col("sa").as("z"), col("c").as("czz"))
-    val trip = cand1
-      .join(broadcast(pairs.select(col("a"), col("b"), col("cab"),
-        col("caa"), col("cbb"))), Seq("a", "b"))
-      .join(broadcast(cAs("a", "z", "caz")), Seq("a", "z"))
-      .join(broadcast(cAs("b", "z", "cbz")), Seq("b", "z"))
-      .join(broadcast(zs), Seq("z"))
-      .withColumn("sep", sep1Expr(tauSqBp))
-    val sepsets = trip.groupBy("a", "b")
-      .agg(min(when(col("sep") === 1, col("z"))).as("sepset"))
-    val sk1 = pinTiny(pairs
-      .join(broadcast(sepsets), Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"), col("n"), col("cab"), col("keep0"),
-        col("sepset"),
-        when(col("keep0") === 1 && col("sepset").isNull, 1).otherwise(0)
-          .as("edge")))
-    val e1 = sk1.where(col("edge") === 1).select(col("a"), col("b"))
-    val adj1 = e1.unionByName(
-      e1.select(col("b").as("a"), col("a").as("b")))
-      .select(col("a").as("x"), col("b").as("y"))
-    // {z,w} both from one endpoint's order-1 neighbor set; the UNION of
-    // the two sides deduplicates pairs drawn from both
-    def side(key: String, other: String): DataFrame = e1
-      .join(broadcast(adj1.select(col("x").as(key), col("y").as("z"))),
-        Seq(key))
-      .join(broadcast(adj1.select(col("x").as(key), col("y").as("w"))),
-        Seq(key))
-      .where(col("z") < col("w") &&
-        col("z") =!= col(other) && col("w") =!= col(other))
-      .select(col("a"), col("b"), col("z"), col("w"))
-    val cand2 = side("a", "b").unionByName(side("b", "a")).distinct()
-    // order 2 on the NORMALIZED moments, exactly pcSkeleton2's contract
-    order2Stage(normalizedMoments(cm), sk1, cand2, tauSqBp)
-  }
-
-  /** [[pcSkeleton2Stable]] as ANSI CTEs over `\$panel(series, day, v)`:
-    * shares [[pcMomentSqlCtes]]'s rank/moment head, then the adjacency-
-    * restricted decision chain under `pcs_` names; yields
+  /** [[pcSkeleton2Stable]] as ANSI CTEs over `\$panel(series, day, v)`
+    * ([[pcStableSqlCtes]] to order 2); yields
     * `pcs2_out(a, b, n, cab, keep0, sepset, edge, sepset2, edge2)`.
-    * Candidate CTEs enumerate from the symmetrized adjacency of the
-    * previous order — the SQL twin of the Spark neighbor joins.
     */
   def pcStable2SqlCtes(panel: String, tauSqBp: Long = 625L): String =
-    pcMomentSqlCtes(panel) + s""",
-       |pcs_pairs AS MATERIALIZED (
-       |  SELECT p.sa AS a, p.sb AS b, p.n, p.c AS cab,
-       |    da.c AS caa, db.c AS cbb,
-       |    CASE WHEN 10000 * p.c::HUGEINT * p.c
-       |           > $tauSqBp * da.c::HUGEINT * db.c
-       |    THEN 1 ELSE 0 END AS keep0
-       |  FROM pc_cm p
-       |  JOIN pc_cm da ON da.sa = p.sa AND da.sb = p.sa
-       |  JOIN pc_cm db ON db.sa = p.sb AND db.sb = p.sb
-       |  WHERE p.sa < p.sb),
-       |pcs_adj0 AS MATERIALIZED (
-       |  SELECT a AS x, b AS y FROM pcs_pairs WHERE keep0 = 1
-       |  UNION ALL SELECT b, a FROM pcs_pairs WHERE keep0 = 1),
-       |pcs_cand1 AS MATERIALIZED (
-       |  SELECT DISTINCT pr.a, pr.b, n.y AS z
-       |  FROM pcs_pairs pr JOIN pcs_adj0 n ON n.x IN (pr.a, pr.b)
-       |  WHERE pr.keep0 = 1 AND n.y <> pr.a AND n.y <> pr.b),
-       |pcs_trip AS MATERIALIZED (
-       |  SELECT c.a, c.b, c.z,
-       |    CASE WHEN 10000
-       |        * (pr.cab::HUGEINT * zz.c - az.c::HUGEINT * bz.c)
-       |        * (pr.cab::HUGEINT * zz.c - az.c::HUGEINT * bz.c)
-       |      <= $tauSqBp
-       |        * (pr.caa::HUGEINT * zz.c - az.c::HUGEINT * az.c)
-       |        * (pr.cbb::HUGEINT * zz.c - bz.c::HUGEINT * bz.c)
-       |    THEN 1 ELSE 0 END AS sep
-       |  FROM pcs_cand1 c
-       |  JOIN pcs_pairs pr ON pr.a = c.a AND pr.b = c.b
-       |  JOIN pc_cm zz ON zz.sa = c.z AND zz.sb = c.z
-       |  JOIN pc_cm az ON az.sa = c.a AND az.sb = c.z
-       |  JOIN pc_cm bz ON bz.sa = c.b AND bz.sb = c.z),
-       |pcs_seps AS MATERIALIZED (
-       |  SELECT a, b, min(CASE WHEN sep = 1 THEN z END) AS sepset
-       |  FROM pcs_trip GROUP BY 1, 2),
-       |pcs_out AS MATERIALIZED (
-       |  SELECT p.a, p.b, p.n, p.cab, p.keep0, s.sepset,
-       |    (CASE WHEN p.keep0 = 1 AND s.sepset IS NULL
-       |     THEN 1 ELSE 0 END)::INT AS edge
-       |  FROM pcs_pairs p LEFT JOIN pcs_seps s
-       |    ON s.a = p.a AND s.b = p.b),
-       |pcs_nc AS MATERIALIZED (
-       |  SELECT sa, sb, (c // (n * n))::HUGEINT AS ch FROM pc_cm),
-       |pcs_adj1 AS MATERIALIZED (
-       |  SELECT a AS x, b AS y FROM pcs_out WHERE edge = 1
-       |  UNION ALL SELECT b, a FROM pcs_out WHERE edge = 1),
-       |pcs_cand2 AS MATERIALIZED (
-       |  SELECT e.a, e.b, n1.y AS z, n2.y AS w
-       |  FROM (SELECT a, b FROM pcs_out WHERE edge = 1) e
-       |  JOIN pcs_adj1 n1 ON n1.x = e.a
-       |  JOIN pcs_adj1 n2 ON n2.x = e.a
-       |  WHERE n1.y < n2.y AND n1.y <> e.b AND n2.y <> e.b
-       |  UNION
-       |  SELECT e.a, e.b, n1.y, n2.y
-       |  FROM (SELECT a, b FROM pcs_out WHERE edge = 1) e
-       |  JOIN pcs_adj1 n1 ON n1.x = e.b
-       |  JOIN pcs_adj1 n2 ON n2.x = e.b
-       |  WHERE n1.y < n2.y AND n1.y <> e.a AND n2.y <> e.a),
-       |pcs_cof AS MATERIALIZED (
-       |  SELECT c.a, c.b, c.z, c.w,
-       |    mab.ch*(mzz.ch*mww.ch - mzw.ch*mzw.ch)
-       |      - mbz.ch*(maz.ch*mww.ch - mzw.ch*maw.ch)
-       |      + mbw.ch*(maz.ch*mzw.ch - mzz.ch*maw.ch) AS cofab,
-       |    maa.ch*(mzz.ch*mww.ch - mzw.ch*mzw.ch)
-       |      - maz.ch*(maz.ch*mww.ch - mzw.ch*maw.ch)
-       |      + maw.ch*(maz.ch*mzw.ch - mzz.ch*maw.ch) AS cofbb,
-       |    mbb.ch*(mzz.ch*mww.ch - mzw.ch*mzw.ch)
-       |      - mbz.ch*(mbz.ch*mww.ch - mzw.ch*mbw.ch)
-       |      + mbw.ch*(mbz.ch*mzw.ch - mzz.ch*mbw.ch) AS cofaa
-       |  FROM pcs_cand2 c
-       |  JOIN pcs_nc mab ON mab.sa = c.a AND mab.sb = c.b
-       |  JOIN pcs_nc maz ON maz.sa = c.a AND maz.sb = c.z
-       |  JOIN pcs_nc maw ON maw.sa = c.a AND maw.sb = c.w
-       |  JOIN pcs_nc mbz ON mbz.sa = c.b AND mbz.sb = c.z
-       |  JOIN pcs_nc mbw ON mbw.sa = c.b AND mbw.sb = c.w
-       |  JOIN pcs_nc mzw ON mzw.sa = c.z AND mzw.sb = c.w
-       |  JOIN pcs_nc maa ON maa.sa = c.a AND maa.sb = c.a
-       |  JOIN pcs_nc mbb ON mbb.sa = c.b AND mbb.sb = c.b
-       |  JOIN pcs_nc mzz ON mzz.sa = c.z AND mzz.sb = c.z
-       |  JOIN pcs_nc mww ON mww.sa = c.w AND mww.sb = c.w),
-       |pcs2_sep AS MATERIALIZED (
-       |  SELECT a, b, min(CASE WHEN 10000*cofab*cofab
-       |                     <= $tauSqBp*cofaa*cofbb
-       |                   THEN z || '~' || w END) AS sepset2
-       |  FROM pcs_cof GROUP BY 1, 2),
-       |pcs2_out AS MATERIALIZED (
-       |  SELECT o.a, o.b, o.n, o.cab, o.keep0, o.sepset, o.edge,
-       |    s.sepset2,
-       |    (CASE WHEN o.edge = 1 AND s.sepset2 IS NULL
-       |     THEN 1 ELSE 0 END)::INT AS edge2
-       |  FROM pcs_out o LEFT JOIN pcs2_sep s ON s.a = o.a AND s.b = o.b)"""
-      .stripMargin
+    pcStableSqlCtes(panel, tauSqBp, 2)
 
   /** [[pcOrient2]]'s CTE twin over the PC-STABLE graph: the `pcs2_out`
     * adapter plus [[pcOrientSqlCtes]]; yields `pc_st\$meekRounds`.
@@ -1068,42 +1037,6 @@ object Causal {
       |  SELECT a, b, coalesce(sepset, sepset2) AS sepset, edge2 AS edge
       |  FROM pcs2_out),
       |""".stripMargin + pcOrientSqlCtes(meekRounds, "pcs2_sk")
-
-  /** The canonical 5-variable label order (a, b, then conditioning
-    * z < w < u) and the moment-column name for an unordered label pair —
-    * `mab`, `mzw`, `muu`, … — shared by the order-3 determinant
-    * generators below so the Spark `expr` and the DuckDB CTE read the
-    * SAME identifiers.
-    */
-  private val PcVarOrder = Vector("a", "b", "z", "w", "u")
-  private def mn(x: String, y: String): String =
-    if (PcVarOrder.indexOf(x) <= PcVarOrder.indexOf(y)) s"m$x$y"
-    else s"m$y$x"
-
-  private def det2s(r: Seq[String], c: Seq[String]): String =
-    s"(${mn(r(0), c(0))}*${mn(r(1), c(1))} - " +
-      s"${mn(r(0), c(1))}*${mn(r(1), c(0))})"
-
-  private def detNs(r: Seq[String], c: Seq[String]): String =
-    if (r.size == 2) det2s(r, c)
-    else "(" + c.indices.map { j =>
-      val t = s"${mn(r.head, c(j))}*${detNs(r.tail, c.patch(j, Nil, 1))}"
-      if (j == 0) t else if (j % 2 == 0) s" + $t" else s" - $t"
-    }.mkString + ")"
-
-  /** The order-3 cofactor test rendered ONCE as arithmetic text over the
-    * 15 moment columns (maa..muu) and interpolated verbatim into both
-    * engines: ρ²_ab·{z,w,u} = cof_ab²/(cof_aa·cof_bb) over the 5×5
-    * normalized moment matrix on (a,b,z,w,u) — cof_ab the 4×4 minor
-    * deleting row a / column b (sign irrelevant, squared), cof_aa/cof_bb
-    * the principal 4×4 minors.
-    */
-  private val Det3CofAb: String =
-    detNs(Seq("b", "z", "w", "u"), Seq("a", "z", "w", "u"))
-  private val Det3CofAa: String =
-    detNs(Seq("b", "z", "w", "u"), Seq("b", "z", "w", "u"))
-  private val Det3CofBb: String =
-    detNs(Seq("a", "z", "w", "u"), Seq("a", "z", "w", "u"))
 
   /** PC-STABLE skeleton to conditioning order 3: [[pcSkeleton2Stable]]
     * plus one more rung of the same ladder — each order-2 survivor (a,b)
@@ -1143,56 +1076,8 @@ object Causal {
     * [[pcMoments]] frame — τ-sweep consumers reuse one cm across tails.
     */
   def pcSkeleton3StableFromCm(cm: DataFrame, tauSqBp: Long = 625L)
-      : DataFrame = {
-    val sk2 = pinTiny(pcStable2Core(cm, tauSqBp))
-    val nc = normalizedMoments(cm)
-    def m(x: String, y: String): DataFrame =
-      broadcast(nc.select(col("sa").as(x), col("sb").as(y),
-        col("ch").as(mn(x, y))))
-    def diag(x: String): DataFrame =
-      broadcast(nc.where(col("sa") === col("sb"))
-        .select(col("sa").as(x), col("ch").as(mn(x, x))))
-    val e2 = sk2.where(col("edge2") === 1).select(col("a"), col("b"))
-    val adj2 = e2.unionByName(
-      e2.select(col("b").as("a"), col("a").as("b")))
-      .select(col("a").as("x"), col("b").as("y"))
-    def side(key: String, other: String): DataFrame = e2
-      .join(broadcast(adj2.select(col("x").as(key), col("y").as("z"))),
-        Seq(key))
-      .join(broadcast(adj2.select(col("x").as(key), col("y").as("w"))),
-        Seq(key))
-      .join(broadcast(adj2.select(col("x").as(key), col("y").as("u"))),
-        Seq(key))
-      .where(col("z") < col("w") && col("w") < col("u") &&
-        col("z") =!= col(other) && col("w") =!= col(other) &&
-        col("u") =!= col(other))
-      .select(col("a"), col("b"), col("z"), col("w"), col("u"))
-    val cand3 = side("a", "b").unionByName(side("b", "a")).distinct()
-    val crossPairs = Seq(("a", "b"), ("a", "z"), ("a", "w"), ("a", "u"),
-      ("b", "z"), ("b", "w"), ("b", "u"), ("z", "w"), ("z", "u"),
-      ("w", "u"))
-    val mm = crossPairs.foldLeft(cand3) { case (df, (x, y)) =>
-      df.join(m(x, y), Seq(x, y))
-    }
-    val mmd = PcVarOrder.foldLeft(mm)((df, x) => df.join(diag(x), Seq(x)))
-    val cof = mmd
-      .withColumn("cofab", expr(Det3CofAb))
-      .withColumn("cofaa", expr(Det3CofAa))
-      .withColumn("cofbb", expr(Det3CofBb))
-      .withColumn("sep", expr(
-        s"case when 10000*cofab*cofab <= $tauSqBp*cofaa*cofbb " +
-          "then 1 else 0 end"))
-    val seps = cof.groupBy("a", "b")
-      .agg(min(when(col("sep") === 1,
-        concat(col("z"), lit("~"), col("w"), lit("~"), col("u"))))
-        .as("sepset3"))
-    sk2.join(broadcast(seps), Seq("a", "b"), "left_outer")
-      .select(col("a"), col("b"), col("n"), col("cab"), col("keep0"),
-        col("sepset"), col("edge"), col("sepset2"), col("edge2"),
-        col("sepset3"),
-        when(col("edge2") === 1 && col("sepset3").isNull, 1).otherwise(0)
-          .as("edge3"))
-  }
+      : DataFrame =
+    pcStableLadder(cm, tauSqBp, 3)
 
   /** [[pcOrient]] over a [[pcSkeleton3Stable]] output: adjacency is
     * `edge3`, blocking set is whichever order separated the pair (the
@@ -1204,70 +1089,13 @@ object Causal {
       coalesce(col("sepset"), col("sepset2"), col("sepset3")).as("sepset"),
       col("edge3").as("edge")), meekRounds, requirePairRows)
 
-  /** [[pcSkeleton3Stable]] as ANSI CTEs: [[pcStable2SqlCtes]] plus the
-    * adjacency-restricted order-3 tail; yields `pcs3_out` with
-    * [[pcSkeleton2Stable]]'s columns + (sepset3, edge3). The cofactor
-    * arithmetic is the SAME generated text the Spark side evaluates.
+  /** [[pcSkeleton3Stable]] as ANSI CTEs ([[pcStableSqlCtes]] to order 3);
+    * yields `pcs3_out` with [[pcSkeleton2Stable]]'s columns + (sepset3,
+    * edge3). The cofactor arithmetic is the SAME generated text the Spark
+    * side evaluates.
     */
-  def pcStable3SqlCtes(panel: String, tauSqBp: Long = 625L): String = {
-    val mmJoins = (Seq(("a", "b"), ("a", "z"), ("a", "w"), ("a", "u"),
-      ("b", "z"), ("b", "w"), ("b", "u"), ("z", "w"), ("z", "u"),
-      ("w", "u")).map { case (x, y) =>
-        s"JOIN pcs_nc ${mn(x, y)}j ON ${mn(x, y)}j.sa = c.$x " +
-          s"AND ${mn(x, y)}j.sb = c.$y"
-      } ++ PcVarOrder.map { x =>
-        s"JOIN pcs_nc ${mn(x, x)}j ON ${mn(x, x)}j.sa = c.$x " +
-          s"AND ${mn(x, x)}j.sb = c.$x"
-      }).mkString("\n  ")
-    val mmCols = (Seq(("a", "b"), ("a", "z"), ("a", "w"), ("a", "u"),
-      ("b", "z"), ("b", "w"), ("b", "u"), ("z", "w"), ("z", "u"),
-      ("w", "u")).map { case (x, y) => s"${mn(x, y)}j.ch AS ${mn(x, y)}" }
-      ++ PcVarOrder.map(x => s"${mn(x, x)}j.ch AS ${mn(x, x)}"))
-      .mkString(",\n    ")
-    pcStable2SqlCtes(panel, tauSqBp) + s""",
-       |pcs_adj2 AS MATERIALIZED (
-       |  SELECT a AS x, b AS y FROM pcs2_out WHERE edge2 = 1
-       |  UNION ALL SELECT b, a FROM pcs2_out WHERE edge2 = 1),
-       |pcs_cand3 AS MATERIALIZED (
-       |  SELECT e.a, e.b, n1.y AS z, n2.y AS w, n3.y AS u
-       |  FROM (SELECT a, b FROM pcs2_out WHERE edge2 = 1) e
-       |  JOIN pcs_adj2 n1 ON n1.x = e.a
-       |  JOIN pcs_adj2 n2 ON n2.x = e.a
-       |  JOIN pcs_adj2 n3 ON n3.x = e.a
-       |  WHERE n1.y < n2.y AND n2.y < n3.y
-       |    AND n1.y <> e.b AND n2.y <> e.b AND n3.y <> e.b
-       |  UNION
-       |  SELECT e.a, e.b, n1.y, n2.y, n3.y
-       |  FROM (SELECT a, b FROM pcs2_out WHERE edge2 = 1) e
-       |  JOIN pcs_adj2 n1 ON n1.x = e.b
-       |  JOIN pcs_adj2 n2 ON n2.x = e.b
-       |  JOIN pcs_adj2 n3 ON n3.x = e.b
-       |  WHERE n1.y < n2.y AND n2.y < n3.y
-       |    AND n1.y <> e.a AND n2.y <> e.a AND n3.y <> e.a),
-       |pcs_mm3 AS MATERIALIZED (
-       |  SELECT c.a, c.b, c.z, c.w, c.u,
-       |    $mmCols
-       |  FROM pcs_cand3 c
-       |  $mmJoins),
-       |pcs_cof3 AS MATERIALIZED (
-       |  SELECT a, b, z, w, u,
-       |    $Det3CofAb AS cofab,
-       |    $Det3CofAa AS cofaa,
-       |    $Det3CofBb AS cofbb
-       |  FROM pcs_mm3),
-       |pcs3_sep AS MATERIALIZED (
-       |  SELECT a, b, min(CASE WHEN 10000*cofab*cofab
-       |                     <= $tauSqBp*cofaa*cofbb
-       |                   THEN z || '~' || w || '~' || u END) AS sepset3
-       |  FROM pcs_cof3 GROUP BY 1, 2),
-       |pcs3_out AS MATERIALIZED (
-       |  SELECT o.a, o.b, o.n, o.cab, o.keep0, o.sepset, o.edge,
-       |    o.sepset2, o.edge2, s.sepset3,
-       |    (CASE WHEN o.edge2 = 1 AND s.sepset3 IS NULL
-       |     THEN 1 ELSE 0 END)::INT AS edge3
-       |  FROM pcs2_out o LEFT JOIN pcs3_sep s
-       |    ON s.a = o.a AND s.b = o.b)""".stripMargin
-  }
+  def pcStable3SqlCtes(panel: String, tauSqBp: Long = 625L): String =
+    pcStableSqlCtes(panel, tauSqBp, 3)
 
   /** [[pcOrient3]]'s CTE twin over `pcs3_out`; yields
     * `pc_st\$meekRounds`.

@@ -8,6 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchPolicySpec extends AnyFunSuite {
 
+  test("measure: a filtered record runs only the names a token is a " +
+      "substring of, and records nothing for the rest") {
+    val rec = new BenchPolicy.Record(Some(Seq("p320", "corpus")))
+    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
+    Seq("pcblocks_p80_stable3_oriented", "pcblocks_p320_stable3_oriented",
+        "gen_corpus_4320_csv_write", "gen_scale_256m_partitioned_write")
+      .foreach(n => rec.measure(n) { ran += n })
+    assert(ran.toSeq == Seq("pcblocks_p320_stable3_oriented",
+      "gen_corpus_4320_csv_write"))
+    assert(rec.wall.keySet == ran.toSet && rec.cpu.keySet == ran.toSet)
+    assert(!rec.selects("gen_scale_256m_partitioned_write"))
+    assert(new BenchPolicy.Record().selects("anything"))
+  }
+
   test("measure: a throwing entry is listed in failed and the next is still timed") {
     val rec = new BenchPolicy.Record
     rec.measure("throws") { throw new IllegalStateException("boom") }

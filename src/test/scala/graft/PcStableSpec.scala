@@ -97,14 +97,15 @@ class PcStableSpec extends AnyFunSuite {
         val sep2 = if (edge)
           cand2.collectFirst { case (z, w) if sep2ok(a, b, z, w) => s"$z~$w" }
           else None
-        (a, b) -> (if (edge) 1 else 0, sep2,
+        (a, b) -> (if (k0) 1 else 0, sep, if (edge) 1 else 0, sep2,
           if (edge && sep2.isEmpty) 1 else 0)
       }
       val base = rows.toDF("series", "day", "v")
       Seq(base, base.repartition(7)).foreach { panel =>
         val got = Causal.pcSkeleton2Stable(panel)
           .collect().map(r => (r.getString(0), r.getString(1)) ->
-            (r.getInt(6), Option(r.getString(7)), r.getInt(8))).toMap
+            (r.getInt(4), Option(r.getString(5)), r.getInt(6),
+              Option(r.getString(7)), r.getInt(8))).toMap
         assert(got == expected, s"trial $trial: got $got want $expected")
       }
     }

@@ -791,6 +791,16 @@ class PlanSpec extends AnyFunSuite {
         !ps.contains("BroadcastNestedLoopJoin"),
         s"p=128 PC-stable must stay equi-join only:\n$ps")
     } finally pan128.unpersist()
+    // the order-3 rung over the pcblocks_p80_stable3_oriented input: its
+    // triple candidates are adjacency equi-joins too
+    val blk16 = Panels.widePanel3(spark, 16, 200).localCheckpoint(true)
+    try {
+      val p3 = graft.metrics.Causal.pcSkeleton3Stable(blk16, 100L)
+        .queryExecution.executedPlan.toString
+      assert(!p3.contains("CartesianProduct") &&
+        !p3.contains("BroadcastNestedLoopJoin"),
+        s"order-3 PC-stable must stay equi-join only:\n$p3")
+    } finally blk16.unpersist()
   }
 
   test("structural betas: laggedCrossMoments broadcasts the t self-join " +
