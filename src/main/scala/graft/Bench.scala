@@ -492,22 +492,13 @@ object Bench {
       // #4b): the replicated documents corpus has a degenerate 31-token
       // vocabulary, so every probe meets ~every posting row and exact
       // BM25 must score the whole corpus — kept below as the honest
-      // worst case. These docs instead draw 80 tokens each from a
-      // 10k-type vocabulary with log-uniform ranks (rank =
-      // ⌊exp(u·ln V)⌋, the inverse-CDF of Zipf s≈1), so posting lists
-      // are selective and the zipf rungs measure what a real inverted
-      // index pays: posting-side growth, not probes × corpus
-      def zipfDocs(n: Long): org.apache.spark.sql.DataFrame =
-        spark.range(0, n).select(col("id").as("doc_id"))
-          .withColumn("pos", explode(expr("sequence(0, 79)")))
-          .select(col("doc_id"), concat(lit("t"),
-            floor(exp((pmod(xxhash64(lit("zipf"), col("doc_id"), col("pos")),
-                lit(1000000L)).cast("double") / 1e6) *
-              log(lit(10000.0)))).cast("long")).as("tok"))
-          .groupBy("doc_id")
-          .agg(concat_ws(" ", collect_list(col("tok"))).as("text"))
-      val z1 = zipfDocs(5000L).localCheckpoint(true)
-      val z10 = zipfDocs(50000L).localCheckpoint(true)
+      // worst case. Generate.zipfDocs' posting lists are selective, so
+      // the zipf rungs measure what a real inverted index pays:
+      // posting-side growth, not probes × corpus
+      val z1 = graft.generate.Generate.zipfDocs(spark, 5000L)
+        .localCheckpoint(true)
+      val z10 = graft.generate.Generate.zipfDocs(spark, 50000L)
+        .localCheckpoint(true)
       measure("dscale_documents_100x_build") {
         docs.withColumn("rep", explode(expr("sequence(0L, 99L)")))
           .withColumn("doc_id", col("doc_id") + col("rep") * maxDoc)

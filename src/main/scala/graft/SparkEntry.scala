@@ -261,6 +261,19 @@ object SparkEntry
       Seq((l._1, 0), (l._6.split("@")(0), l._3))
     }.distinct
 
+  /** The channel prefix of a func-transformed regressor: cos → c, sin → s,
+    * power2 → p2, power3 → p3, so "cX1" names cos(X1·π/2) and "p2X4"
+    * names X4². [[c1Links]] and [[d3Links]] name their regressors with
+    * it, and `QueriesCausal.funcChannel` builds the matching column.
+    */
+  private[graft] def funcPrefix(func: String): String = func match {
+    case "cos" => "c"
+    case "sin" => "s"
+    case "power2" => "p2"
+    case "power3" => "p3"
+    case other => throw new IllegalStateException(s"func $other")
+  }
+
   /** q361's C1 link rows: one per X link of the 6-var lag-2 cell, with
     * FUNC-TRANSFORMED regressor virtual names ("cX1@2" = cos(X1·π/2)
     * lagged 2; prefixes c/s/p2/p3 for cos/sin/x²/x³) and BOTH target
@@ -278,22 +291,16 @@ object SparkEntry
     val effective = graft.core.Parser.effectiveLinks(family, 6, 2)
       .filter(_.source != "U")
       .map(l => ((l.source, l.lag, l.target), l.coef)).toMap
-    def pre(func: String): String = func match {
-      case "cos" => "c"
-      case "sin" => "s"
-      case "power2" => "p2"
-      case "power3" => "p3"
-      case other => throw new IllegalStateException(s"C1 func $other")
-    }
     val byTarget = declared.groupBy(_.target)
     declared.map { l =>
       val sibs = byTarget(l.target)
         .filterNot(o => o.source == l.source && o.lag == l.lag)
       require(sibs.size <= 1, s"C1 k>2 at ${l.target}")
       (l.target, l.source, l.lag, l.func,
-        s"${pre(l.func)}${l.source}@${l.lag}",
+        s"${funcPrefix(l.func)}${l.source}@${l.lag}",
         s"${l.target}~@0",
-        sibs.headOption.map(o => s"${pre(o.func)}${o.source}@${o.lag}"),
+        sibs.headOption.map(o =>
+          s"${funcPrefix(o.func)}${o.source}@${o.lag}"),
         math.round(l.coef * 1e6),
         math.round(effective((l.source, l.lag, l.target)) * 1e6))
     }
@@ -312,13 +319,6 @@ object SparkEntry
     val effective = graft.core.Parser.effectiveLinks(c.family, 4,
         c.maxLag).filter(_.source != "U")
       .map(l => ((l.source, l.lag, l.target), l.coef)).toMap
-    def pre(func: String): String = func match {
-      case "cos" => "c"
-      case "sin" => "s"
-      case "power2" => "p2"
-      case "power3" => "p3"
-      case other => throw new IllegalStateException(s"D3 func $other")
-    }
     val g = c.configId.toString
     val byT = declared.groupBy(_.target)
     declared.map { l =>
@@ -328,9 +328,9 @@ object SparkEntry
       (g, c.family, c.maxLag, math.round(c.mcarProb * 1000),
         math.round(c.blockProb * 1000), l.target, l.source, l.lag,
         l.func, s"$g|${l.target}~@0",
-        s"$g|${pre(l.func)}${l.source}@${l.lag}",
+        s"$g|${funcPrefix(l.func)}${l.source}@${l.lag}",
         sibs.headOption.map(o =>
-          s"$g|${pre(o.func)}${o.source}@${o.lag}"),
+          s"$g|${funcPrefix(o.func)}${o.source}@${o.lag}"),
         math.round(l.coef * 1e6),
         math.round(effective((l.source, l.lag, l.target)) * 1e6))
     }
@@ -397,6 +397,26 @@ object SparkEntry
       s"('$k','$t','$src',$lag,$hs,$ep)"
     }.mkString(",\n    ") +
       ") AS l(link, target, source, lag, has_sib, effective_ppm)"
+
+  /** The q371/q377/q378/q382 block design over `Panels.widePanel3(32, ·)`:
+    * every pair at chain distance 1..9 of its 160 series as
+    * (pair "a<b", tier, y = b, x = a) — 1,395 hypotheses. Tier `ab`: the
+    * two aggregates of one block; `as`: an aggregate and a source of one
+    * block; `null`: everything else (sources are mutually independent,
+    * blocks are independent of each other).
+    */
+  private[graft] lazy val BlockDesign
+      : IndexedSeq[(String, String, String, String)] = {
+    def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
+    for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
+      val tier =
+        if (i / 5 != (i + dd) / 5) "null"
+        else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
+        else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
+        else "null"
+      (s"${snm(i)}<${snm(i + dd)}", tier, snm(i + dd), snm(i))
+    }
+  }
 
   /** The (series, lag) virtual-series specs a link list needs: every
     * target at lag 0 plus every parent at its link lag, fold-prefixed.

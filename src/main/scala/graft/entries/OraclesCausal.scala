@@ -6,6 +6,233 @@ import graft.core._
   * [[QueriesCausal]], split mechanically from the single map. */
 private[graft] trait OraclesCausal { this: SparkEntry.type =>
 
+  /** The [[BlockDesign]] hypotheses' k=1 Wald CTEs over the 60-day block
+    * panel dumped under `dump` (`blockDesignWald`'s twin): one sparse
+    * moment pass, the betas, then `Causal.waldK1SqlCtes`; yields `wald`.
+    */
+  private def blockDesignWaldSql(dump: String): String = {
+    val yx = BlockDesign.map { case (_, _, y, x) => (s"$y@0", s"$x@0") }
+    val linkRows = BlockDesign.map { case (p, tier, y, x) =>
+      s"('$p','$tier','$y@0','$x@0',NULL::VARCHAR)" }.mkString(",\n    ")
+    s"""panel AS (
+       |  SELECT series, day, v
+       |  FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
+       |virt AS (SELECT series || '@0' AS vs, day AS t, v FROM panel),
+       |wanted AS (SELECT * FROM
+       |  ${graft.metrics.Causal.wantedPairsValuesSql(yx)}),
+       |links AS (SELECT * FROM (VALUES $linkRows)
+       |  AS l(pair, tier, y, x, sib)),
+       |${graft.metrics.Causal.sparseMomentsSqlCtes(
+            "virt", "wanted", "t BETWEEN 0 AND 59")},
+       |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
+       |${graft.metrics.Causal.waldK1SqlCtes}""".stripMargin
+  }
+
+  /** `blockRules`' twin: one census row per (rule, 0/1 discovery column)
+    * of `src`, UNION ALL'd.
+    */
+  private def blockRulesSql(src: String, rules: Seq[(String, String)],
+      tierSizes: Boolean = false): String = rules.map { case (rule, disc) =>
+    def cnt(cond: String) = s"sum(CASE WHEN $cond THEN 1 ELSE 0 END)::BIGINT"
+    def found(t: String) = cnt(s"$disc = 1 AND tier = '$t'")
+    s"""SELECT '$rule' AS rule, count(*)::BIGINT AS n_hyp,
+       |  sum($disc)::BIGINT AS n_disc, ${found("ab")} AS n_disc_ab,
+       |  ${found("as")} AS n_disc_as,
+       |  ${found("null")} AS n_false""".stripMargin +
+      (if (tierSizes) s",\n  ${cnt("tier = 'ab'")} AS n_ab, " +
+        s"${cnt("tier = 'as'")} AS n_as" else "") + s"\nFROM $src"
+  }.mkString("\nUNION ALL\n")
+
+  /** `blindRecovery`'s twin over the dump `dump` of one 6-var lag-2
+    * `family` cell: the stage-1 harmonic betas `pb`, the blind, known and
+    * regressor channels (index shift, or `Lagged.nearestLagIndexSqlCtes`
+    * per lag when `nearestLag`), and both stage-2 beta sets.
+    */
+  private def blindRecoverySql(family: String, dump: String,
+      nearestLag: Boolean, last: Int): String = {
+    val links = c1Links(family)
+    val inModel = graft.core.Parser.truthLinks(family, 6, 2)
+      .filter(_.source != "U")
+      .map(l => l.target -> (if (Set("cos", "sin")(l.func)) 1 else 0))
+      .toMap
+    def vals(blindY: Boolean): String =
+      "(VALUES " + links.map { l =>
+        val y = if (blindY) s"${l._1}^@0" else l._6
+        s"('${l._1}','${l._2}',${l._3},'${l._4}','$y','${l._5}'," +
+          l._7.map(x => s"'$x'").getOrElse("NULL::VARCHAR") +
+          s",${l._9},${inModel(l._1)})"
+      }.mkString(",\n    ") +
+        ") AS l(target, source, lag, func, y, x, sib, effective_ppm," +
+        " in_model)"
+    val basisRows = Seq("s1", "c1", "s2", "c2").map(b =>
+      s"  UNION ALL SELECT '$b@0', t, floor($b * 1000)::BIGINT FROM gen")
+      .mkString("\n")
+    val blindRows = (1 to 6).map(i =>
+      s"""  SELECT 'X$i^@0' AS vs, g.t,
+        |    ((1000000 * floor(g.X$i * 1000)::BIGINT
+        |      - p.bt * g.t
+        |      - p.bs1 * floor(g.s1 * 1000)::BIGINT
+        |      - p.bc1 * floor(g.c1 * 1000)::BIGINT
+        |      - p.bs2 * floor(g.s2 * 1000)::BIGINT
+        |      - p.bc2 * floor(g.c2 * 1000)::BIGINT) // 1000000)
+        |      ::BIGINT AS v
+        |  FROM gen g JOIN pb p ON p.series = 'X$i'""".stripMargin)
+      .mkString("\n  UNION ALL\n")
+    val knownRows = (1 to 6).map(i =>
+      s"  UNION ALL SELECT 'X$i~@0', t, floor(X${i}t * 1000)::BIGINT " +
+        s"FROM gen").mkString("\n")
+    val lags = links.map(_._3).filter(_ > 0).distinct.sorted
+    val lxBlocks = if (!nearestLag) "" else
+      "spine AS (SELECT t, \"time\" FROM gen),\n" + lags.map(k =>
+        graft.ops.Lagged.nearestLagIndexSqlCtes("spine", "\"time\"",
+          Nil, lagMult = k, sfx = s"$k")).mkString("", ",\n", ",\n")
+    val regRows = links.map(l => (l._5.split("@")(0), l._5, l._3))
+      .distinct.map {
+        case (chan, vs, k) if nearestLag && k > 0 =>
+          s"  UNION ALL SELECT '$vs', l.t, floor(g.$chan * 1000)::BIGINT " +
+            s"FROM lx$k l JOIN gen g ON g.t = l.lag_idx"
+        case (chan, vs, k) =>
+          s"  UNION ALL SELECT '$vs', t + $k, " +
+            s"floor($chan * 1000)::BIGINT FROM gen"
+      }.mkString("\n")
+    s"""WITH gen AS (
+      |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
+      |${lxBlocks}virt1 AS (
+      |  SELECT 'X1@0' AS vs, t, floor(X1 * 1000)::BIGINT AS v FROM gen
+      |${(2 to 6).map(i =>
+           s"  UNION ALL SELECT 'X$i@0', t, floor(X$i * 1000)::BIGINT " +
+             s"FROM gen").mkString("\n")}
+      |  UNION ALL SELECT 'tt@0', t, t::BIGINT FROM gen
+      |$basisRows),
+      |hlinks AS (SELECT * FROM ${harmonicLinksValuesSql(family)}),
+      |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
+           "virt1", s"t BETWEEN 0 AND $last", "h")},
+      |${graft.metrics.Causal.structuralBetasSqlCtes("hlinks", "h")},
+      |pb AS (
+      |  SELECT series,
+      |    max(CASE WHEN component = 'trend' THEN beta_ppm END) AS bt,
+      |    max(CASE WHEN component = 's1' THEN beta_ppm END) AS bs1,
+      |    max(CASE WHEN component = 'c1' THEN beta_ppm END) AS bc1,
+      |    max(CASE WHEN component = 's2' THEN beta_ppm END) AS bs2,
+      |    max(CASE WHEN component = 'c2' THEN beta_ppm END) AS bc2
+      |  FROM sbetah GROUP BY 1),
+      |virt AS (
+      |$blindRows
+      |$knownRows
+      |$regRows),
+      |linksk AS (SELECT * FROM ${vals(blindY = false)}),
+      |linksb AS (SELECT * FROM ${vals(blindY = true)}),
+      |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
+           "virt", s"t BETWEEN 2 AND $last")},
+      |${graft.metrics.Causal.structuralBetasSqlCtes("linksk", "k",
+           momSfx = "")},
+      |${graft.metrics.Causal.structuralBetasSqlCtes("linksb", "b",
+           momSfx = "")}
+      |SELECT k.target, k.source, k.lag::INT AS lag, k.func,
+      |  k.in_model::INT AS in_model,
+      |  k.effective_ppm::BIGINT AS effective_ppm,
+      |  k.beta_ppm AS beta_known_ppm, b.beta_ppm AS beta_blind_ppm,
+      |  abs(b.beta_ppm - k.beta_ppm)::BIGINT AS blind_vs_known_ppm
+      |FROM sbetak k JOIN sbetab b ON b.target = k.target
+      |  AND b.source = k.source AND b.lag = k.lag""".stripMargin
+  }
+
+  /** q358/q368's batch replay of the streamed design tuples
+    * (`streamWeightDesign`'s twin): per [[streamWeightLinks]] link, the 10
+    * design sums over every prefix t < cut and over the whole dump
+    * `dump`, joined to the link rows; yields `wf`.
+    */
+  private def streamWeightSumsSql(dump: String, cuts: Seq[Int]): String = {
+    def qc(series: String, l: Int): String =
+      if (l == 0) s"floor($series * 1000)::BIGINT"
+      else s"floor(L$l$series * 1000)::BIGINT"
+    val tupSelects = streamWeightLinks().map { case (k, tgt, src, lag,
+        hs, sibSeries, sibLag, _) =>
+      val sv = if (hs == 1) qc(sibSeries, sibLag) else "0::BIGINT"
+      s"  SELECT '$k' AS link, ${qc(tgt, 0)} AS yv, " +
+        s"${qc(src, lag)} AS xv, $sv AS sv, t FROM gl"
+    }.mkString("\n  UNION ALL\n")
+    def prefixSums(pred: String): String =
+      s"""  SELECT link, count(*)::BIGINT AS n, sum(yv)::BIGINT AS sy,
+        |    sum(xv)::BIGINT AS sx, sum(sv)::BIGINT AS ss,
+        |    sum(yv * yv)::BIGINT AS syy,
+        |    sum(xv * xv)::BIGINT AS sxx, sum(sv * sv)::BIGINT AS sss,
+        |    sum(xv * yv)::BIGINT AS sxy, sum(sv * yv)::BIGINT AS ssy,
+        |    sum(xv * sv)::BIGINT AS sxs
+        |  FROM tup$pred GROUP BY 1""".stripMargin
+    s"""gen AS (
+      |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
+      |gl AS (
+      |  SELECT a.*,
+      |${(1 to 6).map(i => s"    b.X$i AS L1X$i,").mkString("\n")}
+      |${(1 to 6).map(i => s"    c.X$i AS L2X$i").mkString(",\n")}
+      |  FROM gen a
+      |  JOIN gen b ON b.t = a.t - 1
+      |  JOIN gen c ON c.t = a.t - 2
+      |  WHERE a.t BETWEEN 2 AND 399),
+      |tup AS (
+      |$tupSelects),
+      |links AS (SELECT * FROM ${streamWeightLinksValuesSql()}),
+      |sums AS (
+      |${(cuts.map(c => s" WHERE t < $c") :+ "").map(prefixSums)
+           .mkString("\n  UNION ALL\n")}),
+      |wf AS (
+      |  SELECT s.*, l.target, l.source, l.lag, l.has_sib,
+      |    l.effective_ppm
+      |  FROM sums s JOIN links l USING (link))""".stripMargin
+  }
+
+  /** `robustSeScores`' twin over the panel dumped under `dump`: the raw
+    * sums, the classical inference `stsum` and the per-row scores
+    * `scores(j, d, mm)`.
+    */
+  private def robustSeScoresSql(dump: String): String = {
+    val n = 240
+    s"""gen AS (
+      |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
+      |sums AS (
+      |  SELECT j, tier, count(*)::BIGINT AS n, sum(y)::BIGINT AS sy,
+      |    sum(x)::BIGINT AS sx, 0::BIGINT AS ss,
+      |    sum(y*y)::BIGINT AS syy, sum(x*x)::BIGINT AS sxx,
+      |    0::BIGINT AS sss, sum(x*y)::BIGINT AS sxy,
+      |    0::BIGINT AS ssy, 0::BIGINT AS sxs, 0::INT AS has_sib
+      |  FROM gen GROUP BY 1, 2),
+      |${graft.metrics.Causal.structuralBetasFromSumsSqlCtes("sums")},
+      |${graft.metrics.Causal.structuralInferenceFromSumsSqlCtes("")},
+      |scores AS (
+      |  SELECT g.j, g.d,
+      |    ($n * g.x - i.sx)::HUGEINT *
+      |      ((1000000 * ($n * g.y - i.sy)
+      |        - i.beta_ppm::HUGEINT * ($n * g.x - i.sx))
+      |       // 1000000) AS mm
+      |  FROM gen g JOIN stsum i USING (j))""".stripMargin
+  }
+
+  /** `survivalRisk`'s twin over `events`: yields `risk(t, d, n_risk)`. */
+  private def survivalRiskSql: String =
+    """ev AS (
+      |  SELECT user_id, epoch_us(ts) // 86400000000 AS day, event_type
+      |  FROM events),
+      |hz AS (SELECT max(day) AS hz FROM ev),
+      |us AS (
+      |  SELECT user_id, min(day) AS origin,
+      |    min(CASE WHEN event_type = 'purchase' THEN day END) AS pday
+      |  FROM ev GROUP BY 1),
+      |uu AS (
+      |  SELECT coalesce(pday - origin, h.hz - origin) AS t,
+      |    (pday IS NOT NULL)::INT AS e
+      |  FROM us, hz h),
+      |tm AS (SELECT t, sum(e)::BIGINT AS d, count(*)::BIGINT AS c
+      |  FROM uu GROUP BY 1),
+      |tt AS (SELECT count(*)::BIGINT AS ntot FROM uu),
+      |risk AS (
+      |  SELECT t, d, n_risk FROM (
+      |    SELECT t, d, ntot - coalesce(sum(c) OVER (ORDER BY t
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS n_risk
+      |    FROM tm, tt)
+      |  WHERE d > 0)""".stripMargin
+
   private[graft] def oracleSqlCausal: Map[String, String] = Map(
 
     "q345_strict_kernel_digest" ->
@@ -83,64 +310,26 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |cns_k0 AS (SELECT a, b FROM pcs3_out WHERE keep0 = 1),
         |cns_e1 AS (SELECT a, b FROM pcs3_out WHERE edge = 1),
         |cns_e2 AS (SELECT a, b FROM pcs3_out WHERE edge2 = 1),
-        |cns_adj0 AS (SELECT a AS x, b AS y FROM cns_k0
-        |  UNION ALL SELECT b, a FROM cns_k0),
-        |cns_adj1 AS (SELECT a AS x, b AS y FROM cns_e1
-        |  UNION ALL SELECT b, a FROM cns_e1),
-        |cns_adj2 AS (SELECT a AS x, b AS y FROM cns_e2
-        |  UNION ALL SELECT b, a FROM cns_e2),
         |cns_ser AS (SELECT count(*)::BIGINT AS sc FROM
-        |  (SELECT a FROM pcs3_out UNION SELECT b FROM pcs3_out)),
-        |cns_cand1 AS (
-        |  SELECT DISTINCT p.a, p.b, n1.y AS z
-        |  FROM cns_k0 p JOIN cns_adj0 n1 ON n1.x IN (p.a, p.b)
-        |  WHERE n1.y <> p.a AND n1.y <> p.b),
-        |cns_cand2 AS (
-        |  SELECT e.a, e.b, n1.y AS z, n2.y AS w
-        |  FROM cns_e1 e
-        |  JOIN cns_adj1 n1 ON n1.x = e.a
-        |  JOIN cns_adj1 n2 ON n2.x = e.a
-        |  WHERE n1.y < n2.y AND n1.y <> e.b AND n2.y <> e.b
-        |  UNION
-        |  SELECT e.a, e.b, n1.y, n2.y
-        |  FROM cns_e1 e
-        |  JOIN cns_adj1 n1 ON n1.x = e.b
-        |  JOIN cns_adj1 n2 ON n2.x = e.b
-        |  WHERE n1.y < n2.y AND n1.y <> e.a AND n2.y <> e.a),
-        |cns_cand3 AS (
-        |  SELECT e.a, e.b, n1.y AS z, n2.y AS w, n3.y AS u
-        |  FROM cns_e2 e
-        |  JOIN cns_adj2 n1 ON n1.x = e.a
-        |  JOIN cns_adj2 n2 ON n2.x = e.a
-        |  JOIN cns_adj2 n3 ON n3.x = e.a
-        |  WHERE n1.y < n2.y AND n2.y < n3.y
-        |    AND n1.y <> e.b AND n2.y <> e.b AND n3.y <> e.b
-        |  UNION
-        |  SELECT e.a, e.b, n1.y, n2.y, n3.y
-        |  FROM cns_e2 e
-        |  JOIN cns_adj2 n1 ON n1.x = e.b
-        |  JOIN cns_adj2 n2 ON n2.x = e.b
-        |  JOIN cns_adj2 n3 ON n3.x = e.b
-        |  WHERE n1.y < n2.y AND n2.y < n3.y
-        |    AND n1.y <> e.a AND n2.y <> e.a AND n3.y <> e.a)
+        |  (SELECT a FROM pcs3_out UNION SELECT b FROM pcs3_out))
         |SELECT 'pairs' AS stage, 'both' AS variant,
         |  count(*)::BIGINT AS n FROM pcs3_out
         |UNION ALL SELECT 'keep0', 'both', count(*)::BIGINT FROM cns_k0
         |UNION ALL SELECT 'cand1', 'stable', count(*)::BIGINT
-        |  FROM cns_cand1
+        |  FROM pcs_cand1
         |UNION ALL SELECT 'cand1', 'unrestricted',
         |  ((SELECT count(*) FROM cns_k0)
         |    * ((SELECT sc FROM cns_ser) - 2))::BIGINT
         |UNION ALL SELECT 'edge1', 'both', count(*)::BIGINT FROM cns_e1
         |UNION ALL SELECT 'cand2', 'stable', count(*)::BIGINT
-        |  FROM cns_cand2
+        |  FROM pcs_cand2
         |UNION ALL SELECT 'cand2', 'unrestricted',
         |  ((SELECT count(*) FROM cns_e1)
         |    * (((SELECT sc FROM cns_ser) - 2)
         |       * ((SELECT sc FROM cns_ser) - 3) // 2))::BIGINT
         |UNION ALL SELECT 'edge2', 'both', count(*)::BIGINT FROM cns_e2
         |UNION ALL SELECT 'cand3', 'stable', count(*)::BIGINT
-        |  FROM cns_cand3
+        |  FROM pcs_cand3
         |UNION ALL SELECT 'cand3', 'unrestricted',
         |  ((SELECT count(*) FROM cns_e2)
         |    * (((SELECT sc FROM cns_ser) - 2)
@@ -260,173 +449,11 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM sbeta GROUP BY 1""".stripMargin
     },
 
-    "q373_blind_adjusted_recovery" -> {
-      val links = c1Links()
-      val inModel = graft.core.Parser.truthLinks("C1", 6, 2)
-        .filter(_.source != "U")
-        .map(l => l.target -> (if (Set("cos", "sin")(l.func)) 1 else 0))
-        .toMap
-      def vals(blindY: Boolean): String =
-        "(VALUES " + links.map { l =>
-          val y = if (blindY) s"${l._1}^@0" else l._6
-          s"('${l._1}','${l._2}',${l._3},'${l._4}','$y','${l._5}'," +
-            l._7.map(x => s"'$x'").getOrElse("NULL::VARCHAR") +
-            s",${l._9},${inModel(l._1)})"
-        }.mkString(",\n    ") +
-          ") AS l(target, source, lag, func, y, x, sib, effective_ppm," +
-          " in_model)"
-      val basisRows = Seq("s1", "c1", "s2", "c2").map(b =>
-        s"  UNION ALL SELECT '$b@0', t, floor($b * 1000)::BIGINT FROM gen")
-        .mkString("\n")
-      val blindRows = (1 to 6).map(i =>
-        s"""  SELECT 'X$i^@0' AS vs, g.t,
-          |    ((1000000 * floor(g.X$i * 1000)::BIGINT
-          |      - p.bt * g.t
-          |      - p.bs1 * floor(g.s1 * 1000)::BIGINT
-          |      - p.bc1 * floor(g.c1 * 1000)::BIGINT
-          |      - p.bs2 * floor(g.s2 * 1000)::BIGINT
-          |      - p.bc2 * floor(g.c2 * 1000)::BIGINT) // 1000000)
-          |      ::BIGINT AS v
-          |  FROM gen g JOIN pb p ON p.series = 'X$i'""".stripMargin)
-        .mkString("\n  UNION ALL\n")
-      val knownRows = (1 to 6).map(i =>
-        s"  UNION ALL SELECT 'X$i~@0', t, floor(X${i}t * 1000)::BIGINT " +
-          s"FROM gen").mkString("\n")
-      val regRows = links.map(l => (l._5.split("@")(0), l._5, l._3))
-        .distinct.map { case (series, vs, lag) =>
-          s"  UNION ALL SELECT '$vs', t + $lag, " +
-            s"floor($series * 1000)::BIGINT FROM gen" }.mkString("\n")
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q373_gen/*.parquet')),
-        |virt1 AS (
-        |  SELECT 'X1@0' AS vs, t, floor(X1 * 1000)::BIGINT AS v FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i@0', t, floor(X$i * 1000)::BIGINT " +
-               s"FROM gen").mkString("\n")}
-        |  UNION ALL SELECT 'tt@0', t, t::BIGINT FROM gen
-        |$basisRows),
-        |hlinks AS (SELECT * FROM ${harmonicLinksValuesSql()}),
-        |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
-             "virt1", "t BETWEEN 0 AND 491", "h")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("hlinks", "h")},
-        |pb AS (
-        |  SELECT series,
-        |    max(CASE WHEN component = 'trend' THEN beta_ppm END) AS bt,
-        |    max(CASE WHEN component = 's1' THEN beta_ppm END) AS bs1,
-        |    max(CASE WHEN component = 'c1' THEN beta_ppm END) AS bc1,
-        |    max(CASE WHEN component = 's2' THEN beta_ppm END) AS bs2,
-        |    max(CASE WHEN component = 'c2' THEN beta_ppm END) AS bc2
-        |  FROM sbetah GROUP BY 1),
-        |virt AS (
-        |$blindRows
-        |$knownRows
-        |$regRows),
-        |linksk AS (SELECT * FROM ${vals(blindY = false)}),
-        |linksb AS (SELECT * FROM ${vals(blindY = true)}),
-        |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
-             "virt", "t BETWEEN 2 AND 491")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("linksk", "k",
-             momSfx = "")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("linksb", "b",
-             momSfx = "")}
-        |SELECT k.target, k.source, k.lag::INT AS lag, k.func,
-        |  k.in_model::INT AS in_model,
-        |  k.effective_ppm::BIGINT AS effective_ppm,
-        |  k.beta_ppm AS beta_known_ppm, b.beta_ppm AS beta_blind_ppm,
-        |  abs(b.beta_ppm - k.beta_ppm)::BIGINT AS blind_vs_known_ppm
-        |FROM sbetak k JOIN sbetab b ON b.target = k.target
-        |  AND b.source = k.source AND b.lag = k.lag""".stripMargin
-    },
+    "q373_blind_adjusted_recovery" ->
+      blindRecoverySql("C1", "q373_gen", nearestLag = false, last = 491),
 
-    "q375_blind_harmonic_irregular" -> {
-      val links = c1Links("C2")
-      val inModel = graft.core.Parser.truthLinks("C2", 6, 2)
-        .filter(_.source != "U")
-        .map(l => l.target -> (if (Set("cos", "sin")(l.func)) 1 else 0))
-        .toMap
-      def vals(blindY: Boolean): String =
-        "(VALUES " + links.map { l =>
-          val y = if (blindY) s"${l._1}^@0" else l._6
-          s"('${l._1}','${l._2}',${l._3},'${l._4}','$y','${l._5}'," +
-            l._7.map(x => s"'$x'").getOrElse("NULL::VARCHAR") +
-            s",${l._9},${inModel(l._1)})"
-        }.mkString(",\n    ") +
-          ") AS l(target, source, lag, func, y, x, sib, effective_ppm," +
-          " in_model)"
-      val basisRows = Seq("s1", "c1", "s2", "c2").map(b =>
-        s"  UNION ALL SELECT '$b@0', t, floor($b * 1000)::BIGINT FROM gen")
-        .mkString("\n")
-      val blindRows = (1 to 6).map(i =>
-        s"""  SELECT 'X$i^@0' AS vs, g.t,
-          |    ((1000000 * floor(g.X$i * 1000)::BIGINT
-          |      - p.bt * g.t
-          |      - p.bs1 * floor(g.s1 * 1000)::BIGINT
-          |      - p.bc1 * floor(g.c1 * 1000)::BIGINT
-          |      - p.bs2 * floor(g.s2 * 1000)::BIGINT
-          |      - p.bc2 * floor(g.c2 * 1000)::BIGINT) // 1000000)
-          |      ::BIGINT AS v
-          |  FROM gen g JOIN pb p ON p.series = 'X$i'""".stripMargin)
-        .mkString("\n  UNION ALL\n")
-      val knownRows = (1 to 6).map(i =>
-        s"  UNION ALL SELECT 'X$i~@0', t, floor(X${i}t * 1000)::BIGINT " +
-          s"FROM gen").mkString("\n")
-      val lagsNeeded = links.map(_._3).filter(_ > 0).distinct.sorted
-      val lxBlocks = lagsNeeded.map(k =>
-        graft.ops.Lagged.nearestLagIndexSqlCtes("spine", "\"time\"",
-          Nil, lagMult = k, sfx = s"$k")).mkString(",\n")
-      val regRows = links.map(l => (l._5.split("@")(0), l._5, l._3))
-        .distinct.map {
-          case (chan, vs, 0) =>
-            s"  UNION ALL SELECT '$vs', t, " +
-              s"floor($chan * 1000)::BIGINT FROM gen"
-          case (chan, vs, k) =>
-            s"  UNION ALL SELECT '$vs', l.t, " +
-              s"floor(g.$chan * 1000)::BIGINT " +
-              s"FROM lx$k l JOIN gen g ON g.t = l.lag_idx"
-        }.mkString("\n")
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q375_gen/*.parquet')),
-        |spine AS (SELECT t, "time" FROM gen),
-        |$lxBlocks,
-        |virt1 AS (
-        |  SELECT 'X1@0' AS vs, t, floor(X1 * 1000)::BIGINT AS v FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i@0', t, floor(X$i * 1000)::BIGINT " +
-               s"FROM gen").mkString("\n")}
-        |  UNION ALL SELECT 'tt@0', t, t::BIGINT FROM gen
-        |$basisRows),
-        |hlinks AS (SELECT * FROM ${harmonicLinksValuesSql("C2")}),
-        |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
-             "virt1", "t BETWEEN 0 AND 499", "h")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("hlinks", "h")},
-        |pb AS (
-        |  SELECT series,
-        |    max(CASE WHEN component = 'trend' THEN beta_ppm END) AS bt,
-        |    max(CASE WHEN component = 's1' THEN beta_ppm END) AS bs1,
-        |    max(CASE WHEN component = 'c1' THEN beta_ppm END) AS bc1,
-        |    max(CASE WHEN component = 's2' THEN beta_ppm END) AS bs2,
-        |    max(CASE WHEN component = 'c2' THEN beta_ppm END) AS bc2
-        |  FROM sbetah GROUP BY 1),
-        |virt AS (
-        |$blindRows
-        |$knownRows
-        |$regRows),
-        |linksk AS (SELECT * FROM ${vals(blindY = false)}),
-        |linksb AS (SELECT * FROM ${vals(blindY = true)}),
-        |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
-             "virt", "t BETWEEN 2 AND 499")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("linksk", "k",
-             momSfx = "")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("linksb", "b",
-             momSfx = "")}
-        |SELECT k.target, k.source, k.lag::INT AS lag, k.func,
-        |  k.in_model::INT AS in_model,
-        |  k.effective_ppm::BIGINT AS effective_ppm,
-        |  k.beta_ppm AS beta_known_ppm, b.beta_ppm AS beta_blind_ppm,
-        |  abs(b.beta_ppm - k.beta_ppm)::BIGINT AS blind_vs_known_ppm
-        |FROM sbetak k JOIN sbetab b ON b.target = k.target
-        |  AND b.source = k.source AND b.lag = k.lag""".stripMargin
-    },
+    "q375_blind_harmonic_irregular" ->
+      blindRecoverySql("C2", "q375_gen", nearestLag = true, last = 499),
 
     "q372_harmonic_estimation" -> {
       val basisRows = Seq("s1", "c1", "s2", "c2").map(b =>
@@ -453,83 +480,16 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     },
 
     "q371_fdr_vs_fwer" -> {
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, s"$b@0", s"$a@0")
-      }
-      val linkRows = cands.map { case (p, tier, y, x) =>
-        s"('$p','$tier','$y','$x',NULL::VARCHAR)" }.mkString(",\n    ")
-      val wantedRows = cands.flatMap { case (_, _, y, x) =>
-        val (a, b) = if (x <= y) (x, y) else (y, x)
-        Seq(s"('$x','$x')", s"('$y','$y')", s"('$a','$b')")
-      }.distinct.mkString(",\n    ")
-      val lut = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-      val lutRows = lut.zipWithIndex
-        .map { case (q, i) => s"(${i + 1}, $q)" }.mkString(",\n    ")
-      def agg(rule: String, disc: String): String =
-        s"""  SELECT '$rule' AS rule, count(*)::BIGINT AS n_hyp,
-          |    sum($disc)::BIGINT AS n_disc,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'ab' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_disc_ab,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'as' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_disc_as,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'null' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_false,
-          |    sum(CASE WHEN tier = 'ab' THEN 1 ELSE 0 END)::BIGINT
-          |      AS n_ab,
-          |    sum(CASE WHEN tier = 'as' THEN 1 ELSE 0 END)::BIGINT
-          |      AS n_as
-          |  FROM dsc""".stripMargin
-      s"""WITH panel AS (
-        |  SELECT series, day, v
-        |  FROM read_parquet('__GEN_DIR__/q371_panel/*.parquet')),
-        |virt AS (SELECT series || '@0' AS vs, day AS t, v FROM panel),
-        |wanted AS (SELECT * FROM (VALUES $wantedRows) AS w(na, nb)),
-        |links AS (SELECT * FROM (VALUES $linkRows)
-        |  AS l(pair, tier, y, x, sib)),
-        |lut AS (SELECT * FROM (VALUES $lutRows) AS q(rk, q_milli)),
-        |${graft.metrics.Causal.sparseMomentsSqlCtes(
-             "virt", "wanted", "t BETWEEN 0 AND 59")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |inf AS (
-        |  SELECT *,
-        |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy
-        |      AS rss_scaled
-        |  FROM sbeta),
-        |inf2 AS (
-        |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
-        |    ELSE (1000000 * rss_scaled)
-        |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
-        |  FROM inf),
-        |inf3 AS (
-        |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0
-        |    THEN NULL
-        |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
-        |    END)::BIGINT AS t2_milli
-        |  FROM inf2),
-        |rk0 AS (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY coalesce(t2_milli, -1) DESC, pair) AS rk
-        |  FROM inf3),
-        |rkd AS (SELECT r.*, q.q_milli FROM rk0 r JOIN lut q USING (rk)),
-        |pass AS (
-        |  SELECT *, max(CASE WHEN t2_milli >= q_milli THEN rk END)
-        |    OVER () AS k_star
-        |  FROM rkd),
+      val lad = graft.metrics.Causal.chi2InvMilliLadder(BlockDesign.size)
+      s"""WITH ${blockDesignWaldSql("q371_panel")},
+        |${graft.metrics.Causal.stepUpSqlCtes("wald", "pair", "bh" -> lad)},
         |dsc AS (
-        |  SELECT *, (rk <= coalesce(k_star, 0))::INT AS disc_bh,
-        |    (t2_milli >= ${lut.head})::INT AS disc_bonf
-        |  FROM pass),
+        |  SELECT *, (t2_milli >= ${lad.head})::INT AS disc_bonf
+        |  FROM wald_su),
         |aggd AS (
-        |${agg("bh", "disc_bh")}
-        |  UNION ALL
-        |${agg("bonferroni", "disc_bonf")})
+        |${blockRulesSql("dsc",
+             Seq("bh" -> "disc_bh", "bonferroni" -> "disc_bonf"),
+             tierSizes = true)})
         |SELECT *,
         |  (CASE WHEN n_disc = 0 THEN 0
         |    ELSE (1000 * n_false) // n_disc END)::BIGINT AS fdr_permille,
@@ -551,24 +511,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         s"""(CASE WHEN $se2Col IS NULL OR $se2Col <= 0 THEN NULL ELSE
           |  (1000 * beta_ppm::HUGEINT * beta_ppm) // $se2Col
           |  END)::BIGINT""".stripMargin
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q383_panel/*.parquet')),
-        |sums AS (
-        |  SELECT j, tier, count(*)::BIGINT AS n, sum(y)::BIGINT AS sy,
-        |    sum(x)::BIGINT AS sx, 0::BIGINT AS ss,
-        |    sum(y*y)::BIGINT AS syy, sum(x*x)::BIGINT AS sxx,
-        |    0::BIGINT AS sss, sum(x*y)::BIGINT AS sxy,
-        |    0::BIGINT AS ssy, 0::BIGINT AS sxs, 0::INT AS has_sib
-        |  FROM gen GROUP BY 1, 2),
-        |${graft.metrics.Causal.structuralBetasFromSumsSqlCtes("sums")},
-        |${graft.metrics.Causal.structuralInferenceFromSumsSqlCtes("")},
-        |scores AS (
-        |  SELECT g.j, g.d,
-        |    ($n * g.x - i.sx)::HUGEINT *
-        |      ((1000000 * ($n * g.y - i.sy)
-        |        - i.beta_ppm::HUGEINT * ($n * g.x - i.sx))
-        |       // 1000000) AS mm
-        |  FROM gen g JOIN stsum i USING (j)),
+      s"""WITH ${robustSeScoresSql("q383_panel")},
         |lagged AS (
         |  SELECT a.j, r.l, a.mm, b.mm AS mm2
         |  FROM scores a
@@ -600,111 +543,22 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     },
 
     "q382_bh_vs_by" -> {
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, s"$b@0", s"$a@0")
-      }
-      val linkRows = cands.map { case (p, tier, y, x) =>
-        s"('$p','$tier','$y','$x',NULL::VARCHAR)" }.mkString(",\n    ")
-      val wantedRows = cands.flatMap { case (_, _, y, x) =>
-        val (a, b) = if (x <= y) (x, y) else (y, x)
-        Seq(s"('$x','$x')", s"('$y','$y')", s"('$a','$b')")
-      }.distinct.mkString(",\n    ")
-      val bhLad = graft.metrics.Causal.fInvMilliLadder(cands.size, 58)
-      val byLad = graft.metrics.Causal.byInvMilliLadder(cands.size, 58)
-      val lutRows = bhLad.zip(byLad).zipWithIndex.map {
-        case ((qb, qy), i) => s"(${i + 1}, $qb, $qy)" }.mkString(",\n    ")
-      def agg(rule: String, disc: String): String =
-        s"""  SELECT '$rule' AS rule, count(*)::BIGINT AS n_hyp,
-          |    sum($disc)::BIGINT AS n_disc,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'ab' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_disc_ab,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'as' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_disc_as,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'null' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_false
-          |  FROM dsc""".stripMargin
-      s"""WITH panel AS (
-        |  SELECT series, day, v
-        |  FROM read_parquet('__GEN_DIR__/q382_panel/*.parquet')),
-        |virt AS (SELECT series || '@0' AS vs, day AS t, v FROM panel),
-        |wanted AS (SELECT * FROM (VALUES $wantedRows) AS w(na, nb)),
-        |links AS (SELECT * FROM (VALUES $linkRows)
-        |  AS l(pair, tier, y, x, sib)),
-        |lut AS (SELECT * FROM (VALUES $lutRows)
-        |  AS q(rk, q_bh_milli, q_by_milli)),
-        |${graft.metrics.Causal.sparseMomentsSqlCtes(
-             "virt", "wanted", "t BETWEEN 0 AND 59")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |inf AS (
-        |  SELECT *,
-        |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy
-        |      AS rss_scaled
-        |  FROM sbeta),
-        |inf2 AS (
-        |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
-        |    ELSE (1000000 * rss_scaled)
-        |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
-        |  FROM inf),
-        |inf3 AS (
-        |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0
-        |    THEN NULL
-        |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
-        |    END)::BIGINT AS t2_milli
-        |  FROM inf2),
-        |rk0 AS (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY coalesce(t2_milli, -1) DESC, pair) AS rk
-        |  FROM inf3),
-        |rkd AS (SELECT r.*, q.q_bh_milli, q.q_by_milli
-        |  FROM rk0 r JOIN lut q USING (rk)),
-        |pass AS (
-        |  SELECT *,
-        |    max(CASE WHEN t2_milli >= q_bh_milli THEN rk END)
-        |      OVER () AS k_star_bh,
-        |    max(CASE WHEN t2_milli >= q_by_milli THEN rk END)
-        |      OVER () AS k_star_by
-        |  FROM rkd),
-        |dsc AS (
-        |  SELECT *,
-        |    (rk <= coalesce(k_star_bh, 0))::INT AS disc_bh,
-        |    (rk <= coalesce(k_star_by, 0))::INT AS disc_by
-        |  FROM pass)
-        |${agg("bh_f58", "disc_bh")}
-        |UNION ALL
-        |${agg("by_f58", "disc_by")}""".stripMargin
+      val m = BlockDesign.size
+      s"""WITH ${blockDesignWaldSql("q382_panel")},
+        |${graft.metrics.Causal.stepUpSqlCtes("wald", "pair",
+             "bh" -> graft.metrics.Causal.fInvMilliLadder(m, 58),
+             "by" -> graft.metrics.Causal.byInvMilliLadder(m, 58))}
+        |${blockRulesSql("wald_su",
+             Seq("bh_f58" -> "disc_bh", "by_f58" -> "disc_by"))}""".stripMargin
     },
 
     "q381_hc0_robust_se" -> {
       val n = 240
       val k = 1000000000000L / (n.toLong * n)
       val fCut = graft.metrics.Causal.fInvMilliLadder(1, n - 2).head
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q381_panel/*.parquet')),
-        |sums AS (
-        |  SELECT j, tier, count(*)::BIGINT AS n, sum(y)::BIGINT AS sy,
-        |    sum(x)::BIGINT AS sx, 0::BIGINT AS ss,
-        |    sum(y*y)::BIGINT AS syy, sum(x*x)::BIGINT AS sxx,
-        |    0::BIGINT AS sss, sum(x*y)::BIGINT AS sxy,
-        |    0::BIGINT AS ssy, 0::BIGINT AS sxs, 0::INT AS has_sib
-        |  FROM gen GROUP BY 1, 2),
-        |${graft.metrics.Causal.structuralBetasFromSumsSqlCtes("sums")},
-        |${graft.metrics.Causal.structuralInferenceFromSumsSqlCtes("")},
+      s"""WITH ${robustSeScoresSql("q381_panel")},
         |meat AS (
-        |  SELECT g.j, sum(mm::HUGEINT * mm) AS meat FROM (
-        |    SELECT g.j,
-        |      (240 * g.x - i.sx)::HUGEINT *
-        |        ((1000000 * (240 * g.y - i.sy)
-        |          - i.beta_ppm::HUGEINT * (240 * g.x - i.sx))
-        |         // 1000000) AS mm
-        |    FROM gen g JOIN stsum i USING (j)) g
-        |  GROUP BY 1),
+        |  SELECT j, sum(mm::HUGEINT * mm) AS meat FROM scores GROUP BY 1),
         |scored AS (
         |  SELECT i.*, m.meat,
         |    (CASE WHEN i.cjj = 0 THEN NULL ELSE
@@ -839,29 +693,14 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |${graft.metrics.Causal.sparseMomentsSqlCtes(
              "virt", "wanted", "t BETWEEN 0 AND 59")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |inf AS (
-        |  SELECT *,
-        |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy
-        |      AS rss_scaled
-        |  FROM sbeta),
-        |inf2 AS (
-        |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
-        |    ELSE (1000000 * rss_scaled)
-        |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
-        |  FROM inf),
-        |inf3 AS (
-        |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0
-        |    THEN NULL
-        |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
-        |    END)::BIGINT AS t2_milli
-        |  FROM inf2),
+        |${graft.metrics.Causal.waldK1SqlCtes},
         |obs AS (SELECT pair, tier, t2_milli AS t2_obs_milli
-        |  FROM inf3 WHERE k = 0),
+        |  FROM wald WHERE k = 0),
         |pr AS (
         |  SELECT i.pair,
         |    sum((coalesce(i.t2_milli, -1) >=
         |      coalesce(o.t2_obs_milli, -1))::INT)::BIGINT AS n_perm_ge
-        |  FROM inf3 i JOIN obs o USING (pair)
+        |  FROM wald i JOIN obs o USING (pair)
         |  WHERE i.k >= 1 GROUP BY 1),
         |fin AS (
         |  SELECT o.tier,
@@ -877,22 +716,8 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     },
 
     "q378_stream_bh_monitor" -> {
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, b, a)
-      }
-      val linkRows = cands.map { case (p, tier, ys, xs) =>
+      val linkRows = BlockDesign.map { case (p, tier, ys, xs) =>
         s"('$p','$tier','$ys','$xs')" }.mkString(",\n    ")
-      val lutRows = Seq(20, 40, 60).flatMap { n =>
-        graft.metrics.Causal.fInvMilliLadder(cands.size, n - 2)
-          .zipWithIndex.map { case (q, i) => s"($n, ${i + 1}, $q)" }
-      }.mkString(",\n    ")
       def prefix(p: Int): String =
         s"""sums$p AS (
           |  SELECT link, tier, 0::INT AS has_sib, count(*)::BIGINT AS n,
@@ -906,20 +731,13 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
                s"sums$p", s"p$p")},
           |${graft.metrics.Causal.structuralInferenceFromSumsSqlCtes(
                s"p$p")},
-          |rk$p AS (
-          |  SELECT *, row_number() OVER (
-          |    ORDER BY coalesce(t2_milli, -1) DESC, link) AS rk
-          |  FROM stsump$p),
-          |ks$p AS (
-          |  SELECT r.*, q.q_milli,
-          |    max(CASE WHEN r.t2_milli >= q.q_milli THEN r.rk END)
-          |      OVER () AS k_star
-          |  FROM rk$p r JOIN lut q ON q.n = $p AND q.rk = r.rk),
+          |${graft.metrics.Causal.stepUpSqlCtes(s"stsump$p", "link", "bh" ->
+               graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, p - 2))},
           |cen$p AS (
           |  SELECT n, tier, count(*)::BIGINT AS n_hyp,
-          |    sum((rk <= coalesce(k_star, 0))::INT)::BIGINT AS n_disc,
-          |    max(k_star)::BIGINT AS k_star
-          |  FROM ks$p GROUP BY 1, 2)""".stripMargin
+          |    sum(disc_bh)::BIGINT AS n_disc,
+          |    max(k_star_bh)::BIGINT AS k_star
+          |  FROM stsump${p}_su GROUP BY 1, 2)""".stripMargin
       s"""WITH panel AS (
         |  SELECT series, day, v
         |  FROM read_parquet('__GEN_DIR__/q378_panel/*.parquet')),
@@ -930,7 +748,6 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |  FROM tl l
         |  JOIN panel a ON a.series = l.xs
         |  JOIN panel b ON b.series = l.ys AND b.day = a.day),
-        |lut AS (SELECT * FROM (VALUES $lutRows) AS q(n, rk, q_milli)),
         |${prefix(20)},
         |${prefix(40)},
         |${prefix(60)}
@@ -940,91 +757,19 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     },
 
     "q377_fdr_exact_f_ladder" -> {
-      def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-      val cands = for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-        val (a, b) = (snm(i), snm(i + dd))
-        val tier =
-          if (i / 5 != (i + dd) / 5) "null"
-          else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-          else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-          else "null"
-        (s"$a<$b", tier, s"$b@0", s"$a@0")
-      }
-      val linkRows = cands.map { case (p, tier, y, x) =>
-        s"('$p','$tier','$y','$x',NULL::VARCHAR)" }.mkString(",\n    ")
-      val wantedRows = cands.flatMap { case (_, _, y, x) =>
-        val (a, b) = if (x <= y) (x, y) else (y, x)
-        Seq(s"('$x','$x')", s"('$y','$y')", s"('$a','$b')")
-      }.distinct.mkString(",\n    ")
-      val chiLad = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-      val fLad = graft.metrics.Causal.fInvMilliLadder(cands.size, 58)
-      val lutRows = chiLad.zip(fLad).zipWithIndex.map {
-        case ((qc, qf), i) => s"(${i + 1}, $qc, $qf)" }.mkString(",\n    ")
-      def agg(rule: String, disc: String): String =
-        s"""  SELECT '$rule' AS rule, count(*)::BIGINT AS n_hyp,
-          |    sum($disc)::BIGINT AS n_disc,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'ab' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_disc_ab,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'as' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_disc_as,
-          |    sum(CASE WHEN $disc = 1 AND tier = 'null' THEN 1 ELSE 0
-          |      END)::BIGINT AS n_false
-          |  FROM dsc""".stripMargin
-      s"""WITH panel AS (
-        |  SELECT series, day, v
-        |  FROM read_parquet('__GEN_DIR__/q377_panel/*.parquet')),
-        |virt AS (SELECT series || '@0' AS vs, day AS t, v FROM panel),
-        |wanted AS (SELECT * FROM (VALUES $wantedRows) AS w(na, nb)),
-        |links AS (SELECT * FROM (VALUES $linkRows)
-        |  AS l(pair, tier, y, x, sib)),
-        |lut AS (SELECT * FROM (VALUES $lutRows)
-        |  AS q(rk, q_chi_milli, q_f_milli)),
-        |${graft.metrics.Causal.sparseMomentsSqlCtes(
-             "virt", "wanted", "t BETWEEN 0 AND 59")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |inf AS (
-        |  SELECT *,
-        |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy
-        |      AS rss_scaled
-        |  FROM sbeta),
-        |inf2 AS (
-        |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
-        |    ELSE (1000000 * rss_scaled)
-        |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
-        |  FROM inf),
-        |inf3 AS (
-        |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0
-        |    THEN NULL
-        |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
-        |    END)::BIGINT AS t2_milli
-        |  FROM inf2),
-        |rk0 AS (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY coalesce(t2_milli, -1) DESC, pair) AS rk
-        |  FROM inf3),
-        |rkd AS (SELECT r.*, q.q_chi_milli, q.q_f_milli
-        |  FROM rk0 r JOIN lut q USING (rk)),
-        |pass AS (
-        |  SELECT *,
-        |    max(CASE WHEN t2_milli >= q_chi_milli THEN rk END)
-        |      OVER () AS k_star_chi,
-        |    max(CASE WHEN t2_milli >= q_f_milli THEN rk END)
-        |      OVER () AS k_star_f
-        |  FROM rkd),
+      val chiLad = graft.metrics.Causal.chi2InvMilliLadder(BlockDesign.size)
+      val fLad = graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, 58)
+      s"""WITH ${blockDesignWaldSql("q377_panel")},
+        |${graft.metrics.Causal.stepUpSqlCtes("wald", "pair",
+             "chi" -> chiLad, "f" -> fLad)},
         |dsc AS (
         |  SELECT *,
-        |    (rk <= coalesce(k_star_chi, 0))::INT AS disc_bh_chi,
-        |    (rk <= coalesce(k_star_f, 0))::INT AS disc_bh_f,
         |    (t2_milli >= ${chiLad.head})::INT AS disc_bonf_chi,
         |    (t2_milli >= ${fLad.head})::INT AS disc_bonf_f
-        |  FROM pass)
-        |${agg("bh_chi2", "disc_bh_chi")}
-        |UNION ALL
-        |${agg("bh_f58", "disc_bh_f")}
-        |UNION ALL
-        |${agg("bonf_chi2", "disc_bonf_chi")}
-        |UNION ALL
-        |${agg("bonf_f58", "disc_bonf_f")}""".stripMargin
+        |  FROM wald_su)
+        |${blockRulesSql("dsc", Seq("bh_chi2" -> "disc_chi",
+             "bh_f58" -> "disc_f", "bonf_chi2" -> "disc_bonf_chi",
+             "bonf_f58" -> "disc_bonf_f"))}""".stripMargin
     },
 
     "q376_bh_catalog_census" -> {
@@ -1040,14 +785,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
       }
       val linkRows = hyps.map { case (p, tier, y, x) =>
         s"('$p','$tier','$y','$x',NULL::VARCHAR)" }.mkString(",\n    ")
-      def cnp(a: String, b: String) = if (a <= b) (a, b) else (b, a)
-      val wantedRows = hyps.flatMap { case (_, _, y, x) =>
-        val (ca, cb) = cnp(x, y)
-        Seq(s"('$y','$y')", s"('$x','$x')", s"('$ca','$cb')")
-      }.distinct.mkString(",\n    ")
-      val lutRows = graft.metrics.Causal.chi2InvMilliLadder(hyps.size)
-        .zipWithIndex.map { case (q, i) => s"(${i + 1}, $q)" }
-        .mkString(",\n    ")
+      val lad = graft.metrics.Causal.chi2InvMilliLadder(hyps.size)
       val chanRows = (1 to 4).flatMap { i =>
         val v = s"floor(greatest(least(X$i, 1000), -1000) * 1000)::BIGINT"
         Seq(
@@ -1060,50 +798,24 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |  SELECT * FROM read_parquet('__GEN_DIR__/q376_gen/*.parquet')),
         |virt AS (
         |$chanRows),
-        |wanted AS (SELECT * FROM (VALUES $wantedRows) AS w(na, nb)),
+        |wanted AS (SELECT * FROM ${graft.metrics.Causal.wantedPairsValuesSql(
+             hyps.map(h => (h._3, h._4)))}),
         |links AS (SELECT * FROM (VALUES $linkRows)
         |  AS l(pair, tier, y, x, sib)),
-        |lut AS (SELECT * FROM (VALUES $lutRows) AS q(rk, q_milli)),
         |${graft.metrics.Causal.sparseMomentsSqlCtes(
              "virt", "wanted", "t % 65536 BETWEEN 1 AND 199")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |inf AS (
-        |  SELECT *,
-        |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy
-        |      AS rss_scaled
-        |  FROM sbeta),
-        |inf2 AS (
-        |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
-        |    ELSE (1000000 * rss_scaled)
-        |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
-        |  FROM inf),
-        |inf3 AS (
-        |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0
-        |    THEN NULL
-        |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
-        |    END)::BIGINT AS t2_milli
-        |  FROM inf2),
-        |rk0 AS (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY coalesce(t2_milli, -1) DESC, pair) AS rk
-        |  FROM inf3),
-        |rkd AS (SELECT r.*, q.q_milli FROM rk0 r JOIN lut q USING (rk)),
-        |pass AS (
-        |  SELECT *, max(CASE WHEN t2_milli >= q_milli THEN rk END)
-        |    OVER () AS k_star
-        |  FROM rkd),
-        |dsc AS (
-        |  SELECT *, (rk <= coalesce(k_star, 0))::INT AS disc
-        |  FROM pass),
-        |sm AS (SELECT max(k_star)::BIGINT AS k_star,
-        |  sum(disc)::BIGINT AS n_disc_total FROM dsc)
+        |${graft.metrics.Causal.waldK1SqlCtes},
+        |${graft.metrics.Causal.stepUpSqlCtes("wald", "pair", "bh" -> lad)},
+        |sm AS (SELECT max(k_star_bh)::BIGINT AS k_star,
+        |  sum(disc_bh)::BIGINT AS n_disc_total FROM wald_su)
         |SELECT d.tier, count(*)::BIGINT AS n_hyp,
-        |  sum(d.disc)::BIGINT AS n_disc,
+        |  sum(d.disc_bh)::BIGINT AS n_disc,
         |  max(d.t2_milli)::BIGINT AS max_t2_milli,
         |  sum(CASE WHEN d.t2_milli IS NULL THEN 1 ELSE 0 END)::BIGINT
         |    AS n_t2_null,
         |  sm.k_star, sm.n_disc_total
-        |FROM dsc d, sm
+        |FROM wald_su d, sm
         |GROUP BY d.tier, sm.k_star, sm.n_disc_total""".stripMargin
     },
 
@@ -1114,67 +826,36 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
       val linkRows = cands.map { case (a, b, dist) =>
         s"('$a<$b',$dist,'$b@0','$a@0',NULL::VARCHAR)" }
         .mkString(",\n    ")
-      val wantedRows = cands.flatMap { case (a, b, _) =>
-        Seq(s"('$a@0','$a@0')", s"('$b@0','$b@0')", s"('$a@0','$b@0')") }
-        .distinct.mkString(",\n    ")
-      val lutRows = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
-        .zipWithIndex.map { case (q, i) => s"(${i + 1}, $q)" }
-        .mkString(",\n    ")
+      val lad = graft.metrics.Causal.chi2InvMilliLadder(cands.size)
       s"""WITH panel AS (
         |  SELECT series, day, v
         |  FROM read_parquet('__GEN_DIR__/q370_panel/*.parquet')),
         |virt AS (SELECT series || '@0' AS vs, day AS t, v FROM panel),
-        |wanted AS (SELECT * FROM (VALUES $wantedRows) AS w(na, nb)),
+        |wanted AS (SELECT * FROM ${graft.metrics.Causal.wantedPairsValuesSql(
+             cands.map { case (a, b, _) => (s"$b@0", s"$a@0") })}),
         |links AS (SELECT * FROM (VALUES $linkRows)
         |  AS l(pair, dist, y, x, sib)),
-        |lut AS (SELECT * FROM (VALUES $lutRows) AS q(rk, q_milli)),
         |${graft.metrics.Causal.sparseMomentsSqlCtes(
              "virt", "wanted", "t BETWEEN 0 AND 19999")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |inf AS (
-        |  SELECT *,
-        |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy
-        |      AS rss_scaled
-        |  FROM sbeta),
-        |inf2 AS (
-        |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
-        |    ELSE (1000000 * rss_scaled)
-        |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
-        |  FROM inf),
-        |inf3 AS (
-        |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0
-        |    THEN NULL
-        |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
-        |    END)::BIGINT AS t2_milli
-        |  FROM inf2),
-        |rk0 AS (
-        |  SELECT *, row_number() OVER (
-        |    ORDER BY coalesce(t2_milli, -1) DESC, pair) AS rk
-        |  FROM inf3),
-        |rkd AS (SELECT r.*, q.q_milli FROM rk0 r JOIN lut q USING (rk)),
-        |pass AS (
-        |  SELECT *, max(CASE WHEN t2_milli >= q_milli THEN rk END)
-        |    OVER () AS k_star
-        |  FROM rkd),
-        |dsc AS (
-        |  SELECT *, (rk <= coalesce(k_star, 0))::INT AS disc
-        |  FROM pass),
+        |${graft.metrics.Causal.waldK1SqlCtes},
+        |${graft.metrics.Causal.stepUpSqlCtes("wald", "pair", "bh" -> lad)},
         |summ AS (
-        |  SELECT max(k_star)::BIGINT AS k_star,
-        |    sum(disc)::BIGINT AS n_disc_total,
-        |    sum(CASE WHEN disc = 1 AND dist >= 4 THEN 1 ELSE 0 END)
+        |  SELECT max(k_star_bh)::BIGINT AS k_star,
+        |    sum(disc_bh)::BIGINT AS n_disc_total,
+        |    sum(CASE WHEN disc_bh = 1 AND dist >= 4 THEN 1 ELSE 0 END)
         |      ::BIGINT AS n_false_disc
-        |  FROM dsc),
+        |  FROM wald_su),
         |summ2 AS (
         |  SELECT *, (CASE WHEN n_disc_total = 0 THEN 0
         |    ELSE (1000 * n_false_disc) // n_disc_total END)::BIGINT
         |    AS fdr_permille
         |  FROM summ)
         |SELECT dist::INT AS dist, count(*)::BIGINT AS n_pairs,
-        |  sum(disc)::BIGINT AS n_disc,
+        |  sum(disc_bh)::BIGINT AS n_disc,
         |  min(t2_milli) AS min_t2_milli, max(t2_milli) AS max_t2_milli,
         |  s.k_star, s.n_disc_total, s.n_false_disc, s.fdr_permille
-        |FROM dsc, summ2 s GROUP BY 1, 6, 7, 8, 9""".stripMargin
+        |FROM wald_su, summ2 s GROUP BY 1, 6, 7, 8, 9""".stripMargin
     },
 
     "q369_maximal_recovery" -> {
@@ -1334,55 +1015,14 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM sttest GROUP BY 1, 2, 3""".stripMargin
     },
 
-    "q368_stream_inference" -> {
-      val tupSelects = streamWeightLinks().map { case (k, tgt, src, lag,
-          hs, sibSeries, sibLag, _) =>
-        def qc(series: String, l: Int): String =
-          if (l == 0) s"floor($series * 1000)::BIGINT"
-          else s"floor(L$l$series * 1000)::BIGINT"
-        val sv = if (hs == 1) qc(sibSeries, sibLag) else "0::BIGINT"
-        s"  SELECT '$k' AS link, ${qc(tgt, 0)} AS yv, " +
-          s"${qc(src, lag)} AS xv, $sv AS sv, t FROM gl"
-      }.mkString("\n  UNION ALL\n")
-      def prefixSums(pred: String): String =
-        s"""  SELECT link, count(*)::BIGINT AS n, sum(yv)::BIGINT AS sy,
-          |    sum(xv)::BIGINT AS sx, sum(sv)::BIGINT AS ss,
-          |    sum(yv * yv)::BIGINT AS syy,
-          |    sum(xv * xv)::BIGINT AS sxx, sum(sv * sv)::BIGINT AS sss,
-          |    sum(xv * yv)::BIGINT AS sxy, sum(sv * yv)::BIGINT AS ssy,
-          |    sum(xv * sv)::BIGINT AS sxs
-          |  FROM tup$pred GROUP BY 1""".stripMargin
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q368_gen/*.parquet')),
-        |gl AS (
-        |  SELECT a.*,
-        |${(1 to 6).map(i => s"    b.X$i AS L1X$i,").mkString("\n")}
-        |${(1 to 6).map(i => s"    c.X$i AS L2X$i")
-             .mkString(",\n")}
-        |  FROM gen a
-        |  JOIN gen b ON b.t = a.t - 1
-        |  JOIN gen c ON c.t = a.t - 2
-        |  WHERE a.t BETWEEN 2 AND 399),
-        |tup AS (
-        |$tupSelects),
-        |links AS (SELECT * FROM ${streamWeightLinksValuesSql()}),
-        |sums AS (
-        |${prefixSums(" WHERE t < 50")}
-        |  UNION ALL
-        |${prefixSums(" WHERE t < 200")}
-        |  UNION ALL
-        |${prefixSums("")}),
-        |wf AS (
-        |  SELECT s.*, l.target, l.source, l.lag, l.has_sib,
-        |    l.effective_ppm
-        |  FROM sums s JOIN links l USING (link)),
+    "q368_stream_inference" ->
+      s"""WITH ${streamWeightSumsSql("q368_gen", Seq(50, 200))},
         |${graft.metrics.Causal.structuralBetasFromSumsSqlCtes("wf")},
         |${graft.metrics.Causal.structuralInferenceFromSumsSqlCtes()}
         |SELECT target, source, lag::INT AS lag, n, beta_ppm,
         |  se2_ppm2, t2_milli, (t2_milli > 3841)::INT AS significant,
         |  effective_ppm::BIGINT AS effective_ppm
-        |FROM stsum""".stripMargin
-    },
+        |FROM stsum""".stripMargin,
 
     "q367_forecast_calibration" -> {
       val links = weightLinks("", "A1", 6, 2)
@@ -1674,52 +1314,12 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM agg""".stripMargin
     },
 
-    "q358_stream_weight_recovery" -> {
-      val tupSelects = streamWeightLinks().map { case (k, tgt, src, lag,
-          hs, sibSeries, sibLag, _) =>
-        def qc(series: String, l: Int): String =
-          if (l == 0) s"floor($series * 1000)::BIGINT"
-          else s"floor(L$l$series * 1000)::BIGINT"
-        val sv = if (hs == 1) qc(sibSeries, sibLag) else "0::BIGINT"
-        s"  SELECT '$k' AS link, ${qc(tgt, 0)} AS yv, " +
-          s"${qc(src, lag)} AS xv, $sv AS sv, t FROM gl"
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q358_gen/*.parquet')),
-        |gl AS (
-        |  SELECT a.*,
-        |${(1 to 6).map(i => s"    b.X$i AS L1X$i,").mkString("\n")}
-        |${(1 to 6).map(i => s"    c.X$i AS L2X$i")
-             .mkString(",\n")}
-        |  FROM gen a
-        |  JOIN gen b ON b.t = a.t - 1
-        |  JOIN gen c ON c.t = a.t - 2
-        |  WHERE a.t BETWEEN 2 AND 399),
-        |tup AS (
-        |$tupSelects),
-        |links AS (SELECT * FROM ${streamWeightLinksValuesSql()}),
-        |sums AS (
-        |  SELECT link, count(*)::BIGINT AS n, sum(yv)::BIGINT AS sy,
-        |    sum(xv)::BIGINT AS sx, sum(sv)::BIGINT AS ss,
-        |    sum(xv * xv)::BIGINT AS sxx, sum(sv * sv)::BIGINT AS sss,
-        |    sum(xv * yv)::BIGINT AS sxy, sum(sv * yv)::BIGINT AS ssy,
-        |    sum(xv * sv)::BIGINT AS sxs
-        |  FROM tup WHERE t < 200 GROUP BY 1
-        |  UNION ALL
-        |  SELECT link, count(*)::BIGINT, sum(yv)::BIGINT, sum(xv)::BIGINT,
-        |    sum(sv)::BIGINT, sum(xv * xv)::BIGINT, sum(sv * sv)::BIGINT,
-        |    sum(xv * yv)::BIGINT, sum(sv * yv)::BIGINT,
-        |    sum(xv * sv)::BIGINT
-        |  FROM tup GROUP BY 1),
-        |wf AS (
-        |  SELECT s.*, l.target, l.source, l.lag, l.has_sib,
-        |    l.effective_ppm
-        |  FROM sums s JOIN links l USING (link)),
+    "q358_stream_weight_recovery" ->
+      s"""WITH ${streamWeightSumsSql("q358_gen", Seq(200))},
         |${graft.metrics.Causal.structuralBetasFromSumsSqlCtes("wf")}
         |SELECT target, source, lag::INT AS lag, n, beta_ppm,
         |  effective_ppm::BIGINT AS effective_ppm
-        |FROM sbsum""".stripMargin
-    },
+        |FROM sbsum""".stripMargin,
 
     "q362_shadow_census" -> {
       val cfgs = Grid.all().filter(c =>
@@ -2425,28 +2025,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM mm GROUP BY 1, 2, 3""".stripMargin,
 
     "q292_kaplan_meier" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day, event_type
-        |  FROM events),
-        |hz AS (SELECT max(day) AS hz FROM ev),
-        |us AS (
-        |  SELECT user_id, min(day) AS origin,
-        |    min(CASE WHEN event_type = 'purchase' THEN day END) AS pday
-        |  FROM ev GROUP BY 1),
-        |uu AS (
-        |  SELECT coalesce(pday - origin, h.hz - origin) AS t,
-        |    (pday IS NOT NULL)::INT AS e
-        |  FROM us, hz h),
-        |tm AS (SELECT t, sum(e)::BIGINT AS d, count(*)::BIGINT AS c
-        |  FROM uu GROUP BY 1),
-        |tt AS (SELECT count(*)::BIGINT AS ntot FROM uu),
-        |risk AS (
-        |  SELECT t, d, n_risk FROM (
-        |    SELECT t, d, ntot - coalesce(sum(c) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS n_risk
-        |    FROM tm, tt)
-        |  WHERE d > 0),
+      s"""WITH RECURSIVE $survivalRiskSql,
         |ord AS (SELECT t, d, n_risk,
         |    row_number() OVER (ORDER BY t) AS i
         |  FROM risk),
@@ -3111,32 +2690,12 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM granger_ml_out""".stripMargin,
 
     "q328_nelson_aalen" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) // 86400000000 AS day, event_type
-        |  FROM events),
-        |hz AS (SELECT max(day) AS hz FROM ev),
-        |us AS (
-        |  SELECT user_id, min(day) AS origin,
-        |    min(CASE WHEN event_type = 'purchase' THEN day END) AS pday
-        |  FROM ev GROUP BY 1),
-        |uu AS (
-        |  SELECT coalesce(pday - origin, h.hz - origin) AS t,
-        |    (pday IS NOT NULL)::INT AS e
-        |  FROM us, hz h),
-        |tm AS (SELECT t, sum(e)::BIGINT AS d, count(*)::BIGINT AS c
-        |  FROM uu GROUP BY 1),
-        |tt AS (SELECT count(*)::BIGINT AS ntot FROM uu),
-        |risk AS (
-        |  SELECT t, d,
-        |    (ntot - coalesce(sum(c) OVER (ORDER BY t
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
-        |      ::BIGINT AS n_risk
-        |  FROM tm, tt)
-        |SELECT t, n_risk, d,
+      s"""WITH $survivalRiskSql
+        |SELECT t, n_risk::BIGINT AS n_risk, d,
         |  (sum((d * 1000000) // n_risk) OVER (ORDER BY t
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT
         |    AS cum_hazard_ppm
-        |FROM risk WHERE d > 0""".stripMargin,
+        |FROM risk""".stripMargin,
 
     "q327_kruskal_wallis" ->
       s"""WITH $CausalPanelCte,

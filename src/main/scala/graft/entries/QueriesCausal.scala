@@ -13,25 +13,6 @@ import graft.sim.Similarity
   * single registry map; entry bodies are verbatim. */
 private[graft] trait QueriesCausal { this: SparkEntry.type =>
 
-  /** The q371/q377/q378/q382 block design over `Panels.widePanel3(32, ·)`:
-    * every pair at chain distance 1..9 of its 160 series as
-    * (pair "a<b", tier, y = b, x = a) — 1,395 hypotheses. Tier `ab`: the
-    * two aggregates of one block; `as`: an aggregate and a source of one
-    * block; `null`: everything else (sources are mutually independent,
-    * blocks are independent of each other).
-    */
-  private lazy val BlockDesign: IndexedSeq[(String, String, String, String)] = {
-    def snm(i: Int) = s"G${"%02d".format(i / 5)}X${i % 5}"
-    for { dd <- 1 to 9; i <- 0 until 160 - dd } yield {
-      val tier =
-        if (i / 5 != (i + dd) / 5) "null"
-        else if (i % 5 >= 3 && (i + dd) % 5 >= 3) "ab"
-        else if (i % 5 >= 3 || (i + dd) % 5 >= 3) "as"
-        else "null"
-      (s"${snm(i)}<${snm(i + dd)}", tier, snm(i + dd), snm(i))
-    }
-  }
-
   /** The [[BlockDesign]] hypotheses' k=1 Wald frame (pair, tier, …,
     * t2_milli) on a 60-observation block panel dumped under `dump`: one
     * pair-restricted sparse moment pass, then `Causal.waldK1`.
@@ -48,6 +29,274 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       col("t").between(0, 59))
     graft.metrics.Causal.waldK1(graft.metrics.Causal.structuralBetas(mom,
       cands.toDF("pair", "tier", "y", "x", "sib")))
+  }
+
+  /** One census row per multiplicity rule over a scored [[BlockDesign]]
+    * frame: (rule, n_hyp, n_disc, n_disc_ab, n_disc_as, n_false) for each
+    * (rule, 0/1 discovery column), plus the tier sizes (n_ab, n_as) when
+    * `tierSizes`.
+    */
+  private def blockRules(scored: DataFrame, rules: Seq[(String, String)],
+      tierSizes: Boolean = false): DataFrame = rules.map { case (rule, c) =>
+    def cnt(cond: Column) = sum(when(cond, 1L).otherwise(0L))
+    def found(t: String) = cnt(col(c) === 1 && col("tier") === t)
+    scored.agg(lit(rule).as("rule"), Seq(count(lit(1)).as("n_hyp"),
+      sum(col(c)).as("n_disc"), found("ab").as("n_disc_ab"),
+      found("as").as("n_disc_as"), found("null").as("n_false")) ++
+      (if (tierSizes) Seq(cnt(col("tier") === "ab").as("n_ab"),
+        cnt(col("tier") === "as").as("n_as")) else Nil): _*)
+  }.reduce(_ unionByName _)
+
+  /** X<i> minus the kernel's KNOWN C-family trend and season
+    * (Kernel.scala's precompute, same JVM Math calls and expression
+    * order): trend = 0.01·i·0.5·t on the index; season =
+    * 0.5·(sin(2π·τ/12 + φ) + 0.5·cos(4π·τ/12 + φ)), φ = 2π(i−1)/8, τ the
+    * `clock` column (`time` for the continuous-season families).
+    */
+  private def knownDetrended(i: Int, clock: String): Column = {
+    val phase = 2.0 * math.Pi * (i - 1) / 8.0
+    col(s"X$i") - lit(0.01 * i * 0.5) * col("t") -
+      lit(0.5) * (sin(lit(2.0 * math.Pi) * col(clock) / lit(12.0) + lit(phase))
+        + lit(0.5) * cos(lit(4.0 * math.Pi) * col(clock) / lit(12.0)
+          + lit(phase)))
+  }
+
+  /** The period-12 harmonic basis (s1, c1, s2, c2) over the `clock` column. */
+  private def harmonicBasis(clock: String): Seq[Column] = Seq(
+    sin(lit(2.0 * math.Pi) * col(clock) / lit(12.0)).as("s1"),
+    cos(lit(2.0 * math.Pi) * col(clock) / lit(12.0)).as("c1"),
+    sin(lit(4.0 * math.Pi) * col(clock) / lit(12.0)).as("s2"),
+    cos(lit(4.0 * math.Pi) * col(clock) / lit(12.0)).as("c2"))
+
+  /** The func-transformed regressor `func` of X<i> — cos(X·π/2),
+    * sin(X·π/2), X² or X³ — named by [[funcPrefix]] (cX<i>, sX<i>,
+    * p2X<i>, p3X<i>), the channel [[c1Links]] and [[d3Links]] name.
+    */
+  private def funcChannel(func: String, i: Int): Column = {
+    val x = col(s"X$i")
+    (func match {
+      case "cos" => cos(x * lit(math.Pi / 2.0))
+      case "sin" => sin(x * lit(math.Pi / 2.0))
+      case "power2" => x * x
+      case "power3" => x * x * x
+    }).as(s"${funcPrefix(func)}X$i")
+  }
+
+  /** Every func channel of X1..X6: the regressors [[c1Links]] names. */
+  private def c1FuncCols: Seq[Column] = for {
+    i <- 1 to 6; f <- Seq("cos", "sin", "power2", "power3")
+  } yield funcChannel(f, i)
+
+  /** q373/q375's blind-adjusted recovery on one 6-var lag-2 C-family cell
+    * dumped under `dump`: stage 1 estimates each series' trend and four
+    * harmonics (q372's 30 regressions, basis over `clock`, window
+    * 0..`last`); stage 2 subtracts the ESTIMATES by integer channel
+    * arithmetic and recovers the func-link weights for the blind and the
+    * known-detrended targets from ONE moment pass (window 2..`last`). The
+    * regressors align by index shift, or by the kernel's nearest-lag rule
+    * (`Lagged.nearestLagIndicesView`) when `nearestLag`.
+    */
+  private def blindRecovery(s: SparkSession, cfg: graft.core.GenConfig,
+      dump: String, clock: String, nearestLag: Boolean, last: Int)
+      : DataFrame = {
+    import s.implicits._
+    val links = c1Links(cfg.family)
+    val gen = dumpGen(s, dump,
+      Generate.wideFast(s, Seq(cfg)).select(
+        Seq("t", clock).distinct.map(col) ++
+          (1 to 6).map(i => col(s"X$i")) ++
+          (1 to 6).map(i => knownDetrended(i, clock).as(s"X${i}t")) ++
+          harmonicBasis(clock) ++ c1FuncCols: _*))
+    def m(c: String): Column = Panels.milli(col(c))
+    // ---- stage 1: q372's component estimation on THIS dump ----
+    val targets1 = (1 to 6).map(i =>
+      gen.select(lit(s"X$i@0").as("vs"), col("t"), m(s"X$i").as("v")))
+    val tChan = gen.select(lit("tt@0").as("vs"), col("t"),
+      col("t").cast("long").as("v"))
+    val basis = Seq("s1", "c1", "s2", "c2").map(b =>
+      gen.select(lit(s"$b@0").as("vs"), col("t"), m(b).as("v")))
+    val mom1 = graft.metrics.Causal.virtualCrossMoments(
+      (targets1 ++ Seq(tChan) ++ basis).reduce(_ unionByName _),
+      col("t").between(0, last))
+    val hLinksDf = harmonicLinks(cfg.family).toDF("series", "component", "y",
+      "x", "sib", "truth_ppm", "in_model")
+    val comps = graft.metrics.Causal.structuralBetas(mom1, hLinksDf)
+      .groupBy("series")
+      .agg(
+        max(when(col("component") === "trend", col("beta_ppm"))).as("bt"),
+        max(when(col("component") === "s1", col("beta_ppm"))).as("bs1"),
+        max(when(col("component") === "c1", col("beta_ppm"))).as("bc1"),
+        max(when(col("component") === "s2", col("beta_ppm"))).as("bs2"),
+        max(when(col("component") === "c2", col("beta_ppm"))).as("bc2"))
+      .localCheckpoint()
+    // ---- stage 2: blind + known target channels, func regressors ----
+    val blind = (1 to 6).map { i =>
+      gen.crossJoin(broadcast(comps.where(col("series") === s"X$i")
+          .drop("series")))
+        .select(lit(s"X$i^@0").as("vs"), col("t"),
+          expr(s"""(1000000 * floor(X$i * 1000)
+            |  - bt * t
+            |  - bs1 * floor(s1 * 1000) - bc1 * floor(c1 * 1000)
+            |  - bs2 * floor(s2 * 1000) - bc2 * floor(c2 * 1000))
+            |div 1000000""".stripMargin).cast("long").as("v"))
+    }
+    val known = (1 to 6).map(i =>
+      gen.select(lit(s"X$i~@0").as("vs"), col("t"), m(s"X${i}t").as("v")))
+    // ONE union+sort alignment pass for all lag multiples (q365's fix)
+    lazy val lx = graft.ops.Lagged.nearestLagIndicesView(
+      gen.select(col("t"), col("time")), "t", "time", Nil,
+      links.map(_._3).filter(_ > 0).distinct.sorted).localCheckpoint(false)
+    val regs = links.map(l => (l._5.split("@")(0), l._5, l._3))
+      .distinct.map {
+        case (chan, vs, k) if nearestLag && k > 0 =>
+          lx.where(col("lag_mult") === k)
+            .join(broadcast(gen.select(col("t").as("lag_idx"),
+              m(chan).as("v"))), Seq("lag_idx"))
+            .select(lit(vs).as("vs"), col("t"), col("v"))
+        case (chan, vs, k) =>
+          gen.select(lit(vs).as("vs"), (col("t") + k).as("t"), m(chan).as("v"))
+      }
+    val mom2 = graft.metrics.Causal.virtualCrossMoments(
+      (blind ++ known ++ regs).reduce(_ unionByName _),
+      col("t").between(2, last))
+    val inModel = graft.core.Parser.truthLinks(cfg.family, 6, 2)
+      .filter(_.source != "U")
+      .map(l => l.target -> (if (Set("cos", "sin")(l.func)) 1 else 0))
+      .toMap
+    def linksDf(blindY: Boolean): DataFrame = links.map { l =>
+      val y = if (blindY) s"${l._1}^@0" else l._6
+      (l._1, l._2, l._3, l._4, y, l._5, l._7, l._9, inModel(l._1))
+    }.toDF("target", "source", "lag", "func", "y", "x", "sib",
+      "effective_ppm", "in_model")
+    val kn = graft.metrics.Causal.structuralBetas(mom2, linksDf(false))
+      .select(col("target"), col("source"), col("lag"), col("func"),
+        col("in_model"), col("effective_ppm"),
+        col("beta_ppm").as("beta_known_ppm"))
+    val bl = graft.metrics.Causal.structuralBetas(mom2, linksDf(true))
+      .select(col("target"), col("source"), col("lag"),
+        col("beta_ppm").as("beta_blind_ppm"))
+    kn.join(bl, Seq("target", "source", "lag"))
+      .withColumn("blind_vs_known_ppm",
+        abs(col("beta_blind_ppm") - col("beta_known_ppm")))
+  }
+
+  /** q358/q368's streamed design tuples: the A1 6-var lag-2 cell's first
+    * 400 rows dumped under `dump`, one (link, yv, xv, sv, t) row per
+    * [[streamWeightLinks]] link and t in 2..399 (x at t−lag, the sibling
+    * at its own lag, sv = 0 without one); and the links' decode frame
+    * (link, target, source, lag, has_sib, effective_ppm).
+    */
+  private def streamWeightDesign(s: SparkSession, dump: String)
+      : (DataFrame, DataFrame) = {
+    import s.implicits._
+    val cfg = Grid.cell("A1", 500, 6, 2)
+    val gen = dumpGen(s, dump,
+      Generate.wideFast(s, Seq(cfg)).where(col("t") < 400)
+        .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
+    def lagged(l: Int) = gen.select(col("t").as(s"t$l") +:
+      (1 to 6).map(i => col(s"X$i").as(s"L${l}X$i")): _*)
+    val gl = gen
+      .join(lagged(1), col("t1") === col("t") - 1)
+      .join(lagged(2), col("t2") === col("t") - 2)
+      .where(col("t").between(2, 399))
+    def q(series: String, lag: Int): Column =
+      Panels.milli(if (lag == 0) col(series) else col(s"L$lag$series"))
+    val tuples = streamWeightLinks().map { case (k, tgt, src, lag, hs,
+        sibSeries, sibLag, _) =>
+      gl.select(lit(k).as("link"), q(tgt, 0).as("yv"),
+        q(src, lag).as("xv"),
+        (if (hs == 1) q(sibSeries, sibLag) else lit(0L)).as("sv"),
+        col("t"))
+    }.reduce(_ unionByName _)
+    val linksDf = streamWeightLinks()
+      .map(l => (l._1, l._2, l._3, l._4, l._5, l._8))
+      .toDF("link", "target", "source", "lag", "has_sib", "effective_ppm")
+    (tuples, linksDf)
+  }
+
+  /** The file signature (name:length:mtime per parquet file, by name) of
+    * the dump under `dump`, which keys a stream's split cache: dumpGen
+    * rewrites the dump every run, so a kernel or grid change invalidates
+    * the splits by construction instead of by a hand-bumped version tag.
+    */
+  private def dumpSignature(dump: String): String =
+    Option(new java.io.File(s"$genDir/$dump").listFiles())
+      .getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      .map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
+      .mkString(";")
+
+  /** q381/q383's robust-se panel and score rows: `xe` maps the (j, d)
+    * grid of 120 pairs × 240 days to (j, d, x, e); pairs
+    * j < 20 are links (y = (x·500) div 1000 + e), the rest nulls (y = e).
+    * The panel (j, tier, d, x, y) is dumped under `dump`. Returns the
+    * classical k=1 inference per pair from the raw sums (j, tier, n, sy,
+    * sx, cjj, beta_ppm, se2_ppm2, t2_cl_milli) and each row's exact-integer
+    * score (j, d, mm):
+    * mm = (n·x − Σx)·((10⁶·(n·y − Σy) − β_ppm·(n·x − Σx)) div 10⁶).
+    */
+  private def robustSeScores(s: SparkSession, dump: String,
+      xe: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val n = 240
+    val grid = s.range(0, 120).select(col("id").as("j"))
+      .crossJoin(s.range(0, n.toLong).select(col("id").as("d")))
+    val pan = dumpGen(s, dump, xe(grid).select(col("j"),
+      when(col("j") < 20, lit("link")).otherwise(lit("null")).as("tier"),
+      col("d"), col("x"),
+      (when(col("j") < 20, expr("(x * 500) div 1000"))
+        .otherwise(lit(0L)).cast("long") + col("e")).as("y")))
+    val sums = pan.groupBy("j", "tier")
+      .agg(count(lit(1)).as("n"), sum("y").as("sy"), sum("x").as("sx"),
+        sum(expr("y*y")).as("syy"), sum(expr("x*x")).as("sxx"),
+        sum(expr("x*y")).as("sxy"))
+      .withColumn("ss", lit(0L)).withColumn("sss", lit(0L))
+      .withColumn("ssy", lit(0L)).withColumn("sxs", lit(0L))
+      .withColumn("has_sib", lit(0))
+    val inf = graft.metrics.Causal.structuralInferenceFromSums(
+        graft.metrics.Causal.structuralBetasFromSums(sums))
+      .select(col("j"), col("tier"), col("n"), col("sy"), col("sx"),
+        col("cjj"), col("beta_ppm"), col("se2_ppm2"),
+        col("t2_milli").as("t2_cl_milli"))
+      .localCheckpoint()
+    val scores = pan.join(broadcast(inf.select(col("j"), col("sy"),
+        col("sx"), col("beta_ppm"))), Seq("j"))
+      .select(col("j"), col("d"), expr(
+        s"""cast(($n * x - sx) as decimal(38,0)) *
+          |  ((1000000 * ($n * y - sy)
+          |    - cast(beta_ppm as decimal(38,0)) * ($n * x - sx))
+          |   div 1000000)""".stripMargin).as("mm"))
+      .localCheckpoint()
+    (inf, scores)
+  }
+
+  /** q292/q328's survival risk table over the events: per user, t = days
+    * from the first event to the first purchase (right-censored at the
+    * corpus horizon); per event time t with d > 0 purchases, the at-risk
+    * count n_risk (users whose t is not below it). Columns (t, d, n_risk).
+    */
+  private def survivalRisk(s: SparkSession, d: String): DataFrame = {
+    val ev = events(s, d).select(col("user_id"),
+      expr("(ts div 1000) div 86400000000").as("day"),
+      col("event_type"))
+    val horizon = ev.agg(max("day").as("hz"))
+    val users = ev.groupBy("user_id")
+      .agg(min("day").as("origin"),
+        min(when(col("event_type") === "purchase", col("day")))
+          .as("pday"))
+      .crossJoin(broadcast(horizon))
+      .select(
+        coalesce(col("pday") - col("origin"),
+          col("hz") - col("origin")).as("t"),
+        col("pday").isNotNull.cast("int").as("ev"))
+    val times = users.groupBy("t")
+      .agg(sum("ev").as("d"), count(lit(1)).as("c"))
+    val wt = Window.orderBy("t")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val tot = users.agg(count(lit(1)).as("ntot"))
+    times.crossJoin(broadcast(tot))
+      .select(col("t"), col("d"),
+        (col("ntot") - coalesce(sum("c").over(wt), lit(0L))).as("n_risk"))
+      .where(col("d") > 0)
   }
 
   private[graft] def queriesCausal: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -655,31 +904,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // higher-order fold the Holt entry uses, replayed by the oracle as a
     // recursive CTE. S ← (S·(n_t − d_t)) div n_t at each event time
     "q292_kaplan_meier" -> ((s, d) => {
-      val ev = events(s, d).select(col("user_id"),
-        expr("(ts div 1000) div 86400000000").as("day"),
-        col("event_type"))
-      val horizon = ev.agg(max("day").as("hz"))
-      val users = ev.groupBy("user_id")
-        .agg(min("day").as("origin"),
-          min(when(col("event_type") === "purchase", col("day")))
-            .as("pday"))
-        .crossJoin(broadcast(horizon))
-        .select(
-          coalesce(col("pday") - col("origin"),
-            col("hz") - col("origin")).as("t"),
-          col("pday").isNotNull.cast("int").as("ev"))
-      val times = users.groupBy("t")
-        .agg(sum("ev").as("d"), count(lit(1)).as("c"))
-      val wt = Window.orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val tot = users.agg(count(lit(1)).as("ntot"))
-      val risk = times.crossJoin(broadcast(tot))
-        .select(col("t"), col("d"),
-          (col("ntot") - coalesce(sum("c").over(wt), lit(0L)))
-            .as("n_risk"))
-        .where(col("d") > 0)
-      risk.agg(sort_array(collect_list(struct(col("t"), col("n_risk"),
-          col("d")))).as("arr"))
+      survivalRisk(s, d).agg(sort_array(collect_list(struct(col("t"),
+          col("n_risk"), col("d")))).as("arr"))
         .select(explode(expr(
           """aggregate(arr,
             |  named_struct('s', cast(1000000 as bigint),
@@ -1906,16 +2132,10 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .select(concat(col("cause"), lit("|"), col("effect")).as("pair"),
           col("yv"), col("pv"), col("qv"), col("day"))
       // split cache keyed on the DUMP's file identity (the events-path
-      // discipline): dumpGen rewrites q344_gen every run, so a kernel or
-      // grid change invalidates the splits by construction instead of by
-      // a hand-bumped version tag
-      val dumpSig = Option(new java.io.File(s"$genDir/q344_gen")
-          .listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
-        .mkString(";")
+      // discipline)
       val log = graft.streaming.StatefulOps.grangerSumsTws(s, tuples,
-        "day", 200L, s"$genDir/q344_granger_split", s"q344:$dumpSig",
+        "day", 200L, s"$genDir/q344_granger_split",
+        s"q344:${dumpSignature("q344_gen")}",
         s"graft_stream_granger_${System.nanoTime()}")
       val sums = log.select(
         substring_index(col("pair"), "|", 1).as("cause"),
@@ -2061,9 +2281,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // candidate-volume census: the O(E·d^k)-vs-O(p^(k+2)) claim behind
     // the whole PC-stable ladder, pinned as DATA instead of asserted in
     // comments. Per conditioning order: the stable candidate count
-    // (distinct tuples the adjacency restriction actually enumerates,
-    // re-derived from the skeleton's own keep0/edge/edge2 columns with
-    // the implementation's exact side-set semantics) next to the
+    // (the distinct tuples Causal.stableCand enumerates for the ladder,
+    // counted over the skeleton's own keep0/edge/edge2 columns) next to the
     // unrestricted twin's closed-form volume (survivors × C(S-2, k)).
     // On the 8-cell block panel the cand3 ratio alone is ~3 orders of
     // magnitude — the census row IS the scale argument, hash-checked
@@ -2074,27 +2293,10 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .select(col("a"), col("b"), col("keep0"), col("edge"),
           col("edge2"), col("edge3"))
         .localCheckpoint()
-      def sym(f: DataFrame): DataFrame = f
-        .unionByName(f.select(col("b").as("a"), col("a").as("b")))
-        .select(col("a").as("x"), col("b").as("y"))
       val k0 = sk.where(col("keep0") === 1).select(col("a"), col("b"))
       val e1 = sk.where(col("edge") === 1).select(col("a"), col("b"))
       val e2 = sk.where(col("edge2") === 1).select(col("a"), col("b"))
-      val adj0 = sym(k0); val adj1 = sym(e1); val adj2 = sym(e2)
-      def sideCands(pairsF: DataFrame, adj: DataFrame, k: Int)
-          : DataFrame = {
-        val conds = Seq("z", "w", "u").take(k)
-        def side(key: String, other: String): DataFrame =
-          conds.foldLeft(pairsF) { (df, cn) =>
-            df.join(broadcast(adj.select(col("x").as(key),
-              col("y").as(cn))), Seq(key))
-          }.where(conds.map(cn => col(cn) =!= col(other))
-              .reduce(_ && _) &&
-            conds.zip(conds.tail).map { case (p, q) => col(p) < col(q) }
-              .foldLeft(lit(true))(_ && _))
-            .select((Seq("a", "b") ++ conds).map(col): _*)
-        side("a", "b").unionByName(side("b", "a")).distinct()
-      }
+      def stable(k: Int) = graft.metrics.Causal.stableCand(sk, k)
       def cnt(name: String, variant: String, f: DataFrame): DataFrame =
         f.agg(count(lit(1)).cast("long").as("n"))
           .select(lit(name).as("stage"), lit(variant).as("variant"),
@@ -2112,13 +2314,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             }).cast("long").as("n"))
       cnt("pairs", "both", sk)
         .unionByName(cnt("keep0", "both", k0))
-        .unionByName(cnt("cand1", "stable", sideCands(k0, adj0, 1)))
+        .unionByName(cnt("cand1", "stable", stable(1)))
         .unionByName(unres("cand1", k0, 1))
         .unionByName(cnt("edge1", "both", e1))
-        .unionByName(cnt("cand2", "stable", sideCands(e1, adj1, 2)))
+        .unionByName(cnt("cand2", "stable", stable(2)))
         .unionByName(unres("cand2", e1, 2))
         .unionByName(cnt("edge2", "both", e2))
-        .unionByName(cnt("cand3", "stable", sideCands(e2, adj2, 3)))
+        .unionByName(cnt("cand3", "stable", stable(3)))
         .unionByName(unres("cand3", e2, 3))
         .unionByName(cnt("edge3", "both",
           sk.where(col("edge3") === 1)))
@@ -2530,107 +2732,10 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // trend and collapse by ≥ 300k ppm. The full pipeline (estimate →
     // adjust → recover) works without being told anything, and the
     // known-twin column prices each adjustment error per link.
-    "q373_blind_adjusted_recovery" -> ((s, d) => {
-      val cfg = Grid.forFamily("C1").find(c =>
-        c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2).get
-      val links = c1Links()
-      def trendC(i: Int): Column = lit(0.01 * (i + 1) * 0.5) * col("t")
-      def seasonC(i: Int): Column = {
-        val phase = 2.0 * math.Pi * i / 8.0
-        lit(0.5) * (sin(lit(2.0 * math.Pi) * col("t") / lit(12.0)
-            + lit(phase))
-          + lit(0.5) * cos(lit(4.0 * math.Pi) * col("t") / lit(12.0)
-            + lit(phase)))
-      }
-      val halfPi = math.Pi / 2.0
-      val gen = dumpGen(s, "q373_gen",
-        Generate.wideFast(s, Seq(cfg)).select(
-          Seq(col("t")) ++
-            (1 to 6).map(i => col(s"X$i")) ++
-            (1 to 6).map(i => (col(s"X$i") - trendC(i - 1) -
-              seasonC(i - 1)).as(s"X${i}t")) ++
-            Seq(
-              sin(lit(2.0 * math.Pi) * col("t") / lit(12.0)).as("s1"),
-              cos(lit(2.0 * math.Pi) * col("t") / lit(12.0)).as("c1"),
-              sin(lit(4.0 * math.Pi) * col("t") / lit(12.0)).as("s2"),
-              cos(lit(4.0 * math.Pi) * col("t") / lit(12.0)).as("c2")) ++
-            (1 to 6).flatMap(i => Seq(
-              cos(col(s"X$i") * lit(halfPi)).as(s"cX$i"),
-              sin(col(s"X$i") * lit(halfPi)).as(s"sX$i"),
-              (col(s"X$i") * col(s"X$i")).as(s"p2X$i"),
-              (col(s"X$i") * col(s"X$i") * col(s"X$i"))
-                .as(s"p3X$i"))): _*))
-      // ---- stage 1: q372's component estimation on THIS dump ----
-      val targets1 = (1 to 6).map(i =>
-        gen.select(lit(s"X$i@0").as("vs"), col("t"),
-          Panels.milli(col(s"X$i")).as("v")))
-      val tChan = gen.select(lit("tt@0").as("vs"), col("t"),
-        col("t").cast("long").as("v"))
-      val basis = Seq("s1", "c1", "s2", "c2").map(b =>
-        gen.select(lit(s"$b@0").as("vs"), col("t"),
-          Panels.milli(col(b)).as("v")))
-      val mom1 = graft.metrics.Causal.virtualCrossMoments(
-        (targets1 ++ Seq(tChan) ++ basis).reduce(_ unionByName _),
-        col("t").between(0, 491))
-      import s.implicits._
-      val hLinksDf = harmonicLinks().toDF("series", "component", "y",
-        "x", "sib", "truth_ppm", "in_model")
-      val comps = graft.metrics.Causal.structuralBetas(mom1, hLinksDf)
-        .groupBy("series")
-        .agg(
-          max(when(col("component") === "trend", col("beta_ppm")))
-            .as("bt"),
-          max(when(col("component") === "s1", col("beta_ppm")))
-            .as("bs1"),
-          max(when(col("component") === "c1", col("beta_ppm")))
-            .as("bc1"),
-          max(when(col("component") === "s2", col("beta_ppm")))
-            .as("bs2"),
-          max(when(col("component") === "c2", col("beta_ppm")))
-            .as("bc2"))
-        .localCheckpoint()
-      // ---- stage 2: blind + known target channels, func regressors ----
-      def m(c: String): Column = Panels.milli(col(c))
-      val blind = (1 to 6).map { i =>
-        gen.crossJoin(broadcast(comps.where(col("series") === s"X$i")
-            .drop("series")))
-          .select(lit(s"X$i^@0").as("vs"), col("t"),
-            expr(s"""(1000000 * ${s"floor(X$i * 1000)"}
-              |  - bt * t
-              |  - bs1 * floor(s1 * 1000) - bc1 * floor(c1 * 1000)
-              |  - bs2 * floor(s2 * 1000) - bc2 * floor(c2 * 1000))
-              |div 1000000""".stripMargin).cast("long").as("v"))
-      }
-      val known = (1 to 6).map(i =>
-        gen.select(lit(s"X$i~@0").as("vs"), col("t"),
-          m(s"X${i}t").as("v")))
-      val regs = links.map(l => (l._5.split("@")(0), l._5, l._3))
-        .distinct.map { case (series, vs, lag) =>
-          gen.select(lit(vs).as("vs"), (col("t") + lag).as("t"),
-            m(series).as("v")) }
-      val mom2 = graft.metrics.Causal.virtualCrossMoments(
-        (blind ++ known ++ regs).reduce(_ unionByName _),
-        col("t").between(2, 491))
-      val inModel = graft.core.Parser.truthLinks("C1", 6, 2)
-        .filter(_.source != "U")
-        .map(l => l.target -> (if (Set("cos", "sin")(l.func)) 1 else 0))
-        .toMap
-      def linksDf(blindY: Boolean): DataFrame = links.map { l =>
-        val y = if (blindY) s"${l._1}^@0" else l._6
-        (l._1, l._2, l._3, l._4, y, l._5, l._7, l._9, inModel(l._1))
-      }.toDF("target", "source", "lag", "func", "y", "x", "sib",
-        "effective_ppm", "in_model")
-      val kn = graft.metrics.Causal.structuralBetas(mom2, linksDf(false))
-        .select(col("target"), col("source"), col("lag"), col("func"),
-          col("in_model"), col("effective_ppm"),
-          col("beta_ppm").as("beta_known_ppm"))
-      val bl = graft.metrics.Causal.structuralBetas(mom2, linksDf(true))
-        .select(col("target"), col("source"), col("lag"),
-          col("beta_ppm").as("beta_blind_ppm"))
-      kn.join(bl, Seq("target", "source", "lag"))
-        .withColumn("blind_vs_known_ppm",
-          abs(col("beta_blind_ppm") - col("beta_known_ppm")))
-    }),
+    "q373_blind_adjusted_recovery" -> ((s, d) => blindRecovery(s,
+      Grid.forFamily("C1").find(c =>
+        c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2).get,
+      "q373_gen", clock = "t", nearestLag = false, last = 491)),
 
     // the q372/q373 arc under IRREGULAR sampling (r12 verdict #3): C2 —
     // the deployment case where the season basis must be evaluated at
@@ -2657,117 +2762,9 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // basis cannot represent and collapse by 319k (X1 cubic) and 328k
     // (X3 quadratic) ppm — q373's disposition, reproduced under the
     // irregular clock
-    "q375_blind_harmonic_irregular" -> ((s, d) => {
-      val cfg = Grid.cell("C2", 500, 6, 2)
-      val links = c1Links("C2")
-      def trendC(i: Int): Column = lit(0.01 * (i + 1) * 0.5) * col("t")
-      def seasonC(i: Int): Column = {
-        val phase = 2.0 * math.Pi * i / 8.0
-        lit(0.5) * (sin(lit(2.0 * math.Pi) * col("time") / lit(12.0)
-            + lit(phase))
-          + lit(0.5) * cos(lit(4.0 * math.Pi) * col("time") / lit(12.0)
-            + lit(phase)))
-      }
-      val halfPi = math.Pi / 2.0
-      val gen = dumpGen(s, "q375_gen",
-        Generate.wideFast(s, Seq(cfg)).select(
-          Seq(col("t"), col("time")) ++
-            (1 to 6).map(i => col(s"X$i")) ++
-            (1 to 6).map(i => (col(s"X$i") - trendC(i - 1) -
-              seasonC(i - 1)).as(s"X${i}t")) ++
-            Seq(
-              sin(lit(2.0 * math.Pi) * col("time") / lit(12.0)).as("s1"),
-              cos(lit(2.0 * math.Pi) * col("time") / lit(12.0)).as("c1"),
-              sin(lit(4.0 * math.Pi) * col("time") / lit(12.0)).as("s2"),
-              cos(lit(4.0 * math.Pi) * col("time") / lit(12.0)).as("c2")) ++
-            (1 to 6).flatMap(i => Seq(
-              cos(col(s"X$i") * lit(halfPi)).as(s"cX$i"),
-              sin(col(s"X$i") * lit(halfPi)).as(s"sX$i"),
-              (col(s"X$i") * col(s"X$i")).as(s"p2X$i"),
-              (col(s"X$i") * col(s"X$i") * col(s"X$i"))
-                .as(s"p3X$i"))): _*))
-      // ---- stage 1: blind component estimation, continuous-τ basis ----
-      val targets1 = (1 to 6).map(i =>
-        gen.select(lit(s"X$i@0").as("vs"), col("t"),
-          Panels.milli(col(s"X$i")).as("v")))
-      val tChan = gen.select(lit("tt@0").as("vs"), col("t"),
-        col("t").cast("long").as("v"))
-      val basis = Seq("s1", "c1", "s2", "c2").map(b =>
-        gen.select(lit(s"$b@0").as("vs"), col("t"),
-          Panels.milli(col(b)).as("v")))
-      val mom1 = graft.metrics.Causal.virtualCrossMoments(
-        (targets1 ++ Seq(tChan) ++ basis).reduce(_ unionByName _),
-        col("t").between(0, 499))
-      import s.implicits._
-      val hLinksDf = harmonicLinks("C2").toDF("series", "component", "y",
-        "x", "sib", "truth_ppm", "in_model")
-      val comps = graft.metrics.Causal.structuralBetas(mom1, hLinksDf)
-        .groupBy("series")
-        .agg(
-          max(when(col("component") === "trend", col("beta_ppm")))
-            .as("bt"),
-          max(when(col("component") === "s1", col("beta_ppm")))
-            .as("bs1"),
-          max(when(col("component") === "c1", col("beta_ppm")))
-            .as("bc1"),
-          max(when(col("component") === "s2", col("beta_ppm")))
-            .as("bs2"),
-          max(when(col("component") === "c2", col("beta_ppm")))
-            .as("bc2"))
-        .localCheckpoint()
-      // ---- stage 2: blind + known channels, NEAREST-LAG regressors ----
-      def m(c: String): Column = Panels.milli(col(c))
-      val blind = (1 to 6).map { i =>
-        gen.crossJoin(broadcast(comps.where(col("series") === s"X$i")
-            .drop("series")))
-          .select(lit(s"X$i^@0").as("vs"), col("t"),
-            expr(s"""(1000000 * ${s"floor(X$i * 1000)"}
-              |  - bt * t
-              |  - bs1 * floor(s1 * 1000) - bc1 * floor(c1 * 1000)
-              |  - bs2 * floor(s2 * 1000) - bc2 * floor(c2 * 1000))
-              |div 1000000""".stripMargin).cast("long").as("v"))
-      }
-      val known = (1 to 6).map(i =>
-        gen.select(lit(s"X$i~@0").as("vs"), col("t"),
-          m(s"X${i}t").as("v")))
-      val spine = gen.select(col("t"), col("time"))
-      val lagsNeeded = links.map(_._3).filter(_ > 0).distinct.sorted
-      // ONE union+sort alignment pass for all lag multiples (q365's fix)
-      val lx = graft.ops.Lagged.nearestLagIndicesView(
-        spine, "t", "time", Nil, lagsNeeded).localCheckpoint(false)
-      val regs = links.map(l => (l._5.split("@")(0), l._5, l._3))
-        .distinct.map {
-          case (chan, vs, 0) =>
-            gen.select(lit(vs).as("vs"), col("t"), m(chan).as("v"))
-          case (chan, vs, k) =>
-            lx.where(col("lag_mult") === k)
-              .join(broadcast(gen.select(col("t").as("lag_idx"),
-                m(chan).as("v"))), Seq("lag_idx"))
-              .select(lit(vs).as("vs"), col("t"), col("v"))
-        }
-      val mom2 = graft.metrics.Causal.virtualCrossMoments(
-        (blind ++ known ++ regs).reduce(_ unionByName _),
-        col("t").between(2, 499))
-      val inModel = graft.core.Parser.truthLinks("C2", 6, 2)
-        .filter(_.source != "U")
-        .map(l => l.target -> (if (Set("cos", "sin")(l.func)) 1 else 0))
-        .toMap
-      def linksDf(blindY: Boolean): DataFrame = links.map { l =>
-        val y = if (blindY) s"${l._1}^@0" else l._6
-        (l._1, l._2, l._3, l._4, y, l._5, l._7, l._9, inModel(l._1))
-      }.toDF("target", "source", "lag", "func", "y", "x", "sib",
-        "effective_ppm", "in_model")
-      val kn = graft.metrics.Causal.structuralBetas(mom2, linksDf(false))
-        .select(col("target"), col("source"), col("lag"), col("func"),
-          col("in_model"), col("effective_ppm"),
-          col("beta_ppm").as("beta_known_ppm"))
-      val bl = graft.metrics.Causal.structuralBetas(mom2, linksDf(true))
-        .select(col("target"), col("source"), col("lag"),
-          col("beta_ppm").as("beta_blind_ppm"))
-      kn.join(bl, Seq("target", "source", "lag"))
-        .withColumn("blind_vs_known_ppm",
-          abs(col("beta_blind_ppm") - col("beta_known_ppm")))
-    }),
+    "q375_blind_harmonic_irregular" -> ((s, d) => blindRecovery(s,
+      Grid.cell("C2", 500, 6, 2), "q375_gen", clock = "time",
+      nearestLag = true, last = 499)),
 
     // FDR vs FWER — the two multiplicity regimes measured head-to-head
     // on block-structured truth (q370 proved BH controls its rate;
@@ -2797,25 +2794,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .withColumn("disc_bonf",
           (col("t2_milli") >= lit(lad.head)).cast("int"))
         .localCheckpoint()
-      def ruleAgg(rule: String, disc: Column): DataFrame = scored.agg(
-        lit(rule).as("rule"),
-        count(lit(1)).as("n_hyp"),
-        sum(disc).as("n_disc"),
-        sum(when(disc === 1 && col("tier") === "ab", 1L).otherwise(0L))
-          .as("n_disc_ab"),
-        sum(when(disc === 1 && col("tier") === "as", 1L).otherwise(0L))
-          .as("n_disc_as"),
-        sum(when(disc === 1 && col("tier") === "null", 1L).otherwise(0L))
-          .as("n_false"),
-        sum(when(col("tier") === "ab", 1L).otherwise(0L)).as("n_ab"),
-        sum(when(col("tier") === "as", 1L).otherwise(0L)).as("n_as"))
+      blockRules(scored, Seq("bh" -> "disc_bh", "bonferroni" -> "disc_bonf"),
+          tierSizes = true)
         .withColumn("fdr_permille", expr(
           """case when n_disc = 0 then 0
             |else (1000 * n_false) div n_disc end""".stripMargin))
         .withColumn("power_as_permille",
           expr("(1000 * n_disc_as) div n_as"))
-      ruleAgg("bh", col("disc_bh"))
-        .unionByName(ruleAgg("bonferroni", col("disc_bonf")))
     }),
 
     // NEWEY-WEST (HAC) standard errors under SERIAL dependence (the
@@ -2850,38 +2835,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         pmod(xxhash64(lit(salt), col("j"), col("d") + lit(off)),
           lit(2001L)) - lit(1000L)
       def ma3(salt: String) = h(salt, 0) + h(salt, 1) + h(salt, 2)
-      val base = s.range(0, 120).select(col("id").as("j"))
-        .crossJoin(s.range(0, n.toLong).select(col("id").as("d")))
-        .select(col("j"), col("d"),
-          when(col("j") < 20, lit("link")).otherwise(lit("null"))
-            .as("tier"),
-          ma3("q383x").as("x"), ma3("q383e").as("e"))
-      val pan = dumpGen(s, "q383_panel", base.select(col("j"),
-        col("tier"), col("d"), col("x"),
-        (when(col("j") < 20, expr("(x * 500) div 1000"))
-          .otherwise(lit(0L)).cast("long") + col("e")).as("y")))
-      val sums = pan.groupBy("j", "tier")
-        .agg(count(lit(1)).as("n"), sum("y").as("sy"), sum("x").as("sx"),
-          sum(expr("y*y")).as("syy"), sum(expr("x*x")).as("sxx"),
-          sum(expr("x*y")).as("sxy"))
-        .withColumn("ss", lit(0L)).withColumn("sss", lit(0L))
-        .withColumn("ssy", lit(0L)).withColumn("sxs", lit(0L))
-        .withColumn("has_sib", lit(0))
-      val inf = graft.metrics.Causal.structuralInferenceFromSums(
-          graft.metrics.Causal.structuralBetasFromSums(sums))
-        .select(col("j"), col("tier"), col("n"), col("sy"), col("sx"),
-          col("cjj"), col("beta_ppm"), col("se2_ppm2"),
-          col("t2_milli").as("t2_cl_milli"))
-        .localCheckpoint()
-      // per-row scores m_t (q381's exact-integer residual construction)
-      val scores = pan.join(broadcast(inf.select(col("j"), col("sy"),
-          col("sx"), col("beta_ppm"))), Seq("j"))
-        .select(col("j"), col("d"), expr(
-          s"""cast(($n * x - sx) as decimal(38,0)) *
-            |  ((1000000 * ($n * y - sy)
-            |    - cast(beta_ppm as decimal(38,0)) * ($n * x - sx))
-            |   div 1000000)""".stripMargin).as("mm"))
-        .localCheckpoint()
+      val (inf, scores) = robustSeScores(s, "q383_panel", _.select(
+        col("j"), col("d"), ma3("q383x").as("x"), ma3("q383e").as("e")))
       // lagged self-join: S_l for l = 0..L in ONE equi-join pass —
       // lags exploded onto the probe side, joined on (j, d − l)
       val lagged = scores
@@ -2954,18 +2909,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           "bh" -> graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, 58),
           "by" -> graft.metrics.Causal.byInvMilliLadder(BlockDesign.size, 58))
         .localCheckpoint()
-      def ruleAgg(rule: String, disc: Column): DataFrame = scored.agg(
-        lit(rule).as("rule"),
-        count(lit(1)).as("n_hyp"),
-        sum(disc).as("n_disc"),
-        sum(when(disc === 1 && col("tier") === "ab", 1L).otherwise(0L))
-          .as("n_disc_ab"),
-        sum(when(disc === 1 && col("tier") === "as", 1L).otherwise(0L))
-          .as("n_disc_as"),
-        sum(when(disc === 1 && col("tier") === "null", 1L).otherwise(0L))
-          .as("n_false"))
-      ruleAgg("bh_f58", col("disc_bh"))
-        .unionByName(ruleAgg("by_f58", col("disc_by")))
+      blockRules(scored, Seq("bh_f58" -> "disc_bh", "by_f58" -> "disc_by"))
     }),
 
     // HETEROSKEDASTICITY-ROBUST (HC0 sandwich) standard errors vs the
@@ -2993,44 +2937,17 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       def h(salt: String) =
         pmod(xxhash64(lit(salt), col("j"), col("d")), lit(2001L)) -
           lit(1000L)
-      val base = s.range(0, 120).select(col("id").as("j"))
-        .crossJoin(s.range(0, n.toLong).select(col("id").as("d")))
-        .select(col("j"), col("d"),
-          when(col("j") < 20, lit("link")).otherwise(lit("null"))
-            .as("tier"),
-          // amplitude (20+d)/40: both x and e variances grow 4x across
-          // the window, and grow TOGETHER — het correlated with x̃²;
-          // integral div keeps every value an exact long
+      // amplitude (20+d)/40: both x and e variances grow 4x across the
+      // window, and grow TOGETHER — het correlated with x̃²; integral div
+      // keeps every value an exact long
+      val (inf, scores) = robustSeScores(s, "q381_panel", _.select(
+          col("j"), col("d"),
           (h("q381x") * (lit(5L) + col("d"))).as("xr"),
           (h("q381e") * (lit(5L) + col("d"))).as("er"))
-        .select(col("j"), col("d"), col("tier"),
-          expr("xr div 20").as("x"), expr("er div 20").as("e"))
-      val pan = dumpGen(s, "q381_panel", base.select(col("j"),
-        col("tier"), col("d"), col("x"),
-        (when(col("j") < 20, expr("(x * 500) div 1000"))
-          .otherwise(lit(0L)).cast("long") + col("e")).as("y")))
-      val sums = pan.groupBy("j", "tier")
-        .agg(count(lit(1)).as("n"), sum("y").as("sy"), sum("x").as("sx"),
-          sum(expr("y*y")).as("syy"), sum(expr("x*x")).as("sxx"),
-          sum(expr("x*y")).as("sxy"))
-        .withColumn("ss", lit(0L)).withColumn("sss", lit(0L))
-        .withColumn("ssy", lit(0L)).withColumn("sxs", lit(0L))
-        .withColumn("has_sib", lit(0))
-      val inf = graft.metrics.Causal.structuralInferenceFromSums(
-          graft.metrics.Causal.structuralBetasFromSums(sums))
-        .select(col("j"), col("tier"), col("n"), col("sy"), col("sx"),
-          col("cjj"), col("beta_ppm"), col("se2_ppm2"),
-          col("t2_milli").as("t2_cl_milli"))
-        .localCheckpoint()
+        .select(col("j"), col("d"),
+          expr("xr div 20").as("x"), expr("er div 20").as("e")))
       val k = 1000000000000L / (n.toLong * n) // 10^12 div n², shared
-      val meat = pan.join(broadcast(inf.select(col("j"), col("sy"),
-          col("sx"), col("beta_ppm"))), Seq("j"))
-        .select(col("j"), expr(
-          s"""cast(($n * x - sx) as decimal(38,0)) *
-            |  ((1000000 * ($n * y - sy)
-            |    - cast(beta_ppm as decimal(38,0)) * ($n * x - sx))
-            |   div 1000000)""".stripMargin).as("mm"))
-        .groupBy("j")
+      val meat = scores.groupBy("j")
         .agg(sum(expr("cast(mm as decimal(38,0)) * mm")).as("meat"))
       val fCut = graft.metrics.Causal.fInvMilliLadder(1, n - 2).head
       val scored = inf.join(meat, Seq("j"))
@@ -3288,38 +3205,25 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           col("v").as("xv")), Seq("xs", "day"))
         .select(col("link"), col("yv"), col("xv"), lit(0L).as("sv"),
           col("day"))
-      val dumpSig = Option(new java.io.File(s"$genDir/q378_panel")
-          .listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
-        .mkString(";")
       val log = graft.streaming.StatefulOps.weightSums2Tws(s, tuples,
         "day", Seq(20L, 40L), s"$genDir/q378_bh_split",
-        s"q378:$dumpSig", s"graft_stream_bh_${System.nanoTime()}")
+        s"q378:${dumpSignature("q378_panel")}",
+        s"graft_stream_bh_${System.nanoTime()}")
       val linkMeta = BlockDesign.map { case (p, tier, _, _) => (p, tier, 0) }
         .toDF("link", "tier", "has_sib")
-      // per-prefix EXACT ladders: the monitor's n is 20/40/60, so the
-      // F(1, n−2) rung set differs per batch — driver-computed once,
-      // keyed by the prefix length the emission row carries
-      val lutDf = Seq(20, 40, 60).flatMap { n =>
-        graft.metrics.Causal.fInvMilliLadder(BlockDesign.size, n - 2)
-          .zipWithIndex.map { case (q, i) => (n.toLong, i + 1, q) }
-      }.toDF("n", "rk", "q_milli")
       val scored = graft.metrics.Causal.structuralInferenceFromSums(
           graft.metrics.Causal.structuralBetasFromSums(
             log.join(broadcast(linkMeta), Seq("link"))))
-        .withColumn("rk", expr(
-          """row_number() over (partition by n
-            |  order by coalesce(t2_milli, -1) desc, link)""".stripMargin))
-        .join(broadcast(lutDf), Seq("n", "rk"))
-        .withColumn("k_star", expr(
-          """max(case when t2_milli >= q_milli then rk end)
-            |  over (partition by n)""".stripMargin))
-        .withColumn("disc",
-          (col("rk") <= coalesce(col("k_star"), lit(0L))).cast("int"))
-      scored.groupBy("n", "tier")
-        .agg(count(lit(1)).as("n_hyp"), sum(col("disc")).as("n_disc"),
-          max(col("k_star")).cast("long").as("k_star"))
+      // one step-up per prefix: the monitor's n is 20/40/60, each with
+      // the EXACT F(1, n−2) ladder of its own length
+      Seq(20, 40, 60).map { n =>
+        graft.metrics.Causal.stepUp(scored.where(col("n") === n), "link",
+            "bh" -> graft.metrics.Causal.fInvMilliLadder(BlockDesign.size,
+              n - 2))
+          .groupBy("n", "tier")
+          .agg(count(lit(1)).as("n_hyp"), sum(col("disc_bh")).as("n_disc"),
+            max(col("k_star_bh")).cast("long").as("k_star"))
+      }.reduce(_ unionByName _)
     }),
 
     // EXACT finite-sample multiplicity thresholds (the r12 ADVICE
@@ -3351,20 +3255,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .withColumn("disc_bonf_f",
           (col("t2_milli") >= lit(fLad.head)).cast("int"))
         .localCheckpoint()
-      def ruleAgg(rule: String, disc: Column): DataFrame = scored.agg(
-        lit(rule).as("rule"),
-        count(lit(1)).as("n_hyp"),
-        sum(disc).as("n_disc"),
-        sum(when(disc === 1 && col("tier") === "ab", 1L).otherwise(0L))
-          .as("n_disc_ab"),
-        sum(when(disc === 1 && col("tier") === "as", 1L).otherwise(0L))
-          .as("n_disc_as"),
-        sum(when(disc === 1 && col("tier") === "null", 1L).otherwise(0L))
-          .as("n_false"))
-      ruleAgg("bh_chi2", col("disc_chi"))
-        .unionByName(ruleAgg("bh_f58", col("disc_f")))
-        .unionByName(ruleAgg("bonf_chi2", col("disc_bonf_chi")))
-        .unionByName(ruleAgg("bonf_f58", col("disc_bonf_f")))
+      blockRules(scored, Seq("bh_chi2" -> "disc_chi", "bh_f58" -> "disc_f",
+        "bonf_chi2" -> "disc_bonf_chi", "bonf_f58" -> "disc_bonf_f"))
     }),
 
     // catalog-grain multiplicity (r12 verdict #6, the
@@ -3446,30 +3338,14 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val cfgs = Grid.all().filter(c =>
         (c.family == "D3" || c.family == "D3C") && c.nVars == 4
           && c.nPoints == 500 && c.mixRatio == 0.5)
-      // kernel formulas (Kernel.scala trend/season precompute): trend =
-      // trendStrength·(i+1)·0.5·t; season = seasonalStrength·(sin(2π·
-      // τ/12 + φ_i) + 0.5·cos(4π·τ/12 + φ_i)), φ_i = 2πi/8, τ = TIME
-      // (continuousSeason). All 24 cells carry trend 0.01 / seasonal
-      // 0.5 (grid-pinned); same multiply/divide order as the kernel.
-      def trendC(i: Int): Column = lit(0.01 * (i + 1) * 0.5) * col("t")
-      def seasonC(i: Int): Column = {
-        val phase = 2.0 * math.Pi * i / 8.0
-        lit(0.5) * (sin(lit(2.0 * math.Pi) * col("time") / lit(12.0)
-            + lit(phase))
-          + lit(0.5) * cos(lit(4.0 * math.Pi) * col("time") / lit(12.0)
-            + lit(phase)))
-      }
+      // the kernel's known trend and season, τ = TIME (continuousSeason);
+      // all 24 cells carry trend 0.01 / seasonal 0.5 (grid-pinned)
       val gen = dumpGen(s, "q369_gen",
         Generate.wideFast(s, cfgs).select(
           Seq(col("configId"), col("t"), col("time"), col("maskBits")) ++
-            (1 to 4).map(i =>
-              (col(s"X$i") - trendC(i - 1) - seasonC(i - 1))
-                .as(s"X${i}t")) ++
-            Seq(cos(col("X1") * lit(math.Pi / 2)).as("cX1"),
-              cos(col("X2") * lit(math.Pi / 2)).as("cX2"),
-              sin(col("X3") * lit(math.Pi / 2)).as("sX3"),
-              (col("X4") * col("X4")).as("p2X4"),
-              (col("X2") * col("X2") * col("X2")).as("p3X2")): _*))
+            (1 to 4).map(i => knownDetrended(i, "time").as(s"X${i}t")) ++
+            Seq("cos" -> 1, "cos" -> 2, "sin" -> 3, "power2" -> 4,
+              "power3" -> 2).map { case (f, i) => funcChannel(f, i) }: _*))
       val spine = gen.select(col("configId"), col("t"), col("time"))
       val lx = graft.ops.Lagged.nearestLagIndicesView(spine, "t", "time",
         Seq("configId"), Seq(1, 2, 3, 4)).localCheckpoint(false)
@@ -3676,41 +3552,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // arithmetic (Causal.structuralInferenceFromSums, the streaming
     // twin of q363's operator; stream ≡ batch pinned by spec).
     "q368_stream_inference" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 500, 6, 2)
-      val gen = dumpGen(s, "q368_gen",
-        Generate.wideFast(s, Seq(cfg)).where(col("t") < 400)
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val gl = gen
-        .join(gen.select(col("t").as("t1") +:
-            (1 to 6).map(i => col(s"X$i").as(s"L1X$i")): _*),
-          col("t1") === col("t") - 1)
-        .join(gen.select(col("t").as("t2") +:
-            (1 to 6).map(i => col(s"X$i").as(s"L2X$i")): _*),
-          col("t2") === col("t") - 2)
-        .where(col("t").between(2, 399))
-      def q(series: String, lag: Int): Column =
-        Panels.milli(
-          if (lag == 0) col(series) else col(s"L$lag$series"))
-      val tuples = streamWeightLinks().map { case (k, tgt, src, lag, hs,
-          sibSeries, sibLag, _) =>
-        gl.select(lit(k).as("link"), q(tgt, 0).as("yv"),
-          q(src, lag).as("xv"),
-          (if (hs == 1) q(sibSeries, sibLag) else lit(0L)).as("sv"),
-          col("t"))
-      }.reduce(_ unionByName _)
-      val dumpSig = Option(new java.io.File(s"$genDir/q368_gen")
-          .listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
-        .mkString(";")
+      val (tuples, linksDf) = streamWeightDesign(s, "q368_gen")
       val log = graft.streaming.StatefulOps.weightSums2Tws(s, tuples,
         "t", Seq(50L, 200L), s"$genDir/q368_weight_split",
-        s"q368:$dumpSig", s"graft_stream_inference_${System.nanoTime()}")
-      import s.implicits._
-      val linksDf = streamWeightLinks()
-        .map(l => (l._1, l._2, l._3, l._4, l._5, l._8))
-        .toDF("link", "target", "source", "lag", "has_sib",
-          "effective_ppm")
+        s"q368:${dumpSignature("q368_gen")}",
+        s"graft_stream_inference_${System.nanoTime()}")
       graft.metrics.Causal.structuralInferenceFromSums(
           graft.metrics.Causal.structuralBetasFromSums(
             log.join(broadcast(linksDf), Seq("link"))))
@@ -3952,26 +3798,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val cfg = Grid.forFamily("C1").find(c =>
         c.nPoints == 500 && c.nVars == 6 && c.maxLag == 2).get
       val links = c1Links()
-      def trendC(i: Int): Column = lit(0.01 * (i + 1) * 0.5) * col("t")
-      def seasonC(i: Int): Column = {
-        val phase = 2.0 * math.Pi * i / 8.0
-        lit(0.5) * (sin(lit(2.0 * math.Pi) * col("t") / lit(12.0)
-            + lit(phase))
-          + lit(0.5) * cos(lit(4.0 * math.Pi) * col("t") / lit(12.0)
-            + lit(phase)))
-      }
-      val halfPi = math.Pi / 2.0
       val gen = dumpGen(s, "q361_gen",
         Generate.wideFast(s, Seq(cfg)).select(
           Seq(col("t")) ++
             (1 to 6).map(i => col(s"X$i")) ++
-            (1 to 6).map(i => (col(s"X$i") - trendC(i - 1) -
-              seasonC(i - 1)).as(s"X${i}t")) ++
-            (1 to 6).flatMap(i => Seq(
-              cos(col(s"X$i") * lit(halfPi)).as(s"cX$i"),
-              sin(col(s"X$i") * lit(halfPi)).as(s"sX$i"),
-              (col(s"X$i") * col(s"X$i")).as(s"p2X$i"),
-              (col(s"X$i") * col(s"X$i") * col(s"X$i")).as(s"p3X$i"))): _*))
+            (1 to 6).map(i => knownDetrended(i, "t").as(s"X${i}t")) ++
+            c1FuncCols: _*))
       // virtual channels: detrended + naive targets at lag 0, transformed
       // regressors at their link lags — one moment pass for both variants
       def ch(colName: String, vs: String, lag: Int): DataFrame =
@@ -4107,41 +3939,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // beta CTE; spec pins stream ≡ batch against laggedCrossMoments +
     // structuralBetas on the full window.
     "q358_stream_weight_recovery" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 500, 6, 2)
-      val gen = dumpGen(s, "q358_gen",
-        Generate.wideFast(s, Seq(cfg)).where(col("t") < 400)
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val gl = gen
-        .join(gen.select(col("t").as("t1") +:
-            (1 to 6).map(i => col(s"X$i").as(s"L1X$i")): _*),
-          col("t1") === col("t") - 1)
-        .join(gen.select(col("t").as("t2") +:
-            (1 to 6).map(i => col(s"X$i").as(s"L2X$i")): _*),
-          col("t2") === col("t") - 2)
-        .where(col("t").between(2, 399))
-      def q(series: String, lag: Int): Column =
-        Panels.milli(
-          if (lag == 0) col(series) else col(s"L$lag$series"))
-      val tuples = streamWeightLinks().map { case (k, tgt, src, lag, hs,
-          sibSeries, sibLag, _) =>
-        gl.select(lit(k).as("link"), q(tgt, 0).as("yv"),
-          q(src, lag).as("xv"),
-          (if (hs == 1) q(sibSeries, sibLag) else lit(0L)).as("sv"),
-          col("t"))
-      }.reduce(_ unionByName _)
-      val dumpSig = Option(new java.io.File(s"$genDir/q358_gen")
-          .listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .map(f => s"${f.getName}:${f.length()}:${f.lastModified()}")
-        .mkString(";")
+      val (tuples, linksDf) = streamWeightDesign(s, "q358_gen")
       val log = graft.streaming.StatefulOps.weightSumsTws(s, tuples,
-        "t", 200L, s"$genDir/q358_weight_split", s"q358:$dumpSig",
+        "t", 200L, s"$genDir/q358_weight_split",
+        s"q358:${dumpSignature("q358_gen")}",
         s"graft_stream_weights_${System.nanoTime()}")
-      import s.implicits._
-      val linksDf = streamWeightLinks()
-        .map(l => (l._1, l._2, l._3, l._4, l._5, l._8))
-        .toDF("link", "target", "source", "lag", "has_sib",
-          "effective_ppm")
       graft.metrics.Causal.structuralBetasFromSums(
           log.join(broadcast(linksDf), Seq("link")))
         .select(col("target"), col("source"), col("lag"), col("n"),
@@ -4287,34 +4089,11 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // Kaplan-Meier survival curve, same cohort contract): per event time
     // the ppm hazard increment (d·1e6) div n_risk, accumulated by one
     // cumulative window — no product fold needed, so unlike KM the curve
-    // is a plain running sum. Shares the at-risk derivation verbatim
+    // is a plain running sum. Shares q292's at-risk table (survivalRisk)
     "q328_nelson_aalen" -> ((s, d) => {
-      val ev = events(s, d).select(col("user_id"),
-        expr("(ts div 1000) div 86400000000").as("day"),
-        col("event_type"))
-      val horizon = ev.agg(max("day").as("hz"))
-      val users = ev.groupBy("user_id")
-        .agg(min("day").as("origin"),
-          min(when(col("event_type") === "purchase", col("day")))
-            .as("pday"))
-        .crossJoin(broadcast(horizon))
-        .select(
-          coalesce(col("pday") - col("origin"),
-            col("hz") - col("origin")).as("t"),
-          col("pday").isNotNull.cast("int").as("ev"))
-      val times = users.groupBy("t")
-        .agg(sum("ev").as("d"), count(lit(1)).as("c"))
-      val wt = Window.orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val tot = users.agg(count(lit(1)).as("ntot"))
       val wc = Window.orderBy("t")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      times.crossJoin(broadcast(tot))
-        .select(col("t"), col("d"),
-          (col("ntot") - coalesce(sum("c").over(wt), lit(0L)))
-            .as("n_risk"))
-        .where(col("d") > 0)
-        .select(col("t"), col("n_risk"), col("d"),
+      survivalRisk(s, d).select(col("t"), col("n_risk"), col("d"),
           sum(expr("(d * 1000000) div n_risk")).over(wc)
             .as("cum_hazard_ppm"))
     }),

@@ -220,4 +220,19 @@ object Generate {
       .groupBy("family", "n_vars", "max_lag", "i", "j", "k")
       .agg(round(max("value"), 6).as("value"), max("edge").as("edge"))
   }
+
+  /** `n` synthetic documents (doc_id, text) with a Zipf vocabulary: each
+    * draws 80 tokens "t<rank>" from 10k types with log-uniform ranks
+    * (rank = ⌊exp(u·ln V)⌋, the inverse CDF of Zipf s≈1; u from
+    * xxhash64("zipf", doc_id, pos)), so posting lists are selective.
+    */
+  def zipfDocs(spark: SparkSession, n: Long): DataFrame =
+    spark.range(0, n).select(col("id").as("doc_id"))
+      .withColumn("pos", explode(expr("sequence(0, 79)")))
+      .select(col("doc_id"), concat(lit("t"),
+        floor(exp((pmod(xxhash64(lit("zipf"), col("doc_id"), col("pos")),
+            lit(1000000L)).cast("double") / 1e6) *
+          log(lit(10000.0)))).cast("long")).as("tok"))
+      .groupBy("doc_id")
+      .agg(concat_ws(" ", collect_list(col("tok"))).as("text"))
 }

@@ -878,7 +878,7 @@ object Causal {
     * adj(b)\{a}, adj the order-(k−1) adjacency. The UNION of the two
     * sides deduplicates subsets drawn from both.
     */
-  private def stableCand(prev: DataFrame, k: Int): DataFrame = {
+  private[graft] def stableCand(prev: DataFrame, k: Int): DataFrame = {
     val zs = conds(k)
     val e = prev.where(col(edgeCol(k - 1)) === 1).select(col("a"), col("b"))
     val adj = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
@@ -1983,6 +1983,7 @@ object Causal {
     * into one fictitious joint model): each row's rss/se²/t² come from
     * its own four moments, k = 1, dof = n−2. Same truncating-div
     * arithmetic and DECIMAL(38,0)/HUGEINT budget as the windowed op.
+    * Mirrored by [[waldK1SqlCtes]].
     */
   def waldK1(betas: DataFrame): DataFrame = betas
     .withColumn("rss_scaled", expr(
@@ -2006,7 +2007,7 @@ object Causal {
     * `k_star_<name>` = the largest rank whose t² clears its rung (NULL
     * when none does) and `disc_<name>` = 1 for every rank ≤ k*, 0
     * otherwise. Step-UP: a rank that fails its own rung below k* is
-    * still a discovery.
+    * still a discovery. Mirrored by [[stepUpSqlCtes]].
     */
   def stepUp(hyps: DataFrame, tieBreak: String,
       ladders: (String, Seq[Long])*): DataFrame = {
@@ -2031,6 +2032,58 @@ object Causal {
         (col("rk") <= coalesce(col(s"k_star_$n"), lit(0L))).cast("int")))
   }
 
+  /** [[waldK1]] as ANSI SQL over [[structuralBetasSqlCtes]]' `sbeta`
+    * (n, cyy, cjj, cjy, beta_ppm) — yields `wald` = sbeta.* + rss_scaled
+    * + se2_ppm2 + t2_milli.
+    */
+  def waldK1SqlCtes: String =
+    s"""wrss AS (
+       |  SELECT *,
+       |    1000000 * cyy::HUGEINT - beta_ppm::HUGEINT * cjy AS rss_scaled
+       |  FROM sbeta),
+       |wse AS (
+       |  SELECT *, (CASE WHEN cjj <= 0 OR n - 2 <= 0 THEN NULL
+       |    ELSE (1000000 * rss_scaled)
+       |      // ((n - 2) * cjj::HUGEINT) END)::BIGINT AS se2_ppm2
+       |  FROM wrss),
+       |wald AS (
+       |  SELECT *, (CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0 THEN NULL
+       |    ELSE (1000 * beta_ppm::HUGEINT * beta_ppm) // se2_ppm2
+       |    END)::BIGINT AS t2_milli
+       |  FROM wse)""".stripMargin
+
+  /** [[stepUp]] as ANSI SQL over any CTE `\$src` carrying t2_milli and the
+    * `tieBreak` columns — yields `\${src}_lut` (the ladders as VALUES) and
+    * `\${src}_su` = src.* + rk + q_<name>_milli per ladder + k_star_<name>
+    * + disc_<name>, [[stepUp]]'s column contract.
+    */
+  def stepUpSqlCtes(src: String, tieBreak: String,
+      ladders: (String, Seq[Long])*): String = {
+    val m = ladders.head._2.size
+    require(ladders.forall(_._2.size == m), "ladders differ in length")
+    val names = ladders.map(_._1)
+    val rows = (1 to m).map(rk =>
+      (rk +: ladders.map(_._2(rk - 1))).mkString("(", ", ", ")"))
+    s"""${src}_lut AS (SELECT * FROM (VALUES ${rows.mkString(",\n    ")})
+       |  AS q(rk, ${names.map(n => s"q_${n}_milli").mkString(", ")})),
+       |${src}_rk AS (
+       |  SELECT r.*, ${names.map(n => s"q.q_${n}_milli").mkString(", ")}
+       |  FROM (SELECT *, row_number() OVER (
+       |      ORDER BY coalesce(t2_milli, -1) DESC, $tieBreak) AS rk
+       |    FROM $src) r
+       |  JOIN ${src}_lut q USING (rk)),
+       |${src}_ks AS (
+       |  SELECT *, ${names.map(n =>
+            s"max(CASE WHEN t2_milli >= q_${n}_milli THEN rk END)" +
+            s"\n      OVER () AS k_star_$n").mkString(",\n    ")}
+       |  FROM ${src}_rk),
+       |${src}_su AS (
+       |  SELECT *, ${names.map(n =>
+            s"(rk <= coalesce(k_star_$n, 0))::INT AS disc_$n")
+            .mkString(",\n    ")}
+       |  FROM ${src}_ks)""".stripMargin
+  }
+
   /** The wanted-pair frame (na, nb) [[virtualCrossMomentsSparse]] needs
     * for k=1 hypotheses regressing `y` on `x`: both diagonals and the
     * canonical na ≤ nb cross pair, each once.
@@ -2038,10 +2091,18 @@ object Causal {
   def wantedPairs(spark: SparkSession, yx: Seq[(String, String)])
       : DataFrame = {
     import spark.implicits._
+    wantedRows(yx).toDF("na", "nb")
+  }
+
+  private def wantedRows(yx: Seq[(String, String)]): Seq[(String, String)] =
     yx.flatMap { case (y, x) =>
       Seq((y, y), (x, x), if (x <= y) (x, y) else (y, x))
-    }.distinct.toDF("na", "nb")
-  }
+    }.distinct
+
+  /** [[wantedPairs]] as a DuckDB VALUES table `w(na, nb)`. */
+  def wantedPairsValuesSql(yx: Seq[(String, String)]): String =
+    wantedRows(yx).map { case (a, b) => s"('$a','$b')" }
+      .mkString("(VALUES ", ",\n    ", ") AS w(na, nb)")
 
   /** PAIR-RESTRICTED cross-moments for WIDE panels (q359): the dense
     * [[virtualCrossMoments]] computes the full |specs|² Gram — right for

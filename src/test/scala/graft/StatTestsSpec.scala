@@ -946,6 +946,35 @@ class StatTestsSpec extends AnyFunSuite {
     assert(field("disc_hi").values.toSet == Set(Some(0)))
   }
 
+  test("waldK1: row-local k=1 t² with truncating div, NULL on a zero " +
+      "design moment, on n <= 2 and on a non-positive se²") {
+    import spark.implicits._
+    val betas = Seq(("fit", 10L, 100L, 100L, 50L, 500000L),
+        ("cjj0", 10L, 100L, 0L, 0L, 0L),
+        ("n2", 2L, 100L, 100L, 50L, 500000L),
+        ("exact", 10L, 25L, 100L, 50L, 500000L))
+      .toDF("pair", "n", "cyy", "cjj", "cjy", "beta_ppm")
+    val out = Causal.waldK1(betas).collect()
+      .map(r => r.getAs[String]("pair") -> r).toMap
+    def long(p: String, c: String): Option[Long] = {
+      val r = out(p)
+      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Long](c))
+    }
+    // rss = 10⁶·100 − 500000·50 = 75,000,000;
+    // se² = (10⁶·rss) div ((10 − 2)·100) = 93,750,000,000;
+    // t² = (1000·500000²) div se² = 2,666.67 → 2,666
+    assert(out("fit").getAs[java.math.BigDecimal]("rss_scaled").longValue
+      == 75000000L)
+    assert(long("fit", "se2_ppm2") == Some(93750000000L))
+    assert(long("fit", "t2_milli") == Some(2666L))
+    // cjj = 0 and dof n − 2 = 0: no se², no t²
+    for (p <- Seq("cjj0", "n2"))
+      assert(long(p, "se2_ppm2").isEmpty && long(p, "t2_milli").isEmpty, p)
+    // an exact fit (rss = 0) has se² = 0, which gives no t²
+    assert(long("exact", "se2_ppm2") == Some(0L))
+    assert(long("exact", "t2_milli").isEmpty)
+  }
+
   test("wantedPairs: both diagonals and the na <= nb cross pair, once") {
     val w = Causal.wantedPairs(spark, Seq(("X2@0", "X1@0"),
         ("X1@0", "X3@0"), ("X2@0", "X1@0")))
