@@ -60,6 +60,24 @@ object SparkEntry
       .withColumnRenamed("configId", "config_id")
   }
 
+  /** Writes `df` as the 8-bucket parquet table `name`, bucketed and sorted
+    * by `key` (q59, q218). A fresh session's in-memory catalog forgets the
+    * table while its warehouse directory survives, so both are dropped
+    * before the overwrite. Assumes a local-filesystem warehouse; an
+    * object-store warehouse would pass an explicit .option("path", ...).
+    */
+  private[graft] def freshBucketed(s: SparkSession, df: DataFrame,
+      name: String, key: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
+    val dir = new java.io.File(wh, name)
+    if (dir.exists)
+      require(scala.reflect.io.Directory(dir).deleteRecursively(),
+        s"cannot clear stale table location $dir")
+    df.write.mode("overwrite").format("parquet")
+      .bucketBy(8, key).sortBy(key).saveAsTable(name)
+  }
+
   private[graft] def lineitem(s: SparkSession, d: String) = s.read.parquet(t(d, "lineitem"))
   private[graft] def orders(s: SparkSession, d: String) = s.read.parquet(t(d, "orders"))
   private[graft] def customer(s: SparkSession, d: String) = s.read.parquet(t(d, "customer"))
@@ -1242,30 +1260,49 @@ object SparkEntry
   private[graft] val NdcgDiscCaseSql: String = NdcgDiscCase.replace("L ", " ")
   private[graft] val NdcgIdealCaseSql: String = NdcgIdealCase.replace("L ", " ")
 
-  /** The contracted nation→nation trade graph shared by q86 (PageRank),
-    * q254 (HITS), q258 (closeness), q260 (modularity): supplier-nation →
-    * customer-nation weighted by lineitem count. The ONLY fact-scale stage
-    * of the graph family — the orders⋈lineitem shuffle with broadcast
-    * dims; everything downstream runs on ≤ |nations|² rows.
+  /** The nation→nation trade graph by key (src_key, dst_key, w; q164):
+    * supplier-nation → customer-nation weighted by lineitem count. The ONLY
+    * fact-scale stage of the graph family — the orders⋈lineitem shuffle
+    * with broadcast dims; everything downstream runs on ≤ |nations|² rows.
     */
-  private[graft] def nationTradeEdges(s: SparkSession, d: String): DataFrame = {
+  private[graft] def nationTradeKeyEdges(s: SparkSession, d: String): DataFrame = {
     val li = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
     val ord = orders(s, d).select(col("o_orderkey"), col("o_custkey"))
     val cust = customer(s, d).select(col("c_custkey"), col("c_nationkey"))
     val supp = supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
-    val srcN = nation(s, d).select(col("n_nationkey").as("src_key"),
-      col("n_name").as("src"))
-    val dstN = nation(s, d).select(col("n_nationkey").as("dst_key"),
-      col("n_name").as("dst"))
     li.join(ord, li("l_orderkey") === ord("o_orderkey"))
       .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
       .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
       .groupBy(col("s_nationkey").as("src_key"),
         col("c_nationkey").as("dst_key"))
       .agg(count(lit(1)).as("w"))
+  }
+
+  /** [[nationTradeKeyEdges]] by nation name (src, dst, w), shared by q86
+    * (PageRank), q254 (HITS), q258 (closeness), q260 (modularity) and
+    * q290 (hash walks).
+    */
+  private[graft] def nationTradeEdges(s: SparkSession, d: String): DataFrame = {
+    val srcN = nation(s, d).select(col("n_nationkey").as("src_key"),
+      col("n_name").as("src"))
+    val dstN = nation(s, d).select(col("n_nationkey").as("dst_key"),
+      col("n_name").as("dst"))
+    nationTradeKeyEdges(s, d)
       .join(broadcast(srcN), "src_key").join(broadcast(dstN), "dst_key")
       .select(col("src"), col("dst"), col("w"))
   }
+
+  /** [[nationTradeEdges]] as one materialized DuckDB CTE `raw`. */
+  private[graft] val NationTradeEdgesCte: String =
+    """raw AS MATERIALIZED (
+      |  SELECT sn.n_name AS src, cn.n_name AS dst, count(*)::BIGINT AS w
+      |  FROM lineitem l
+      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
+      |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
+      |  GROUP BY 1, 2)""".stripMargin
 
   /** The q195/q197 dirty-name registry: every customer record plus
     * deterministic mutations — a transposed-prefix duplicate (custkey%3),
@@ -1480,6 +1517,30 @@ object SparkEntry
        |  JOIN banded b ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
        |  WHERE round(($matches)::DOUBLE / 16, 6) >= 0.25)""".stripMargin
   }
+
+  /** The near-dup component of every document (q61, q93, q100): the q16
+    * LSH pairs' connected components, each labelled by its min doc_id,
+    * singletons labelling themselves — (doc_id, component).
+    */
+  private[graft] def minhashComponents(docs: DataFrame): DataFrame = {
+    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+      n = 3, numHashes = 16, bands = 4, minEstJaccard = 0.25)
+    val comp = graft.ops.ConnectedComponents.components(pairs, "id_a", "id_b")
+    docs.select(col("doc_id"))
+      .join(comp, col("doc_id") === col("id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("component"), col("doc_id")).as("component"))
+  }
+
+  /** [[minhashComponents]] as DuckDB CTEs (no leading WITH; the caller
+    * writes WITH RECURSIVE): [[MinhashPairsCtes]], then
+    * `ConnectedComponents.componentsSqlCtes` over every document; yields
+    * `comp(id, component)` with id = doc_id.
+    */
+  private[graft] val MinhashComponentsCtes: String =
+    s"""$MinhashPairsCtes,
+       |doc_ids AS (SELECT doc_id AS id FROM documents),
+       |${graft.ops.ConnectedComponents.componentsSqlCtes("pairs", "doc_ids")}""".stripMargin
 
   /** Sliding-window replay both sliding queries share (q103 single-batch,
     * q109 multi-batch — complete output mode makes the final table
@@ -1873,24 +1934,9 @@ object SparkEntry
          |        AS r
          |    FROM v$i) WHERE r = 1)""".stripMargin
     }.mkString(",\n")
-    s"""WITH p AS (
-       |  SELECT c_custkey AS id, (c_custkey * 48271) % 100000 AS x,
-       |    (c_custkey * 69621) % 100000 AS y
-       |  FROM customer),
-       |c AS (SELECT id, x, y, x // 2000 AS cx, y // 2000 AS cy FROM p),
-       |o AS (SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx),
-       |      (VALUES (-1), (0), (1)) b(dy)),
-       |pr AS (
-       |  SELECT a.id AS a_id, a.x AS ax, a.y AS ay,
-       |         b.id AS b_id, b.x AS bx, b.y AS b_y
-       |  FROM c a JOIN o ON true
-       |  JOIN c b ON b.cx = a.cx + o.dx AND b.cy = a.cy + o.dy
-       |  WHERE a.id < b.id),
-       |und AS (
-       |  SELECT a_id, b_id FROM pr
-       |  WHERE (ax - bx) * (ax - bx) + (ay - b_y) * (ay - b_y) <= 4000000),
-       |e AS (SELECT a_id AS u, b_id AS v FROM und
-       |      UNION ALL SELECT b_id, a_id FROM und),
+    s"""WITH $GridNeighborPairsSqlCtes,
+       |e AS (SELECT a_id AS u, b_id AS v FROM nn
+       |      UNION ALL SELECT b_id, a_id FROM nn),
        |l0 AS (SELECT id AS node, id AS lbl FROM c),
        |$roundCtes,
        |comm AS (SELECT lbl, count(*)::BIGINT AS sz FROM l$rounds GROUP BY 1)

@@ -1961,15 +1961,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM ds""".stripMargin,
 
     "q290_hash_walks" ->
-      s"""WITH raw AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, count(*)::BIGINT AS w
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH $NationTradeEdgesCte,
         |el AS (SELECT DISTINCT src, dst FROM raw),
         |n0 AS (SELECT DISTINCT src AS start, src AS cur FROM el),
         |s1 AS (SELECT n.start, coalesce(c.nxt, n.cur) AS hop1

@@ -59,22 +59,12 @@ private[graft] trait OraclesGeneration { this: SparkEntry.type =>
       s"""WITH $MinhashPairsCtes
          |SELECT id_a, id_b, est_jaccard FROM pairs""".stripMargin,
 
-    // transitive closure of the q16 pair set: min reachable doc_id per doc.
-    // DuckDB can afford the recursive reachability CTE at oracle scale; the
-    // Spark side computes the same closure with large-star/small-star
-    // contractions (the O(log n)-round distributed form).
+    // transitive closure of the q16 pair set: min reachable doc_id per doc
     "q61_dedup_clusters" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id),
-         |comp AS (SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id),
+      s"""WITH RECURSIVE $MinhashComponentsCtes,
          |sizes AS (SELECT component, count(*) AS csize FROM comp GROUP BY component)
-         |SELECT c.doc_id, c.component, s.csize,
-         |  (CASE WHEN c.doc_id = c.component THEN 1 ELSE 0 END) AS keep
+         |SELECT c.id AS doc_id, c.component, s.csize,
+         |  (CASE WHEN c.id = c.component THEN 1 ELSE 0 END) AS keep
          |FROM comp c JOIN sizes s USING (component)""".stripMargin,
 
     // the fingerprint is non-negative, so plain % mirrors Spark's pmod

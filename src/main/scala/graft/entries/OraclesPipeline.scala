@@ -344,15 +344,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
            |  (150000 + (850 * coalesce(c.contrib, 0)) // 1000)::BIGINT AS rank_micro
            |  FROM nodes n LEFT JOIN c$i c ON c.dst = n.node)""".stripMargin
       }.mkString(",\n")
-      s"""WITH raw AS (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, count(*)::BIGINT AS w
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH $NationTradeEdgesCte,
         |outw AS (SELECT src, sum(w)::BIGINT AS out_w FROM raw GROUP BY 1),
         |nodes AS (SELECT src AS node FROM raw UNION SELECT dst FROM raw),
         |r0 AS (SELECT node, 1000000::BIGINT AS rank_micro FROM nodes),
@@ -473,15 +465,8 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
     // component closure identical to q61's oracle; the affine bucket
     // ((c mod p)·a + b mod p) mod 1000 mirrors Sampling.clusterSafeSplit
     "q93_cluster_split" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id),
-         |comp AS (SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id),
-         |bk AS (SELECT doc_id, component,
+      s"""WITH RECURSIVE $MinhashComponentsCtes,
+         |bk AS (SELECT id AS doc_id, component,
          |  (((component % 2147483647) * 1373158607 + 239081663) % 2147483647) % 1000
          |    AS split_bucket
          |  FROM comp)
@@ -609,14 +594,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
     // (q97 keep-best, q64/q66 gates, q61 closure, q93 affine split) — the
     // composition cannot drift from the stages it composes
     "q100_curation_pipeline" ->
-      s"""WITH RECURSIVE $MinhashPairsCtes,
-         |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id),
-         |comp AS (SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id),
+      s"""WITH RECURSIVE $MinhashComponentsCtes,
          |base AS (
          |  SELECT doc_id, text, $LangPredCaseSql AS lang_pred,
          |    len(string_split(text, ' '))::BIGINT AS n_tokens,
@@ -640,7 +618,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
          |lab AS (
          |  SELECT f.doc_id, f.n_tokens,
          |    coalesce(c.component, f.doc_id) AS component
-         |  FROM filt f LEFT JOIN comp c ON c.doc_id = f.doc_id),
+         |  FROM filt f LEFT JOIN comp c ON c.id = f.doc_id),
          |spl AS (SELECT *,
          |  (((component % 2147483647) * 1373158607 + 239081663) % 2147483647) % 1000
          |    AS b FROM lab)
@@ -736,31 +714,11 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |  (CASE WHEN ts_us - m_ts <= 600000000 THEN m_ts END) AS asof_ts
         |FROM j""".stripMargin,
 
-    // islands formulation: a session breaks when the gap REACHES the
-    // timeout (Spark merges only strictly-overlapping [ts, ts+gap) windows,
-    // so diff ≥ gap starts a new session); end = last ts + gap
     "q104_session_window" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us,
-        |    floor(value * 1e6)::BIGINT AS vm
-        |  FROM events),
-        |o AS (
-        |  SELECT user_id, ts_us, vm,
-        |    (CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us)
-        |            IS NULL
-        |          OR ts_us - lag(ts_us) OVER (PARTITION BY user_id
-        |            ORDER BY ts_us) >= 1800000000
-        |          THEN 1 ELSE 0 END) AS brk
-        |  FROM ev),
-        |g AS (
-        |  SELECT user_id, ts_us, vm,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM o)
-        |SELECT user_id, min(ts_us) AS session_start_us,
-        |  max(ts_us) + 1800000000 AS session_end_us,
-        |  count(*)::BIGINT AS n_events, sum(vm)::BIGINT AS sum_v_micro
-        |FROM g GROUP BY user_id, sid""".stripMargin,
+      s"""WITH ${graft.ops.Sessionize.GapSessionsSqlCtes}
+        |SELECT user_id, start_us AS session_start_us,
+        |  end_us AS session_end_us, n_events, sum_v_micro
+        |FROM sess""".stripMargin,
 
     // every event joins its ceil(width/slide) = 5 slide offsets; the k-th
     // window start is (⌊ts/slide⌋ − k)·slide, and ts < start + width holds
@@ -800,47 +758,28 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM m""".stripMargin,
 
     "q110_winsorized_mean" ->
-      """WITH ev AS (
-        |  SELECT event_type, floor(value * 1e6)::BIGINT AS v FROM events),
-        |bins AS (
-        |  SELECT event_type, v // 10000000 AS bin, count(*) AS cnt
-        |  FROM ev GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_type, bin, cnt,
-        |    sum(cnt) OVER (PARTITION BY event_type ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(cnt) OVER (PARTITION BY event_type) AS total
-        |  FROM bins),
+      s"""WITH $ValueBinsCumSqlCtes,
         |b AS (
         |  SELECT event_type,
-        |    min(CASE WHEN cum * 100 >= total THEN bin * 10000000 END)::BIGINT AS lo,
+        |    min(CASE WHEN cum * 100 >= total THEN bin * $ValueBinMicro END)::BIGINT
+        |      AS lo,
         |    min(CASE WHEN cum * 100 >= total * 99
-        |        THEN (bin + 1) * 10000000 - 1 END)::BIGINT AS hi
+        |        THEN (bin + 1) * $ValueBinMicro - 1 END)::BIGINT AS hi
         |  FROM c GROUP BY 1)
         |SELECT e.event_type, count(*)::BIGINT AS n,
-        |  sum(greatest(least(e.v, b.hi), b.lo))::BIGINT AS sum_clipped_micro,
-        |  (sum(greatest(least(e.v, b.hi), b.lo)) // count(*))::BIGINT
+        |  sum(greatest(least(e.v_micro, b.hi), b.lo))::BIGINT AS sum_clipped_micro,
+        |  (sum(greatest(least(e.v_micro, b.hi), b.lo)) // count(*))::BIGINT
         |    AS winsorized_mean_micro
         |FROM ev e JOIN b USING (event_type) GROUP BY 1""".stripMargin,
 
     "q102_group_quantiles" ->
-      """WITH ev AS (
-        |  SELECT event_type, floor(value * 1e6)::BIGINT AS v_micro FROM events),
-        |bins AS (
-        |  SELECT event_type, v_micro // 10000000 AS bin, count(*) AS cnt
-        |  FROM ev GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_type, bin, cnt,
-        |    sum(cnt) OVER (PARTITION BY event_type ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    sum(cnt) OVER (PARTITION BY event_type) AS total
-        |  FROM bins)
+      s"""WITH $ValueBinsCumSqlCtes
         |SELECT event_type, max(total)::BIGINT AS n_rows,
-        |  min(CASE WHEN cum * 100 >= total * 50 THEN bin * 10000000 END)::BIGINT
+        |  min(CASE WHEN cum * 100 >= total * 50 THEN bin * $ValueBinMicro END)::BIGINT
         |    AS p50_micro,
-        |  min(CASE WHEN cum * 100 >= total * 90 THEN bin * 10000000 END)::BIGINT
+        |  min(CASE WHEN cum * 100 >= total * 90 THEN bin * $ValueBinMicro END)::BIGINT
         |    AS p90_micro,
-        |  min(CASE WHEN cum * 100 >= total * 99 THEN bin * 10000000 END)::BIGINT
+        |  min(CASE WHEN cum * 100 >= total * 99 THEN bin * $ValueBinMicro END)::BIGINT
         |    AS p99_micro
         |FROM c GROUP BY 1""".stripMargin,
 
@@ -948,23 +887,10 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM c""".stripMargin,
 
     "q117_state_runs" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, ts FROM events),
-        |o AS (
-        |  SELECT user_id, event_type,
-        |    (CASE WHEN lag(event_type) OVER w IS NULL
-        |          OR lag(event_type) OVER w <> event_type
-        |          THEN 1 ELSE 0 END) AS brk,
-        |    ts, event_id
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |r AS (
-        |  SELECT user_id, event_type,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-        |  FROM o),
+      s"""WITH ${graft.ops.Sessionize.stateRunsSqlCtes("events", "ts")},
         |runs AS (
         |  SELECT user_id, run_id, event_type, count(*)::BIGINT AS run_len
-        |  FROM r GROUP BY 1, 2, 3)
+        |  FROM run_r GROUP BY 1, 2, 3)
         |SELECT event_type, run_len, count(*)::BIGINT AS n_runs
         |FROM runs GROUP BY 1, 2""".stripMargin,
 
@@ -1047,25 +973,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM r GROUP BY 1""".stripMargin,
 
     "q123_session_hour_grid" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-        |o AS (
-        |  SELECT user_id, ts_us,
-        |    (CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us)
-        |            IS NULL
-        |          OR ts_us - lag(ts_us) OVER (PARTITION BY user_id
-        |            ORDER BY ts_us) >= 1800000000
-        |          THEN 1 ELSE 0 END) AS brk
-        |  FROM ev),
-        |g AS (
-        |  SELECT user_id, ts_us,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM o),
-        |sess AS (
-        |  SELECT user_id, min(ts_us) AS start_us,
-        |    max(ts_us) + 1800000000 AS end_us
-        |  FROM g GROUP BY user_id, sid),
+      s"""WITH ${graft.ops.Sessionize.GapSessionsSqlCtes},
         |hrs AS (
         |  SELECT user_id, unnest(generate_series(start_us // 3600000000,
         |    (end_us - 1) // 3600000000)) AS hour_idx
@@ -1086,29 +994,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM e GROUP BY 1, 2, 3""".stripMargin,
 
     "q125_scd2_versions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |o AS (
-        |  SELECT user_id, event_type, ts_us, event_id,
-        |    (CASE WHEN lag(event_type) OVER w IS NULL
-        |          OR lag(event_type) OVER w <> event_type
-        |          THEN 1 ELSE 0 END) AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |r AS (
-        |  SELECT user_id, event_type,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id,
-        |    ts_us
-        |  FROM o),
-        |runs AS (
-        |  SELECT user_id, run_id, event_type, min(ts_us) AS valid_from
-        |  FROM r GROUP BY 1, 2, 3),
-        |v AS (
-        |  SELECT user_id, event_type, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY user_id ORDER BY run_id)
-        |      AS valid_to
-        |  FROM runs)
+      s"""WITH ${graft.ops.Sessionize.StateVersionsSqlCtes}
         |SELECT user_id, count(*)::BIGINT AS n_versions,
         |  max(CASE WHEN valid_from <= 1705363200000000
         |        AND (valid_to IS NULL OR valid_to > 1705363200000000)
@@ -1116,7 +1002,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |  max(CASE WHEN valid_from <= 1705363200000000
         |        AND (valid_to IS NULL OR valid_to > 1705363200000000)
         |      THEN valid_from END)::BIGINT AS t_version_start_us
-        |FROM v GROUP BY 1""".stripMargin,
+        |FROM versions GROUP BY 1""".stripMargin,
 
     "q126_path_trigrams" ->
       """WITH e AS (
@@ -1189,20 +1075,10 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM m""".stripMargin,
 
     "q130_band_join_views" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, event_id AS purchase_id, ts_us AS p_us
-        |  FROM ev WHERE event_type = 'purchase'),
-        |v AS (
-        |  SELECT user_id, ts_us AS v_us
-        |  FROM ev WHERE event_type = 'view')
-        |SELECT p.purchase_id, p.user_id, p.p_us,
-        |  count(v.v_us)::BIGINT AS n_views_near
-        |FROM p LEFT JOIN v
-        |  ON p.user_id = v.user_id AND abs(v.v_us - p.p_us) <= 600000000
-        |GROUP BY 1, 2, 3""".stripMargin,
+      s"""WITH $PurchaseViewBandSqlCtes
+        |SELECT purchase_id, user_id, p_us,
+        |  count(v_us)::BIGINT AS n_views_near
+        |FROM band GROUP BY 1, 2, 3""".stripMargin,
 
     "q131_segment_priority_lift" ->
       """WITH cells AS (
@@ -1353,28 +1229,10 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
 
     // the q104 islands formulation, reduced to duration bands
     "q139_session_duration_hist" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-        |o AS (
-        |  SELECT user_id, ts_us,
-        |    (CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us)
-        |            IS NULL
-        |          OR ts_us - lag(ts_us) OVER (PARTITION BY user_id
-        |            ORDER BY ts_us) >= 1800000000
-        |          THEN 1 ELSE 0 END) AS brk
-        |  FROM ev),
-        |g AS (
-        |  SELECT user_id, ts_us,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM o),
-        |sess AS (
-        |  SELECT count(*)::BIGINT AS n_events,
-        |    (max(ts_us) + 1800000000 - min(ts_us)) AS dur_us
-        |  FROM g GROUP BY user_id, sid)
-        |SELECT dur_us // 300000000 AS dur_bucket_5m,
+      s"""WITH ${graft.ops.Sessionize.GapSessionsSqlCtes}
+        |SELECT (end_us - start_us) // 300000000 AS dur_bucket_5m,
         |  count(*)::BIGINT AS n_sessions, sum(n_events)::BIGINT AS sum_events,
-        |  max(dur_us)::BIGINT AS max_dur_us
+        |  max(end_us - start_us)::BIGINT AS max_dur_us
         |FROM sess GROUP BY 1""".stripMargin,
 
     "q140_benford_audit" ->
@@ -1397,23 +1255,12 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM c JOIN e ON c.digit = e.digit""".stripMargin,
 
     "q141_attribution_credit" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |p AS (
-        |  SELECT user_id, event_id AS purchase_id, ts_us AS p_us
-        |  FROM ev WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts_us AS v_us FROM ev
-        |      WHERE event_type = 'view'),
-        |pairs AS (
-        |  SELECT p.purchase_id, v.v_us
-        |  FROM p JOIN v ON p.user_id = v.user_id
-        |   AND abs(v.v_us - p.p_us) <= 600000000),
+      s"""WITH $PurchaseViewBandSqlCtes,
         |cr AS (
         |  SELECT (v_us // 3600000000) % 24 AS view_hod,
         |    1000000 // count(*) OVER (PARTITION BY purchase_id)
         |      AS credit_ppm
-        |  FROM pairs)
+        |  FROM band WHERE v_us IS NOT NULL)
         |SELECT view_hod, count(*)::BIGINT AS n_touches,
         |  sum(credit_ppm)::BIGINT AS credit_ppm_total
         |FROM cr GROUP BY 1""".stripMargin,
@@ -1454,24 +1301,9 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |GROUP BY 1, 2""".stripMargin,
 
     "q145_lorenz_curve" ->
-      """WITH ov AS (
-        |  SELECT floor(o_totalprice * 100 + 0.5)::BIGINT AS v FROM orders),
-        |bins AS (
-        |  SELECT v // 100000 AS bin, count(*)::BIGINT AS n,
-        |    sum(v)::BIGINT AS sv
-        |  FROM ov GROUP BY 1),
-        |c AS (
-        |  SELECT bin, n, sv,
-        |    sum(n) OVER (ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_n,
-        |    sum(sv) OVER (ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_v,
-        |    sum(n) OVER () AS tot_n, sum(sv) OVER () AS tot_v
-        |  FROM bins)
-        |SELECT bin * 100000 AS bin_lo_cents, n,
-        |  ((cum_n * 1000000) // tot_n)::BIGINT AS cum_orders_ppm,
-        |  ((cum_v::HUGEINT * 1000000) // tot_v)::BIGINT AS cum_revenue_ppm
-        |FROM c""".stripMargin,
+      s"""WITH $LorenzCurveSqlCtes
+        |SELECT bin * 100000 AS bin_lo_cents, n, cum_orders_ppm, cum_revenue_ppm
+        |FROM lorenz""".stripMargin,
 
     "q146_lsh_recall_audit" ->
       s"""WITH $MinhashPairsCtes,
@@ -1538,39 +1370,10 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM x""".stripMargin,
 
     "q149_temporal_state_join" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |o AS (
-        |  SELECT user_id, event_type, ts_us, event_id,
-        |    (CASE WHEN lag(event_type) OVER w IS NULL
-        |          OR lag(event_type) OVER w <> event_type
-        |          THEN 1 ELSE 0 END) AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |r AS (
-        |  SELECT user_id, event_type,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id,
-        |    ts_us
-        |  FROM o),
-        |runs AS (
-        |  SELECT user_id, run_id, event_type, min(ts_us) AS valid_from
-        |  FROM r GROUP BY 1, 2, 3),
-        |v AS (
-        |  SELECT user_id AS v_user, event_type AS state, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY user_id ORDER BY run_id)
-        |      AS valid_to
-        |  FROM runs),
-        |p AS (
-        |  SELECT user_id, event_id, ts_us FROM e
-        |  WHERE event_type = 'purchase')
-        |SELECT coalesce(v.state, 'none') AS state_before,
-        |  count(*)::BIGINT AS n_purchases,
-        |  count(DISTINCT p.user_id)::BIGINT AS n_users
-        |FROM p LEFT JOIN v ON p.user_id = v.v_user
-        |  AND v.valid_from <= p.ts_us - 1
-        |  AND (v.valid_to IS NULL OR v.valid_to > p.ts_us - 1)
-        |GROUP BY 1""".stripMargin,
+      s"""WITH ${graft.ops.Sessionize.StateBeforeSqlCtes}
+        |SELECT state_before, count(*)::BIGINT AS n_purchases,
+        |  count(DISTINCT user_id)::BIGINT AS n_users
+        |FROM before GROUP BY 1""".stripMargin,
 
     "q150_acf" ->
       s"""WITH s AS (
@@ -2485,10 +2288,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
     // the shared zSql bit contract, identical bucket/bbox census
     "q238_hilbert_layout" -> {
       val zExpr = graft.ops.ZOrder.zSql("gx", "gy", 8)
-      s"""WITH p AS (
-        |  SELECT c_custkey AS id, (c_custkey * 48271) % 100000 AS x,
-        |    (c_custkey * 69621) % 100000 AS y
-        |  FROM customer),
+      s"""WITH $CustomerPointsCte,
         |g AS (SELECT id, (x * 256) // 100000 AS gx,
         |             (y * 256) // 100000 AS gy FROM p),
         |${graft.ops.Hilbert.hilbertCtes("g", 8)},
@@ -2693,24 +2493,12 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM glob('/root/reference/Datasets/**/*.txt')""".stripMargin,
 
     "q174_gini" ->
-      """WITH ov AS (
-        |  SELECT floor(o_totalprice * 100 + 0.5)::BIGINT AS v FROM orders),
-        |bins AS (
-        |  SELECT v // 100000 AS bin, count(*)::BIGINT AS n,
-        |    sum(v)::BIGINT AS sv
-        |  FROM ov GROUP BY 1),
-        |lor AS (
-        |  SELECT bin,
-        |    ((sum(n) OVER wc * 1000000) // sum(n) OVER ())::BIGINT AS x,
-        |    ((sum(sv) OVER wc * 1000000) // sum(sv) OVER ())::BIGINT AS y
-        |  FROM bins
-        |  WINDOW wc AS (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING
-        |    AND CURRENT ROW)),
+      s"""WITH $LorenzCurveSqlCtes,
         |tz AS (
-        |  SELECT bin, x, y,
-        |    lag(x, 1, 0) OVER (ORDER BY bin) AS px,
-        |    lag(y, 1, 0) OVER (ORDER BY bin) AS py
-        |  FROM lor)
+        |  SELECT cum_orders_ppm AS x, cum_revenue_ppm AS y,
+        |    lag(cum_orders_ppm, 1, 0) OVER (ORDER BY bin) AS px,
+        |    lag(cum_revenue_ppm, 1, 0) OVER (ORDER BY bin) AS py
+        |  FROM lorenz)
         |SELECT count(*)::BIGINT AS n_bins,
         |  sum((x - px) * (y + py))::BIGINT AS trapezoid_ppm2,
         |  ((1000000000000 - sum((x - px) * (y + py))) // 1000000)::BIGINT
@@ -2820,37 +2608,9 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM per_user GROUP BY 1""".stripMargin,
 
     "q169_stream_scd2_enrich" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-        |  FROM events),
-        |o AS (
-        |  SELECT user_id, event_type, ts_us, event_id,
-        |    (CASE WHEN lag(event_type) OVER w IS NULL
-        |          OR lag(event_type) OVER w <> event_type
-        |          THEN 1 ELSE 0 END) AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |r AS (
-        |  SELECT user_id, event_type,
-        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id,
-        |    ts_us
-        |  FROM o),
-        |runs AS (
-        |  SELECT user_id, run_id, event_type, min(ts_us) AS valid_from
-        |  FROM r GROUP BY 1, 2, 3),
-        |v AS (
-        |  SELECT user_id AS v_user, event_type AS state, valid_from,
-        |    lead(valid_from) OVER (PARTITION BY user_id ORDER BY run_id)
-        |      AS valid_to
-        |  FROM runs),
-        |p AS (
-        |  SELECT user_id, event_id, ts_us FROM e
-        |  WHERE event_type = 'purchase')
-        |SELECT p.user_id, p.event_id AS purchase_id, p.ts_us,
-        |  coalesce(v.state, 'none') AS state_before
-        |FROM p LEFT JOIN v ON p.user_id = v.v_user
-        |  AND v.valid_from <= p.ts_us - 1
-        |  AND (v.valid_to IS NULL OR v.valid_to > p.ts_us - 1)""".stripMargin,
+      s"""WITH ${graft.ops.Sessionize.StateBeforeSqlCtes}
+        |SELECT user_id, purchase_id, ts_us, state_before
+        |FROM before""".stripMargin,
 
     "q168_unpivot_measures" ->
       """WITH m AS (
@@ -2882,24 +2642,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM c""".stripMargin,
 
     "q192_spatial_grid_join" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS id, (c_custkey * 48271) % 100000 AS x,
-        |    (c_custkey * 69621) % 100000 AS y
-        |  FROM customer),
-        |c AS (SELECT id, x, y, x // 2000 AS cx, y // 2000 AS cy FROM p),
-        |o AS (SELECT dx, dy FROM (VALUES (-1), (0), (1)) a(dx),
-        |      (VALUES (-1), (0), (1)) b(dy)),
-        |pr AS (
-        |  SELECT a.id AS a_id, a.x AS ax, a.y AS ay,
-        |         b.id AS b_id, b.x AS bx, b.y AS b_y
-        |  FROM c a JOIN o ON true
-        |  JOIN c b ON b.cx = a.cx + o.dx AND b.cy = a.cy + o.dy
-        |  WHERE a.id < b.id),
-        |q AS (
-        |  SELECT a_id, b_id,
-        |    (ax - bx) * (ax - bx) + (ay - b_y) * (ay - b_y) AS d2
-        |  FROM pr
-        |  WHERE (ax - bx) * (ax - bx) + (ay - b_y) * (ay - b_y) <= 4000000),
+      s"""WITH $GridNeighborPairsSqlCtes,
         |layout AS (
         |  SELECT count(*)::BIGINT AS n_points,
         |    count(DISTINCT cx * 200 + cy)::BIGINT AS n_cells FROM c),
@@ -2909,7 +2652,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |    min(d2)::BIGINT AS min_d2, max(d2)::BIGINT AS max_d2,
         |    sum(((a_id * 131071 + b_id) % 2147483647)::HUGEINT)::BIGINT
         |      AS pair_checksum
-        |  FROM q)
+        |  FROM nn)
         |SELECT n_points, n_cells, n_pairs, sum_d2, min_d2, max_d2,
         |  pair_checksum
         |FROM layout, agg""".stripMargin,
@@ -2974,13 +2717,8 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
 
     "q195_entity_resolution" ->
       s"""WITH RECURSIVE $ErCandCtes,
-        |edges AS (SELECT id_a AS a, id_b AS b FROM cand WHERE lev <= 2
-        |          UNION SELECT id_b, id_a FROM cand WHERE lev <= 2),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM regb
-        |  UNION
-        |  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id),
-        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
+        |matches AS (SELECT id_a, id_b FROM cand WHERE lev <= 2),
+        |${graft.ops.ConnectedComponents.componentsSqlCtes("matches", "regb")},
         |sizes AS (SELECT component, count(*)::BIGINT AS csize
         |          FROM comp GROUP BY component),
         |hist AS (SELECT csize, count(*)::BIGINT AS n_clusters,
@@ -3555,15 +3293,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
            |  FROM nodes n LEFT JOIN hr$i r ON r.src = n.node CROSS JOIN hm$i m)"""
           .stripMargin
       }.mkString(",\n")
-      s"""WITH raw AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, count(*)::BIGINT AS w
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH $NationTradeEdgesCte,
         |nodes AS (SELECT src AS node FROM raw UNION SELECT dst FROM raw),
         |hb0 AS (SELECT node, 1000000::BIGINT AS hub_micro FROM nodes),
         |$iters
@@ -3619,15 +3349,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
            |    FROM d${i - 1} p JOIN top3 e ON e.u = p.node)
            |  GROUP BY 1, 2)""".stripMargin
       }.mkString(",\n")
-      s"""WITH raw AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, count(*)::BIGINT AS w
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH $NationTradeEdgesCte,
         |top3 AS MATERIALIZED (
         |  SELECT src AS u, dst AS v FROM (
         |    SELECT src, dst,
@@ -3682,15 +3404,7 @@ private[graft] trait OraclesPipeline { this: SparkEntry.type =>
         |FROM adj GROUP BY 1""".stripMargin,
 
     "q260_region_modularity" ->
-      """WITH raw AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, count(*)::BIGINT AS w
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-        |  GROUP BY 1, 2),
+      s"""WITH $NationTradeEdgesCte,
         |regs AS (SELECT n_name AS nname, r_name AS reg
         |  FROM nation JOIN region ON n_regionkey = r_regionkey),
         |el AS MATERIALIZED (

@@ -90,23 +90,9 @@ private[graft] trait QueriesGenStats { this: SparkEntry.type =>
     // paid once and amortized over every subsequent join; here it runs
     // in-query (mode overwrite) so the result is always fresh
     "q59_bucketed_join" -> ((s, d) => {
-      // a fresh session's in-memory catalog forgets the table while its
-      // warehouse directory survives — drop BOTH before the overwrite
-      def freshBucketed(df: DataFrame, name: String, key: String): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        // local-filesystem warehouse assumed (this harness); an object-store
-        // warehouse would pass an explicit .option("path", ...) instead
-        val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val dir = new java.io.File(wh, name)
-        if (dir.exists)
-          require(scala.reflect.io.Directory(dir).deleteRecursively(),
-            s"cannot clear stale table location $dir")
-        df.write.mode("overwrite").format("parquet")
-          .bucketBy(8, key).sortBy(key).saveAsTable(name)
-      }
-      freshBucketed(lineitem(s, d).select("l_orderkey", "l_quantity"),
+      freshBucketed(s, lineitem(s, d).select("l_orderkey", "l_quantity"),
         "graft_li_bucketed", "l_orderkey")
-      freshBucketed(orders(s, d).select("o_orderkey", "o_orderpriority"),
+      freshBucketed(s, orders(s, d).select("o_orderkey", "o_orderpriority"),
         "graft_ord_bucketed", "o_orderkey")
       s.table("graft_li_bucketed")
         .join(s.table("graft_ord_bucketed"), col("l_orderkey") === col("o_orderkey"))

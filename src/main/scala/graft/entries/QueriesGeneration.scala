@@ -64,14 +64,7 @@ private[graft] trait QueriesGeneration { this: SparkEntry.type =>
     // cluster, singletons label themselves), the cluster size, and the
     // canonical-keeper flag a dedup pipeline filters on
     "q61_dedup_clusters" -> ((s, d) => {
-      val docs = documents(s, d)
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        n = 3, numHashes = 16, bands = 4, minEstJaccard = 0.25)
-      val comp = graft.ops.ConnectedComponents.components(pairs, "id_a", "id_b")
-      val labeled = docs.select(col("doc_id"))
-        .join(comp, col("doc_id") === col("id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("component"))
+      val labeled = minhashComponents(documents(s, d))
       val sizes = labeled.groupBy("component").agg(count(lit(1)).as("csize"))
       labeled.join(sizes, Seq("component"))
         .select(col("doc_id"), col("component"), col("csize"),

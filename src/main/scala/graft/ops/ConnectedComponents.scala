@@ -94,4 +94,20 @@ object ConnectedComponents {
       .union(edges.select(col("v").as("id"), col("v").as("component")))
       .groupBy("id").agg(min("component").as("component"))
   }
+
+  /** [[components]] as DuckDB CTEs (the caller writes WITH RECURSIVE): the
+    * min reachable id per node over the undirected graph of the relation
+    * `pairs` (id_a, id_b), starting from every `id` of the relation
+    * `nodes`, so isolated nodes label themselves; yields `comp(id,
+    * component)`. DuckDB affords the recursive reachability at oracle
+    * scale; the Spark side contracts stars in O(log n) distributed rounds.
+    */
+  def componentsSqlCtes(pairs: String, nodes: String): String =
+    s"""edges AS (SELECT id_a AS a, id_b AS b FROM $pairs
+       |          UNION SELECT id_b, id_a FROM $pairs),
+       |reach(id, r) AS (
+       |  SELECT id, id FROM $nodes
+       |  UNION
+       |  SELECT e.b, reach.r FROM reach JOIN edges e ON e.a = reach.id),
+       |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)""".stripMargin
 }

@@ -67,21 +67,19 @@ class DamerauLevSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", 2)
       .config("spark.ui.enabled", "false").getOrCreate()
-    try {
-      import spark.implicits._
-      val df = goldens.map { case (a, b, _) => (a, b) }.toDF("a", "b")
-      val got = df.select(DamerauLevenshtein(col("a"), col("b")))
-        .collect().map(_.getInt(0)).toSeq
-      assert(got == goldens.map(_._3), "whole-stage codegen result")
-      // interpreted (no codegen) — direct expression eval
-      goldens.foreach { case (a, b, exp) =>
-        val e = text.DamerauLevenshtein(
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            UTF8String.fromString(a)),
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            UTF8String.fromString(b)))
-        assert(e.eval(null) == exp, s"interpreted dl('$a','$b')")
-      }
-    } finally spark.stop()
+    import spark.implicits._
+    val df = goldens.map { case (a, b, _) => (a, b) }.toDF("a", "b")
+    val got = df.select(DamerauLevenshtein(col("a"), col("b")))
+      .collect().map(_.getInt(0)).toSeq
+    assert(got == goldens.map(_._3), "whole-stage codegen result")
+    // interpreted (no codegen) — direct expression eval
+    goldens.foreach { case (a, b, exp) =>
+      val e = text.DamerauLevenshtein(
+        org.apache.spark.sql.catalyst.expressions.Literal(
+          UTF8String.fromString(a)),
+        org.apache.spark.sql.catalyst.expressions.Literal(
+          UTF8String.fromString(b)))
+      assert(e.eval(null) == exp, s"interpreted dl('$a','$b')")
+    }
   }
 }

@@ -221,4 +221,42 @@ class StreamBatchSpec extends AnyFunSuite {
     assert(got.nonEmpty && got === rows(batch),
       "drained sink must equal the batch enrichment join")
   }
+
+  test("concurrent callers on sibling sessions: SCD2 and event enrichment " +
+      "each drain to their batch twin, neither caller's conf changes") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration._
+    import graft.ops.Sessionize
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.shuffle.partitions", "spark.sql.streaming.schemaInference")
+    val scd2Caller = spark.newSession()
+    val enrichCaller = spark.newSession()
+    def confOf(s: SparkSession) = keys.map(s.conf.getOption)
+    val before = Seq(confOf(scd2Caller), confOf(enrichCaller))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val scd2 = Future(rows(StreamEnrich.enrichPurchasesScd2(scd2Caller, d,
+      tmp("scd2"), queryName = s"t_scd2_c_${System.nanoTime()}")))
+    val enriched = Future(rows(StreamEnrich.enrichEvents(enrichCaller, d,
+      queryName = s"t_enrich_c_${System.nanoTime()}")))
+    val (gotScd2, gotEnriched) =
+      Await.result(scd2.zip(enriched), 10.minutes)
+    assert(Seq(confOf(scd2Caller), confOf(enrichCaller)) === before,
+      "a stream must not set conf on the caller's session")
+    val ev = graft.sources.Events.tsToLongNs(
+      spark.read.parquet(s"$d/events.parquet"))
+    assert(gotScd2.nonEmpty &&
+      gotScd2 === rows(Sessionize.stateBefore(ev, Sessionize.stateVersions(ev))),
+      "drained SCD2 sink must equal the batch purchase/version join")
+    val static = ev.groupBy("user_id")
+      .agg(sum((col("event_type") === "purchase").cast("long"))
+        .as("n_purchases"))
+      .withColumn("is_buyer", col("n_purchases") > 0)
+    val batch = ev.select("event_id", "user_id", "event_type")
+      .join(static, Seq("user_id"))
+    assert(gotEnriched.nonEmpty && gotEnriched === rows(batch),
+      "drained enrichment sink must equal the batch enrichment join")
+  }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.text.TextOps
 
-/** Specs for winnowing fingerprint selection (q246) and the dynamic-gap
-  * session semantics q247's oracle replays.
+/** Specs for winnowing fingerprint selection (q246), the dynamic-gap
+  * session semantics q247's oracle replays, and the contracts of the shared
+  * gap-session and state-run builders in [[graft.ops.Sessionize]].
   */
 class WinnowSessionSpec extends AnyFunSuite {
 
@@ -71,5 +72,61 @@ class WinnowSessionSpec extends AnyFunSuite {
       .collect()
     assert(sessions.length == 1 && sessions.head.getLong(2) == 3,
       s"one merged session of 3 events expected: ${sessions.mkString}")
+  }
+
+  private val gapUs = 1800000000L
+  private val t0Us = 1700000000000000L
+
+  test("gap sessions: a gap of exactly 30 min stays in the session, 1 µs more splits it") {
+    // raw events carry ts in ns; session_window merges windows
+    // [ts, ts + gap) that overlap OR touch, so only a longer gap splits
+    val ev = Seq(
+      (1L, t0Us, 1.0), (1L, t0Us + gapUs + 1, 2.0),
+      (2L, t0Us, 1.0), (2L, t0Us + gapUs, 2.0))
+      .toDF("user_id", "ts_us", "value")
+      .select(col("user_id"), (col("ts_us") * 1000).as("ts"), col("value"))
+    val n = graft.ops.Sessionize.gapSessions(ev).groupBy("user_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(n === Map(1L -> 2L, 2L -> 1L))
+  }
+
+  test("gap sessions: end_us is the last event + gap, with counts and sums") {
+    val last = t0Us + 25 * 60000000L
+    val ev = Seq((7L, t0Us, 1.5), (7L, t0Us + 60000000L, 2.0), (7L, last, 0.25))
+      .toDF("user_id", "ts_us", "value")
+      .select(col("user_id"), (col("ts_us") * 1000).as("ts"), col("value"))
+    val rows = graft.ops.Sessionize.gapSessions(ev)
+      .select("user_id", "start_us", "end_us", "n_events", "sum_v_micro")
+      .collect().map(_.toSeq)
+    assert(rows.toSeq === Seq(Seq(7L, t0Us, last + gapUs, 3L, 3750000L)))
+  }
+
+  test("state runs: equal clocks are ordered by event_id") {
+    // by (ts, event_id) the types read click, view, view: two runs; in
+    // row order (view, click, view) they would be three
+    val ev = Seq((1L, 2L, "view", 100L), (1L, 1L, "click", 100L),
+        (1L, 3L, "view", 100L))
+      .toDF("user_id", "event_id", "event_type", "ts")
+    val runIds = graft.ops.Sessionize.stateRuns(ev, "ts")
+      .collect().map(r => r.getAs[Long]("event_id") -> r.getAs[Long]("run_id"))
+      .toMap
+    assert(runIds === Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
+  }
+
+  test("state versions: valid_to is the next version's start, NULL for each user's last") {
+    val ev = Seq(
+        (1L, 1L, "view", 10L), (1L, 2L, "view", 20L), (1L, 3L, "cart", 30L),
+        (1L, 4L, "view", 40L), (2L, 5L, "purchase", 15L))
+      .toDF("user_id", "event_id", "event_type", "ts_us")
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        (col("ts_us") * 1000).as("ts"))
+    val v = graft.ops.Sessionize.stateVersions(ev)
+      .select("user_id", "run_id", "event_type", "valid_from", "valid_to")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+        r.getLong(3), Option(r.get(4)).map(_.asInstanceOf[Long])))
+      .sortBy(t => (t._1, t._2)).toSeq
+    assert(v === Seq(
+      (1L, 1L, "view", 10L, Some(30L)), (1L, 2L, "cart", 30L, Some(40L)),
+      (1L, 3L, "view", 40L, None), (2L, 1L, "purchase", 15L, None)))
   }
 }
