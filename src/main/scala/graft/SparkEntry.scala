@@ -470,6 +470,14 @@ object SparkEntry
     "(VALUES " + weightSpecs(links).map { case (series, lag) =>
       s"('$series',$lag)" }.mkString(",\n    ") + ") AS s(series, lag)"
 
+  /** A link list's DuckDB CTEs `specs$sfx` (its [[weightSpecs]]) and
+    * `links$sfx` (its rows).
+    */
+  private[graft] def weightLinksSqlCtes(links: Seq[WeightLink],
+      sfx: String = ""): String =
+    s"specs$sfx AS (SELECT * FROM ${weightSpecsValuesSql(links)}),\n" +
+      s"links$sfx AS (SELECT * FROM ${weightLinksValuesSql(links)})"
+
   /** Declared X-X adjacencies of a (family, nVars, lag-2) cell as a CASE
     * flag over unordered pairs — U-incident links are excluded because
     * the PC capstones observe only the X panel (q329's point: the hidden
@@ -655,14 +663,18 @@ object SparkEntry
     * stays X-only — the capstone's point is that Granger flags the
     * U-induced spurious edges the truth column does NOT declare.
     */
-  private[graft] def grangerTruthCase(family: String): String = {
-    val edges = graft.core.Parser.truthLinks(family, 4, 2)
-      .filter(_.lag == 1).map(l => (l.source, l.target)).distinct
+  private[graft] def grangerTruthCase(family: String): String =
+    causeEffectCase(graft.core.Parser.truthLinks(family, 4, 2)
+      .filter(_.lag == 1).map(l => (l.source, l.target)))
+
+  /** A 0/1 flag over (cause, effect) that reads 1 on the distinct
+    * `edges`: a CASE, or "0" for no edges.
+    */
+  private def causeEffectCase(edges: Seq[(String, String)]): String =
     if (edges.isEmpty) "0"
-    else "CASE " + edges.map { case (a, b) =>
+    else "CASE " + edges.distinct.map { case (a, b) =>
       s"WHEN cause = '$a' AND effect = '$b' THEN 1"
     }.mkString(" ") + " ELSE 0 END"
-  }
   private[graft] val GrangerGenTruthCase: String = grangerTruthCase("A1")
 
   /** q330's truth cell: a declared X-edge at ANY lag 1..maxLag — the
@@ -670,15 +682,10 @@ object SparkEntry
     * slice grangerTruthCase takes). One Scala value, both engines.
     */
   private[graft] def grangerTruthCaseAnyLag(family: String, nVars: Int,
-      maxLag: Int): String = {
-    val edges = graft.core.Parser.truthLinks(family, nVars, maxLag)
+      maxLag: Int): String =
+    causeEffectCase(graft.core.Parser.truthLinks(family, nVars, maxLag)
       .filter(l => l.lag >= 1 && l.lag <= maxLag)
-      .map(l => (l.source, l.target)).distinct
-    if (edges.isEmpty) "0"
-    else "CASE " + edges.map { case (a, b) =>
-      s"WHEN cause = '$a' AND effect = '$b' THEN 1"
-    }.mkString(" ") + " ELSE 0 END"
-  }
+      .map(l => (l.source, l.target)))
 
   /** q325's shipped artifact pair and the truth CASE parsed from the
     * SHIPPED structure txt by the S4-inverse parser — the same string
@@ -688,13 +695,8 @@ object SparkEntry
     "/root/reference/Datasets/D3/lag 2/" +
       "nonlinear_ts_n1000_vars4_lag2_noise30_mcar10_block10"
   private[graft] lazy val ShippedD3TruthCase: String =
-    shippedD3Links.fold(ShippedD3Missing) { links =>
-      val edges = links.filter(_._2 == 1).map(l => (l._1, l._3)).distinct
-      if (edges.isEmpty) "0"
-      else "CASE " + edges.map { case (a, b) =>
-        s"WHEN cause = '$a' AND effect = '$b' THEN 1"
-      }.mkString(" ") + " ELSE 0 END"
-    }
+    shippedD3Links.fold(ShippedD3Missing)(links =>
+      causeEffectCase(links.filter(_._2 == 1).map(l => (l._1, l._3))))
 
   /** The shipped structure txt's parsed links, or None on a host without
     * the shipped corpus. The q325/q338/q339 truths render from
@@ -1525,11 +1527,9 @@ object SparkEntry
   private[graft] def minhashComponents(docs: DataFrame): DataFrame = {
     val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
       n = 3, numHashes = 16, bands = 4, minEstJaccard = 0.25)
-    val comp = graft.ops.ConnectedComponents.components(pairs, "id_a", "id_b")
-    docs.select(col("doc_id"))
-      .join(comp, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("component"))
+    graft.ops.ConnectedComponents.componentsOf(
+        docs.select(col("doc_id").as("id")), pairs)
+      .withColumnRenamed("id", "doc_id")
   }
 
   /** [[minhashComponents]] as DuckDB CTEs (no leading WITH; the caller

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import graft.generate.Panels
 
 /** Causal slice of [[SparkEntry.oracleSql]] — the DuckDB twins of
   * [[QueriesCausal]], split mechanically from the single map. */
@@ -338,103 +339,32 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |UNION ALL SELECT 'edge3', 'both', count(*)::BIGINT
         |  FROM pcs3_out WHERE edge3 = 1""".stripMargin,
 
-    "q351_struct_betas" -> {
-      val links = weightLinks("", "A1", 6, 2)
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q351_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT FROM gen")
-             .mkString("\n")}),
-        |specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
-        |${graft.metrics.Causal.structuralMomentsSqlCtes(
-             "panel", "specs", "t BETWEEN 2 AND 4999")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")}
+    "q351_struct_betas" ->
+      s"""WITH ${a1BetasSqlCtes("q351_gen")}
         |SELECT target, source, lag::INT AS lag, beta_ppm,
         |  declared_ppm::BIGINT AS declared_ppm,
         |  effective_ppm::BIGINT AS effective_ppm,
         |  abs(beta_ppm - effective_ppm)::BIGINT AS abs_err_ppm,
         |  ((1000 * sum(beta_ppm::HUGEINT * cjy) OVER (PARTITION BY target))
         |    // (1000000 * cyy::HUGEINT))::BIGINT AS r2_permille
-        |FROM sbeta""".stripMargin
-    },
+        |FROM sbeta""".stripMargin,
 
-    "q352_weight_recovery_census" -> {
-      val cfgs = Grid.all().filter(c =>
-        (c.family == "A1" || c.family == "A1C") && c.nPoints == 5000
-          && c.noiseType == "gaussian")
-      val links = cfgs.flatMap(c =>
-        weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q352_gen/*.parquet')),
-        |panel AS (
-        |  SELECT configId::VARCHAR || '|X1' AS series,
-        |    configId * 8192 + t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen WHERE X1 IS NOT NULL
-        |${(2 to 8).map(i =>
-             s"  UNION ALL SELECT configId::VARCHAR || '|X$i', " +
-               s"configId * 8192 + t, floor(X$i * 1000)::BIGINT " +
-               s"FROM gen WHERE X$i IS NOT NULL").mkString("\n")}),
-        |specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
-        |${graft.metrics.Causal.structuralMomentsSqlCtes(
-             "panel", "specs", "t % 8192 BETWEEN 4 AND 4999")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")}
-        |SELECT family, n_vars::INT AS n_vars, max_lag::INT AS max_lag,
-        |  count(*)::BIGINT AS n_links,
-        |  sum(CASE WHEN effective_ppm = 0 THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_dead,
-        |  (sum(abs(beta_ppm - effective_ppm)) // count(*))::BIGINT
-        |    AS mean_abs_err_ppm,
-        |  max(abs(beta_ppm - effective_ppm))::BIGINT AS max_abs_err_ppm
-        |FROM sbeta GROUP BY 1, 2, 3""".stripMargin
-    },
+    "q352_weight_recovery_census" ->
+      s"""WITH ${a1FoldBetasSqlCtes("q352_gen")}
+        |$RecoveryCensusSql""".stripMargin,
 
-    "q353_strict_recovery_contrast" -> {
-      val links = weightLinks("", "A1", 6, 2)
-      def chain(dump: String, sfx: String): String =
-        s"""gen$sfx AS (
-          |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
-          |panel$sfx AS (
-          |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-          |  FROM gen$sfx
-          |${(2 to 6).map(i =>
-               s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT " +
-                 s"FROM gen$sfx").mkString("\n")}),
-          |${graft.metrics.Causal.structuralMomentsSqlCtes(
-               s"panel$sfx", "specs", "t BETWEEN 2 AND 4999", sfx)},
-          |${graft.metrics.Causal.structuralBetasSqlCtes("links", sfx)}"""
-          .stripMargin
-      s"""WITH specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
-        |${chain("q353_gen_default", "d")},
-        |${chain("q353_gen_strict", "s")}
+    "q353_strict_recovery_contrast" ->
+      s"""WITH ${a1BetasSqlCtes("q353_gen_default", "d")},
+        |${a1BetasSqlCtes("q353_gen_strict", "s")}
         |SELECT bd.target, bd.source, bd.lag::INT AS lag,
         |  bd.declared_ppm::BIGINT AS declared_ppm,
         |  bd.effective_ppm::BIGINT AS effective_ppm,
         |  bd.beta_ppm AS beta_default_ppm, bs.beta_ppm AS beta_strict_ppm
         |FROM sbetad bd JOIN sbetas bs ON bs.target = bd.target
-        |  AND bs.source = bd.source AND bs.lag = bd.lag""".stripMargin
-    },
+        |  AND bs.source = bd.source AND bs.lag = bd.lag""".stripMargin,
 
-    "q354_noise_recovery" -> {
-      val links = weightLinks("", "A1", 6, 2)
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q354_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT FROM gen")
-             .mkString("\n")}),
-        |specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
-        |${graft.metrics.Causal.structuralMomentsSqlCtes(
-             "panel", "specs", "t BETWEEN 2 AND 4999")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")}
+    "q354_noise_recovery" ->
+      s"""WITH ${a1BetasSqlCtes("q354_gen")}
         |SELECT target, count(*)::BIGINT AS n_parents,
         |  ((1000 * sum(beta_ppm::HUGEINT * cjy))
         |    // (1000000 * max(cyy::HUGEINT)))::BIGINT AS r2_permille,
@@ -446,8 +376,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |      - sum(beta_ppm::HUGEINT * cjy))
         |    // (1000000 * max(n::HUGEINT) * max(n))) - 10000)::BIGINT
         |    AS sigma2_err_v
-        |FROM sbeta GROUP BY 1""".stripMargin
-    },
+        |FROM sbeta GROUP BY 1""".stripMargin,
 
     "q373_blind_adjusted_recovery" ->
       blindRecoverySql("C1", "q373_gen", nearestLag = false, last = 491),
@@ -917,20 +846,9 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
              "virt", "t % 8192 BETWEEN 4 AND 499")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |${graft.metrics.Causal.structuralInferenceSqlCtes()}
-        |SELECT family, max_lag::INT AS max_lag,
-        |  mcar_permille::BIGINT AS mcar_permille,
-        |  block_permille::BIGINT AS block_permille,
-        |  count(*)::BIGINT AS n_links,
-        |  (sum(abs(beta_ppm - effective_ppm)) // count(*))::BIGINT
-        |    AS mean_abs_err_ppm,
-        |  max(abs(beta_ppm - effective_ppm))::BIGINT AS max_abs_err_ppm,
-        |  max(CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0 THEN NULL
-        |    ELSE (1000 * (beta_ppm - effective_ppm)::HUGEINT
-        |      * (beta_ppm - effective_ppm)) // se2_ppm2 END)::BIGINT
-        |    AS max_diff_t2_milli,
-        |  min(n)::BIGINT AS complete_n
-        |FROM sttest GROUP BY 1, 2, 3, 4""".stripMargin
+        |${inferenceCensusSql(Seq("family", "max_lag::INT AS max_lag",
+             "mcar_permille::BIGINT AS mcar_permille",
+             "block_permille::BIGINT AS block_permille"))}""".stripMargin
     },
 
     "q365_block_missing_recovery" -> {
@@ -1000,19 +918,8 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
              "virt", "t % 65536 BETWEEN 4 AND 49999")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
-        |${graft.metrics.Causal.structuralInferenceSqlCtes()}
-        |SELECT family, max_lag::INT AS max_lag,
-        |  block_permille::BIGINT AS block_permille,
-        |  count(*)::BIGINT AS n_links,
-        |  (sum(abs(beta_ppm - effective_ppm)) // count(*))::BIGINT
-        |    AS mean_abs_err_ppm,
-        |  max(abs(beta_ppm - effective_ppm))::BIGINT AS max_abs_err_ppm,
-        |  max(CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0 THEN NULL
-        |    ELSE (1000 * (beta_ppm - effective_ppm)::HUGEINT
-        |      * (beta_ppm - effective_ppm)) // se2_ppm2 END)::BIGINT
-        |    AS max_diff_t2_milli,
-        |  min(n)::BIGINT AS complete_n
-        |FROM sttest GROUP BY 1, 2, 3""".stripMargin
+        |${inferenceCensusSql(Seq("family", "max_lag::INT AS max_lag",
+             "block_permille::BIGINT AS block_permille"))}""".stripMargin
     },
 
     "q368_stream_inference" ->
@@ -1026,13 +933,11 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
 
     "q367_forecast_calibration" -> {
       val links = weightLinks("", "A1", 6, 2)
-      val specs = weightSpecs(links)
-      val virtRows = specs.map { case (series, k) =>
-        s"SELECT '$series@$k' AS vs, t + $k AS t, " +
-          s"floor($series * 1000)::BIGINT AS v FROM gen"
+      val virtRows = weightSpecs(links).map { case (series, k) =>
+        s"SELECT '$series@$k' AS vs, day + $k AS t, v FROM panel " +
+          s"WHERE series = '$series'"
       }.mkString("\n  UNION ALL ")
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q367_gen/*.parquet')),
+      s"""WITH ${a1PanelSqlCtes("q367_gen")},
         |virt AS (
         |  $virtRows),
         |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
@@ -1091,14 +996,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
           Seq(swept) ++ sib
         }
       }.mkString(",\n    ")
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q366_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT FROM gen")
-             .mkString("\n")}),
+      s"""WITH ${a1PanelSqlCtes("q366_gen")},
         |specs AS (SELECT * FROM (VALUES $specRows) AS s(series, lag)),
         |links AS (SELECT * FROM (VALUES $linkRows)
         |  AS l(vk, target, source, true_lag, cand, effective_ppm, swept,
@@ -1127,50 +1025,17 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |FROM ranked WHERE rk = 1""".stripMargin
     },
 
-    "q363_beta_ttest" -> {
-      val links = weightLinks("", "A1", 6, 2)
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q363_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT FROM gen")
-             .mkString("\n")}),
-        |specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
-        |${graft.metrics.Causal.structuralMomentsSqlCtes(
-             "panel", "specs", "t BETWEEN 2 AND 4999")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
+    "q363_beta_ttest" ->
+      s"""WITH ${a1BetasSqlCtes("q363_gen")},
         |${graft.metrics.Causal.structuralInferenceSqlCtes()}
         |SELECT target, source, lag::INT AS lag, beta_ppm,
         |  effective_ppm::BIGINT AS effective_ppm,
         |  k_parents::BIGINT AS k_parents, se2_ppm2, t2_milli,
         |  (t2_milli > 3841)::INT AS significant
-        |FROM sttest""".stripMargin
-    },
+        |FROM sttest""".stripMargin,
 
-    "q364_inference_census" -> {
-      val cfgs = Grid.all().filter(c =>
-        (c.family == "A1" || c.family == "A1C") && c.nPoints == 5000
-          && c.noiseType == "gaussian")
-      val links = cfgs.flatMap(c =>
-        weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q364_gen/*.parquet')),
-        |panel AS (
-        |  SELECT configId::VARCHAR || '|X1' AS series,
-        |    configId * 8192 + t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen WHERE X1 IS NOT NULL
-        |${(2 to 8).map(i =>
-             s"  UNION ALL SELECT configId::VARCHAR || '|X$i', " +
-               s"configId * 8192 + t, floor(X$i * 1000)::BIGINT " +
-               s"FROM gen WHERE X$i IS NOT NULL").mkString("\n")}),
-        |specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
-        |${graft.metrics.Causal.structuralMomentsSqlCtes(
-             "panel", "specs", "t % 8192 BETWEEN 4 AND 4999")},
-        |${graft.metrics.Causal.structuralBetasSqlCtes("links")},
+    "q364_inference_census" ->
+      s"""WITH ${a1FoldBetasSqlCtes("q364_gen")},
         |${graft.metrics.Causal.structuralInferenceSqlCtes()}
         |SELECT family, n_vars::INT AS n_vars, max_lag::INT AS max_lag,
         |  count(*)::BIGINT AS n_links,
@@ -1188,25 +1053,18 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |    AS min_live_t2_milli,
         |  max(CASE WHEN effective_ppm = 0 THEN t2_milli END)
         |    AS max_dead_t2_milli
-        |FROM sttest GROUP BY 1, 2, 3""".stripMargin
-    },
+        |FROM sttest GROUP BY 1, 2, 3""".stripMargin,
 
     "q355_power_recovery_contrast" -> {
       def chain(dump: String, sfx: String): String = {
-        val unions = (1 to 4).flatMap(i => Seq(
-          s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT " +
-            s"FROM gen$sfx",
-          s"  UNION ALL SELECT 'X${i}p2', t, " +
-            s"floor(X$i * X$i * 1000)::BIGINT FROM gen$sfx",
-          s"  UNION ALL SELECT 'X${i}p3', t, " +
-            s"floor(X$i * X$i * X$i * 1000)::BIGINT FROM gen$sfx"))
-          .drop(1).mkString("\n")
+        val powers = for (i <- 1 to 4; k <- Seq(2, 3)) yield
+          s"  UNION ALL SELECT 'X${i}p$k', t, " +
+            Panels.milliSql(Seq.fill(k)(s"X$i").mkString(" * ")) +
+            s" FROM gen$sfx"
         s"""gen$sfx AS (
           |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
-          |panel$sfx AS (
-          |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-          |  FROM gen$sfx
-          |$unions),
+          |panel$sfx AS (${Panels.singleSqlCte(s"gen$sfx", 4)}
+          |${powers.mkString("\n")}),
           |${graft.metrics.Causal.structuralMomentsSqlCtes(
                s"panel$sfx", "specs", "t BETWEEN 2 AND 49999", sfx)},
           |${graft.metrics.Causal.structuralBetasSqlCtes("links", sfx)}"""
@@ -1237,11 +1095,8 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
              lagMult = 1, sfx = "1")},
         |${graft.ops.Lagged.nearestLagIndexSqlCtes("gen", "\"time\"",
              lagMult = 2, sfx = "2")},
-        |pan AS (
-        |  SELECT 'X1' AS series, t, floor(X1 * 1000)::BIGINT AS v FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
+        |pan AS (SELECT series, day AS t, v FROM panel),
         |virt AS (
         |  SELECT series || '@0' AS vs, t, v FROM pan
         |  UNION ALL SELECT p.series || '@1', l.t, p.v
@@ -1260,17 +1115,8 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     },
 
     "q357_weight_recovery_holdout" -> {
-      val links = weightLinks("", "A1", 6, 2)
-      s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q357_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |${(2 to 6).map(i =>
-             s"  UNION ALL SELECT 'X$i', t, floor(X$i * 1000)::BIGINT FROM gen")
-             .mkString("\n")}),
-        |specs AS (SELECT * FROM ${weightSpecsValuesSql(links)}),
-        |links AS (SELECT * FROM ${weightLinksValuesSql(links)}),
+      s"""WITH ${a1PanelSqlCtes("q357_gen")},
+        |${weightLinksSqlCtes(weightLinks("", "A1", 6, 2))},
         |${graft.metrics.Causal.structuralMomentsSqlCtes(
              "panel", "specs", "t BETWEEN 2 AND 2499", "tr")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links", "tr")},
@@ -1440,14 +1286,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |${graft.metrics.Causal.structuralMomentsFromVirtualSqlCtes(
              "virt", "t % 8192 BETWEEN 4 AND 4999")},
         |${graft.metrics.Causal.structuralBetasSqlCtes("links")}
-        |SELECT family, n_vars::INT AS n_vars, max_lag::INT AS max_lag,
-        |  count(*)::BIGINT AS n_links,
-        |  sum(CASE WHEN effective_ppm = 0 THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_dead,
-        |  (sum(abs(beta_ppm - effective_ppm)) // count(*))::BIGINT
-        |    AS mean_abs_err_ppm,
-        |  max(abs(beta_ppm - effective_ppm))::BIGINT AS max_abs_err_ppm
-        |FROM sbeta GROUP BY 1, 2, 3""".stripMargin
+        |$RecoveryCensusSql""".stripMargin
     },
 
     "q359_weight_recovery_wide" -> {
@@ -2063,12 +1902,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q294_granger_on_generated" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q294_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
         |${graft.metrics.Causal.grangerSqlCtes("panel")}
         |SELECT cause, effect, n, cyy, rss_r, rss_u, f_gain, granger,
         |  ($GrangerGenTruthCase)::INT AS truth_lag1
@@ -2197,12 +2031,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q300_pc_on_generated" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q300_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
         |${graft.metrics.Causal.pcSkeletonSqlCtes("panel")}
         |SELECT a, b, n, cab, keep0, sepset, edge,
         |  ($PcGenTruthCase)::INT AS truth_adj
@@ -2535,12 +2364,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q332_pc_orientation_scored" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q332_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
         |${graft.metrics.Causal.pcSkeletonSqlCtes("panel", PcOrientTauSqBp)},
         |${graft.metrics.Causal.pcOrientSqlCtes(PcMeekRounds)},
         |${pcScoringSqlTail(PcMeekRounds, pcDirectedTruthValuesSql)}""".stripMargin,
@@ -2548,14 +2372,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q336_pc_order2_scored" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q336_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X5', t, floor(X5 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X6', t, floor(X6 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 6)}),
         |${graft.metrics.Causal.pcSkeleton2SqlCtes("panel", Pc2TauSqBp)}
         |SELECT a, b, edge::INT AS edge, sepset, sepset2,
         |  edge2::INT AS edge2, ($PcTruth6Case)::INT AS truth_adj
@@ -2564,14 +2381,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q337_pc_order2_oriented" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q336_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X5', t, floor(X5 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X6', t, floor(X6 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 6)}),
         |${graft.metrics.Causal.pcSkeleton2SqlCtes("panel", Pc2TauSqBp)},
         |${graft.metrics.Causal.pcOrient2SqlCtes(PcMeekRounds2)},
         |${pcScoringSqlTail(PcMeekRounds2, pcTruthValuesSql(PcDirectedTruth6))}""".stripMargin,
@@ -2656,12 +2466,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q329_pc_confounded" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q329_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
         |${graft.metrics.Causal.pcSkeletonSqlCtes("panel")}
         |SELECT a, b, n, cab, keep0, sepset, edge,
         |  (${pcTruthCase("A1C")})::INT AS truth_adj
@@ -2670,12 +2475,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q330_granger_multilag" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q330_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
         |${graft.metrics.Causal.grangerMultiSqlCtes("panel", 4)}
         |SELECT cause, effect, n, cyy, rss_r, rss_u, f_gain, granger,
         |  (${grangerTruthCaseAnyLag("A1", 4, 4)})::INT AS truth_any
@@ -2749,13 +2549,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
         |  WHERE X3 IS NOT NULL
         |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM csv
         |  WHERE X4 IS NOT NULL),
-        |gl AS (
-        |  SELECT cp.series AS cause, e.series AS effect,
-        |    e.v AS yv, ep.v AS pv, cp.v AS qv
-        |  FROM lx
-        |  JOIN pan e ON e.t = lx.t
-        |  JOIN pan ep ON ep.t = lx.lag_idx AND ep.series = e.series
-        |  JOIN pan cp ON cp.t = lx.lag_idx AND cp.series <> e.series),
+        |${graft.metrics.Causal.NearestLagPairsSqlCte},
         |${graft.metrics.Causal.grangerDecideSqlCtes("gl")}
         |SELECT cause, effect, n, cyy, rss_r, rss_u, f_gain, granger,
         |  ($ShippedD3TruthCase)::INT AS truth_lag1
@@ -2878,12 +2672,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q344_stream_granger" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q344_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
         |gj AS (
         |  SELECT x.series AS cause, y.series AS effect, y.day,
         |    y.v AS yv, x.v AS xv
@@ -3179,13 +2968,8 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
     "q313_granger_confounded" ->
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q313_gen/*.parquet')),
-        |panel AS (
-        |  SELECT 'X1' AS series, t AS day, floor(X1 * 1000)::BIGINT AS v
-        |  FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'U', t, floor(U * 1000)::BIGINT FROM gen),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}
+        |  UNION ALL SELECT 'U', t, ${Panels.milliSql("U")} FROM gen),
         |${graft.metrics.Causal.grangerSqlCtes("panel")}
         |SELECT cause, effect, n, cyy, rss_r, rss_u, f_gain, granger,
         |  (${grangerTruthCase("A1C")})::INT AS truth_lag1
@@ -3195,18 +2979,9 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
       s"""WITH gen AS (
         |  SELECT * FROM read_parquet('__GEN_DIR__/q314_gen/*.parquet')),
         |${graft.ops.Lagged.nearestLagIndexSqlCtes("gen", "\"time\"")},
-        |pan AS (
-        |  SELECT 'X1' AS series, t, floor(X1 * 1000)::BIGINT AS v FROM gen
-        |  UNION ALL SELECT 'X2', t, floor(X2 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X3', t, floor(X3 * 1000)::BIGINT FROM gen
-        |  UNION ALL SELECT 'X4', t, floor(X4 * 1000)::BIGINT FROM gen),
-        |gl AS (
-        |  SELECT cp.series AS cause, e.series AS effect,
-        |    e.v AS yv, ep.v AS pv, cp.v AS qv
-        |  FROM lx
-        |  JOIN pan e ON e.t = lx.t
-        |  JOIN pan ep ON ep.t = lx.lag_idx AND ep.series = e.series
-        |  JOIN pan cp ON cp.t = lx.lag_idx AND cp.series <> e.series),
+        |panel AS (${Panels.singleSqlCte("gen", 4)}),
+        |pan AS (SELECT series, day AS t, v FROM panel),
+        |${graft.metrics.Causal.NearestLagPairsSqlCte},
         |${graft.metrics.Causal.grangerDecideSqlCtes("gl")}
         |SELECT cause, effect, n, cyy, rss_r, rss_u, f_gain, granger,
         |  (${grangerTruthCase("A2")})::INT AS truth_lag1

@@ -31,6 +31,149 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       cands.toDF("pair", "tier", "y", "x", "sib")))
   }
 
+  /** The A1 6-var lag-2 n=5000 cell (strict kernel when `strict`) dumped
+    * under `dump` as (t, X1..X6), and its milli panel.
+    */
+  private[graft] def a1Panel(s: SparkSession, dump: String,
+      strict: Boolean = false): DataFrame =
+    Panels.single(dumpGen(s, dump,
+      Generate.wideFast(s, Seq(Grid.cell("A1", 5000, 6, 2)), strict = strict)
+        .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*)), 6)
+
+  /** [[a1Panel]] as DuckDB CTEs over the dump: `gen$sfx`, `panel$sfx`. */
+  private[graft] def a1PanelSqlCtes(dump: String, sfx: String = ""): String =
+    s"""gen$sfx AS (
+       |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
+       |panel$sfx AS (${Panels.singleSqlCte(s"gen$sfx", 6)})""".stripMargin
+
+  /** The structural betas of the A1 weight links over [[a1Panel]], t in
+    * 2..4999: one lagged moment pass, then the k≤2 Cramer stage.
+    */
+  private[graft] def a1Betas(s: SparkSession, dump: String,
+      strict: Boolean = false): DataFrame = {
+    val links = weightLinks("", "A1", 6, 2)
+    graft.metrics.Causal.structuralBetas(
+      graft.metrics.Causal.laggedCrossMoments(a1Panel(s, dump, strict),
+        weightSpecs(links), col("t").between(2, 4999)),
+      weightLinksDf(s, links))
+  }
+
+  /** [[a1Betas]] as DuckDB CTEs: [[a1PanelSqlCtes]], the links'
+    * `specs$sfx`/`links$sfx`, the moments; yields `sbeta$sfx`.
+    */
+  private[graft] def a1BetasSqlCtes(dump: String, sfx: String = ""): String =
+    s"""${a1PanelSqlCtes(dump, sfx)},
+       |${weightLinksSqlCtes(weightLinks("", "A1", 6, 2), sfx)},
+       |${graft.metrics.Causal.structuralMomentsSqlCtes(s"panel$sfx",
+            s"specs$sfx", "t BETWEEN 2 AND 4999", sfx)},
+       |${graft.metrics.Causal.structuralBetasSqlCtes(s"links$sfx", sfx)}"""
+      .stripMargin
+
+  /** The 18 A1+A1C gaussian n=5000 configs (3 widths × 3 lags ×
+    * {unconfounded, U-confounded}) dumped under `dump`, folded into series
+    * and day keys (day = configId·8192 + t), through one lagged moment
+    * pass (shuffle join: the fold takes the cluster shape) and one Cramer
+    * stage: the structural betas of every config's weight links.
+    */
+  private[graft] def a1FoldBetas(s: SparkSession, dump: String): DataFrame = {
+    val cfgs = a1FoldConfigs
+    val gen = dumpGen(s, dump,
+      Generate.wideFast(s, cfgs)
+        .select(Seq(col("configId"), col("t")) ++
+          (1 to 8).map(i => col(s"X$i")): _*))
+    val panel = Panels.folded(gen, 8, col("configId"),
+      col("configId") * 8192 + col("t"))
+    val links = a1FoldLinks
+    val mom = graft.metrics.Causal.laggedCrossMoments(
+      panel, weightSpecs(links),
+      expr("t % 8192 BETWEEN 4 AND 4999"), broadcastB = false)
+    graft.metrics.Causal.structuralBetas(mom, weightLinksDf(s, links))
+  }
+
+  /** [[a1FoldBetas]] as DuckDB CTEs over the dump; yields `sbeta`. */
+  private[graft] def a1FoldBetasSqlCtes(dump: String): String =
+    s"""gen AS (
+       |  SELECT * FROM read_parquet('__GEN_DIR__/$dump/*.parquet')),
+       |panel AS (${Panels.foldedSqlCte("gen", 8, "configId::VARCHAR",
+            "configId * 8192 + t")}),
+       |${weightLinksSqlCtes(a1FoldLinks)},
+       |${graft.metrics.Causal.structuralMomentsSqlCtes(
+            "panel", "specs", "t % 8192 BETWEEN 4 AND 4999")},
+       |${graft.metrics.Causal.structuralBetasSqlCtes("links")}""".stripMargin
+
+  private def a1FoldConfigs: Seq[GenConfig] = Grid.all().filter(c =>
+    (c.family == "A1" || c.family == "A1C") && c.nPoints == 5000
+      && c.noiseType == "gaussian")
+
+  private def a1FoldLinks: Seq[WeightLink] = a1FoldConfigs.flatMap(c =>
+    weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
+
+  /** The recovery census of a structural-betas frame: per (family, n_vars,
+    * max_lag), the link count, the dead links (effective truth 0) and the
+    * mean/max absolute error against the effective truth.
+    */
+  private[graft] def recoveryCensus(betas: DataFrame): DataFrame =
+    betas.groupBy("family", "n_vars", "max_lag")
+      .agg(count(lit(1)).as("n_links"),
+        sum(when(col("effective_ppm") === 0, 1L).otherwise(0L))
+          .as("n_dead"),
+        expr("sum(abs(beta_ppm - effective_ppm)) div count(1)")
+          .as("mean_abs_err_ppm"),
+        max(abs(col("beta_ppm") - col("effective_ppm")))
+          .as("max_abs_err_ppm"))
+
+  /** [[recoveryCensus]] as a DuckDB query over `sbeta`. */
+  private[graft] val RecoveryCensusSql: String =
+    """SELECT family, n_vars::INT AS n_vars, max_lag::INT AS max_lag,
+      |  count(*)::BIGINT AS n_links,
+      |  sum(CASE WHEN effective_ppm = 0 THEN 1 ELSE 0 END)::BIGINT
+      |    AS n_dead,
+      |  (sum(abs(beta_ppm - effective_ppm)) // count(*))::BIGINT
+      |    AS mean_abs_err_ppm,
+      |  max(abs(beta_ppm - effective_ppm))::BIGINT AS max_abs_err_ppm
+      |FROM sbeta GROUP BY 1, 2, 3""".stripMargin
+
+  /** The inference census of a structural-betas frame grouped by `keys`:
+    * the link count, the mean/max absolute error against the effective
+    * truth, the largest Wald distance of a beta from it
+    * (1000·(β − eff)² div se², NULL without a positive se²) and the
+    * smallest moment n.
+    */
+  private[graft] def inferenceCensus(betas: DataFrame, keys: Seq[String])
+      : DataFrame = {
+    val diffT2 = expr(
+      """case when se2_ppm2 is null or se2_ppm2 <= 0 then null
+        |else (1000 * cast(beta_ppm - effective_ppm as decimal(38,0))
+        |  * (beta_ppm - effective_ppm)) div se2_ppm2 end""".stripMargin)
+    graft.metrics.Causal.structuralInference(betas)
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_links"),
+        expr("sum(abs(beta_ppm - effective_ppm)) div count(1)")
+          .as("mean_abs_err_ppm"),
+        max(abs(col("beta_ppm") - col("effective_ppm")))
+          .as("max_abs_err_ppm"),
+        max(diffT2).as("max_diff_t2_milli"),
+        min(col("n")).as("complete_n"))
+  }
+
+  /** [[inferenceCensus]] as DuckDB SQL over `sbeta`: the inference CTEs,
+    * then the census grouped by `keys` (select expressions, in order).
+    */
+  private[graft] def inferenceCensusSql(keys: Seq[String]): String =
+    s"""${graft.metrics.Causal.structuralInferenceSqlCtes()}
+       |SELECT ${keys.mkString(", ")},
+       |  count(*)::BIGINT AS n_links,
+       |  (sum(abs(beta_ppm - effective_ppm)) // count(*))::BIGINT
+       |    AS mean_abs_err_ppm,
+       |  max(abs(beta_ppm - effective_ppm))::BIGINT AS max_abs_err_ppm,
+       |  max(CASE WHEN se2_ppm2 IS NULL OR se2_ppm2 <= 0 THEN NULL
+       |    ELSE (1000 * (beta_ppm - effective_ppm)::HUGEINT
+       |      * (beta_ppm - effective_ppm)) // se2_ppm2 END)::BIGINT
+       |    AS max_diff_t2_milli,
+       |  min(n)::BIGINT AS complete_n
+       |FROM sttest GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}"""
+      .stripMargin
+
   /** One census row per multiplicity rule over a scored [[BlockDesign]]
     * frame: (rule, n_hyp, n_disc, n_disc_ab, n_disc_as, n_false) for each
     * (rule, 0/1 discovery column), plus the tier sizes (n_ab, n_as) when
@@ -1513,20 +1656,9 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .localCheckpoint(false)
       val pan = Panels.single(gen, 4).withColumnRenamed("day", "t")
         .localCheckpoint(false)
-      val e = pan.select(col("series").as("effect"), col("t"),
-        col("v").as("yv"))
-      val ep = pan.select(col("series").as("effect"),
-        col("t").as("lag_idx"), col("v").as("pv"))
-      val cp = pan.select(col("series").as("cause"),
-        col("t").as("lag_idx"), col("v").as("qv"))
-      val lagged = lx.join(broadcast(e), Seq("t"))
-        .join(broadcast(ep), Seq("effect", "lag_idx"))
-        .join(broadcast(cp), Seq("lag_idx"))
-        .where(col("cause") =!= col("effect"))
-        .select(col("cause"), col("effect"), col("yv"), col("pv"),
-          col("qv"))
       graft.metrics.Causal.grangerDecide(
-          graft.metrics.Causal.grangerSumsFromLagged(lagged), 422L)
+          graft.metrics.Causal.grangerSumsFromLagged(
+            graft.metrics.Causal.nearestLagPairs(lx, pan)), 422L)
         .withColumn("truth_lag1", expr(grangerTruthCase("A2")))
     }),
 
@@ -1896,20 +2028,9 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
           .select(lit(s"X$i").as("series"), col("t"),
             Panels.milli(col(s"X$i")).as("v")))
         .reduce(_ unionByName _).localCheckpoint(false)
-      val e = pan.select(col("series").as("effect"), col("t"),
-        col("v").as("yv"))
-      val ep = pan.select(col("series").as("effect"),
-        col("t").as("lag_idx"), col("v").as("pv"))
-      val cp = pan.select(col("series").as("cause"),
-        col("t").as("lag_idx"), col("v").as("qv"))
-      val lagged = lx.join(broadcast(e), Seq("t"))
-        .join(broadcast(ep), Seq("effect", "lag_idx"))
-        .join(broadcast(cp), Seq("lag_idx"))
-        .where(col("cause") =!= col("effect"))
-        .select(col("cause"), col("effect"), col("yv"), col("pv"),
-          col("qv"))
       graft.metrics.Causal.grangerDecide(
-          graft.metrics.Causal.grangerSumsFromLagged(lagged), 422L)
+          graft.metrics.Causal.grangerSumsFromLagged(
+            graft.metrics.Causal.nearestLagPairs(lx, pan)), 422L)
         .withColumn("truth_lag1", expr(ShippedD3TruthCase))
     }),
 
@@ -2375,16 +2496,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // every live coefficient to ~1% of scale and measures the dead
     // link at ≈0 — quirk detection from generated bytes alone.
     // Fact-scale cost: one lagged self-join + one moment aggregation.
-    "q351_struct_betas" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val gen = dumpGen(s, "q351_gen",
-        Generate.wideFast(s, Seq(cfg))
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = Panels.single(gen, 6)
-      val links = weightLinks("", "A1", 6, 2)
-      val mom = graft.metrics.Causal.laggedCrossMoments(
-        panel, weightSpecs(links), col("t").between(2, 4999))
-      graft.metrics.Causal.structuralBetas(mom, weightLinksDf(s, links))
+    "q351_struct_betas" -> ((s, d) =>
+      a1Betas(s, "q351_gen")
         .withColumn("r2_permille", expr(
           """(1000 * sum(cast(beta_ppm as decimal(38,0)) * cjy)
             |  over (partition by target))
@@ -2393,8 +2506,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         .select(col("target"), col("source"), col("lag"), col("beta_ppm"),
           col("declared_ppm"), col("effective_ppm"),
           abs(col("beta_ppm") - col("effective_ppm")).as("abs_err_ppm"),
-          col("r2_permille"))
-    }),
+          col("r2_permille"))),
 
     // weight-recovery CENSUS at corpus grain (q351's fold, the q340
     // discipline): the full A1+A1C gaussian n=5000 cell — 18 configs,
@@ -2410,31 +2522,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // at quantization grain across all 18 graphs, and that claim is the
     // hash-checked row, not a comment. At 100k configs nothing here
     // widens: moments stay |specs|² per config, the fold is one scan.
-    "q352_weight_recovery_census" -> ((s, d) => {
-      val cfgs = Grid.all().filter(c =>
-        (c.family == "A1" || c.family == "A1C") && c.nPoints == 5000
-          && c.noiseType == "gaussian")
-      val gen = dumpGen(s, "q352_gen",
-        Generate.wideFast(s, cfgs)
-          .select(Seq(col("configId"), col("t")) ++
-            (1 to 8).map(i => col(s"X$i")): _*))
-      val panel = Panels.folded(gen, 8, col("configId"),
-        col("configId") * 8192 + col("t"))
-      val links = cfgs.flatMap(c =>
-        weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
-      val mom = graft.metrics.Causal.laggedCrossMoments(
-        panel, weightSpecs(links),
-        expr("t % 8192 BETWEEN 4 AND 4999"), broadcastB = false)
-      graft.metrics.Causal.structuralBetas(mom, weightLinksDf(s, links))
-        .groupBy("family", "n_vars", "max_lag")
-        .agg(count(lit(1)).as("n_links"),
-          sum(when(col("effective_ppm") === 0, 1L).otherwise(0L))
-            .as("n_dead"),
-          expr("sum(abs(beta_ppm - effective_ppm)) div count(1)")
-            .as("mean_abs_err_ppm"),
-          max(abs(col("beta_ppm") - col("effective_ppm")))
-            .as("max_abs_err_ppm"))
-    }),
+    "q352_weight_recovery_census" -> ((s, d) =>
+      recoveryCensus(a1FoldBetas(s, "q352_gen"))),
 
     // default-vs-STRICT kernel contrast through the estimator (closing
     // the q345 arc: the strict kernel's digest is oracle-gated, but no
@@ -2445,28 +2534,15 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // β≈850000 ppm under strict — the §2.4-2 quirk and its §2.4 fix,
     // pinned as data. All other links agree across kernels (X6 feeds
     // nothing downstream in this cell, so only its own row moves).
-    "q353_strict_recovery_contrast" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val links = weightLinks("", "A1", 6, 2)
-      def betasFrom(dump: String, strict: Boolean): DataFrame = {
-        val gen = dumpGen(s, dump,
-          Generate.wideFast(s, Seq(cfg), strict = strict)
-            .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-        val panel = Panels.single(gen, 6)
-        graft.metrics.Causal.structuralBetas(
-          graft.metrics.Causal.laggedCrossMoments(
-            panel, weightSpecs(links), col("t").between(2, 4999)),
-          weightLinksDf(s, links))
-      }
-      betasFrom("q353_gen_default", strict = false)
+    "q353_strict_recovery_contrast" -> ((s, d) =>
+      a1Betas(s, "q353_gen_default")
         .select(col("target"), col("source"), col("lag"),
           col("declared_ppm"), col("effective_ppm"),
           col("beta_ppm").as("beta_default_ppm"))
-        .join(betasFrom("q353_gen_strict", strict = true)
+        .join(a1Betas(s, "q353_gen_strict", strict = true)
             .select(col("target"), col("source"), col("lag"),
               col("beta_ppm").as("beta_strict_ppm")),
-          Seq("target", "source", "lag"))
-    }),
+          Seq("target", "source", "lag"))),
 
     // NOISE-SCALE recovery (the third leg of full model recovery:
     // structure — the PC suite; weights — q351; this reads back the
@@ -2480,16 +2556,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // floor. X6's row is the quirk read a third way — its declared
     // 0.85 parent contributes nothing, so r2≈0 while σ̂² still lands
     // on 10⁴ (the dead link leaves pure noise, not excess variance).
-    "q354_noise_recovery" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val gen = dumpGen(s, "q354_gen",
-        Generate.wideFast(s, Seq(cfg))
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = Panels.single(gen, 6)
-      val links = weightLinks("", "A1", 6, 2)
-      val mom = graft.metrics.Causal.laggedCrossMoments(
-        panel, weightSpecs(links), col("t").between(2, 4999))
-      graft.metrics.Causal.structuralBetas(mom, weightLinksDf(s, links))
+    "q354_noise_recovery" -> ((s, d) =>
+      a1Betas(s, "q354_gen")
         .groupBy("target")
         .agg(count(lit(1)).as("n_parents"),
           expr("""(1000 * sum(cast(beta_ppm as decimal(38,0)) * cjy))
@@ -2501,8 +2569,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
             .stripMargin).cast("long").as("sigma2_v"))
         .withColumn("sigma2_truth_v", lit(10000L))
         .withColumn("sigma2_err_v",
-          abs(col("sigma2_v") - col("sigma2_truth_v")))
-    }),
+          abs(col("sigma2_v") - col("sigma2_truth_v")))),
 
     // NONLINEAR-term weight recovery (the B-family extension of q351:
     // B1's equations are c·x² − c'·x³ + e, and the §2.4-1 quirk — the
@@ -2532,15 +2599,10 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         val gen = dumpGen(s, dump,
           Generate.wideFast(s, Seq(cfg), strict = strict)
             .select(col("t") +: (1 to 4).map(i => col(s"X$i")): _*))
-        val panel = (1 to 4).flatMap(i => Seq(
-            gen.select(lit(s"X$i").as("series"), col("t").as("day"),
-              Panels.milli(col(s"X$i")).as("v")),
-            gen.select(lit(s"X${i}p2").as("series"), col("t").as("day"),
-              Panels.milli(col(s"X$i") * col(s"X$i")).as("v")),
-            gen.select(lit(s"X${i}p3").as("series"), col("t").as("day"),
-              Panels.milli(col(s"X$i") * col(s"X$i") * col(s"X$i"))
-                .as("v"))))
-          .reduce(_ unionByName _)
+        val powers = for (i <- 1 to 4; k <- Seq(2, 3)) yield
+          gen.select(lit(s"X${i}p$k").as("series"), col("t").as("day"),
+            Panels.milli(Seq.fill(k)(col(s"X$i")).reduce(_ * _)).as("v"))
+        val panel = (Panels.single(gen, 4) +: powers).reduce(_ unionByName _)
         graft.metrics.Causal.structuralBetas(
           graft.metrics.Causal.laggedCrossMoments(panel, b1PowerSpecs(),
             col("t").between(2, 49999)),
@@ -3394,20 +3456,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         "sib", "declared_ppm", "effective_ppm")
       val mom = graft.metrics.Causal.virtualCrossMoments(virt,
         expr("t % 8192 BETWEEN 4 AND 499"), broadcastB = false)
-      val diffT2 = expr(
-        """case when se2_ppm2 is null or se2_ppm2 <= 0 then null
-          |else (1000 * cast(beta_ppm - effective_ppm as decimal(38,0))
-          |  * (beta_ppm - effective_ppm)) div se2_ppm2 end""".stripMargin)
-      graft.metrics.Causal.structuralInference(
-          graft.metrics.Causal.structuralBetas(mom, linksDf))
-        .groupBy("family", "max_lag", "mcar_permille", "block_permille")
-        .agg(count(lit(1)).as("n_links"),
-          expr("sum(abs(beta_ppm - effective_ppm)) div count(1)")
-            .as("mean_abs_err_ppm"),
-          max(abs(col("beta_ppm") - col("effective_ppm")))
-            .as("max_abs_err_ppm"),
-          max(diffT2).as("max_diff_t2_milli"),
-          min(col("n")).as("complete_n"))
+      inferenceCensus(graft.metrics.Causal.structuralBetas(mom, linksDf),
+        Seq("family", "max_lag", "mcar_permille", "block_permille"))
     }),
 
     // BLOCK-MISSING irregular NONLINEAR recovery census (the LIVE-link
@@ -3519,20 +3569,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val virt = virtAll.join(completeT, Seq("t"))
       val mom = graft.metrics.Causal.virtualCrossMoments(virt,
         expr("t % 65536 BETWEEN 4 AND 49999"), broadcastB = false)
-      val diffT2 = expr(
-        """case when se2_ppm2 is null or se2_ppm2 <= 0 then null
-          |else (1000 * cast(beta_ppm - effective_ppm as decimal(38,0))
-          |  * (beta_ppm - effective_ppm)) div se2_ppm2 end""".stripMargin)
-      graft.metrics.Causal.structuralInference(
-          graft.metrics.Causal.structuralBetas(mom, linksDf))
-        .groupBy("family", "max_lag", "block_permille")
-        .agg(count(lit(1)).as("n_links"),
-          expr("sum(abs(beta_ppm - effective_ppm)) div count(1)")
-            .as("mean_abs_err_ppm"),
-          max(abs(col("beta_ppm") - col("effective_ppm")))
-            .as("max_abs_err_ppm"),
-          max(diffT2).as("max_diff_t2_milli"),
-          min(col("n")).as("complete_n"))
+      inferenceCensus(graft.metrics.Causal.structuralBetas(mom, linksDf),
+        Seq("family", "max_lag", "block_permille"))
     }),
 
     // STREAMING INFERENCE (q358's weight monitor upgraded to a
@@ -3583,11 +3621,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // this is row-level interval calibration with a train-frozen
     // intercept — genuinely out of sample.
     "q367_forecast_calibration" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val gen = dumpGen(s, "q367_gen",
-        Generate.wideFast(s, Seq(cfg))
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = Panels.single(gen, 6)
+      val panel = a1Panel(s, "q367_gen")
       val links = weightLinks("", "A1", 6, 2)
       val specs = weightSpecs(links)
       val virt = specs.map { case (series, k) =>
@@ -3650,11 +3684,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // landing on the smallest candidate), so "no identifiable lag" is
     // itself a data read, the deadness surfaced a FIFTH way.
     "q366_lag_identification" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val gen = dumpGen(s, "q366_gen",
-        Generate.wideFast(s, Seq(cfg))
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = Panels.single(gen, 6)
+      val panel = a1Panel(s, "q366_gen")
       val links = weightLinks("", "A1", 6, 2)
       val cands = 0 to 4
       val specs = (links.map(l => (l.target, 0)) ++
@@ -3707,23 +3737,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // in t², and the published `significant` flag is the 5% Wald verdict
     // (t² > 3.841) — the quirk surfaced a fourth way: as a hypothesis-
     // test decision, not just a small beta.
-    "q363_beta_ttest" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val gen = dumpGen(s, "q363_gen",
-        Generate.wideFast(s, Seq(cfg))
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = Panels.single(gen, 6)
-      val links = weightLinks("", "A1", 6, 2)
-      val mom = graft.metrics.Causal.laggedCrossMoments(
-        panel, weightSpecs(links), col("t").between(2, 4999))
-      graft.metrics.Causal.structuralInference(
-          graft.metrics.Causal.structuralBetas(mom,
-            weightLinksDf(s, links)))
+    "q363_beta_ttest" -> ((s, d) =>
+      graft.metrics.Causal.structuralInference(a1Betas(s, "q363_gen"))
         .select(col("target"), col("source"), col("lag"), col("beta_ppm"),
           col("effective_ppm"), col("k_parents"), col("se2_ppm2"),
           col("t2_milli"),
-          (col("t2_milli") > lit(3841L)).cast("int").as("significant"))
-    }),
+          (col("t2_milli") > lit(3841L)).cast("int").as("significant"))),
 
     // inference census at CORPUS grain (q352's 18-graph fold through the
     // Wald readout): the full A1+A1C gaussian n=5000 cell in ONE moment
@@ -3740,20 +3759,6 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // nominal. Structure recovery by hypothesis testing alone, as
     // hash-checked rows.
     "q364_inference_census" -> ((s, d) => {
-      val cfgs = Grid.all().filter(c =>
-        (c.family == "A1" || c.family == "A1C") && c.nPoints == 5000
-          && c.noiseType == "gaussian")
-      val gen = dumpGen(s, "q364_gen",
-        Generate.wideFast(s, cfgs)
-          .select(Seq(col("configId"), col("t")) ++
-            (1 to 8).map(i => col(s"X$i")): _*))
-      val panel = Panels.folded(gen, 8, col("configId"),
-        col("configId") * 8192 + col("t"))
-      val links = cfgs.flatMap(c =>
-        weightLinks(c.configId.toString, c.family, c.nVars, c.maxLag))
-      val mom = graft.metrics.Causal.laggedCrossMoments(
-        panel, weightSpecs(links),
-        expr("t % 8192 BETWEEN 4 AND 4999"), broadcastB = false)
       val live = col("effective_ppm") =!= 0
       val sig = col("t2_milli") > lit(3841L)
       // CI calibration read the sqrt-free way: the 95% Wald interval
@@ -3764,9 +3769,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
         expr("""(1000 * cast(beta_ppm - effective_ppm as decimal(38,0))
                |  * (beta_ppm - effective_ppm)) div se2_ppm2"""
           .stripMargin) <= lit(3841L)
-      graft.metrics.Causal.structuralInference(
-          graft.metrics.Causal.structuralBetas(mom,
-            weightLinksDf(s, links)))
+      graft.metrics.Causal.structuralInference(a1FoldBetas(s, "q364_gen"))
         .groupBy("family", "n_vars", "max_lag")
         .agg(count(lit(1)).as("n_links"),
           sum(when(live, 1L).otherwise(0L)).as("n_live"),
@@ -3884,15 +3887,8 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val virt = (virtT +: virtL).reduce(_ unionByName _)
       val mom = graft.metrics.Causal.virtualCrossMoments(virt,
         expr("t % 8192 BETWEEN 4 AND 4999"), broadcastB = false)
-      graft.metrics.Causal.structuralBetas(mom, weightLinksDf(s, links))
-        .groupBy("family", "n_vars", "max_lag")
-        .agg(count(lit(1)).as("n_links"),
-          sum(when(col("effective_ppm") === 0, 1L).otherwise(0L))
-            .as("n_dead"),
-          expr("sum(abs(beta_ppm - effective_ppm)) div count(1)")
-            .as("mean_abs_err_ppm"),
-          max(abs(col("beta_ppm") - col("effective_ppm")))
-            .as("max_abs_err_ppm"))
+      recoveryCensus(
+        graft.metrics.Causal.structuralBetas(mom, weightLinksDf(s, links)))
     }),
 
     // weight recovery at deployment WIDTH through the PAIR-RESTRICTED
@@ -3964,11 +3960,7 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // on the generator's exact 10⁴ noise floor — the estimator
     // GENERALIZES, it does not memorize its window.
     "q357_weight_recovery_holdout" -> ((s, d) => {
-      val cfg = Grid.cell("A1", 5000, 6, 2)
-      val gen = dumpGen(s, "q357_gen",
-        Generate.wideFast(s, Seq(cfg))
-          .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
-      val panel = Panels.single(gen, 6)
+      val panel = a1Panel(s, "q357_gen")
       val links = weightLinks("", "A1", 6, 2)
       val momTr = graft.metrics.Causal.laggedCrossMoments(
         panel, weightSpecs(links), col("t").between(2, 2499))

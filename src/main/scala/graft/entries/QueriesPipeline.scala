@@ -3163,10 +3163,8 @@ private[graft] trait QueriesPipeline { this: SparkEntry.type =>
     "q195_entity_resolution" -> ((s, d) => {
       val cand = erCandidates(s, d)
       val edges = cand.where(col("lev") <= 2)
-      val comp = graft.ops.ConnectedComponents.components(edges, "id_a", "id_b")
-      val labeled = erRegistry(s, d).select(col("id")).as("r")
-        .join(comp.as("c"), col("r.id") === col("c.id"), "left")
-        .select(coalesce(col("c.component"), col("r.id")).as("component"))
+      val labeled = graft.ops.ConnectedComponents.componentsOf(
+        erRegistry(s, d).select(col("id")), edges)
       val hist = labeled.groupBy("component")
         .agg(count(lit(1)).as("csize"))
         .groupBy("csize").agg(count(lit(1)).as("n_clusters"),

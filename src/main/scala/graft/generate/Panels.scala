@@ -25,6 +25,17 @@ object Panels {
         milli(col(s"X$i")).as("v")))
       .reduce(_ unionByName _)
 
+  /** [[milli]] as DuckDB SQL over the expression `c`. */
+  def milliSql(c: String): String = s"floor($c * 1000)::BIGINT"
+
+  /** [[single]] as the body of a DuckDB CTE over the relation `gen`: one
+    * `UNION ALL` branch per channel, (series = 'X$i', day = t, v).
+    */
+  def singleSqlCte(gen: String, nVars: Int): String =
+    (1 to nVars).map(i =>
+      s"SELECT 'X$i' AS series, t AS day, ${milliSql(s"X$i")} AS v FROM $gen")
+      .mkString("\n  UNION ALL ")
+
   /** Many graphs folded into one panel: series = `key|X$i`, day = `day`
     * (the caller's fold — a config stride, or a key-prefixed padded
     * index), null cells dropped per channel. Keys in both columns keep
@@ -37,6 +48,17 @@ object Panels {
         .select(concat(key, lit(s"|X$i")).as("series"), day.as("day"),
           milli(col(s"X$i")).as("v")))
       .reduce(_ unionByName _)
+
+  /** [[folded]] as the body of a DuckDB CTE over the relation `wide`:
+    * series = `key || '|X$i'`, day = the SQL expression `day`, null cells
+    * dropped per channel.
+    */
+  def foldedSqlCte(wide: String, nVars: Int, key: String, day: String)
+      : String =
+    (1 to nVars).map(i =>
+      s"SELECT $key || '|X$i' AS series, $day AS day, " +
+        s"${milliSql(s"X$i")} AS v FROM $wide WHERE X$i IS NOT NULL")
+      .mkString("\n  UNION ALL ")
 
   /** The configId-folded lag-1 virtual panel (vs, t, v) of the catalog
     * BH census: every present `X$i` as `cfg|X$i@0` at t and `cfg|X$i@1`

@@ -85,8 +85,9 @@ object Causal {
   }
 
   /** The same 10 sufficient sums over a PREBUILT lagged pair table
-    * (cause, effect, yv, pv, qv) — the irregular/nearest-lag path (q314)
-    * supplies its own lag alignment instead of the row-shift window.
+    * (cause, effect, yv, pv, qv) — the irregular/nearest-lag path
+    * ([[nearestLagPairs]]) supplies its own lag alignment instead of the
+    * row-shift window.
     */
   def grangerSumsFromLagged(lagged: DataFrame): DataFrame =
     lagged.where(col("pv").isNotNull)
@@ -101,6 +102,38 @@ object Causal {
       sum((col("yv") * col("pv")).cast("decimal(38,0)")).as("syp"),
       sum((col("yv") * col("qv")).cast("decimal(38,0)")).as("syq"),
       sum((col("pv") * col("qv")).cast("decimal(38,0)")).as("spq"))
+
+  /** The irregular-clock lagged pair table [[grangerSumsFromLagged]]
+    * reads (q314, q325): `lx(t, lag_idx)` names each row's nearest-lag
+    * index (`Lagged.nearestLagIndexView`), `pan(series, t, v)` is the
+    * milli panel; every ordered pair cause ≠ effect reads the effect at t
+    * and both lags at lag_idx. Columns (cause, effect, yv, pv, qv).
+    */
+  def nearestLagPairs(lx: DataFrame, pan: DataFrame): DataFrame = {
+    val e = pan.select(col("series").as("effect"), col("t"),
+      col("v").as("yv"))
+    val ep = pan.select(col("series").as("effect"),
+      col("t").as("lag_idx"), col("v").as("pv"))
+    val cp = pan.select(col("series").as("cause"),
+      col("t").as("lag_idx"), col("v").as("qv"))
+    lx.join(broadcast(e), Seq("t"))
+      .join(broadcast(ep), Seq("effect", "lag_idx"))
+      .join(broadcast(cp), Seq("lag_idx"))
+      .where(col("cause") =!= col("effect"))
+      .select(col("cause"), col("effect"), col("yv"), col("pv"), col("qv"))
+  }
+
+  /** [[nearestLagPairs]] as the DuckDB CTE `gl` over the CTEs `lx` and
+    * `pan`, the input of [[grangerDecideSqlCtes]].
+    */
+  val NearestLagPairsSqlCte: String =
+    """gl AS (
+      |  SELECT cp.series AS cause, e.series AS effect,
+      |    e.v AS yv, ep.v AS pv, cp.v AS qv
+      |  FROM lx
+      |  JOIN pan e ON e.t = lx.t
+      |  JOIN pan ep ON ep.t = lx.lag_idx AND ep.series = e.series
+      |  JOIN pan cp ON cp.t = lx.lag_idx AND cp.series <> e.series)""".stripMargin
 
   /** Decision arithmetic from the sufficient sums — shared by the events
     * census (q269) and the planted-recovery capstone (q271). Output longs:
@@ -157,8 +190,8 @@ object Causal {
   /** The sums→decision tail of [[grangerSqlCtes]] over ANY lagged-pair CTE
     * `\$lagCte(cause, effect, yv, pv, qv)` — mirrors
     * [[grangerSumsFromLagged]] + [[grangerDecide]]; the nearest-lag
-    * irregular capstone (q314) builds its own alignment CTE and reuses
-    * this tail verbatim. Yields a CTE named `granger_out`.
+    * entries (q314, q325) feed it [[NearestLagPairsSqlCte]]. Yields a CTE
+    * named `granger_out`.
     */
   def grangerDecideSqlCtes(lagCte: String, fCritCenti: Long = 422L): String =
     s"""gr_sums AS (

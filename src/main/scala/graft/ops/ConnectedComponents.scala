@@ -95,6 +95,18 @@ object ConnectedComponents {
       .groupBy("id").agg(min("component").as("component"))
   }
 
+  /** [[components]] over every `id` of `nodes`, from the undirected pairs
+    * (id_a, id_b): a node no pair touches labels itself. Columns: id,
+    * component. The Spark twin of [[componentsSqlCtes]].
+    */
+  def componentsOf(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+    val comp = components(pairs, "id_a", "id_b")
+    nodes.select(col("id")).as("n")
+      .join(comp.as("c"), col("n.id") === col("c.id"), "left")
+      .select(col("n.id").as("id"),
+        coalesce(col("c.component"), col("n.id")).as("component"))
+  }
+
   /** [[components]] as DuckDB CTEs (the caller writes WITH RECURSIVE): the
     * min reachable id per node over the undirected graph of the relation
     * `pairs` (id_a, id_b), starting from every `id` of the relation

@@ -57,6 +57,16 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(run(Seq.empty) == Map.empty)
   }
 
+  test("componentsOf labels every node: an isolated node is its own " +
+      "component, a chain takes its minimum id") {
+    import spark.implicits._
+    val nodes = Seq(1L, 2L, 3L, 4L, 9L).toDF("id")
+    val pairs = Seq((4L, 3L), (3L, 2L)).toDF("id_a", "id_b")
+    val got = ConnectedComponents.componentsOf(nodes, pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 2L, 9L -> 9L))
+  }
+
   test("seeded random graphs match union-find exactly") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 3) {

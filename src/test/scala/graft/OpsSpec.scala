@@ -131,6 +131,32 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("nearestLagPairs: each ordered pair reads the effect at t and both " +
+      "series at t's nearest-lag index (brute force, repeated timestamp)") {
+    import spark.implicits._
+    val times = Seq(0.0, 0.7, 1.1, 2.4, 2.4, 3.0, 4.6, 5.1, 6.9, 7.2, 8.8,
+      9.5)
+    val n = times.size
+    val md = (times(n - 1) - times(0)) / (n - 1)
+    // the reference argmin nearestLagIndexView is pinned to above
+    def lagIdx(i: Int): Int =
+      (0 until i).minBy(j => math.abs(times(j) - (times(i) - md)))
+    val series = Seq("X1", "X2", "X3")
+    def v(s: Int, t: Int): Long = (s + 1) * 1000L + (t * 37 + s * 11) % 101
+    val spine = times.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
+      .toDF("t", "time")
+    val pan = (for (s <- series.indices; t <- 0 until n)
+      yield (series(s), t.toLong, v(s, t))).toDF("series", "t", "v")
+    val got = graft.metrics.Causal.nearestLagPairs(
+        Lagged.nearestLagIndexView(spine, "t", "time"), pan)
+      .as[(String, String, Long, Long, Long)].collect().toSeq.sorted
+    val expected = (for {
+      i <- 1 until n; e <- series.indices; c <- series.indices if c != e
+    } yield (series(c), series(e), v(e, i), v(e, lagIdx(i)),
+      v(c, lagIdx(i)))).sorted
+    assert(got == expected)
+  }
+
   test("nearestLagIndexView is partition-local with partitionCols") {
     import spark.implicits._
     // two series with different clocks: indices must resolve per-series
