@@ -112,10 +112,10 @@ object Bench {
     // 18-family grid (864 configs — 18× q340's shipped cell), generated
     // in-flight, cut at 200 observations (the rank-moment budget).
     // Measures the complete per-dataset discovery loop — ranks, cross
-    // moments, order-0/1 CI, v-structures, 3 full-Meek rounds — as a
-    // single plan: the moment pass is the only fact-scale stage and the
-    // order-1 stage enumerates conditioners from co-observed moments
-    // (linear in configs; the old diagonal crossJoin was quadratic).
+    // moments, order-0/1 CI, v-structures, 3 full-Meek rounds — in one
+    // call: the moment pass is the only Spark stage, the decisions run on
+    // the driver, and the order-1 stage enumerates conditioners from
+    // co-observed moments (linear in configs).
     // Generation is checkpointed OUT of the measured loop (it has its
     // own gen_* entries).
     if (Seq("pcsweep_catalog_fold", "pcsweep_catalog_tau6",
@@ -132,15 +132,8 @@ object Bench {
           col("X1"), col("X2"), col("X3"), col("X4"))
         .localCheckpoint(true)
       val pan = foldPanel(wide, 4)
-      // pair-row precondition verified ONCE outside the timed region
-      // (it is an eager count job — inside the loop it would be
-      // measured into every repetition); the timed runs then pass
-      // requirePairRows = false
-      graft.metrics.Causal.assertPairRows(graft.metrics.Causal.pcSkeleton(pan))
       measure("pcsweep_catalog_fold") {
-        graft.metrics.Causal.pcOrient(
-            graft.metrics.Causal.pcSkeleton(pan), 3,
-            requirePairRows = false)
+        graft.metrics.Causal.pcOrient(graft.metrics.Causal.pcSkeleton(pan), 3)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
       }
@@ -171,14 +164,10 @@ object Bench {
           (1 to 8).map(i => col(s"X$i")): _*)
         .localCheckpoint(true)
       val panAll = foldPanel(wideAll, 8)
-      // precondition once outside the timed region, as above
-      graft.metrics.Causal.assertPairRows(
-        graft.metrics.Causal.pcSkeleton(panAll, broadcastRankJoin = false))
       measure("pcsweep_catalog_2592_shuffle") {
         graft.metrics.Causal.pcOrient(
             graft.metrics.Causal.pcSkeleton(panAll,
-              broadcastRankJoin = false), 3,
-            requirePairRows = false)
+              broadcastRankJoin = false), 3)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
       }
@@ -193,18 +182,12 @@ object Bench {
     // order-2 pipeline — skeleton, cofactor tests, v-structures, Meek to
     // fixpoint — at q332's τ² = 100 bp (τ = 0.1: keeps the 2-hop pairs
     // too, so the order-1/2 stages get real conditioning work).
-    // PlanSpec pins that the candidate stages stay moment-enumerated
-    // equi-joins at this width (no cartesian, no nested-loop).
+    // PlanSpec pins that the decision frames stay driver-side local
+    // relations at this width (no cartesian, nested-loop or join).
     if (Seq("pcwide_p32_stable_oriented", "pcwide_p64_stable_oriented",
         "pcwide_p128_stable_oriented").exists(selects)) {
       val pan32 = Panels.widePanel(spark, 32, 200).localCheckpoint(true)
-      // complete panel: the pair-row precondition holds by construction —
-      // verified once outside the timed region (as in the pcsweep rungs)
-      graft.metrics.Causal.assertPairRows(
-        graft.metrics.Causal.pcSkeleton(pan32, 100L))
       val pan64 = Panels.widePanel(spark, 64, 200).localCheckpoint(true)
-      graft.metrics.Causal.assertPairRows(
-        graft.metrics.Causal.pcSkeleton(pan64, 100L))
       // PC-STABLE ladder (q347): conditioning candidates from the
       // surviving adjacency, not every co-observed series — the
       // O(E·d²)-not-O(p⁴) form. On these chain panels the order-2
@@ -219,8 +202,7 @@ object Bench {
       // the committed r13 BENCHDETAIL history.
       def wideStableOnce(pan: org.apache.spark.sql.DataFrame): Unit =
         graft.metrics.Causal.pcOrient2(
-            graft.metrics.Causal.pcSkeleton2Stable(pan, 100L), 4,
-            requirePairRows = false)
+            graft.metrics.Causal.pcSkeleton2Stable(pan, 100L), 4)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
       measure("pcwide_p32_stable_oriented") { wideStableOnce(pan32) }
@@ -248,13 +230,10 @@ object Bench {
     if (Seq("pcblocks_p80_stable3_oriented", "pcblocks_p320_stable3_oriented",
         "pcblocks_p80_order2_unrestricted").exists(selects)) {
       val blk16 = Panels.widePanel3(spark, 16, 200).localCheckpoint(true)
-      graft.metrics.Causal.assertPairRows(
-        graft.metrics.Causal.pcSkeleton(blk16, 100L))
       val blk64 = Panels.widePanel3(spark, 64, 200).localCheckpoint(true)
       def blocksOnce(pan: org.apache.spark.sql.DataFrame): Unit =
         graft.metrics.Causal.pcOrient3(
-            graft.metrics.Causal.pcSkeleton3Stable(pan, 100L), 4,
-            requirePairRows = false)
+            graft.metrics.Causal.pcSkeleton3Stable(pan, 100L), 4)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
       measure("pcblocks_p80_stable3_oriented") { blocksOnce(blk16) }
@@ -265,8 +244,7 @@ object Bench {
       // every co-observed pair, the stable one only neighborhoods)
       measure("pcblocks_p80_order2_unrestricted") {
         graft.metrics.Causal.pcOrient2(
-            graft.metrics.Causal.pcSkeleton2(blk16, 100L), 3,
-            requirePairRows = false)
+            graft.metrics.Causal.pcSkeleton2(blk16, 100L), 3)
           .groupBy("dir").count()
           .write.mode("overwrite").format("noop").save()
       }

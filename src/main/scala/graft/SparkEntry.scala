@@ -717,14 +717,16 @@ object SparkEntry
   private val ShippedD3Missing: String =
     s"error('missing shipped structure file: ${ShippedD3Base}_structure.txt')"
 
-  /** q336/q337's shared panel: the A1 6-var lag-2 gaussian cell cut at
-    * 200 observations, dumped ONCE under `q336_gen` (both queries — and
-    * both oracles — read the same dump; `dumpGen` regenerates
-    * byte-identically whichever entry runs first).
+  /** q336/q337's panel: the A1 6-var lag-2 gaussian cell cut at 200
+    * observations, dumped under `name` — each query writes its own dump
+    * (`q336_gen`, `q337_gen`) and its oracle reads that one, so the two
+    * entries can run concurrently; `dumpGen` writes the same bytes for
+    * either.
     */
-  private[graft] def pcOrder2Panel(s: SparkSession): DataFrame = {
+  private[graft] def pcOrder2Panel(s: SparkSession, name: String)
+      : DataFrame = {
     val cfg = Grid.cell("A1", 500, 6, 2)
-    val gen = dumpGen(s, "q336_gen",
+    val gen = dumpGen(s, name,
       Generate.wideFast(s, Seq(cfg)).where(col("t") < 200)
         .select(col("t") +: (1 to 6).map(i => col(s"X$i")): _*))
     Panels.single(gen, 6)
@@ -1900,18 +1902,8 @@ object SparkEntry
        |  SELECT q.query_id, q.cell_id, cb.sub, cb.cid AS code,
        |    ${d2(sl("q.rq"), "cb.cs")} AS qd
        |  FROM qprobe q CROSS JOIN cb),
-       |sc AS (
-       |  SELECT q.query_id, cd.cand_id, sum(q.qd)::BIGINT AS adc_micro
-       |  FROM codes cd JOIN qtab q ON q.cell_id = cd.cell_id
-       |    AND q.sub = cd.sub AND q.code = cd.code
-       |  WHERE q.query_id <> cd.cand_id
-       |  GROUP BY 1, 2)
-       |SELECT query_id, cand_id, adc_micro, rank FROM (
-       |  SELECT query_id, cand_id, adc_micro,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc_micro, cand_id) AS rank
-       |  FROM sc)
-       |WHERE rank <= $k""".stripMargin
+       |${adcTopKSql("q.cell_id = cd.cell_id\n    AND " +
+         "q.sub = cd.sub AND q.code = cd.code", k)}""".stripMargin
   }
 
   /** q233's oracle: the q192 neighbor graph, then `rounds` synchronous
@@ -1977,9 +1969,17 @@ object SparkEntry
        |    ${d2("sl.xs", "c.cs")} AS qd
        |  FROM sl JOIN cents c ON c.sub = sl.sub
        |  WHERE sl.vec_id < 10),
-       |sc AS (
+       |${adcTopKSql("q.sub = cd.sub AND q.code = cd.code", k)}""".stripMargin
+  }
+
+  /** The ADC top-k tail of the two PQ oracles: `sc` sums each query's
+    * `qtab` distances over a candidate's `codes` joined `on`, then the
+    * (distance, id) top `k` per query.
+    */
+  private def adcTopKSql(on: String, k: Int): String =
+    s"""sc AS (
        |  SELECT q.query_id, cd.cand_id, sum(q.qd)::BIGINT AS adc_micro
-       |  FROM codes cd JOIN qtab q ON q.sub = cd.sub AND q.code = cd.code
+       |  FROM codes cd JOIN qtab q ON $on
        |  WHERE q.query_id <> cd.cand_id
        |  GROUP BY 1, 2)
        |SELECT query_id, cand_id, adc_micro, rank FROM (
@@ -1988,7 +1988,6 @@ object SparkEntry
        |      ORDER BY adc_micro, cand_id) AS rank
        |  FROM sc)
        |WHERE rank <= $k""".stripMargin
-  }
 
   def oracleSql: Map[String, String] =
     oracleSqlRelational ++ oracleSqlTextSim ++ oracleSqlGenStats ++ oracleSqlGeneration ++ oracleSqlPipeline ++ oracleSqlCausal

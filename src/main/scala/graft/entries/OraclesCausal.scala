@@ -2380,7 +2380,7 @@ private[graft] trait OraclesCausal { this: SparkEntry.type =>
 
     "q337_pc_order2_oriented" ->
       s"""WITH gen AS (
-        |  SELECT * FROM read_parquet('__GEN_DIR__/q336_gen/*.parquet')),
+        |  SELECT * FROM read_parquet('__GEN_DIR__/q337_gen/*.parquet')),
         |panel AS (${Panels.singleSqlCte("gen", 6)}),
         |${graft.metrics.Causal.pcSkeleton2SqlCtes("panel", Pc2TauSqBp)},
         |${graft.metrics.Causal.pcOrient2SqlCtes(PcMeekRounds2)},

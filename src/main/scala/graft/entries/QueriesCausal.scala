@@ -2413,7 +2413,6 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
       val sk = graft.metrics.Causal.pcSkeleton3Stable(pan, PcOrientTauSqBp)
         .select(col("a"), col("b"), col("keep0"), col("edge"),
           col("edge2"), col("edge3"))
-        .localCheckpoint()
       val k0 = sk.where(col("keep0") === 1).select(col("a"), col("b"))
       val e1 = sk.where(col("edge") === 1).select(col("a"), col("b"))
       val e2 = sk.where(col("edge2") === 1).select(col("a"), col("b"))
@@ -2460,14 +2459,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // partials sit near 0.2-0.3 (the documented power price at n=200)
     "q350_pc_width_adaptive" -> ((s, d) => {
       val pan = dumpGen(s, "q350_panel", Panels.widePanel3(s, 32, 200))
-      // the rank/moment head is τ-free: compute it ONCE and hang both
-      // census tails off it (r14 optimization; the oracle already shares
-      // its pc_cm CTE the same way) — halves the query's fact-scale work
+      // the rank/moment head is τ-free: collect it ONCE and hang both
+      // census tails off it (the oracle shares its pc_cm CTE the same
+      // way) — halves the query's fact-scale work
       val cm = graft.metrics.Causal.pcMoments(pan)
       def census(tau: Long): DataFrame = {
         val sk = graft.metrics.Causal.pcSkeleton3StableFromCm(cm, tau)
           .select(col("keep0"), col("edge"), col("edge2"), col("edge3"))
-          .localCheckpoint()
         def cnt(stage: String, c: Column): DataFrame =
           sk.where(c === 1).agg(count(lit(1)).cast("long").as("n"))
             .select(lit(tau).as("tau_sq_bp"), lit(stage).as("stage"),
@@ -4214,11 +4212,12 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // leaves chained spurious pairs that no SINGLE conditioner
     // separates): Causal.pcSkeleton2's cofactor identity
     // ρ²_ab·{z,w} = cof_ab²/(cof_aa·cof_bb) on n²-normalized rank
-    // moments, exact integers end-to-end, every order-2 structure
-    // panel-grain on broadcast frames — the one fact-scale pass is the
+    // moments, exact integers end-to-end, every order-2 decision on the
+    // driver over the collected moments — the one fact-scale pass is the
     // shared rank cross-moment aggregate
     "q336_pc_order2_scored" -> ((s, d) =>
-      graft.metrics.Causal.pcSkeleton2(pcOrder2Panel(s), Pc2TauSqBp)
+      graft.metrics.Causal.pcSkeleton2(pcOrder2Panel(s, "q336_gen"),
+          Pc2TauSqBp)
         .select(col("a"), col("b"), col("edge"), col("sepset"),
           col("sepset2"), col("edge2"))
         .withColumn("truth_adj", expr(PcTruth6Case))),
@@ -4228,12 +4227,13 @@ private[graft] trait QueriesCausal { this: SparkEntry.type =>
     // full-Meek machinery q332 pins (pcOrient2 folds the order-2
     // sepset pair into the shared ~-membership collider test), the
     // CPDAG scored orientation-aware against the 6-var catalog truth.
-    // One fact-scale pass (the rank cross-moments); skeleton,
-    // cofactors, orientation and scoring all panel-grain broadcasts
+    // One fact-scale pass (the rank cross-moments); skeleton, cofactors
+    // and orientation on the driver, scoring panel-grain
     "q337_pc_order2_oriented" -> ((s, d) =>
       pcScoreOriented(s,
         graft.metrics.Causal.pcOrient2(
-          graft.metrics.Causal.pcSkeleton2(pcOrder2Panel(s), Pc2TauSqBp),
+          graft.metrics.Causal.pcSkeleton2(pcOrder2Panel(s, "q337_gen"),
+            Pc2TauSqBp),
           PcMeekRounds2),
         PcDirectedTruth6)),
 

@@ -2,7 +2,8 @@ package graft.metrics
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField,
+  StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.unsafe.types.UTF8String
 import scala.jdk.CollectionConverters._
@@ -456,7 +457,7 @@ object Causal {
   /** All-ordered-pairs centered rank cross-moments C_ab = n·Σr_a r_b −
     * Σr_a·Σr_b over the days BOTH series observe (pairwise-complete).
     * Includes the diagonal (a = b) — the variances the tests normalize by.
-    * Output is S² rows; downstream joins all broadcast.
+    * Output is S² rows.
     *
     * `broadcastB`: a single-graph panel is a few thousand rows, where
     * broadcasting the self-join's build side beats a 32-partition
@@ -513,22 +514,6 @@ object Causal {
                |  - cast(s_a as decimal(38,0)) * s_b as long)""".stripMargin)
           .as("c"))
 
-  /** Materialize a panel-grain frame AND reset its statistics. Spark 4's
-    * `localCheckpoint` copies the pre-checkpoint plan's ESTIMATED
-    * `sizeInBytes` into the resulting `LogicalRDD`; in an iterated-join
-    * algorithm those estimates compound multiplicatively across rounds
-    * (size(join) = Πsize(child) over `defaultSizeInBytes` ≈ 9e18 leaves),
-    * and the driver ends up multiplying BigInts with MILLIONS of digits
-    * inside `SizeInBytesOnlyStatsPlanVisitor.visitJoin` — measured 160 s
-    * of pure stats arithmetic at 4 Meek rounds. Rebuilding the frame from
-    * the materialized RDD drops the poisoned estimate back to the
-    * default. Only for ≤ p²-row frames: the Row round-trip is O(rows).
-    */
-  private def pinTiny(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-  }
-
   /** PC-algorithm skeleton to conditioning order 1 over the Spearman rank
     * panel. Order 0 drops {a,b} when 10000·C_ab² ≤ tauSqBp·C_aa·C_bb
     * (|ρ| ≤ τ with τ² in basis points); order 1 drops a surviving pair
@@ -539,52 +524,44 @@ object Causal {
     * multiplied. sepset = lexicographically-least separating z.
     */
   def pcSkeleton(panel: DataFrame, tauSqBp: Long = 625L,
-      broadcastRankJoin: Boolean = true): DataFrame =
-    pcSkeletonMoments(new PairMoments(pcMoments(panel, broadcastRankJoin)),
-      tauSqBp)
+      broadcastRankJoin: Boolean = true): DataFrame = {
+    val cm = pcMoments(panel, broadcastRankJoin)
+    pcFrame(cm, pcOrder1(cm, tauSqBp).map(_.toRow), 1)
+  }
 
-  /** The canonical τ² stability ladder in basis points: τ = 0.05, 0.10,
-    * 0.15, 0.20, 0.25 ([[pcSkeleton]]'s default), 0.30 — ONE value
-    * shared by the q342 query/oracle pair and Bench's catalog sweep
-    * rung, so the benched ladder can never silently drift from the
-    * correctness-gated one.
+  /** The canonical τ² stability ladder in basis points: τ = 0.05 …
+    * 0.30 in steps of 0.05 — ONE value shared by the q342 query/oracle
+    * pair and Bench's catalog sweep rung.
     */
   val TauSweepBps: Seq[Long] = Seq(25L, 100L, 225L, 400L, 625L, 900L)
 
-  /** PC-skeleton THRESHOLD-STABILITY sweep (the StARS-style sensitivity
-    * analysis): the rank cross-moments are τ-free, so ONE fact-scale
-    * pass feeds the order-≤1 decision stage at every τ² in `tauSqBps`.
-    * Output: [[pcSkeleton]]'s columns plus `tau_sq_bp`. Both decision
-    * stages are monotone in τ (keep0 can only drop as τ grows, a
-    * separating z can only appear), so the per-τ edge sets are NESTED —
-    * an edge that vanishes early is a threshold artifact, one that
-    * survives the whole ladder is structural. Pinned by spec.
-    * `broadcastRankJoin` as in [[pcSkeleton]]: pass false for folded
-    * megarow panels where broadcasting the rank self-join's build side
-    * is the single-node shortcut a cluster plan must not take.
+  /** PC-skeleton THRESHOLD-STABILITY sweep (StARS-style): ONE τ-free
+    * moment pass feeds the order-≤1 decisions at every τ² in `tauSqBps`.
+    * Output: [[pcSkeleton]]'s columns plus `tau_sq_bp`. Both decisions
+    * are monotone in τ, so the per-τ edge sets are NESTED (pinned by
+    * spec): an edge that vanishes early is a threshold artifact.
+    * `broadcastRankJoin` is [[rankCrossMoments]]' `broadcastB`.
     */
   def pcSkeletonTauSweep(panel: DataFrame, tauSqBps: Seq[Long],
       broadcastRankJoin: Boolean = true): DataFrame = {
     require(tauSqBps.nonEmpty, "tauSqBps must be non-empty")
-    val cm = new PairMoments(pcMoments(panel, broadcastRankJoin))
-    tauSqBps.map(t =>
-        pcSkeletonMoments(cm, t).withColumn("tau_sq_bp", lit(t)))
-      .reduce(_ unionByName _)
+    val cm = pcMoments(panel, broadcastRankJoin)
+    pcFrame(cm, tauSqBps.flatMap(t =>
+      pcOrder1(cm, t).map(p => Row.fromSeq(p.toRow.toSeq :+ t))), 1,
+      StructField("tau_sq_bp", LongType, nullable = false))
   }
 
   /** Spark's string order (UTF8String, binary UTF-8), for the decision
-    * tail's driver-side `<`, `least`/`greatest` and `min` over series names.
+    * tail's `<` and `min` over series names and separating sets.
     */
   private val seriesOrder: Ordering[String] = Ordering.fromLessThan((a, b) =>
     UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
 
   /** A pair-grain moment frame (k1, k2, n, c) collected to the driver and
-    * keyed by (k1, k2): the decision tail's lookups read it in place of
-    * broadcast equi-joins. Rows with a NULL key are dropped, as a join
-    * drops them; a key with several rows returns each, as a join would.
-    * Only for frames of at most one row per co-observed pair.
+    * keyed by (k1, k2). Rows with a NULL key are dropped and a key with
+    * several rows returns each, as a join would.
     */
-  private final class PairMoments(df: DataFrame, k1: String = "sa",
+  private[graft] final class PairMoments(df: DataFrame, k1: String = "sa",
       k2: String = "sb") {
     private val sel = df.select(k1, k2, "n", "c")
     val spark: SparkSession = df.sparkSession
@@ -599,87 +576,69 @@ object Causal {
     def from(a: String): Array[Row] = byFirst.getOrElse(a, Array.empty[Row])
   }
 
-  /** Shared order-0 stage: every co-observed pair (a < b) with its
-    * cross/diagonal moments and the keep0 decision — the frame both the
-    * unrestricted and the PC-stable skeletons build on. The pair rows are
-    * built from the collected moments; keep0 is evaluated by Spark over
-    * the local relation (on the driver, no job).
+  /** One co-observed pair (a < b) of the PC ladder: order-0 moments and
+    * keep0, then per order k ≥ 1 its least sepset (or null) and edge.
     */
-  private def pcPairs0(cm: PairMoments, tauSqBp: Long): DataFrame = {
-    val rows = for {
-      r <- cm.rows
-      a = r.getString(0); b = r.getString(1) if seriesOrder.lt(a, b)
-      aa <- cm(a, a); bb <- cm(b, b)
-    } yield Row(a, b, r.get(2), r.get(3), aa.get(3), bb.get(3))
-    val Array(fa, fb, fn, fc) = cm.fields
-    val schema = StructType(Seq(fa.copy(name = "a"), fb.copy(name = "b"), fn,
-      fc.copy(name = "cab"), fc.copy(name = "caa"), fc.copy(name = "cbb")))
-    cm.spark.createDataFrame(rows.toSeq.asJava, schema)
-      .withColumn("keep0", expr(
-        s"""case when 10000 * cast(cab as decimal(38,0)) * cab >
-           |  $tauSqBp * cast(caa as decimal(38,0)) * cbb
-           |then 1 else 0 end""".stripMargin))
+  private final case class PcRow(a: String, b: String, n: Long, cab: Long,
+      keep0: Int, seps: Vector[String] = Vector.empty,
+      edges: Vector[Int] = Vector.empty) {
+    /** The order-k flag: keep0 at order 0, edge(k) above. */
+    def edge(k: Int): Int = if (k == 0) keep0 else edges(k - 1)
+    def toRow: Row = Row.fromSeq(Seq(a, b, n, cab, keep0) ++
+      seps.zip(edges).flatMap { case (s, e) => Seq(s, e) })
   }
 
-  /** The order-1 partial-correlation separation decision (ρ²_ab·z ≤ τ²,
-    * cross-multiplied in DECIMAL(38,0)) over a frame carrying
-    * cab/caa/cbb/caz/cbz/czz — shared by both skeleton variants.
+  /** Order 0 on the driver: every co-observed pair (a < b) whose (a, a)
+    * and (b, b) cells exist, with keep0 = 10000·C_ab² > τ²bp·C_aa·C_bb in
+    * [[cofChecked]] arithmetic — [[pairs0SqlCte]]'s rows.
     */
-  private def sep1Expr(tauSqBp: Long) = expr(
-    s"""case when 10000 *
-       |    (cast(cab as decimal(38,0))*czz - cast(caz as decimal(38,0))*cbz) *
-       |    (cast(cab as decimal(38,0))*czz - cast(caz as decimal(38,0))*cbz)
-       |  <= $tauSqBp *
-       |    (cast(caa as decimal(38,0))*czz - cast(caz as decimal(38,0))*caz) *
-       |    (cast(cbb as decimal(38,0))*czz - cast(cbz as decimal(38,0))*cbz)
-       |then 1 else 0 end""".stripMargin)
-
-  /** The moments→skeleton stage of [[pcSkeleton]], split out so
-    * [[pcSkeleton2]] can reuse one fact-scale cross-moment pass for both
-    * the order-≤1 decisions and the order-2 cofactor tests. Every frame
-    * here is a local relation built from the collected moments: the
-    * decision expressions run on the driver with no job.
-    */
-  private def pcSkeletonMoments(cm: PairMoments,
-      tauSqBp: Long): DataFrame = {
-    val pf = pcPairs0(cm, tauSqBp)
-    val pairs = pf.collect()
-    // conditioning candidates are ENUMERATED from the moment rows, not
-    // crossed with every diagonal: a usable z has (a,z), (b,z) and (z,z)
-    // rows, so starting from a's rows keeps the fan-out per pair at the
-    // z's a actually co-observes. Under the multi-graph fold (q340: many
-    // disjoint graphs via key-prefixed series sharing no days) that keeps
-    // the stage linear in the graph count
-    val trip = for {
-      p <- pairs if p.getInt(6) == 1
-      a = p.getString(0); b = p.getString(1)
-      az <- cm.from(a)
-      z = az.getString(1) if z != a && z != b
-      bz <- cm(b, z); zz <- cm(z, z)
-    } yield Row(a, b, z, p.get(3), p.get(4), p.get(5), az.get(3), bz.get(3),
-      zz.get(3))
-    val Array(fa, fb, _, fc) = cm.fields
-    val tripSchema = StructType(Seq(fa.copy(name = "a"), fb.copy(name = "b"),
-      fb.copy(name = "z")) ++
-      Seq("cab", "caa", "cbb", "caz", "cbz", "czz").map(c => fc.copy(name = c)))
-    // the least separating z per pair, in Spark's string order
-    val sepsets = cm.spark.createDataFrame(trip.toSeq.asJava, tripSchema)
-      .select(col("a"), col("b"), col("z"), sep1Expr(tauSqBp).as("sep"))
-      .collect().filter(_.getInt(3) == 1)
-      .groupBy(r => (r.getString(0), r.getString(1)))
-      .map { case (k, rs) => k -> rs.map(_.getString(2)).min(seriesOrder) }
-    val out = pairs.map { p =>
-      Row(p.get(0), p.get(1), p.get(2), p.get(3), p.get(6),
-        sepsets.getOrElse((p.getString(0), p.getString(1)), null))
+  private def pcPairs0(cm: PairMoments, tauSqBp: Long): Seq[PcRow] = {
+    val o = cofChecked(0)
+    for {
+      r <- cm.rows.toSeq
+      a = r.getString(0); b = r.getString(1) if seriesOrder.lt(a, b)
+      aa <- cm(a, a).toSeq; bb <- cm(b, b).toSeq
+    } yield {
+      val (l, rt) = ratioSides(o, tauSqBp, BigInt(r.getLong(3)),
+        BigInt(aa.getLong(3)), BigInt(bb.getLong(3)))
+      PcRow(a, b, r.getLong(2), r.getLong(3), if (l > rt) 1 else 0)
     }
-    val pfs = pf.schema
-    val outSchema = StructType(Seq("a", "b", "n", "cab", "keep0").map(pfs(_)) :+
-      StructField("sepset", fb.dataType, nullable = true))
-    cm.spark.createDataFrame(out.toSeq.asJava, outSchema)
-      .select(col("a"), col("b"), col("n"), col("cab"), col("keep0"),
-        col("sepset"),
-        when(col("keep0") === 1 && col("sepset").isNull, 1).otherwise(0)
-          .as("edge"))
+  }
+
+  /** [[pcSkeleton]]'s orders 0 and 1: order 1 tests every z ∉ {a, b} in
+    * a's moment rows — not every diagonal, so a multi-graph fold (q340)
+    * stays linear in its graph count.
+    */
+  private def pcOrder1(cm: PairMoments, tauSqBp: Long): Seq[PcRow] =
+    pcOrder(cm, 1, tauSqBp, pcPairs0(cm, tauSqBp),
+      p => subsets(coObserved(cm, p), 1))
+
+  /** The unrestricted conditioning pool: the series a co-observes, other
+    * than a and b, in Spark's string order.
+    */
+  private def coObserved(cm: PairMoments, p: PcRow): IndexedSeq[String] =
+    cm.from(p.a).map(_.getString(1)).filter(z => z != p.a && z != p.b)
+      .distinct.sorted(seriesOrder).toIndexedSeq
+
+  /** The k-subsets of `xs` (ascending positions), each in `xs`'s order. */
+  private def subsets(xs: IndexedSeq[String], k: Int,
+      from: Int = 0): Iterator[List[String]] =
+    if (k == 0) Iterator(Nil)
+    else (from until xs.size).iterator.flatMap(i =>
+      subsets(xs, k - 1, i + 1).map(xs(i) :: _))
+
+  /** The ladder's rows to order `top` as one local relation: (a, b, n,
+    * cab) with the moment frame's types and INT keep0, then per order k
+    * a nullable STRING sepCol(k) and an INT edgeCol(k), then `extra`.
+    */
+  private def pcFrame(cm: PairMoments, rows: Seq[Row], top: Int,
+      extra: StructField*): DataFrame = {
+    val Array(fa, fb, fn, fc) = cm.fields
+    cm.spark.createDataFrame(rows.asJava, StructType(Seq(fa.copy(name = "a"),
+      fb.copy(name = "b"), fn, fc.copy(name = "cab"),
+      StructField("keep0", IntegerType, nullable = false)) ++
+      (1 to top).flatMap(k => Seq(StructField(sepCol(k), StringType),
+        StructField(edgeCol(k), IntegerType, nullable = false))) ++ extra))
   }
 
   /** The τ-FREE rank/moment head of [[pcSkeletonSqlCtes]]: yields
@@ -756,9 +715,9 @@ object Causal {
   /** PC-algorithm skeleton to conditioning order 2. Orders 0/1 are
     * exactly [[pcSkeleton]]; each surviving pair (a,b) is then tested
     * against every unordered conditioning pair {z,w} ⊄ {a,b} of series
-    * a co-observes, by the ladder's one conditioning [[rung]]: the
-    * cofactor identity ρ²_ab·{z,w} = cof_ab² / (cof_aa·cof_bb) over the
-    * 4×4 moment matrix on (a,b,z,w) — separated when
+    * a co-observes, by the ladder's one conditioning order ([[pcOrder]]):
+    * the cofactor identity ρ²_ab·{z,w} = cof_ab² / (cof_aa·cof_bb) over
+    * the 4×4 moment matrix on (a,b,z,w) — separated when
     * 10000·cof_ab² ≤ τ²bp·cof_aa·cof_bb, fully rational.
     *
     * The order-2 test runs on NORMALIZED moments ĉ = c div n² (exact
@@ -769,33 +728,15 @@ object Causal {
     * (≤ n² absolute, ~1e-5 relative at n = 200) is far inside a
     * τ = 0.1..0.25 decision margin and is part of the pinned contract.
     *
-    * `sepset2` is the minimum over separating pairs of the string
-    * `z || '~' || w` (z < w) — the pinned deterministic tie-break (plain
-    * string ordering, NOT tuple ordering when series names vary in
-    * length). Output: [[pcSkeleton]]'s columns plus (sepset2,
-    * edge2 = survived order ≤ 2). Fact-scale work is the single rank
-    * cross-moment pass; the order-2 candidates (≤ p²·C(p,2) rows) look
-    * their moment cells up in broadcast equi-joins.
+    * `sepset2` is the least `z~w` (z < w) over separating pairs in
+    * plain string order, NOT tuple order. Output: [[pcSkeleton]]'s
+    * columns plus (sepset2, edge2 = survived order ≤ 2), decided on the
+    * driver over the one fact-scale pass, the rank cross-moments.
     */
   def pcSkeleton2(panel: DataFrame, tauSqBp: Long = 625L): DataFrame = {
     val cm = pcMoments(panel)
-    // one partition, as the join chain the local relation replaced had:
-    // a local relation scans as one partition per core, and every later
-    // stage and Meek round would pay for the extra tasks
-    val sk1 = pinTiny(pcSkeletonMoments(new PairMoments(cm), tauSqBp).coalesce(1))
-    // conditioning pairs {z,w} enumerated from a's co-observed series
-    // (the (a,z)/(a,w) moment rows the rung demands anyway), not
-    // cross-joined against the global diagonal — identical candidate
-    // set, and under the q340-style multi-graph fold the fan-out stays
-    // per-graph instead of quadratic across graphs
-    val adjz = broadcast(cm.where(col("sa") =!= col("sb"))
-      .select(col("sa").as("a"), col("sb").as("z")))
-    val cand = sk1.where(col("edge") === 1).select(col("a"), col("b"))
-      .join(adjz, Seq("a"))
-      .join(broadcast(adjz.select(col("a"), col("z").as("w"))), Seq("a"))
-      .where(col("z") < col("w") &&
-        col("z") =!= col("b") && col("w") =!= col("b"))
-    rung(2, cm, sk1, cand, tauSqBp)
+    pcFrame(cm, pcOrder(cm, 2, tauSqBp, pcOrder1(cm, tauSqBp),
+      p => subsets(coObserved(cm, p), 2)).map(_.toRow), 2)
   }
 
   /** [[pcSkeleton2]] as ANSI CTEs: [[pcSkeletonSqlCtes]] plus the
@@ -815,24 +756,59 @@ object Causal {
 
   /** The canonical 5-variable label order (a, b, then conditioning
     * z < w < u) and the moment-column name for an unordered label pair —
-    * `mab`, `mzw`, `muu`, … — shared by the cofactor generator below so
-    * the Spark `expr` and the DuckDB CTE read the SAME identifiers.
+    * `mab`, `mzw`, `muu`, … — the columns the DuckDB CTEs name.
     */
   private val PcVarOrder = Vector("a", "b", "z", "w", "u")
   private def mn(x: String, y: String): String =
     if (PcVarOrder.indexOf(x) <= PcVarOrder.indexOf(y)) s"m$x$y"
     else s"m$y$x"
 
-  private def det2s(r: Seq[String], c: Seq[String]): String =
-    s"(${mn(r(0), c(0))}*${mn(r(1), c(1))} - " +
-      s"${mn(r(0), c(1))}*${mn(r(1), c(0))})"
+  /** The arithmetic the cofactor test is read in: the text the oracle
+    * CTEs interpolate, or its checked value — so the engines cannot drift.
+    */
+  private final case class CofOps[T](num: Long => T, mul: (T, T) => T,
+      add: (T, T) => T, sub: (T, T) => T, paren: T => T)
 
-  private def detNs(r: Seq[String], c: Seq[String]): String =
-    if (r.size == 2) det2s(r, c)
-    else "(" + c.indices.map { j =>
-      val t = s"${mn(r.head, c(j))}*${detNs(r.tail, c.patch(j, Nil, 1))}"
-      if (j == 0) t else if (j % 2 == 0) s" + $t" else s" - $t"
-    }.mkString + ")"
+  private val CofText = CofOps[String](_.toString, (p, q) => s"$p*$q",
+    (p, q) => s"$p + $q", (p, q) => s"$p - $q", p => s"($p)")
+
+  /** DECIMAL(38,0)'s range, |x| < 10³⁸. */
+  private val Decimal38 = BigInt(10).pow(38)
+  private val NegDecimal38 = -Decimal38
+
+  /** The text's value over BigInt cells for the order-k test: every
+    * product, sum and difference must stay inside DECIMAL(38,0), where
+    * Spark under ANSI would raise; past it this raises an
+    * ArithmeticException naming the order and the budget.
+    */
+  private def cofChecked(k: Int): CofOps[BigInt] = {
+    def ok(x: BigInt): BigInt =
+      if (x < Decimal38 && x > NegDecimal38) x
+      else throw new ArithmeticException(s"PC order-$k test: an " +
+        "intermediate product leaves the DECIMAL(38,0) budget (|x| < " +
+        "10^38); the panel has too many observations per pair for this " +
+        "order (see pcSkeleton2 and pcSkeleton3Stable for the budgets)")
+    CofOps[BigInt](BigInt(_), (p, q) => ok(p * q), (p, q) => ok(p + q),
+      (p, q) => ok(p - q), identity)
+  }
+
+  /** `o` over functions of a cell array: read once, applied per candidate. */
+  private def lifted[T](o: CofOps[T]): CofOps[Array[T] => T] =
+    CofOps(v => { val x = o.num(v); _ => x }, (p, q) => c => o.mul(p(c), q(c)),
+      (p, q) => c => o.add(p(c), q(c)), (p, q) => c => o.sub(p(c), q(c)), p => p)
+
+  /** The minor of rows `r` × columns `c`, expanded along the first row. */
+  private def det[T](o: CofOps[T], cell: (String, String) => T)(
+      r: Seq[String], c: Seq[String]): T =
+    if (r.size == 2)
+      o.paren(o.sub(o.mul(cell(r(0), c(0)), cell(r(1), c(1))),
+        o.mul(cell(r(0), c(1)), cell(r(1), c(0)))))
+    else {
+      def term(j: Int) =
+        o.mul(cell(r.head, c(j)), det(o, cell)(r.tail, c.patch(j, Nil, 1)))
+      o.paren(c.indices.tail.foldLeft(term(0)) { (acc, j) =>
+        if (j % 2 == 0) o.add(acc, term(j)) else o.sub(acc, term(j)) })
+    }
 
   /** The conditioning labels of order k (1 ≤ k ≤ 3): z, w, u. */
   private def conds(k: Int): Seq[String] = Seq("z", "w", "u").take(k)
@@ -845,18 +821,33 @@ object Causal {
     for (i <- ls.indices; j <- i until ls.size) yield (ls(i), ls(j))
   }
 
+  /** Order k's cofactors over the moment matrix on (a, b, Z): cof_ab the
+    * minor deleting row a / column b, cof_aa/cof_bb the principal minors.
+    */
+  private def cofactors[T](o: CofOps[T], cell: (String, String) => T,
+      k: Int): Seq[(String, T)] = {
+    val zs = conds(k)
+    val d = det(o, cell) _
+    Seq("cofab" -> d("b" +: zs, "a" +: zs),
+      "cofaa" -> d("b" +: zs, "b" +: zs),
+      "cofbb" -> d("a" +: zs, "a" +: zs))
+  }
+
+  /** The two sides of every PC test, 10000·ab·ab against τ²bp·aa·bb:
+    * keep0 is `>`, a separation `<=`.
+    */
+  private def ratioSides[T](o: CofOps[T], tauSqBp: Long, ab: T, aa: T,
+      bb: T): (T, T) =
+    (o.mul(o.mul(o.num(10000), ab), ab), o.mul(o.mul(o.num(tauSqBp), aa), bb))
+
   /** Order k's cofactor test as arithmetic text over the [[cells]] columns,
-    * interpolated verbatim into both engines: ρ²_ab·Z = cof_ab²/(cof_aa·
-    * cof_bb) over the moment matrix on (a, b, Z) — cof_ab the minor
-    * deleting row a / column b, cof_aa/cof_bb the principal minors. At
-    * k = 1 it is the order-1 partial-correlation test term for term.
+    * interpolated verbatim into the DuckDB CTEs: ρ²_ab·Z = cof_ab²/(cof_aa·
+    * cof_bb). At k = 1 it is the order-1 partial-correlation test term
+    * for term. [[pcOrder]] evaluates the same recursion.
     */
   private def sepTest(k: Int, tauSqBp: Long): (Seq[(String, String)], String) = {
-    val zs = conds(k)
-    (Seq("cofab" -> detNs("b" +: zs, "a" +: zs),
-      "cofaa" -> detNs("b" +: zs, "b" +: zs),
-      "cofbb" -> detNs("a" +: zs, "a" +: zs)),
-      s"10000*cofab*cofab <= $tauSqBp*cofaa*cofbb")
+    val (l, r) = ratioSides(CofText, tauSqBp, "cofab", "cofaa", "cofbb")
+    (cofactors(CofText, mn, k), s"$l <= $r")
   }
 
   /** The flag order k writes (`keep0` at order 0, `edge`, `edge2`, …) and
@@ -873,72 +864,91 @@ object Causal {
     Seq("a", "b", "n", "cab", "keep0") ++
       (1 until k).flatMap(j => Seq(sepCol(j), edgeCol(j)))
 
-  /** One conditioning rung of the PC ladder, order k: each candidate
-    * (a, b, conds(k)) of `cand` looks its [[cells]] up in the [[pcMoments]]
-    * frame `cm` — raw at order 1, ĉ = c div n² above (scale contract in
-    * [[pcSkeleton2]]) — by broadcast equi-joins on LONG cells, cast to
-    * DECIMAL(38,0) after the lookup; the least `z~w~u` passing [[sepTest]]
-    * becomes sepCol(k). Output: `prev`'s [[ladderCols]] plus (sepCol(k),
-    * edgeCol(k) = survived order k−1 and no separating set).
-    */
-  private def rung(k: Int, cm: DataFrame, prev: DataFrame, cand: DataFrame,
-      tauSqBp: Long): DataFrame = {
-    val zs = conds(k)
-    val m = cm.select(col("sa"), col("sb"),
-      (if (k == 1) col("c") else expr("c div (n * n)")).as("m"))
-    val looked = cells(k).foldLeft(cand) { case (df, (x, y)) =>
-      if (x == y) df.join(broadcast(m.where(col("sa") === col("sb"))
-        .select(col("sa").as(x), col("m").as(mn(x, x)))), Seq(x))
-      else df.join(broadcast(m.select(col("sa").as(x), col("sb").as(y),
-        col("m").as(mn(x, y)))), Seq(x, y))
-    }
-    val (cofs, test) = sepTest(k, tauSqBp)
-    val cof = cofs.foldLeft(looked.select((Seq("a", "b") ++ zs).map(col) ++
-        cells(k).map { case (x, y) =>
-          col(mn(x, y)).cast("decimal(38,0)").as(mn(x, y)) }: _*)) {
-      case (df, (name, text)) => df.withColumn(name, expr(text)) }
-    val seps = cof.groupBy("a", "b")
-      .agg(min(when(expr(test), zs.map(col).reduce(concat(_, lit("~"), _))))
-        .as(sepCol(k)))
-    prev.join(broadcast(seps), Seq("a", "b"), "left_outer")
-      .select(ladderCols(k).map(col) :+ col(sepCol(k)) :+
-        when(col(edgeCol(k - 1)) === 1 && col(sepCol(k)).isNull, 1)
-          .otherwise(0).as(edgeCol(k)): _*)
+  /** Every combination of one row per cell, as a join fans out. */
+  private def choices(cs: List[Array[Row]]): Iterator[List[Row]] = cs match {
+    case Nil => Iterator(Nil)
+    case h :: t => h.iterator.flatMap(r => choices(t).map(r :: _))
   }
 
-  /** PC-stable's order-k candidates: each edge (a, b) of order k−1 with
+  /** One conditioning order k ≥ 1 of the PC ladder: each pair that
+    * survived order k−1 tests every set `cand` proposes, reading its
+    * [[cells]] from `cm` — raw c at order 1, ĉ = c / n² (LONG truncating
+    * division) above; a missing cell drops the candidate, several rows
+    * test each combination. Every candidate is evaluated, as the SQL
+    * twin evaluates every row; the least separating `z~w~u` in Spark's
+    * string order becomes sepCol(k), and edgeCol(k) = survived order
+    * k−1 and no separating set.
+    */
+  private def pcOrder(cm: PairMoments, k: Int, tauSqBp: Long,
+      prev: Seq[PcRow], cand: PcRow => Iterator[Seq[String]]): Seq[PcRow] = {
+    val o = cofChecked(k)
+    val slot = cells(k).zipWithIndex.toMap
+    // sepTest's cofactors over one candidate's cells, in cells(k) order
+    val Seq(ab, aa, bb) = cofactors(lifted(o), (x: String, y: String) => {
+      val i = slot.getOrElse((x, y), slot((y, x)))
+      (c: Array[BigInt]) => c(i)
+    }, k).map(_._2)
+    val ix = PcVarOrder.indexOf(_: String)
+    val at = cells(k).map { case (x, y) => (ix(x), ix(y)) }.toList
+    def sepOk(v: IndexedSeq[String]): Boolean = {
+      val found = at.map { case (i, j) => cm(v(i), v(j)) }
+      found.forall(_.nonEmpty) && choices(found).map { rs =>
+        val c = rs.map(r => BigInt(if (k == 1) r.getLong(3)
+          else r.getLong(3) / (r.getLong(2) * r.getLong(2)))).toArray
+        val (l, r) = ratioSides(o, tauSqBp, ab(c), aa(c), bb(c))
+        l <= r
+      }.foldLeft(false)(_ | _)
+    }
+    prev.map { p =>
+      val alive = p.edge(k - 1) == 1
+      val seps = if (!alive) Nil
+        else cand(p).filter(zs => sepOk((p.a +: p.b +: zs).toIndexedSeq))
+          .map(_.mkString("~")).toList
+      val sep = if (seps.isEmpty) null else seps.min(seriesOrder)
+      p.copy(seps = p.seps :+ sep,
+        edges = p.edges :+ (if (alive && sep == null) 1 else 0))
+    }
+  }
+
+  /** PC-stable's order-k candidates for an edge (a, b) of order k−1:
     * every k-subset z < w < u drawn wholly from adj(a)\{b} or wholly from
-    * adj(b)\{a}, adj the order-(k−1) adjacency. The UNION of the two
-    * sides deduplicates subsets drawn from both.
+    * adj(b)\{a}, adj the order-(k−1) adjacency of `edges`; a subset drawn
+    * from both sides counts once.
+    */
+  private def stableCands(edges: Seq[(String, String)],
+      k: Int): ((String, String)) => Iterator[Seq[String]] = {
+    val adj = edges.flatMap(e => Seq(e, e.swap)).groupMap(_._1)(_._2)
+    def side(x: String, other: String) = subsets(adj.getOrElse(x, Nil)
+      .filter(_ != other).distinct.sorted(seriesOrder).toIndexedSeq, k)
+    e => (side(e._1, e._2) ++ side(e._2, e._1)).distinct
+  }
+
+  /** [[stableCands]]' tuples (a, b, conds(k)) over the order-(k−1) edges
+    * of a ladder frame `prev` — the candidate census q349 counts.
     */
   private[graft] def stableCand(prev: DataFrame, k: Int): DataFrame = {
-    val zs = conds(k)
-    val e = prev.where(col(edgeCol(k - 1)) === 1).select(col("a"), col("b"))
-    val adj = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-    def side(key: String, other: String): DataFrame =
-      zs.foldLeft(e)((df, z) => df.join(
-          broadcast(adj.select(col("a").as(key), col("b").as(z))), Seq(key)))
-        .where((zs.map(z => col(z) =!= col(other)) ++
-          zs.zip(zs.tail).map { case (x, y) => col(x) < col(y) }).reduce(_ && _))
-        .select((Seq("a", "b") ++ zs).map(col): _*)
-    side("a", "b").unionByName(side("b", "a")).distinct()
+    val edges = prev.where(col(edgeCol(k - 1)) === 1).select("a", "b")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val cand = stableCands(edges, k)
+    val rows = edges.flatMap(e =>
+      cand(e).map(zs => Row.fromSeq(Seq(e._1, e._2) ++ zs)))
+    prev.sparkSession.createDataFrame(rows.asJava, StructType(
+      (Seq("a", "b") ++ conds(k)).map(StructField(_, StringType))))
   }
 
-  /** The PC-stable ladder to order `top` off a [[pcMoments]] frame: order 0
-    * on the driver ([[pcPairs0]]), then one [[rung]] per order over
-    * [[stableCand]]; every order but the last is pinned.
+  /** The PC-stable ladder to order `top` off the collected moments: order
+    * 0 ([[pcPairs0]]), then one [[pcOrder]] per order over
+    * [[stableCands]].
     */
-  private def pcStableLadder(cm: DataFrame, tauSqBp: Long,
-      top: Int): DataFrame = {
-    // one partition, as in pcSkeleton2
-    val pairs = pinTiny(pcPairs0(new PairMoments(cm), tauSqBp).coalesce(1))
-    (1 to top).foldLeft(pairs) { (prev, k) =>
-      val out = rung(k, cm, prev, stableCand(prev, k), tauSqBp)
-      if (k < top) pinTiny(out) else out
-    }
-  }
+  private def pcStableLadder(cm: PairMoments, tauSqBp: Long,
+      top: Int): DataFrame =
+    pcFrame(cm, (1 to top).foldLeft(pcPairs0(cm, tauSqBp)) { (prev, k) =>
+      val cand = stableCands(
+        prev.filter(_.edge(k - 1) == 1).map(p => (p.a, p.b)), k)
+      pcOrder(cm, k, tauSqBp, prev, p => cand((p.a, p.b)))
+    }.map(_.toRow), top)
 
-  /** [[rung]]'s CTE twin over `pc_cm`: the same cells (c // n² above order
+  /** [[pcOrder]]'s CTE twin over `pc_cm`: the same cells (c // n² above order
     * 1, cast to HUGEINT after the lookup) and [[sepTest]] in CTEs
     * `<p>_mm<k>` and `<p>_cof<k>`, and `out` = `prev`'s [[ladderCols]]
     * plus (sepCol(k), edgeCol(k)).
@@ -973,7 +983,7 @@ object Causal {
        |    ON s.a = o.a AND s.b = o.b)""".stripMargin
   }
 
-  /** [[stableCand]]'s CTE twin: `pcs_adj<k-1>` (the symmetrized order-(k−1)
+  /** [[stableCands]]' CTE twin: `pcs_adj<k-1>` (the symmetrized order-(k−1)
     * adjacency of `prev`) and `pcs_cand<k>`.
     */
   private def stableCandSqlCtes(k: Int, prev: String): String = {
@@ -1018,38 +1028,23 @@ object Causal {
   /** PC-STABLE order-≤2 skeleton: the identical rational partial-
     * correlation tests as [[pcSkeleton2]], but conditioning candidates
     * restricted to the ADJACENCY surviving the previous order — the
-    * level-synchronous algorithm of Colombo & Maathuis, "Order-
-    * Independent Constraint-Based Causal Structure Learning" (JMLR 15,
-    * 2014). Order 1 tests z ∈ adj₀(a)\{b} ∪ adj₀(b)\{a} (adj₀ = pairs
-    * surviving order 0); order 2 tests {z,w} ⊆ adj₁(a)\{b} OR
-    * {z,w} ⊆ adj₁(b)\{a} — both elements from ONE endpoint's neighbor
-    * set, the published definition (a mixed pick is not a subset of
-    * either side and is NOT tested).
+    * level-synchronous algorithm of Colombo & Maathuis (JMLR 15, 2014).
+    * Order 1 tests z ∈ adj₀(a)\{b} ∪ adj₀(b)\{a}; order 2 tests
+    * {z,w} ⊆ adj₁(a)\{b} OR {z,w} ⊆ adj₁(b)\{a} — both from ONE
+    * endpoint's neighbor set, the published definition.
     *
-    * Semantics vs [[pcSkeleton2]]: the unrestricted variant conditions
-    * on every co-observed series, so a non-neighbor z can separate a
-    * pair by threshold artifact; PC-stable only accepts separations
-    * witnessed inside the current adjacency, hence on a fully
-    * co-observed panel its candidate set per pair is a SUBSET of the
-    * unrestricted one and its surviving edge set a SUPERSET (pinned by
-    * spec). Both variants are level-synchronous and therefore
-    * order-independent / partitioning-invariant.
+    * PC-stable only accepts separations witnessed inside the current
+    * adjacency, so on a fully co-observed panel its candidate set per
+    * pair is a SUBSET of [[pcSkeleton2]]'s and its surviving edge set a
+    * SUPERSET (pinned by spec); both are level-synchronous, hence
+    * order-independent. The stable orders cost O(E·d) and O(E·d²) for
+    * surviving degree d instead of O(p³)/O(p⁴) per graph, and compose
+    * with the multi-graph fold (adjacency carries the folded names).
+    * Order 0 is [[pcPairs0]], orders 1 and 2 [[pcOrder]] over
+    * [[stableCands]], all on the driver.
     *
-    * This is the wide-panel scale form: the unrestricted order-1/2
-    * stages are O(p³)/O(p⁴) per graph regardless of sparsity, while the
-    * stable stages are O(E·d) and O(E·d²) for max surviving degree d —
-    * on a sparse deployment-width graph (p = 32..64, d ≈ 4) that is a
-    * 50-100× candidate-volume cut, and the restriction composes with
-    * the multi-graph fold unchanged (adjacency rows carry the folded
-    * series names, so the fan-out stays per-graph). The order-0 pairs
-    * are a driver-side local relation ([[pcPairs0]]); orders 1 and 2 are
-    * the ladder's one [[rung]] over [[stableCand]] candidates (raw moments
-    * at order 1, normalized ones at order 2); the single fact-scale pass
-    * remains the rank cross-moment aggregation.
-    *
-    * Output: [[pcSkeleton2]]'s exact column contract (a, b, n, cab,
-    * keep0, sepset, edge, sepset2, edge2) with every co-observed pair
-    * present — [[pcOrient2]] applies unchanged.
+    * Output: [[pcSkeleton2]]'s exact column contract with every
+    * co-observed pair present — [[pcOrient2]] applies unchanged.
     */
   def pcSkeleton2Stable(panel: DataFrame, tauSqBp: Long = 625L)
       : DataFrame =
@@ -1072,43 +1067,36 @@ object Causal {
       |""".stripMargin + pcOrientSqlCtes(meekRounds, "pcs2_sk")
 
   /** PC-STABLE skeleton to conditioning order 3: [[pcSkeleton2Stable]]
-    * plus one more rung of the same ladder — each order-2 survivor (a,b)
+    * plus one more order of the same ladder — each order-2 survivor (a,b)
     * tested against every unordered triple {z,w,u} drawn wholly from
     * adj₂(a)\{b} or wholly from adj₂(b)\{a}, via the 4×4-minor cofactor
     * identity on the 5×5 normalized moment matrix. Separated when
     * 10000·cof_ab² ≤ τ²bp·cof_aa·cof_bb, fully rational.
     *
     * Integer budget: ĉ = c div n² is O(n²/12), a 4×4 determinant of
-    * those is ≤ 4!·(n²/12)⁴ and 10⁴·cof² must fit DECIMAL(38,0)/HUGEINT
-    * ≈ 1e38 ⇒ n ≤ ~300 observations — one notch tighter than order-2's
-    * n ≤ 500, and why the order-3 rung keeps the 200-obs panel contract.
-    * Candidate volume: O(E·d³) for surviving degree d — the adjacency
-    * restriction is what makes a third order AFFORDABLE at all (the
-    * unrestricted form would be O(p⁵) per graph).
-    *
-    * Output: [[pcSkeleton2Stable]]'s columns plus (sepset3 = min
-    * `z~w~u` over separating triples, edge3 = survived order ≤ 3);
-    * every co-observed pair keeps its row.
+    * those is ≤ 4!·(n²/12)⁴ and 10⁴·cof² must fit DECIMAL(38,0) ≈ 1e38
+    * ⇒ n ≤ ~300 observations (order 2: n ≤ 500), hence the 200-obs
+    * panel contract; past it [[cofChecked]] raises its named error.
+    * Output: [[pcSkeleton2Stable]]'s columns plus (sepset3 = least
+    * separating `z~w~u`, edge3 = survived order ≤ 3).
     */
   def pcSkeleton3Stable(panel: DataFrame, tauSqBp: Long = 625L)
       : DataFrame =
     pcSkeleton3StableFromCm(pcMoments(panel), tauSqBp)
 
   /** The τ-FREE fact-scale stage of every pcSkeleton* variant — rank,
-    * cross-moment, materialize — exposed so a MULTI-τ consumer (q350's
-    * dual-τ census) pays the panel scan once and hangs one decision tail
-    * per τ off the same checkpointed moment frame (the DataFrame twin of
-    * what [[pcMomentSqlCtes]]/[[pcDecisionSqlCtes]] already split on the
-    * oracle side). `broadcastRankJoin` as in [[pcSkeleton]].
+    * cross-moment, collect — so a MULTI-τ consumer (q350) hangs one
+    * decision tail per τ off one moment pass, as [[pcMomentSqlCtes]]
+    * does on the oracle side. `broadcastRankJoin` as in [[pcSkeleton]].
     */
   def pcMoments(panel: DataFrame, broadcastRankJoin: Boolean = true)
-      : DataFrame =
-    pinTiny(rankCrossMoments(rankPanel(panel), broadcastRankJoin))
+      : PairMoments =
+    new PairMoments(rankCrossMoments(rankPanel(panel), broadcastRankJoin))
 
-  /** [[pcSkeleton3Stable]] minus the fact-scale moment pass, off a
-    * [[pcMoments]] frame — τ-sweep consumers reuse one cm across tails.
+  /** [[pcSkeleton3Stable]] minus the fact-scale moment pass, off
+    * [[pcMoments]] — τ-sweep consumers reuse one cm across tails.
     */
-  def pcSkeleton3StableFromCm(cm: DataFrame, tauSqBp: Long = 625L)
+  def pcSkeleton3StableFromCm(cm: PairMoments, tauSqBp: Long = 625L)
       : DataFrame =
     pcStableLadder(cm, tauSqBp, 3)
 
@@ -1363,30 +1351,38 @@ object Causal {
 
   /** [[pcOrient]]'s every-pair-row precondition as a standalone check:
     * every unshielded-triple candidate the skeleton's adjacency can form
-    * must find its (x,y) skeleton row (edge=0 rows included). Callers
-    * that time repeated pcOrient runs over ONE skeleton (Bench's
-    * median-of-N loops) verify here once, outside the timed region, then
-    * pass `requirePairRows = false` — the check is an eager count job
-    * and would otherwise be measured into every repetition.
+    * must find its (x,y) skeleton row (edge=0 rows included).
     */
-  def assertPairRows(skeleton: DataFrame): Unit = {
-    val sk = pinTiny(
-      skeleton.select(col("a"), col("b"), col("edge")))
-    val und = sk.where(col("edge") === 1).select(col("a"), col("b"))
-    val adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
-    val cand = adj.select(col("a").as("x"), col("b").as("z"))
-      .join(broadcast(adj.select(col("a").as("z"), col("b").as("y"))),
-        Seq("z"))
-      .where(col("x") < col("y"))
-    assertPairRowsFrom(sk, cand)
+  def assertPairRows(skeleton: DataFrame): Unit =
+    requirePairRowsOn(skeletonRows(skeleton, lit(null).cast("string")))
+
+  /** A skeleton frame's (a, b, sepset, edge) rows on the driver; a NULL
+    * edge is neither 0 nor 1.
+    */
+  private def skeletonRows(sk: DataFrame,
+      sepset: Column): Array[(String, String, String, Int)] =
+    sk.select(col("a"), col("b"), sepset, col("edge").cast("int"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        if (r.isNullAt(3)) -1 else r.getInt(3)))
+
+  /** Every x–z–y path through the skeleton's edges `und` with x < y: the
+    * unshielded-triple candidates, one per path (a repeated edge row
+    * repeats its paths).
+    */
+  private def tripleCands(und: Seq[(String, String)])
+      : Seq[(String, String, String)] = {
+    val adj = und.flatMap(e => Seq(e, e.swap)).groupMap(_._1)(_._2)
+    for {
+      (x, zs) <- adj.toSeq; z <- zs; y <- adj.getOrElse(z, Nil)
+      if seriesOrder.lt(x, y)
+    } yield (x, y, z)
   }
 
-  private def assertPairRowsFrom(sk: DataFrame, cand: DataFrame): Unit = {
-    val miss = cand
-      .join(broadcast(sk.select(col("a").as("x"), col("b").as("y"),
-        lit(1).as("hit"))), Seq("x", "y"), "left_outer")
-      .where(col("hit").isNull).count()
-    require(miss == 0L,
+  private def requirePairRowsOn(sk: Seq[(String, String, String, Int)]): Unit = {
+    val rows = sk.map(r => (r._1, r._2)).toSet
+    val miss = tripleCands(sk.collect { case (a, b, _, 1) => (a, b) })
+      .count { case (x, y, _) => !rows((x, y)) }
+    require(miss == 0,
       s"pcOrient requires a skeleton row for every unordered pair its " +
         s"unshielded triples touch (edge=0 rows included): $miss " +
         s"triple candidate(s) found no (x,y) row — either the caller " +
@@ -1397,193 +1393,101 @@ object Causal {
   }
 
   /** PC orientation phase over a [[pcSkeleton]] output: collider
-    * (v-structure) detection from the skeleton's own order-≤1 separation
-    * decisions, then `meekRounds` unrolled rounds of the FULL Meek
-    * closure — rules 1, 2 and 3 applied simultaneously per round. Meek
-    * (1995) proves R1–R3 complete for the CPDAG of a pattern with no
-    * background knowledge (R4 fires only when background orientations
-    * exist), so a fixpoint of these rounds IS the maximally-oriented
+    * (v-structure) detection from the skeleton's own separation
+    * decisions, then up to `meekRounds` rounds of the FULL Meek closure,
+    * rules 1–3 applied simultaneously per round. Meek (1995) proves
+    * R1–R3 complete for the CPDAG of a pattern without background
+    * knowledge, so a fixpoint of these rounds IS the maximally-oriented
     * CPDAG the PC family is defined to return.
     *
     * Pinned deterministic semantics (mirrored CTE-for-CTE by
     * [[pcOrientSqlCtes]]):
-    *  - Unshielded triple x–z–y (x < y canonically, x,y non-adjacent in
-    *    the skeleton): orient x→z←y iff z is NOT a MEMBER of the recorded
-    *    sepset of (x,y) — sepset is a `~`-delimited series list (one
-    *    element from [[pcSkeleton]], `z~w` from [[pcSkeleton2]] via
-    *    [[pcOrient2]]; series names must not contain `~`). A pair dropped
-    *    at order 0 has sepset NULL (the empty separating set), so every
-    *    such triple is a collider, the textbook rule.
-    *  - Claims are applied simultaneously per phase; an edge claimed in
-    *    BOTH directions (within one phase, or any rule against an
-    *    existing v-orientation — existing direction wins) stays/remains
-    *    as it was: conservative-PC conflict handling, order-free and
-    *    therefore partitioning-invariant.
-    *  - up to `meekRounds` rounds (a cap — the loop exits early at the
-    *    fixpoint, i.e. the first round that generates no claims; results
-    *    are identical because applying an empty claim set is the
-    *    identity), each reading the previous round's state only
-    *    (PC-stable discipline), claiming per rule:
+    *  - Unshielded triple x–z–y (x < y, x,y non-adjacent): orient x→z←y
+    *    iff z is NOT a MEMBER of the `~`-delimited sepset of (x,y) (one
+    *    element from [[pcSkeleton]], `z~w` via [[pcOrient2]]; series
+    *    names must not contain `~`). A pair dropped at order 0 has sepset
+    *    NULL, the empty set, so its triples are colliders.
+    *  - Claims apply simultaneously; an edge claimed both ways stays as
+    *    it was, and an existing direction wins: conservative-PC
+    *    conflict handling, order-free.
+    *  - `meekRounds` is a cap: claims are a function of the state, so
+    *    the first round without claims is the fixpoint. Each round reads
+    *    the previous round's state only and claims
     *     R1: a→z directed, z–b undirected, a,b non-adjacent ⇒ z→b;
-    *     R2: a→c→b directed chain, a–b undirected ⇒ a→b
-    *         (the reverse would make the cycle a→c→b→a);
+    *     R2: a→c→b directed chain, a–b undirected ⇒ a→b;
     *     R3: a–b, a–c, a–d undirected, c→b and d→b directed, c,d
-    *         non-adjacent ⇒ a→b (b←a would force one of c→b←d's tails
-    *         through a into a new v-structure or cycle).
+    *         non-adjacent ⇒ a→b.
     *
-    * Output: one row per skeleton edge (a, b, dir) with a < b and
-    * dir ∈ {1: a→b, 2: b→a, 0: undirected}. Everything here is
-    * panel-grain (≤ p² rows); the fact-scale work stays upstream in the
-    * skeleton's rank cross-moments.
+    * Output: one row per skeleton edge (a, b, dir), dir ∈ {1: a→b,
+    * 2: b→a, 0: undirected} — one local relation: the skeleton is
+    * collected once and every rule is a set lookup on the driver.
     *
-    * PRECONDITION (load-bearing): `skeleton` must carry a row for every
-    * unordered pair the triples can touch — in particular the edge=0
-    * (separated) rows — exactly [[pcSkeleton]]'s output shape. The
-    * collider stage inner-joins each unshielded triple against its (x,y)
-    * pair row, so a caller passing only surviving-edge rows would
-    * silently lose every collider rather than fail. Enforced up front
-    * with an exact assertion over the (tiny, already-checkpointed)
-    * frame: every x–z–y triple candidate must find its (x,y) row. (A
-    * plain C(p,2) row count would over-reject the multi-graph folding
-    * where several disjoint graphs share one frame via key-prefixed
-    * series names; the anti-join form asserts precisely the rows the
-    * algorithm reads.)
-    *
-    * One legitimate input also trips it: a pairwise-complete panel
-    * where two series NEVER co-observe a day has no cross-moment row
-    * and therefore no skeleton row for that pair — not a caller error.
-    * For such panels pass `requirePairRows = false`: the triple whose
-    * pair was never testable is then dropped by the inner join — no
-    * independence record exists, so claiming a collider from it would
-    * be evidence-free; the conservative skip is the pinned semantic.
+    * PRECONDITION (load-bearing): `skeleton` carries a row for every
+    * pair a triple can touch, edge=0 rows included ([[pcSkeleton]]'s
+    * shape), or every collider would be lost silently; enforced per
+    * triple by [[assertPairRows]]'s check. A pairwise-complete panel
+    * whose series never co-observe has no such row legitimately: pass
+    * `requirePairRows = false`, and the triple is skipped — with no
+    * independence record a collider would be evidence-free.
     *
     * Reference anchor: the reference's consumers emit DIRECTED graphs and
     * its structural SHD charges reversals
-    * (helper_funcs/metrics_helper.py:80-138) — a skeleton alone
-    * under-specifies what [[Metrics.scoreAll]] scores; this supplies the
-    * CPDAG the PC family is defined to return.
+    * (helper_funcs/metrics_helper.py:80-138); this supplies the CPDAG
+    * [[Metrics.scoreAll]] scores.
     */
   def pcOrient(skeleton: DataFrame, meekRounds: Int = 3,
       requirePairRows: Boolean = true): DataFrame = {
-    val sk = pinTiny(
-      skeleton.select(col("a"), col("b"), col("sepset"), col("edge")))
-    val und = sk.where(col("edge") === 1).select(col("a"), col("b"))
-    val adj = und.unionByName(und.select(col("b").as("a"), col("a").as("b")))
-    // the skeleton keeps a row for every pair a triple can form, so the
-    // triple's non-adjacency + sepset test is one equi-join against
-    // pc_out — candidates built once, precondition-checked, then reused
-    val cand = adj.select(col("a").as("x"), col("b").as("z"))
-      .join(broadcast(adj.select(col("a").as("z"), col("b").as("y"))),
-        Seq("z"))
-      .where(col("x") < col("y"))
-    // enforce the every-pair-row precondition (see scaladoc): a triple
-    // candidate whose (x,y) row is absent would be dropped by the inner
-    // join below — a silent collider loss — so fail loudly instead; one
-    // tiny count job over checkpointed panel-grain frames. Skippable
-    // (requirePairRows = false) for pairwise-complete panels where a
-    // pair legitimately never co-observes — there the drop IS the
-    // pinned conservative semantic (scaladoc) — and for callers that
-    // verified the same skeleton once up front via [[assertPairRows]]
-    // (Bench's timed loops: the eager count job would otherwise land
-    // inside every measured repetition)
-    if (requirePairRows) assertPairRowsFrom(sk, cand)
-    val trip = cand
-      .join(broadcast(sk.select(col("a").as("x"), col("b").as("y"),
-        col("sepset"), col("edge"))), Seq("x", "y"))
-      .where(col("edge") === 0 &&
-        (col("sepset").isNull ||
-          !array_contains(split(col("sepset"), "~"), col("z"))))
-      .select(col("x"), col("y"), col("z"))
-    val vclaims = trip.select(col("x").as("src"), col("z").as("dst"))
-      .unionByName(trip.select(col("y").as("src"), col("z").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    // simultaneous application with conflict-cancel: claims must be
-    // DISTINCT so the two left joins cannot fan state rows out
-    def applyClaims(state: DataFrame, claims: DataFrame): DataFrame =
-      state
-        .join(broadcast(claims.select(col("src").as("a"), col("dst").as("b"),
-          lit(1).as("cf"))), Seq("a", "b"), "left_outer")
-        .join(broadcast(claims.select(col("dst").as("a"), col("src").as("b"),
-          lit(1).as("cr"))), Seq("a", "b"), "left_outer")
-        .select(col("a"), col("b"),
-          when(col("dir") =!= 0, col("dir"))
-            .when(col("cf").isNotNull && col("cr").isNull, 1)
-            .when(col("cr").isNotNull && col("cf").isNull, 2)
-            .otherwise(0).as("dir"))
-    // EAGER checkpoints on the loop state: a lazy one never truncates the
-    // plan between rounds (no action runs inside the loop), so each round
-    // re-references the whole previous round's tree ~6 times and Catalyst
-    // analysis goes exponential — measured 7.5 s at 3 rounds, 171 s at 4;
-    // eager materialization keeps every round's plan constant-size
-    var state = pinTiny(applyClaims(und.withColumn("dir", lit(0)), vclaims))
-    // meekRounds is a CAP, not a schedule: the loop exits at the fixpoint —
-    // a round whose claims frame is empty cannot change state (applyClaims
-    // of no claims is the identity), and claims are a pure function of
-    // state, so every later round would be empty too. The isEmpty probe
-    // costs one job over the already-checkpointed ≤ p²-row claims frame,
-    // against the 2 eager checkpoints + ~10 tiny broadcast joins a dead
-    // round would pay — at catalog grain (864-config CPDAG closing before
-    // round 3) the dead rounds WERE the dominant cost of the whole rung
-    var converged = false
-    (1 to meekRounds).foreach { _ => if (!converged) {
-      // dd/uu stay lazy: they are 1-step selections over the checkpointed
-      // state, and a localCheckpoint here would cost one extra Spark job
-      // per frame per round (measured: q332 1.2 s → 4.3 s)
-      val dd = state.where(col("dir") === 1)
-        .select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(state.where(col("dir") === 2)
-          .select(col("b").as("src"), col("a").as("dst")))
-      val uu = state.where(col("dir") === 0)
-        .select(col("a").as("z"), col("b").as("w"))
-        .unionByName(state.where(col("dir") === 0)
-          .select(col("b").as("z"), col("a").as("w")))
-      // every join below carries an explicit broadcast hint: these frames
-      // are ≤ p² rows, and without the hint Spark plans 32-partition
-      // shuffle joins whose exchange overhead dominates (q332 measured
-      // seconds of pure tiny-shuffle scheduling)
-      val r1 = dd.join(broadcast(uu), dd("dst") === uu("z"))
-        .where(col("w") =!= col("src"))
-        .join(broadcast(adj.select(col("a").as("src"), col("b").as("w"),
-          lit(1).as("isadj"))), Seq("src", "w"), "left_outer")
-        .where(col("isadj").isNull)
-        .select(col("z").as("src"), col("w").as("dst"))
-      // R2: src→mid→dst directed, src–dst undirected ⇒ src→dst. The
-      // undirected test is the equi-join against uu (which carries both
-      // orientations of every dir=0 edge, so (src,dst) hits either way)
-      val r2 = dd.select(col("src"), col("dst").as("mid"))
-        .join(broadcast(dd.select(col("src").as("mid"), col("dst"))),
-          Seq("mid"))
-        .join(broadcast(uu.select(col("z").as("src"), col("w").as("dst"))),
-          Seq("src", "dst"))
-        .select(col("src"), col("dst"))
-      // R3: tail–head undirected with two undirected spokes tail–c,
-      // tail–d whose far ends both point at head (c→head, d→head) and
-      // c,d non-adjacent ⇒ tail→head. c < d dedups the symmetric pick.
-      val r3 = uu.select(col("z").as("tail"), col("w").as("head"))
-        .join(broadcast(uu.select(col("z").as("tail"), col("w").as("c"))),
-          Seq("tail"))
-        .join(broadcast(uu.select(col("z").as("tail"), col("w").as("d"))),
-          Seq("tail"))
-        .where(col("c") < col("d") &&
-          col("c") =!= col("head") && col("d") =!= col("head"))
-        .join(broadcast(dd.select(col("src").as("c"),
-          col("dst").as("head"))), Seq("c", "head"))
-        .join(broadcast(dd.select(col("src").as("d"),
-          col("dst").as("head"))), Seq("d", "head"))
-        .join(broadcast(adj.select(col("a").as("c"), col("b").as("d"),
-          lit(1).as("cdadj"))), Seq("c", "d"), "left_outer")
-        .where(col("cdadj").isNull)
-        .select(col("tail").as("src"), col("head").as("dst"))
-      // checkpoint the round's claims ONCE: applyClaims broadcasts the
-      // frame twice, and an un-materialized claims DAG would be fully
-      // re-evaluated by each broadcast
-      val claims = r1.unionByName(r2).unionByName(r3).distinct()
-        .localCheckpoint(false)
-      if (claims.isEmpty) converged = true
-      else state = pinTiny(applyClaims(state, claims))
-    }}
-    state
+    val sk = skeletonRows(skeleton, col("sepset"))
+    if (requirePairRows) requirePairRowsOn(sk)
+    val und = sk.toSeq.collect { case (a, b, _, 1) => (a, b) }
+    val adj = und.flatMap(e => Seq(e, e.swap)).toSet
+    val rowsAt = sk.groupBy(r => (r._1, r._2))
+    val vclaims = (for {
+      (x, y, z) <- tripleCands(und)
+      (_, _, sep, 0) <- rowsAt.getOrElse((x, y), Array.empty)
+      if sep == null || !sep.split("~", -1).contains(z)
+      claim <- Seq((x, z), (y, z))
+    } yield claim).toSet
+    val dirs = Array.fill(und.size)(0)
+    var fixpoint = false
+    def applyClaims(claims: Set[(String, String)]): Unit =
+      for (i <- und.indices if dirs(i) == 0) {
+        val (cf, cr) = (claims(und(i)), claims(und(i).swap))
+        dirs(i) = if (cf && !cr) 1 else if (cr && !cf) 2 else 0
+      }
+    applyClaims(vclaims)
+    for (_ <- 1 to meekRounds if !fixpoint) {
+      val dd = und.indices.collect {
+        case i if dirs(i) == 1 => und(i)
+        case i if dirs(i) == 2 => und(i).swap
+      }.toSet
+      val uu = und.indices.filter(dirs(_) == 0)
+        .flatMap(i => Seq(und(i), und(i).swap)).toSet
+      val ddFrom = dd.groupMap(_._1)(_._2)
+      val uuFrom = uu.groupMap(_._1)(_._2)
+      // R1: src→z, z–w, src,w non-adjacent ⇒ z→w
+      val r1 = for {
+        (src, z) <- dd; w <- uuFrom.getOrElse(z, Set.empty[String])
+        if w != src && !adj((src, w))
+      } yield (z, w)
+      // R2: src→mid→dst, src–dst ⇒ src→dst
+      val r2 = for {
+        (src, mid) <- dd; dst <- ddFrom.getOrElse(mid, Set.empty[String])
+        if uu((src, dst))
+      } yield (src, dst)
+      // R3: tail–head, tail–c, tail–d, c→head←d, c,d non-adjacent ⇒ tail→head
+      val r3 = for {
+        (tail, head) <- uu; spokes = uuFrom(tail); c <- spokes; d <- spokes
+        if seriesOrder.lt(c, d) && c != head && d != head &&
+          dd((c, head)) && dd((d, head)) && !adj((c, d))
+      } yield (tail, head)
+      val claims = r1 ++ r2 ++ r3
+      if (claims.isEmpty) fixpoint = true else applyClaims(claims)
+    }
+    val Array(fa, fb, _*) = skeleton.select(col("a"), col("b")).schema.fields
+    skeleton.sparkSession.createDataFrame(
+      und.indices.map(i => Row(und(i)._1, und(i)._2, dirs(i))).asJava,
+      StructType(Seq(fa, fb, StructField("dir", IntegerType, nullable = false))))
   }
 
   /** [[pcOrient]] over a [[pcSkeleton2]] output: identical v-structure +
@@ -1591,12 +1495,7 @@ object Causal {
     * the blocking set of a removed pair is whichever stage separated it
     * (the order-1 `sepset` when present, else the order-2 `z~w` pair;
     * both flow through [[pcOrient]]'s `~`-membership test).
-    *
-    * Inherits [[pcOrient]]'s PRECONDITION: the skeleton2 frame must carry
-    * a row for every unordered series pair (edge2=0 rows included) —
-    * [[pcSkeleton2]]'s output shape; the same triple-candidate pair-row
-    * assertion (and its `requirePairRows` escape for never-co-observed
-    * pairs) applies.
+    * Inherits [[pcOrient]]'s PRECONDITION and its `requirePairRows`.
     */
   def pcOrient2(skeleton2: DataFrame, meekRounds: Int = 3,
       requirePairRows: Boolean = true): DataFrame =

@@ -734,16 +734,24 @@ class PlanSpec extends AnyFunSuite {
       s"the fold must stay equi-join only:\n$p")
   }
 
-  test("p=32 wide panel: the order-2 candidate stage stays moment-" +
-      "enumerated equi-joins — no cartesian or nested-loop at real-" +
-      "deployment width") {
+  /** A PC decision frame's executed plan: a driver-side local relation,
+    * with no exchange and no join.
+    */
+  private def assertLocalDecisions(p: String, what: String): Unit =
+    assert(p.contains("LocalTableScan") && !p.contains("Exchange") &&
+      !p.contains("Join"), s"$what must be a local relation:\n$p")
+
+  test("p=32 wide panel: the order-2 decision frames stay driver-side " +
+      "local relations — no cartesian, nested-loop, exchange or join at " +
+      "real-deployment width") {
     // the bench rung's exact input (checkpointed so the builder's own
     // range×range product is not what the guard reads): the plan under
     // test is the O(p³)/O(p⁴) conditioning fan-out at 32 series, where a
     // diagonal crossJoin would be 496 pairs × 32 z (order 1) and
     // 496 × C(31,2) quadruples (order 2) of NESTED-LOOP work — the shape
-    // this guard forbids; enumeration from co-observed moment rows keeps
-    // every stage an equi-join
+    // this guard forbids; the candidates are enumerated on the driver
+    // from the collected moments, so the returned frame is a local
+    // relation
     val pan32 = Panels.widePanel(spark, 32, 200).localCheckpoint(true)
     try {
       val p = graft.metrics.Causal.pcSkeleton2(pan32, 100L)
@@ -751,16 +759,17 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"wide-panel order-2 must stay equi-join only:\n$p")
-      // the PC-STABLE twin under the same guard: its candidate stages
-      // are adjacency equi-joins (kept0/e1 against the symmetrized
-      // neighbor frame) — a cartesian or nested-loop here would mean
-      // the neighbor restriction silently degenerated to the diagonal
-      // cross-product it exists to avoid
+      assertLocalDecisions(p, "wide-panel order-2")
+      // the PC-STABLE twin under the same guard: its candidates come from
+      // the surviving adjacency — a cartesian or nested-loop here would
+      // mean the neighbor restriction silently degenerated to the
+      // diagonal cross-product it exists to avoid
       val ps = graft.metrics.Causal.pcSkeleton2Stable(pan32, 100L)
         .queryExecution.executedPlan.toString
       assert(!ps.contains("CartesianProduct") &&
         !ps.contains("BroadcastNestedLoopJoin"),
         s"wide-panel PC-stable must stay equi-join only:\n$ps")
+      assertLocalDecisions(ps, "wide-panel PC-stable")
     } finally pan32.unpersist()
   }
 
@@ -777,8 +786,8 @@ class PlanSpec extends AnyFunSuite {
       s"only the tiny summary attach may nested-loop:\n$p")
   }
 
-  test("p=128 wide panel: the PC-stable conditioning stages stay moment-" +
-      "enumerated equi-joins at the scaling-law rung's width") {
+  test("p=128 wide panel: the PC-stable decision frames are driver-side " +
+      "local relations at the scaling-law rung's width") {
     // the pcwide_p128_stable_oriented bench rung's exact input: at 8128
     // pairs an unrestricted order-2 pass would enumerate ~64M quadruples;
     // the adjacency restriction only means anything if the plan still
@@ -790,16 +799,20 @@ class PlanSpec extends AnyFunSuite {
       assert(!ps.contains("CartesianProduct") &&
         !ps.contains("BroadcastNestedLoopJoin"),
         s"p=128 PC-stable must stay equi-join only:\n$ps")
+      assertLocalDecisions(ps, "p=128 PC-stable")
     } finally pan128.unpersist()
-    // the order-3 rung over the pcblocks_p80_stable3_oriented input: its
-    // triple candidates are adjacency equi-joins too
+    // the order-3 ladder over the pcblocks_p80_stable3_oriented input,
+    // and its orientation
     val blk16 = Panels.widePanel3(spark, 16, 200).localCheckpoint(true)
     try {
-      val p3 = graft.metrics.Causal.pcSkeleton3Stable(blk16, 100L)
-        .queryExecution.executedPlan.toString
+      val sk3 = graft.metrics.Causal.pcSkeleton3Stable(blk16, 100L)
+      val p3 = sk3.queryExecution.executedPlan.toString
       assert(!p3.contains("CartesianProduct") &&
         !p3.contains("BroadcastNestedLoopJoin"),
         s"order-3 PC-stable must stay equi-join only:\n$p3")
+      assertLocalDecisions(p3, "order-3 PC-stable")
+      assertLocalDecisions(graft.metrics.Causal.pcOrient3(sk3, 4)
+        .queryExecution.executedPlan.toString, "order-3 orientation")
     } finally blk16.unpersist()
   }
 
